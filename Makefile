@@ -14,6 +14,11 @@ parity:
 bench:
 	SPARK_GRAFT_BENCH_ENFORCE=1 python bench.py
 
+# the benchmark's own check at toy size (perfbench/README.md)
+.PHONY: smoke
+smoke:
+	python3 perfbench/smoke.py
+
 .PHONY: bench-dev
 bench-dev:
 	SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python bench.py

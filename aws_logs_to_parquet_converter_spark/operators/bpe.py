@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 # boundaries can never drift from the whitespace token counts the rest
 # of the pipeline uses (round-9 review; the same pattern is a valid
 # Java AND Python regex)
-from aws_logs_to_parquet_converter_spark.operators.textstats import WS_PLUS  # noqa: E402
+from aws_logs_to_parquet_converter_spark.operators.textstats import WS_PLUS, tokens  # noqa: E402
 
 #: end-of-word marker (Sennrich §3.2) — makes tokenization reversible
 EOW = "</w>"
@@ -81,12 +81,7 @@ def bpe_train(
     counts = (
         df.where(F.col(text_col).isNotNull())
         .select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col(text_col)), WS_PLUS),
-                    lambda t: t != "",
-                )
-            ).alias("_w")
+            F.explode(tokens(F.col(text_col))).alias("_w")
         )
         .groupBy("_w")
         .agg(F.count("*").alias("_c"))

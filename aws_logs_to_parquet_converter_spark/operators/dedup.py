@@ -33,8 +33,8 @@ from pyspark.sql import functions as F
 
 from aws_logs_to_parquet_converter_spark.operators.textstats import (
     NONWS_CLASS,
-    WS_PLUS,
     normalized_text,
+    tokens,
 )
 
 from aws_logs_to_parquet_converter_spark.operators.partitioning import fan_out as _fan_out
@@ -1400,11 +1400,10 @@ def connected_components(
             )
             .localCheckpoint(eager=True)
         )
-        # Round 1 converging == empty graph: any edge (a,b) lowers
-        # max(a,b)'s label, so a NONEMPTY graph always changes in
-        # round 1.  The cheap emptiness probe keeps max_iter=1
-        # semantics identical to the old per-round-checked loop.
-        if labels.limit(1).count() == 0:
+        # Round 1 converged iff no label moved off its init value: the
+        # empty graph, or one of only (a, a) self-loops.  Both return
+        # here, so max_iter=1 still counts round 1 as a checked round.
+        if labels.where(F.col("component") != F.col("node")).limit(1).count() == 0:
             return labels
         # Each later round is ONE join + ONE aggregate: every node's
         # own label rides the aggregate as a flagged self-contribution
@@ -1806,12 +1805,7 @@ def drop_repeated_spans(
         raise ValueError(f"span length n must be >= 2, got {n}")
     toks = df.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("_id"),
-        F.posexplode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), WS_PLUS),
-                lambda tok: tok != "",
-            )
-        ).alias("_pos", "_tok"),
+        F.posexplode(tokens(F.col(text_col))).alias("_pos", "_tok"),
     )
     if persist:
         toks = toks.persist()

@@ -31,14 +31,15 @@ def tokens(text: Column) -> Column:
     """Whitespace tokenization of lowercased text (empty-safe), as an
     array column.
 
+    The one spelling of the per-document token array; operators that
+    need the tokens as an array call this rather than re-spell it.
+
     NOTE: the filter is an interpreted higher-order function
-    (CodegenFallback).  Only ``stopword_ratio`` still consumes this —
-    it genuinely needs per-token membership tests, runs once per row,
-    and the array is ~100 short tokens, so the interpreted cost is a
-    per-row constant, not a pair-space multiplier (the PERF.md HOF ban
-    targets hot paths evaluated per candidate pair).  Counting paths
-    (``token_count``/``mean_token_len``) use the codegen regexp forms
-    below instead."""
+    (CodegenFallback), evaluated once per row over ~100 short tokens —
+    a per-row constant, not a pair-space multiplier (the PERF.md HOF
+    ban targets hot paths evaluated per candidate pair).  Counting
+    paths (``token_count``/``mean_token_len``) use the codegen regexp
+    forms below instead."""
     return F.filter(F.split(F.lower(text), WS_PLUS), lambda tok: tok != "")
 
 
@@ -563,7 +564,7 @@ def bm25_topk(
     # where it re-tokenizes the whole document once per TOKEN row
     # (measured 3x wall on the corpus stage) — the two-step select pins
     # the per-doc evaluation order.
-    arr_expr = F.filter(F.split(F.lower(text_col), WS_PLUS), lambda x: x != "")
+    arr_expr = tokens(F.col(text_col))
     toks = (
         docs.select(F.col(id_col).alias("_id"), arr_expr.alias("_arr"))
         .select("_id", F.size("_arr").alias("_dl"), "_arr")
@@ -938,9 +939,7 @@ def bigram_scores(
         join-back re-scan of ``docs`` disappears too.  Vocab fold-in
         happens per pair side via the same broadcast; a NULL side stays
         NULL (first-token/placeholder rows must not fold to <unk>)."""
-        arr = F.filter(
-            F.split(F.lower(F.col(text_col)), WS_PLUS), lambda x: x != ""
-        )
+        arr = tokens(F.col(text_col))
         src2 = src.select(F.col(id_col).alias("_mid"), arr.alias("_arr")).select(
             "_mid",
             "_arr",

@@ -18,282 +18,31 @@ import aws_logs_to_parquet_converter_spark.plans.core6  # noqa: E402,F401
 import aws_logs_to_parquet_converter_spark.plans.log_domain  # noqa: E402,F401
 import aws_logs_to_parquet_converter_spark.plans.extensions  # noqa: E402,F401
 
-# The driver's correctness gate grades the FIRST 50 registry entries.
-# Round-15 window policy (grade currency is derivable from the
-# CORRECTNESS_r*.json artifacts — latest green round per entry):
-#   1. NEVER driver-graded oracle-bearing entries outrank everything
-#      (standing policy): q_bitmap_growth (r15 birth — the full
-#      new/returning/resurrected/churned decomposition from bitmap
-#      segments; the r14 verdict's item 5).
-#   2. code changed this round re-enters (standing policy):
-#      q_trend_kendall (unique-per-(group,order) contract enforced
-#      in-plan — r15 advisory), q_exact_quantiles (adaptive per-group
-#      bucket width — the r14 verdict's item 2 narrow-domain fix),
-#      q_interval_join + q_point_in_interval (payload slimming +
-#      exact_floordiv rewrite — verdict item 3 / the r15 medium
-#      advisory), q_peak_concurrency (exact_floordiv rewrite),
-#      q_bucket_join (attach_bucketed schema check via
-#      StructType.fromDDL — r15 advisory).
-#   3. 42 of the 45-entry r10-stale cohort backfill in registry-name
-#      order (the r14 verdict's item 1).  The cohort is 45 but
-#      1 + 1 + 6 leaves only 42 slots: q_conditional,
-#      q_cte_composition, and q_date_funcs — pure SQL-expression
-#      matrices untouched by any operator change since r10 — stay
-#      r10-green and LEAD the r16 rotation (the q_temperature_mix
-#      precedent; the verdict's two-round budget for the r9 cohort is
-#      the same allowance).
-# Rotated out (green at their latest r11-r14 grade and UNMODIFIED
-# this round): the r14 window remainder — all inside currency.
-# Round-14 window policy (kept for the audit trail; grade currency is
-# derivable from the
-# CORRECTNESS_r*.json artifacts — latest green round per entry):
-#   1. NEVER driver-graded oracle-bearing entries outrank everything
-#      (standing policy): the two late r13 births q_bitmap_retention +
-#      q_bitmap_rollup (judge-swept green in the r13 session; the r13
-#      verdict's item 2 orders them to lead), and the r14 births
-#      (q_bitmap_rolling_active — rolling N-day actives from segments,
-#      verdict item 6 — plus later r14 births as they land).
-#   2. code changed this round re-enters (standing policy):
-#      q_trend_kendall (n_buckets counted directly from the join's
-#      self-pairs; single-bucket groups emitted — r13 advisory),
-#      q_cusum_changepoint (BIGINT overflow guard fails with the
-#      operator's own message — r13 advisory), q_bucket_join
-#      (attach_bucketed raises on spec mismatch instead of silently
-#      reusing a stale catalog entry — r13 advisory),
-#      q_bitmap_retention (duplicate segment rows bit_or, already in
-#      #1), and the similarity trio q_semantic_dedup +
-#      q_semantic_dedup_cells_md5 + q_embed_neardup (the r13 verdict's
-#      item 1: _dot/_norm flipped to the always-HOF-fold form — the
-#      per-ROW norm builds were the last unrolled sites; bit-identical
-#      by construction, locally re-graded at both SFs).
-#   3. the FULL 33-entry r9-stale cohort backfills in registry-name
-#      order (r13 verdict item 3 asked for the oldest half with ~15
-#      slots; holding r14 births to the spare slots frees all 33, so
-#      after this round NO oracle-bearing entry's latest driver grade
-#      is older than r10 — and these 33 leave r9 entirely):
-#      q14_promo_effect .. q_window_first_last.
-# Rotated out (green at their latest r10-r13 grade and UNMODIFIED
-# this round): the r13 window remainder — all inside currency.
-# Round-13 window policy (kept for the audit trail; grade currency is
-# derivable from the
-# CORRECTNESS_r*.json artifacts — latest green round per entry):
-#   1. NEVER driver-graded oracle-bearing entries outrank everything
-#      (standing policy): the r13 births — q_etl_days_apart (the r12
-#      verdict's item 2: the verbatim Days-Apart Presto SQL over the
-#      parquet warehouse the ETL fixture itself wrote, both reference
-#      halves under one hash).  Later r13 births displace the lowest
-#      backfill slot as usual; q_bitmap_retention, born after the
-#      window filled at 50, stays out and leads the r14 rotation (the
-#      q_temperature_mix precedent).
-#   2. code changed this round re-enters (standing policy):
-#      q_etl_roundtrip (fixture shared with q_etl_days_apart — keys
-#      now days-apart-shaped, requester graded via COUNT(DISTINCT
-#      assumed-role ARN)); q_interarrival_cv (Σg² crosses to double
-#      via two-BIGINT-halves at 2^62 on both engines — the r12
-#      advisor's HUGEINT→DOUBLE 1-ulp fix); q_ewma_daily (lagged
-#      value cast to BIGINT before the weight multiply — r12 advisor
-#      overflow fix); q_session_attribution + q_markov_transitions +
-#      q_top_paths (NTZ-tolerant timestamps; lossless overlap-by-one
-#      segment lever — the r12 verdict's item 3); late r13:
-#      q_semantic_dedup + q_semantic_dedup_cells_md5 + q_embed_neardup
-#      (pair-scoring cosine switched to the HOF fold — bit-identical
-#      by construction and locally re-graded both SFs, but the code
-#      changed, so they re-enter; they displace q14-q16, which stay
-#      r9-green).
-#   3. the 18-entry r8-stale cohort leads the rotation exactly as the
-#      r12 policy queued (r12 verdict item 1 — after this round no
-#      oracle-bearing entry's latest grade is older than r9):
-#      q_map_funcs .. q_window_range_frame in registry-name order.
-#   4. remaining slots backfill with the next-oldest cohort (r9) in
-#      registry-name order: q02_filter_project .. as many as fit; the
-#      rest of the r9 cohort stays r9-green and leads the r14
-#      rotation.
-# Rotated out (green at their latest r10-r12 grade and UNMODIFIED
-# this round): the r12 window remainder, the r10/r11 cohorts — all
-# inside currency.
-# Round-12 window policy (kept for the audit trail; grade currency is
-# derivable from the CORRECTNESS_r*.json artifacts — latest green
-# round per entry):
-#   1. NEVER driver-graded oracle-bearing entries outrank everything
-#      (standing policy + the r11 verdict's item 1): the five late r11
-#      births (q_rolling_active_users, q_quantile_normalize,
-#      q_pmi_collocations, q_dedup_stats, q_zipf_slope — judge-green
-#      via check_parity in the r11 session, but driver evidence is the
-#      hard signal) and the three r12 births so far (q_etl_roundtrip —
-#      the verdict's item-2 ETL round-trip hash row;
-#      q_soft_dedup_weights; q_leakage_safe_split).  Later r12 births
-#      displace the lowest backfill slot as usual.
-#   2. code changed this round re-enters (standing policy):
-#      q_dedup_minhash_md5 + q_incremental_minhash (minhash pair-dedup
-#      shuffle narrowed to slim id/band/bucket rows — verdict item 3;
-#      q_dedup_minhash itself is rows-only by design, so its md5 twin
-#      carries the hash grade),
-#      q_fuzzy_pairs + q_fuzzy_entity_resolution (max_len tied to
-#      max_dist — verdict item 4), q_stream_cdc_dimension (bootstrap
-#      detection hardened — the r11 HIGH advisory),
-#      q_token_stream_blocks (global_running_sum integral-type guard —
-#      r11 advisory #4).
-#   3. remaining slots backfill with the oldest-evidence cohort: the
-#      37-entry r8 cohort in registry-name order (q_bag_set_ops ..,
-#      including q_dedup_exact per the verdict); the 19 that fit end
-#      at q_log_status_breakdown — the eighteen alphabetical
-#      stragglers (q_map_funcs .. q_window_range_frame) stay r8-green
-#      and lead the r13 rotation.
-# Rotated out (green at their latest r9-r11 grade and UNMODIFIED this
-# round): the entire r11 window remainder, the r9/r10 cohorts — all
-# inside currency.
-# Round-11 window policy (kept for the audit trail; see COVERAGE.md for
-# the per-query currency table; grade currency is derivable from the
-# CORRECTNESS_r*.json artifacts — latest green round per entry):
-#   1. q_stream_profile — the ONLY never-green oracle-bearing entry
-#      (red in r9 raw and in r10 after the rounding fix, while judge
-#      replays and local parity always pass): the graded projection is
-#      now INTEGER-ONLY (floor-to-micros BIGINT on both engines), so
-#      no double crosses the graded boundary at all;
-#   2. code changed this round (standing policy, behavior-neutral or
-#      not): q_incremental_minhash and q_embed_topk_pq_persisted
-#      (save_minhash_index / save_pq_index / rebuild_minhash_index
-#      gained the advisor's prune=False escape hatch);
-#   3. round-11 births enter at birth: q_scd2_merge, q_scd1_upsert,
-#      q_fuzzy_pairs, q_mad_outliers, q_token_stream_blocks,
-#      q_fuzzy_entity_resolution, q_gap_fill, q_scd2_chain,
-#      q_dsir_weights, q_stream_cdc_dimension,
-#      q_embed_topk_lsh_multiprobe, q_calibration_bins,
-#      q_incremental_rollup (each
-#      additional birth displaces the lowest r8 backfill slot, which
-#      stays r8-green and leads the r12 rotation);
-#   4. the FULL 29-entry r7 cohort (the oldest evidence anywhere,
-#      mandated by the r10 policy to lead this rotation):
-#      q_gopher_rules .. q_winnow_pairs in registry-name order;
-#   5. remaining slots backfill with the next-oldest (r8) cohort in
-#      registry-name order: q_approx_top_k .. as many as fit.  The
-#      rest of the r8 cohort stays r8-green and leads the r12
-#      rotation.
-#   6. LATE round-11 births past the slot budget stay OUT of this
-#      window and outrank everything in the r12 rotation (the
-#      q_temperature_mix precedent): q_rolling_active_users,
-#      q_quantile_normalize, q_pmi_collocations, q_dedup_stats,
-#      q_zipf_slope (and any
-#      later birth
-#      this round) — four
-#      r8 backfill slots are the floor kept for old-evidence refresh.
-# Rotated out (green at their latest r9/r10 grade and UNMODIFIED this
-# round): the entire r10 window (all 49 green) and the r9 cohort —
-# both inside two-round currency.
-# Round-10 window policy (kept for the audit trail):
-#   1. ALL 23 never-driver-graded oracle-bearing entries (the r9
-#      verdict's 19 post-window births + q_stream_profile, the r9
-#      window's one red, regraded after the max_value rounding fix +
-#      that round's three births: q_classifier_train_score,
-#      q_embed_topk_ivf_probed, q_media_p3_decode), plus the seven
-#      late r10 births (q_prototypicality, q_hard_negatives,
-#      q_tokenizer_fertility, q_chunk_tokens, q_html_links,
-#      q_retrieval_metrics, q_pagerank);
-#   2. code/oracle changed that round: q_bpe_encode, q_embed_topk_ivf_full,
-#      q_embed_topk (shared _cosine_scored_pairs extraction);
-#   3. oldest-evidence backfill: q01_pricing_summary and
-#      q06_forecast_revenue (the last r6 rows, bench-headlined every
-#      round), then — after the late-birth and q_embed_topk
-#      displacements — the first 14 of the 43-strong r7 cohort in
-#      registry-name order (q_agg_cube .. q_dedup_fingerprint); the
-#      remaining 29 r7 entries (q_gopher_rules .. q_winnow_pairs)
-#      stayed r7-green and lead the r11 rotation above (the r10
-#      advisor's reconciliation of this section's original 22/21
-#      counts, which predated the displacements).
-# Round-9 window policy (kept for the audit trail):
-#   1. NEW oracle-bearing entries enter at birth (standing policy):
-#      q_embed_topk_ivf_full + q_embed_topk_pq_exact (the ANN family's
-#      first driver-graded rows — round-8 verdict item 1),
-#      q_stream_profile (applyInPandasWithState under the oracle —
-#      verdict item 3, fourth streaming-family row), and q_bpe_encode
-#      (real BPE tokenization — verdict item 8);
-#   2. queries whose code or ORACLE changed this round re-enter:
-#      q_url_dedup (oracle gained the NULL-canon sentinel — r8
-#      advisor), q_dedup_keep_best (string-id-safe tie-break — r8
-#      advisor; oracle df-cap mirror — r9 sf1 sweep), q_span_dedup
-#      (handles-based unpersist contract — r8 verdict item 5), the
-#      three streaming rows (shared source gained the directory-layout
-#      branch — r9 sf1 sweep), q_dedup_keep_list (oracle df-cap
-#      mirror — r9 sf1 sweep), and q_text_stats (exact-integer
-#      single-division rounding — r9 sf1 sweep);
-#   3. oldest-evidence backfill: q_values_dim (r5, oldest anywhere),
-#      then the r6 cohort — the TPC-H slice (all but
-#      q06_forecast_revenue, displaced by the q_dedup_keep_list
-#      re-entry: q06 carries the strongest independent evidence of the
-#      cohort — bench headline, driver-timed every round, plus a
-#      pushdown plan assertion — and leads the r10 rotation),
-#      q_agg_modern, q_agg_stats, q_corpus_diff,
-#      q_corpus_clean_pipeline, q_pii_scrub, q_stratified_sample,
-#      q_chunk_docs, q_split_assign, q_bitwise_funcs,
-#      q_incremental_dedup, q_incremental_dedup_bloom, q_data_quality,
-#      q_semantic_dedup, q_string_agg, q_window_first_last.  After
-#      this round the only oracle-bearing entries older than r7
-#      currency are q06_forecast_revenue (r6, see above) and the three
-#      r7 whitespace-cohort heads displaced by forced re-entries.
-# Rotated out (green at their latest r7/r8 grade and UNMODIFIED this
-# round): the rest of the r8 window — r8 evidence is current for two
-# more rounds.
-# Round-8 window policy (kept for the audit trail):
-#   1. never driver-graded oracle-bearing entries outrank everything
-#      (standing policy): q_approx_top_k (added after the r7 window
-#      filled) and the NEW q_stream_read_after_write (the stream-stream
-#      interval join — second graded streaming-family row, round-7
-#      verdict item 5);
-#   2. queries whose code or ORACLE changed this round re-enter the
-#      same round: q_window_ntile (rewritten onto the two-pass
-#      range-partitioned global rank, operators/ranking.py — round-7
-#      verdict item 2), q_warc_extract (atomic fixture publish +
-#      oracle-mirrored doc_id cap), and the three shingle oracles that
-#      gained the engine-matching contentless-doc exclusion
-#      (q_ngram_jaccard, q_dedup_minhash_md5, q_dedup_keep_list — r7
-#      advisor), plus the FIVE queries whose oracles were rewritten in
-#      r7 but never re-graded (r7 advisor finding: q_session_window,
-#      q_json_extract, q_correlated_scalar, q_recursive_cte,
-#      q_log_status_breakdown — the rotation-policy violation this
-#      round repairs);
-#   3. the r4-currency stragglers: q_diag_bool_emit, q_diag_maxby_emit
-#      (q_window_ntile is already in via #2);
-#   4. the remaining slots backfill with the OLDEST green evidence:
-#      the entire r5 cohort (events-table family, the r01-era
-#      families, the function matrices' r5 members), then the four
-#      lowest-numbered r6 TPC-H entries.  After this round no
-#      oracle-bearing entry's latest grade is older than r6.
-# Rotated out (green at their latest r7 grade and UNMODIFIED this
-# round): the whitespace-migration cohort (q_token_count ...
-# q_approx_percentiles), the r7-graded function matrices and
-# join/window/agg families, q_c4_rules, q_gopher_rules, q_bigram_lm,
-# q_stream_daily_events.
-# Round-8 BIRTHS (standing policy: a new oracle-bearing entry enters
-# the window the round it is added, displacing the lowest-priority
-# backfill): q_window_percent_rank, q_url_dedup, q_stream_dedup,
-# q_span_dedup — they displaced the four lowest-priority r6 TPC-H
-# backfill slots (q01-q04), which stay r6-current.
+# The external correctness gate grades the FIRST 50 registry entries,
+# so _PRIORITY picks them; every other entry follows in registration
+# order.  Window policy, applied each round:
+#   1. oracle-bearing entries never graded there outrank everything;
+#   2. entries whose code or oracle changed this round re-enter;
+#   3. the remaining slots backfill with the entries whose latest green
+#      external grade is oldest, in registry-name order.
+# Births after the window fills lead the next round's rotation.  Grade
+# currency per entry is in the CORRECTNESS_r*.json artifacts; the
+# per-round selections are in git history.
 GRADED_WINDOW = 50
 
 _PRIORITY = [
     # flagship (reference's days_apart_analysis.sql run verbatim)
     "q_days_apart",
-    # (1) never driver-graded: the r15 birth.  (The LATE r15 births —
-    # q_hist_quantiles[_range], q_interval_merge/coverage/gaps/
-    # intersect, q_xcorr_daily, q_weighted_quantiles, q_setsim_join,
-    # q_theilsen_trend, q_mann_whitney, q_cms_range, q_stream_cms,
-    # q_hist_rolling, q_zorder_roundtrip, q_shards_roundtrip,
-    # q_kruskal_wallis, q_brown_forsythe —
-    # were born after this window filled; they lead the r16 rotation
-    # per the q_approx_top_k precedent, all parity-green locally.)
+    # (1) never externally graded
     "q_bitmap_growth",
-    # (2) code changed this round (r14 verdict items 2-3 + r15
-    # advisories: adaptive quantile width, interval slimming +
-    # exact_floordiv rewrite, kendall contract, attach schema parse)
+    # (2) code or oracle changed this round
     "q_trend_kendall",
     "q_exact_quantiles",
     "q_interval_join",
     "q_point_in_interval",
     "q_peak_concurrency",
     "q_bucket_join",
-    # (3) 42 of the 45-entry r10-stale cohort in registry-name order
-    # (r14 verdict item 1; q_conditional / q_cte_composition /
-    # q_date_funcs stay r10-green and lead the r16 rotation)
+    # (3) oldest-evidence backfill, in registry-name order
     "q01_pricing_summary",
     "q06_forecast_revenue",
     "q_agg_cube",
@@ -337,8 +86,6 @@ _PRIORITY = [
     "q_tokenizer_fertility",
     "q_weighted_sample",
 ]
-
-# (The r9 window list lives in git history and COVERAGE.md's audit trail.)
 
 
 def _reorder() -> None:

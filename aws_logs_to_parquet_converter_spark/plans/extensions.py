@@ -1911,7 +1911,7 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the partial aggregation collapses each partition to its
     distinct tokens before the single shuffle)."""
     d = t(spark, sf_dir, "documents")
-    toks = d.select(F.explode(F.split(F.lower("text"), r"[ \t\r\n\f\x0b]+")).alias("tok")).where(
+    toks = d.select(F.explode(F.split(F.lower("text"), WS_PLUS)).alias("tok")).where(
         F.col("tok") != ""
     )
     return (
@@ -3437,7 +3437,7 @@ def q_cms_vocab_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aws_logs_to_parquet_converter_spark.operators import sketch as sk
 
     d = t(spark, sf_dir, "documents")
-    toks = d.select(F.explode(F.split(F.lower("text"), r"[ \t\r\n\f\x0b]+")).alias("tok")).where(
+    toks = d.select(F.explode(F.split(F.lower("text"), WS_PLUS)).alias("tok")).where(
         F.col("tok") != ""
     )
     cms = sk.count_min_build(toks, "tok", depth=4, width=4096)
@@ -3484,7 +3484,7 @@ def q_hll_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Differential bounds vs exact counts in test_pipeline_ops."""
     d = t(spark, sf_dir, "documents")
     toks = d.select(
-        "source", F.explode(F.split(F.lower("text"), r"[ \t\r\n\f\x0b]+")).alias("tok")
+        "source", F.explode(F.split(F.lower("text"), WS_PLUS)).alias("tok")
     ).where(F.col("tok") != "")
     per_source = toks.groupBy("source").agg(F.hll_sketch_agg("tok").alias("sk"))
     return per_source.agg(
@@ -6847,7 +6847,7 @@ def q_cms_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     toks = d.select(
         "source",
-        F.explode(F.split(F.lower("text"), r"[ \t\r\n\f\x0b]+")).alias("tok"),
+        F.explode(F.split(F.lower("text"), WS_PLUS)).alias("tok"),
     ).where(F.col("tok") != "")
     segs = sk.count_min_build_sliced(
         toks, ["source"], "tok", depth=4, width=4096
@@ -6899,7 +6899,7 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id",
         "source",
-        F.explode(F.split(F.lower("text"), r"[ \t\r\n\f\x0b]+")).alias("tok"),
+        F.explode(F.split(F.lower("text"), WS_PLUS)).alias("tok"),
     ).where(F.col("tok") != "")
 
     root = os.path.join(

@@ -150,8 +150,15 @@ def compare_query(spark, duck_con, name: str, sf_dir: str):
     """
     from aws_logs_to_parquet_converter_spark.plans import REGISTRY
 
+    return compare_frame(duck_con, name, REGISTRY[name].builder(spark, sf_dir))
+
+
+def compare_frame(duck_con, name: str, sdf):
+    """compare_query's comparison step, for a plan the caller already
+    built from ``REGISTRY[name]`` (e.g. to inspect it first)."""
+    from aws_logs_to_parquet_converter_spark.plans import REGISTRY
+
     q = REGISTRY[name]
-    sdf = q.builder(spark, sf_dir)
     srows = sdf.collect()
     scols = sdf.columns
     if q.oracle is None:

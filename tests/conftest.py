@@ -26,3 +26,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def registry_plans():
+    """(sf_dir, registry name) -> explain_str(df, "simple") of the freshly
+    built plan.  test_oracle_parity fills it as it builds each entry; the
+    plan sweep in test_plans builds only the entries missing here, so a
+    full run builds each registry plan once."""
+    return {}

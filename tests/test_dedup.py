@@ -534,6 +534,15 @@ def test_connected_components_round_semantics(spark):
     empty = spark.createDataFrame([], "id_a long, id_b long")
     assert dedup.connected_components(empty, max_iter=1).collect() == []
 
+    # a graph of only self-loops does not change in round 1 either:
+    # max_iter=1 converges, each node its own component
+    loops = spark.createDataFrame([(4, 4), (2, 2)], "id_a long, id_b long")
+    labels = {
+        r.node: r.component
+        for r in dedup.connected_components(loops, max_iter=1).collect()
+    }
+    assert labels == {2: 2, 4: 4}
+
     # a single edge needs round 1 (propagate) + round 2 (confirm):
     # max_iter=2 must converge, and the labels are the min id
     one = spark.createDataFrame([(7, 3)], "id_a long, id_b long")

@@ -6,7 +6,8 @@ import os
 import pytest
 
 from aws_logs_to_parquet_converter_spark.plans import REGISTRY
-from aws_logs_to_parquet_converter_spark.testing import compare_query, duckdb_connection
+from aws_logs_to_parquet_converter_spark.testing import compare_frame, duckdb_connection
+from tests.test_plans import explain_str
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -19,8 +20,11 @@ def duck():
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_query_parity(spark, duck, name):
-    status, detail = compare_query(spark, duck, name, SF_DIR)
+def test_query_parity(spark, duck, registry_plans, name):
+    sdf = REGISTRY[name].builder(spark, SF_DIR)
+    # captured before the collect, so it is the plan a fresh build shows
+    registry_plans[(SF_DIR, name)] = explain_str(sdf, "simple")
+    status, detail = compare_frame(duck, name, sdf)
     assert status != "fail", detail
     if REGISTRY[name].oracle is not None:
         assert status == "ok"

@@ -259,7 +259,7 @@ def test_unpartitioned_window_detector_sees_the_banned_shape(spark):
     assert not _unpartitioned_ordered_windows(explain_str(part_only, "simple"))
 
 
-def test_registry_wide_no_scale_killers(spark):
+def test_registry_wide_no_scale_killers(spark, registry_plans):
     """Sweep EVERY registry query's physical plan for the node types
     that do not survive 100 TB: row-at-a-time Python (BatchEvalPython),
     unbounded pair spaces (CartesianProduct), and single-task global
@@ -268,7 +268,8 @@ def test_registry_wide_no_scale_killers(spark):
     inherently order-global statistics go through the two-pass
     range-partitioned rank in operators/ranking.py instead); Arrow
     seams and broadcast nested-loop joins are allowed only where the
-    design sanctions them.
+    design sanctions them.  Plans test_oracle_parity already built at
+    this sf are read from ``registry_plans``; the rest are built here.
 
     BNLJ allowlist rationale — in each, the *broadcast* side is
     provably tiny so the loop is linear in the streamed side:
@@ -360,7 +361,9 @@ def test_registry_wide_no_scale_killers(spark):
     }
     failures = []
     for name, q in REGISTRY.items():
-        plan = explain_str(q.builder(spark, SF), "simple")
+        plan = registry_plans.get((SF, name))
+        if plan is None:
+            plan = explain_str(q.builder(spark, SF), "simple")
         if "BatchEvalPython" in plan:
             failures.append(f"{name}: row-at-a-time Python UDF")
         if "CartesianProduct" in plan:
