@@ -506,9 +506,13 @@ def minhash_signatures(
     slower by construction, use it for differential grading, not
     production sweeps)."""
     sh = exploded_shingles(df, id_col, text_col, shingle_n)
+    # The num_hashes minima are SQL strings, not chained Column
+    # operators: each Column operator is a py4j round trip (~61 per
+    # affine minimum, ~3,900 per call at k=64), the string is one parse
+    # into the same plan.
     if hash_fn == "md5":
         mins = [
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("_sh")))).alias(f"_m{i}")
+            F.expr(f"min(md5(concat('{i}:', _sh))) AS _m{i}")
             for i in range(num_hashes)
         ]
     elif hash_fn == "xxhash64":
@@ -521,15 +525,15 @@ def minhash_signatures(
         # Non-negative base hash < P so the affine maps stay in-range.
         sh = sh.select("_id", F.pmod(F.xxhash64("_sh"), F.lit(_P)).alias("_h"))
         mins = [
-            F.min(F.pmod(F.col("_h") * F.lit(a) + F.lit(b), F.lit(_P))).alias(f"_m{i}")
+            F.expr(f"min(pmod(_h * {a} + {b}, {_P})) AS _m{i}")
             for i, (a, b) in enumerate(coeffs)
         ]
     else:
         raise ValueError(f"unsupported hash_fn: {hash_fn}")
     agg = sh.groupBy("_id").agg(*mins)
+    slots = ", ".join(f"_m{i}" for i in range(num_hashes))
     return agg.select(
-        F.col("_id").alias(id_col),
-        F.array(*[f"_m{i}" for i in range(num_hashes)]).alias("signature"),
+        F.col("_id").alias(id_col), F.expr(f"array({slots}) AS signature")
     )
 
 
@@ -598,25 +602,25 @@ def _band_rows(
     index (``save_minhash_index`` / probe), so build and probe can
     never bucket differently.
 
-    Band structs are built python-side (literal slice offsets) —
-    explode of a plain array expression, no interpreted higher-order
-    function.  md5 mode: EXACT band key (hex concat) for engine
+    Band structs are built python-side (literal slice offsets) as one
+    SQL string — explode of a plain array expression, no interpreted
+    higher-order function, one parse instead of a py4j round trip per
+    Column operator.  md5 mode: EXACT band key (hex concat) for engine
     parity; default: fixed-width xxhash64 of the slice (cheaper
     shuffle)."""
     rows_per_band = num_hashes // bands
 
-    def _bucket(b: int):
-        sl = F.slice("signature", b * rows_per_band + 1, rows_per_band)
-        return F.array_join(sl, "|") if hash_fn == "md5" else F.xxhash64(sl)
+    def _bucket(b: int) -> str:
+        sl = f"slice(signature, {b * rows_per_band + 1}, {rows_per_band})"
+        return f"array_join({sl}, '|')" if hash_fn == "md5" else f"xxhash64({sl})"
 
-    band_structs = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), _bucket(b).alias("bucket"))
-            for b in range(bands)
-        ]
+    band_structs = ", ".join(
+        f"struct({b} AS band, {_bucket(b)} AS bucket)" for b in range(bands)
     )
     return sig.select(
-        F.col(id_col).alias("_id"), "signature", F.explode(band_structs).alias("bb")
+        F.col(id_col).alias("_id"),
+        "signature",
+        F.expr(f"explode(array({band_structs})) AS bb"),
     ).select("_id", "signature", "bb.band", "bb.bucket")
 
 

@@ -611,6 +611,7 @@ def semantic_dedup(
     persist_assignments: bool = True,
     kmeans_iters: int = 5,
     hash_fn: str = "xxhash64",
+    handles: "list[DataFrame] | None" = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster embeddings with spherical k-means, then
@@ -644,6 +645,11 @@ def semantic_dedup(
     memory stays bounded even for a skewed giant cell because the
     block key composes with the cell key.  Returns the KEPT rows with
     the corpus's original columns.
+
+    With ``n_cells > 1`` and ``persist_assignments`` the cell
+    assignments are cached; pass ``handles`` (a list) to receive that
+    DataFrame for deterministic unpersist once the result has been
+    consumed, else it lives until ``spark.catalog.clearCache()``.
     """
     # NULL embeddings can't score against anything: exclude them from
     # the pair space entirely (the anti join then keeps them, matching
@@ -691,11 +697,12 @@ def semantic_dedup(
         # exact-mode literal cell at sf0.1).  ~(id + vec + norm + cell)
         # per row cached — the corpus's own width, the same trade the
         # paper's pipeline makes by writing cluster ids to disk.
-        # Callers who must not cache (memory-tight executors) or who
-        # cycle MANY corpora through one long-lived session (each call
-        # caches its own assignment until spark.catalog.clearCache())
-        # pass False and pay the second pass.
+        # Callers who must not cache (memory-tight executors) pass
+        # False and pay the second pass; long-lived sessions that cycle
+        # many corpora pass ``handles`` and unpersist each call's cache.
         base = base.persist()
+        if handles is not None:
+            handles.append(base)
         # Eager materialization: the pair self-join scans `base` on
         # both branches and AQE launches both CONCURRENTLY — two tasks
         # per cached partition racing the cache lock, the loser holding

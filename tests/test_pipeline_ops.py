@@ -1487,3 +1487,48 @@ def test_leakage_safe_split_groups_never_straddle(spark):
         .count()
     )
     assert straddled > 0
+
+
+def test_llm_operators_repeat_call_reuses_compiled_classes(spark):
+    """A repeat round of exact / MinHash / semantic / BM25 dedup runs
+    already-compiled code.  One round uses ~136 generated classes; with
+    a codegen cache smaller than that (Spark's default is 100) the LRU
+    cycle misses on every call and the second round recompiles them
+    all.  The bound leaves room for the few byte-identical classes
+    Spark's classloader-keyed cache recompiles per BM25 / MinHash call."""
+    import random
+
+    from aws_logs_to_parquet_converter_spark.operators import dedup, similarity, textstats
+
+    rng = random.Random(3)
+    words = [f"w{i}" for i in range(60)]
+    texts = [" ".join(rng.choice(words) for _ in range(30)) for _ in range(24)]
+    texts += texts[:4]  # exact copies
+    texts += [t + " tail" for t in texts[4:8]]  # near copies
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    vecs = [[rng.gauss(0, 1) for _ in range(8)] for _ in range(20)]
+    vecs += [[x + 1e-3 for x in v] for v in vecs[:5]]
+    emb = spark.createDataFrame(list(enumerate(vecs)), "vec_id long, embedding array<double>")
+    queries = spark.createDataFrame(
+        [("q1", "w1 w2 w3"), ("q2", "w7 tail")], "query_id string, query_text string"
+    )
+
+    def one_round():
+        dedup.exact_duplicates(docs, "doc_id", "text").collect()
+        handles = []
+        dedup.minhash_near_duplicates(
+            docs, "doc_id", "text", threshold=0.4, handles=handles
+        ).select("id_a", "id_b").collect()
+        for h in handles:
+            h.unpersist()
+        similarity.semantic_dedup(
+            emb, threshold=0.4, n_cells="auto", target_cell_size=1000
+        ).select("vec_id").collect()
+        textstats.bm25_topk(docs, queries, "doc_id", "text", k=5).collect()
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    one_round()
+    before = compiles.getCount()
+    one_round()
+    recompiled = compiles.getCount() - before
+    assert recompiled <= 20, f"second round compiled {recompiled} classes"

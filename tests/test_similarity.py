@@ -236,10 +236,18 @@ def test_semantic_dedup_clustered_well_separated(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     exact = {r.vec_id for r in similarity.semantic_dedup(
         df, threshold=0.999, n_cells=1, dim=4).collect()}
+    jsc = spark.sparkContext._jsc
+    cached_before = len(jsc.getPersistentRDDs())
+    handles = []
     clustered = {r.vec_id for r in similarity.semantic_dedup(
-        df, threshold=0.999, n_cells=3, sample_n=120, dim=4).collect()}
+        df, threshold=0.999, n_cells=3, sample_n=120, dim=4,
+        handles=handles).collect()}
     assert clustered == exact
     assert len(exact) < 120  # tight clusters => real drops happened
+    # the cached cell assignments are released through the handles
+    for h in handles:
+        h.unpersist()
+    assert len(jsc.getPersistentRDDs()) == cached_before
 
 
 def test_semantic_dedup_deterministic_and_null_safe(spark, vecs):
