@@ -6,9 +6,11 @@
 test:
 	python -m pytest tests/ -q
 
+# PYTHONPATH, not just the driver's sys.path: Python-UDF workers import
+# the package too
 .PHONY: parity
 parity:
-	python scripts/check_parity.py
+	PYTHONPATH=$(CURDIR) python scripts/check_parity.py
 
 .PHONY: bench
 bench:

@@ -14,6 +14,10 @@ Divergence (upgrade): a real ``partitionBy('dt')`` partition column
 instead of string-formatted destination paths (compacter.py:246-251),
 plus dynamic partition overwrite so re-running a day is idempotent
 (the reference gets this by overwriting one day's directory per job).
+
+``write_sorted`` is the sort-and-write half on its own; the streaming
+ingest appends each micro-batch through it after a narrow
+``coalesce`` instead of ``compact``'s exchange.
 """
 
 from __future__ import annotations
@@ -38,6 +42,20 @@ def compact(
     yields exactly N files (reference ``--num-output-files`` contract,
     compacter.py:337-342).
     """
+    write_sorted(df.repartition(num_files), dest, sort_keys, partition_cols, compression, mode)
+
+
+def write_sorted(
+    df: DataFrame,
+    dest: str,
+    sort_keys: tuple[str, ...] = ("request_time",),
+    partition_cols: tuple[str, ...] = ("dt",),
+    compression: str = "snappy",
+    mode: str = "overwrite",
+) -> None:
+    """The write half of ``compact``, for callers that size the tasks
+    themselves: each task of ``df`` writes one file per partition value
+    it holds, rows sorted by (``partition_cols``, ``sort_keys``)."""
     # Replace only the partitions present in df (idempotent day
     # re-run).  Writer-scoped option, NOT spark.conf.set: a session-
     # level set would leak dynamic-overwrite semantics into every
@@ -50,8 +68,7 @@ def compact(
     # otherwise the writer's own sort on dt alone would scramble them.
     local_sort = [*partition_cols, *sort_keys]
     writer = (
-        df.repartition(num_files)
-        .sortWithinPartitions(*local_sort)
+        df.sortWithinPartitions(*local_sort)
         .write.option("compression", compression)
         .option("partitionOverwriteMode", "dynamic")
         .mode(mode)

@@ -1561,6 +1561,7 @@ def source_kl_divergence(
     df: DataFrame,
     group_col: str,
     text_col: str = "text",
+    handles: "list[DataFrame] | None" = None,
 ) -> DataFrame:
     """KL divergence (bits) of each group's unigram distribution from
     the whole-corpus distribution — the data-mixing diagnostic: a
@@ -1584,7 +1585,9 @@ def source_kl_divergence(
     derive (one-row broadcasts, the q11 single-row class).  r15: the
     un-persisted form re-ran the corpus explode+aggregate three times
     (its three consumers need different partitionings, so exchange
-    reuse never fired).
+    reuse never fired).  Pass ``handles`` (a list) to receive that
+    persisted relation for deterministic unpersist once the result has
+    been consumed, else it lives until ``spark.catalog.clearCache()``.
 
     Returns ``(group_col, n_tokens, kl_bits)``.
     """
@@ -1600,13 +1603,15 @@ def source_kl_divergence(
     # three times (three Generate-over-scan subtrees in the executed
     # plan).  One explode+agg pass now feeds a vocab-x-groups-bounded
     # cache (the persisted-state trade the bloom/minhash operators
-    # already make); released by spark.catalog.clearCache() or session
-    # end.  The eager count keeps concurrent consumers off the cache
-    # lock (the minhash sig.count() finding).
+    # already make); released through ``handles``.  The eager count
+    # keeps concurrent consumers off the cache lock (the minhash
+    # sig.count() finding).
     per_group = (
         toks.groupBy(group_col, "_tok").agg(F.count("*").alias("_cg")).persist()
     )
     per_group.count()
+    if handles is not None:
+        handles.append(per_group)
     corpus = per_group.groupBy("_tok").agg(F.sum("_cg").alias("_cw"))
     joined = per_group.join(corpus, "_tok")
     inner = joined.groupBy(group_col).agg(

@@ -20,6 +20,8 @@ text in ``error_line`` — parse errors are queryable, never dropped.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,27 +77,28 @@ def _coerce(name: str, raw: Column) -> Column:
     return raw
 
 
-def parse_lines(df_text: DataFrame, text_col: str = "value") -> DataFrame:
-    """Parse raw log lines into the 19-column typed schema.
+@functools.lru_cache(maxsize=8)
+def _parser_columns(text_col: str, gateway) -> tuple:
+    """The parser's Column objects, built once per (input column, JVM).
 
-    Input: a DataFrame with one string column of raw lines (shape of
-    ``spark.read.text``).  Output columns/types ==
-    ``schema.S3_ACCESS_LOG_SCHEMA``; blank lines are skipped (the
-    reference skips them at read time, compacter.py:164-167).
+    Building them costs ~1,500-2,000 py4j round trips (each ``F.*``
+    call, each ``cast`` of a Python DataType); applying prebuilt ones
+    costs ~50.  Columns are unresolved expressions, so one set serves
+    every DataFrame of the JVM; ``gateway`` is in the key so a relaunched
+    JVM gets fresh ones.  Built as Column API calls, never SQL text: the
+    Presto shims toggle ``spark.sql.parser.escapedStringLiterals``,
+    under which SQL string literals parse differently.
     """
     line = F.col(text_col)
-    df = df_text.where(F.trim(line) != "")
+    keep = F.trim(line) != ""
 
     # ONE regex execution: rewrite the line into SEP-delimited captured
     # groups.  A non-matching line passes through unchanged and fails
     # the arity check below (a real line cannot contain \x01).
-    df = df.withColumn(
-        "_fields",
-        F.split(
-            F.regexp_replace(line, _LINE_REWRITE_PATTERN, _LINE_REWRITE_REPLACEMENT),
-            _SEP,
-            -1,
-        ),
+    fields = F.split(
+        F.regexp_replace(line, _LINE_REWRITE_PATTERN, _LINE_REWRITE_REPLACEMENT),
+        _SEP,
+        -1,
     )
     ok = F.size("_fields") == N_FIELDS
 
@@ -106,12 +109,24 @@ def parse_lines(df_text: DataFrame, text_col: str = "value") -> DataFrame:
         cols.append(F.when(ok, value).alias(out_name))
     cols.append(F.when(~ok, line).alias("error_line"))
 
-    parsed = df.select(*cols)
     # Enforce exact at-rest types (all parse paths already produce
-    # them; the selects below are no-op casts that pin the contract).
-    return parsed.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in S3_ACCESS_LOG_SCHEMA.fields]
+    # them; these are no-op casts that pin the contract).
+    casts = [F.col(f.name).cast(f.dataType).alias(f.name) for f in S3_ACCESS_LOG_SCHEMA.fields]
+    return keep, fields, tuple(cols), tuple(casts)
+
+
+def parse_lines(df_text: DataFrame, text_col: str = "value") -> DataFrame:
+    """Parse raw log lines into the 19-column typed schema.
+
+    Input: a DataFrame with one string column of raw lines (shape of
+    ``spark.read.text``).  Output columns/types ==
+    ``schema.S3_ACCESS_LOG_SCHEMA``; blank lines are skipped (the
+    reference skips them at read time, compacter.py:164-167).
+    """
+    keep, fields, cols, casts = _parser_columns(
+        text_col, df_text.sparkSession.sparkContext._gateway
     )
+    return df_text.where(keep).withColumn("_fields", fields).select(*cols).select(*casts)
 
 
 def with_dt(df: DataFrame, from_col: str = "request_time") -> DataFrame:

@@ -8,9 +8,10 @@ best-effort).  The streaming shape subsumes both:
   * ``stream_parse``: file-source ``readStream.text`` over the log
     prefix -> the SAME native-expression parser as batch (one code path
     for both modes — parse_lines is mode-agnostic Catalyst exprs).
-  * ``stream_compact``: ``foreachBatch`` -> the SAME compact() writer,
-    giving exactly-once-per-microbatch idempotent dt= partition
-    overwrite (late data re-overwrites only its own day).
+  * ``stream_compact``: ``foreachBatch`` -> the SAME sort-and-write
+    code as compact(), APPENDING each micro-batch to its dt= partitions
+    (late data adds files to its own day; the checkpoint processes
+    each source file once, and ``cli maintain`` recompacts the day).
   * ``stream_hourly_stats``: watermarked tumbling-window aggregation —
     the continuously-maintained version of the q_hourly_traffic plan;
     late lines beyond the watermark are dropped instead of corrupting
@@ -26,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from aws_logs_to_parquet_converter_spark.operators.compact import compact
+from aws_logs_to_parquet_converter_spark.operators.compact import write_sorted
 from aws_logs_to_parquet_converter_spark.sources.parse import parse_lines, with_dt
 
 
@@ -51,13 +52,18 @@ def stream_compact(
     num_files: int = 10,
     trigger: dict | None = None,
 ) -> StreamingQuery:
-    """Continuously compact parsed rows into the dt= parquet layout via
-    foreachBatch -> the batch compact() writer (idempotent dynamic
-    partition overwrite per micro-batch)."""
+    """Continuously append parsed rows to the dt= parquet layout via
+    foreachBatch and compact()'s sort-and-write code.
+
+    Batch contract: each micro-batch runs ONE Spark job and adds at
+    most ``num_files`` files to each ``dt`` it touches.  The batch is
+    narrowed with ``coalesce(num_files)``, not shuffled, so the parse
+    itself runs on at most ``num_files`` tasks; a micro-batch is bounded
+    by the source's ``maxFilesPerTrigger`` (``stream_parse``).  A
+    micro-batch runs only when new files arrived (the query is
+    stateless), so there is no empty-batch check."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # APPEND, not partition-overwrite: consecutive micro-batches add
         # rows to the same dt= partition (late data), and the checkpoint
         # already guarantees each source file is processed once.  The
@@ -77,7 +83,7 @@ def stream_compact(
             .when(F.col("error_line").isNotNull(), F.lit("_dead_letter"))
             .otherwise(F.lit("_bad_timestamp")),
         )
-        compact(routed, dest, num_files=num_files, mode="append")
+        write_sorted(routed.coalesce(num_files), dest, mode="append")
 
     writer = parsed.writeStream.foreachBatch(write_batch).option("checkpointLocation", checkpoint)
     writer = writer.trigger(**(trigger or {"availableNow": True}))

@@ -70,10 +70,17 @@ def test_source_kl_analytic(spark):
     df = spark.createDataFrame(
         [("s1", "a a b"), ("s2", "b")], "source string, text string"
     )
+    jsc = spark.sparkContext._jsc
+    cached_before = len(jsc.getPersistentRDDs())
+    handles = []
     got = {
         r["source"]: r
-        for r in source_kl_divergence(df, "source", "text").collect()
+        for r in source_kl_divergence(df, "source", "text", handles=handles).collect()
     }
+    # the cached (group, token) counts are released through the handles
+    for h in handles:
+        h.unpersist()
+    assert len(jsc.getPersistentRDDs()) == cached_before
     # corpus: {a:2, b:2}, N=4.  s1: p=(2/3, 1/3), q=(1/2, 1/2)
     kl1 = (2 / 3 * math.log((2 / 3) / 0.5) + 1 / 3 * math.log((1 / 3) / 0.5)) / math.log(2)
     kl2 = math.log(1 / 0.5) / math.log(2)  # s2: p_b=1, q_b=1/2

@@ -117,3 +117,38 @@ def test_differential_vs_reference_regex(spark):
         assert row.request == m.group("request")
         n_checked += 1
     assert n_checked > 300
+
+
+def test_repeat_parse_is_cheap_and_plan_ignores_escaped_literals(spark):
+    """The parser's expressions are built once per JVM: a repeat call
+    may make at most 100 py4j commands (a fresh build makes ~1,500).
+    Its optimized plan does not depend on
+    ``spark.sql.parser.escapedStringLiterals``, which the Presto shims
+    toggle."""
+    df = spark.createDataFrame([(l,) for l in generate_log_lines(20)], "value string")
+    parse_lines(df)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(*args, **kwargs):
+        sent.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        parse_lines(df)
+    finally:
+        client.send_command = send
+    assert len(sent) <= 100
+
+    def plan(escaped):
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", escaped)
+        text = with_dt(parse_lines(df))._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "#", text)
+
+    prev = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
+    try:
+        assert plan("false") == plan("true")
+    finally:
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", prev)

@@ -2,13 +2,17 @@
 (availableNow), incremental pickup of late files, windowed agg parity
 with the batch plan."""
 
+import glob
+import os
+import re
 import time
+from collections import Counter
 
 from pyspark.sql import functions as F
 
 from aws_logs_to_parquet_converter_spark.sources.parse import parse_lines, with_dt
 from aws_logs_to_parquet_converter_spark.streaming import ingest
-from aws_logs_to_parquet_converter_spark.testing import generate_log_lines
+from aws_logs_to_parquet_converter_spark.testing import GOLDEN_LINE, generate_log_lines
 
 
 def _write_files(src_dir, n_files, lines_each, seed=0, n_days=None):
@@ -22,18 +26,53 @@ def _write_files(src_dir, n_files, lines_each, seed=0, n_days=None):
     return [l for l in lines if l.strip()]
 
 
+def _assert_batch_shape(spark, q, dest, num_files, seen):
+    """Each micro-batch of ``q`` ran ONE Spark job (Structured Streaming
+    runs a query's jobs in the job group of its run id) and added at
+    most ``num_files`` files per dt (a write job's files share its
+    UUID).  Returns every parquet file now under ``dest``."""
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert batches
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == len(batches)
+    files = set(glob.glob(os.path.join(dest, "dt=*", "*.parquet")))
+    per_dt_write = Counter(
+        (os.path.basename(os.path.dirname(f)), re.search(r"part-\d+-(.+?)\.c\d+", f).group(1))
+        for f in files - seen
+    )
+    assert len({write for _, write in per_dt_write}) == len(batches)
+    assert max(per_dt_write.values()) <= num_files
+    return files
+
+
 def test_stream_compact_available_now(spark, tmp_path):
     src = tmp_path / "incoming"
     written = _write_files(src, 4, 100)
+    # routing input: grammar failures and a line whose bracketed
+    # timestamp cannot parse, beside the generator's own garbage
+    odd = [
+        "complete garbage",
+        "a b",
+        GOLDEN_LINE.replace("[06/Feb/2019:00:00:38 +0000]", "[99/Xxx/20AB:zz +0000]"),
+    ]
+    (src / "odd.log").write_text("\n".join(odd) + "\n")
     dest = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
     parsed = ingest.stream_parse(spark, str(src), max_files_per_trigger=2)
     q = ingest.stream_compact(parsed, dest, ckpt, num_files=2)
     q.awaitTermination(120)
+    seen = _assert_batch_shape(spark, q, dest, 2, set())
 
     got = spark.read.parquet(dest)
-    assert got.count() == len(written)
+    assert got.count() == len(written) + len(odd)
+    # the stream files failures exactly where the batch parser finds them
+    batch = parse_lines(spark.read.text(str(src)))
+    dead = batch.where("error_line IS NOT NULL").count()
+    bad_ts = batch.where("error_line IS NULL AND request_time IS NULL").count()
+    assert dead >= 2 and bad_ts >= 1
+    assert got.where(F.col("dt") == "_dead_letter").count() == dead
+    assert got.where(F.col("dt") == "_bad_timestamp").count() == bad_ts
 
     # late arrival: new files picked up from the checkpoint, no
     # reprocessing of the old ones (exactly-once per micro-batch)
@@ -42,7 +81,8 @@ def test_stream_compact_available_now(spark, tmp_path):
         ingest.stream_parse(spark, str(src), max_files_per_trigger=2), dest, ckpt, num_files=2
     )
     q2.awaitTermination(120)
-    assert spark.read.parquet(dest).count() == len(written) + len(late)
+    _assert_batch_shape(spark, q2, dest, 2, seen)
+    assert spark.read.parquet(dest).count() == len(written) + len(odd) + len(late)
 
 
 def test_stream_hourly_stats_matches_batch(spark, tmp_path):
