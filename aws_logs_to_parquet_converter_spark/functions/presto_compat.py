@@ -12,12 +12,17 @@ analysis SQL runs verbatim on this engine:
     Python in the data path); colliding names (``date_diff``) are
     head-rewritten by the translator instead.
   * ``translate_presto_sql(sql)`` rewrites the dialect residue that
-    functions can't cover: double-quoted identifiers -> backticks and
+    functions can't cover: double-quoted identifiers -> backticks,
     2-arg ``regexp_replace(col, 'pat')`` -> 3-arg with empty
-    replacement.
-  * ``run_presto_sql`` additionally executes under
-    ``escapedStringLiterals=true`` so Presto regex literals like
-    ``'/(\\d+)'`` keep their backslashes exactly as written.
+    replacement, 2-arg ``regexp_extract``/``regexp_extract_all`` ->
+    group 0 (Presto's whole match).
+  * Every Presto string literal is re-encoded for Spark's default
+    parser: its value (``''`` collapsed to ``'``) with ``\\`` and ``'``
+    backslash-escaped, so ``'it''s'`` reads as ``it's`` and regex
+    literals like ``'/(\\d+)'`` keep their backslashes exactly as
+    written.  ``run_presto_sql`` refuses a session that set the legacy
+    ``spark.sql.parser.escapedStringLiterals`` mode, under which that
+    encoding would mis-parse.
 """
 
 from __future__ import annotations
@@ -58,6 +63,7 @@ _FORMAT_REPLACEMENTS = [
 # it, so an upgraded library re-registers into an existing session.
 _SHIM_VERSION = "8"
 _SHIM_MARKER = "spark.spark_graft.prestoCompatVersion"
+_ESCAPED_LITERALS = "spark.sql.parser.escapedStringLiterals"
 
 
 def register_presto_compat(spark: SparkSession) -> None:
@@ -73,16 +79,20 @@ def register_presto_compat(spark: SparkSession) -> None:
     if spark.conf.get(_SHIM_MARKER, None) == _SHIM_VERSION:
         return
     # Register under the PARSER MODE the bodies were written for: with
-    # escapedStringLiterals already true (the natural setting for a
-    # Presto workload), the json_extract body's backslash literals
-    # would parse differently and the stored shim would mis-escape
-    # JSON forever after (round-7 review finding).
-    prev_esc = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
+    # escapedStringLiterals already true (set session-wide), the
+    # json_extract body's backslash literals would parse differently
+    # and the stored shim would mis-escape JSON forever after (round-7
+    # review finding).  The key is written only when set: once written,
+    # every cloned session (one per streaming query) logs Spark 4's
+    # deprecation warning for it again.
+    escaped = spark.conf.get(_ESCAPED_LITERALS, "false").lower() == "true"
+    if escaped:
+        spark.conf.set(_ESCAPED_LITERALS, "false")
     try:
         _register_shims(spark)
     finally:
-        spark.conf.set("spark.sql.parser.escapedStringLiterals", prev_esc)
+        if escaped:
+            spark.conf.set(_ESCAPED_LITERALS, "true")
     spark.conf.set(_SHIM_MARKER, _SHIM_VERSION)
 
 
@@ -246,14 +256,15 @@ def _register_shims(spark: SparkSession) -> None:
     # builtins; Presto's array `contains` collides with Spark's string
     # builtin and cannot be shadowed — migrating queries use
     # array_contains (documented divergence).
-# First arg: identifier, ONE-level call (parens, no nesting), or a
-# Presto string literal (quotes escape by DOUBLING, matching the
+# 2-arg regexp_replace / regexp_extract / regexp_extract_all.  First
+# arg: identifier, ONE-level call (parens, no nesting), or a Presto
+# string literal (quotes escape by DOUBLING, matching the
 # _STRING_LITERAL model below — the old \\-escape model skipped
 # 'it''s'-style literals); second arg: a literal.  Deeper nesting in
 # the first argument is not rewritten — wrap it in a projection
 # first (documented limit).
-_TWO_ARG_REGEXP_REPLACE = re.compile(
-    r"regexp_replace\(\s*"
+_TWO_ARG_REGEXP = re.compile(
+    r"\b(regexp_replace|regexp_extract_all|regexp_extract)\(\s*"
     r"([A-Za-z_][\w.]*(?:\((?:[^()']|'(?:[^']|'')*')*\))?|'(?:[^']|'')*')"
     r"\s*,\s*('(?:[^']|'')*')\s*\)"
 )
@@ -297,11 +308,20 @@ _NAME_REWRITES = [
 _STRING_LITERAL = re.compile(r"'(?:[^']|'')*'")
 
 
+def _spark_literal(presto_literal: str) -> str:
+    """A Presto literal re-encoded for Spark's default parser, which
+    reads ``\\`` escapes and does not collapse a doubled quote."""
+    value = presto_literal[1:-1].replace("''", "'")
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _outside_literals(sql: str, fn) -> str:
+    """Apply ``fn`` to the text between literals; re-encode each
+    literal for Spark."""
     out, last = [], 0
     for m in _STRING_LITERAL.finditer(sql):
         out.append(fn(sql[last : m.start()]))
-        out.append(m.group(0))
+        out.append(_spark_literal(m.group(0)))
         last = m.end()
     out.append(fn(sql[last:]))
     return "".join(out)
@@ -326,7 +346,14 @@ def _sub_outside_literals(pattern: "re.Pattern[str]", repl, sql: str) -> str:
 
 def translate_presto_sql(sql: str) -> str:
     """Rewrite Presto dialect residue to Spark SQL (see module doc)."""
-    sql = _sub_outside_literals(_TWO_ARG_REGEXP_REPLACE, r"regexp_replace(\1, \2, '')", sql)
+
+    def two_arg_regexp(m: "re.Match[str]") -> str:
+        # the third argument Presto's 2-arg form implies: no replacement
+        # text, or the whole match (Spark's 2-arg extract means group 1)
+        third = "''" if m[1] == "regexp_replace" else "0"
+        return f"{m[1]}({m[2]}, {m[3]}, {third})"
+
+    sql = _sub_outside_literals(_TWO_ARG_REGEXP, two_arg_regexp, sql)
     sql = _sub_outside_literals(
         _DATE_DIFF_HEAD, lambda m: f"timestampdiff({m.group(1).upper()}, ", sql
     )
@@ -344,10 +371,10 @@ def translate_presto_sql(sql: str) -> str:
 
 def run_presto_sql(spark: SparkSession, sql: str) -> DataFrame:
     """Execute a Presto-dialect query verbatim on this engine."""
+    if spark.conf.get(_ESCAPED_LITERALS, "false").lower() == "true":
+        raise ValueError(
+            f"run_presto_sql needs {_ESCAPED_LITERALS}=false: the translated "
+            "literals are escaped for Spark's default string parser"
+        )
     register_presto_compat(spark)
-    prev = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
-    try:
-        return spark.sql(translate_presto_sql(sql))
-    finally:
-        spark.conf.set("spark.sql.parser.escapedStringLiterals", prev)
+    return spark.sql(translate_presto_sql(sql))

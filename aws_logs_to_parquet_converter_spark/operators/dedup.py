@@ -362,27 +362,6 @@ def content_digests(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def char_shingles(text: Column, n: int = 5) -> Column:
-    """Distinct character n-grams of a normalized text, as an array —
-    built with sequence/transform (no explode until the caller asks).
-
-    NOTE: array higher-order functions evaluate interpreted
-    (CodegenFallback).  OCCURRENCE consumers (minhash, winnow — where
-    MIN/window absorb duplicates for free) should prefer
-    ``exploded_shingles`` below, which stays entirely in wholestage
-    codegen; SET consumers that would otherwise dedup the occurrence
-    stream should prefer ``distinct_shingles``, which trades one
-    interpreted transform per doc for the whole per-subplan dedup
-    aggregate (measured r15 — see that docstring)."""
-    norm = _normalized(text)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(1))),
-            lambda i: F.substring(norm, i, n),
-        )
-    )
-
-
 def exploded_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame:
     """(_id, _sh) rows: one per character n-gram occurrence (with
     repeats).  explode(sequence) + substring are plain codegen

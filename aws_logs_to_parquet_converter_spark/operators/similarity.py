@@ -30,13 +30,13 @@ from pyspark.sql import functions as F
 
 
 def _warn_retired_dim(dim: int | None) -> None:
-    """The unroll tier is retired (r14); a caller still passing
-    ``dim``/``unroll_dim`` must hear that it no longer does anything —
-    and that ANSI length-mismatch errors became silent 0.0 similarity
-    (r15 advisory: no silent parameter black-holes)."""
+    """The unroll tier is retired (r14); a caller still passing ``dim``
+    must hear that it no longer does anything — and that ANSI
+    length-mismatch errors became silent 0.0 similarity (r15 advisory:
+    no silent parameter black-holes)."""
     if dim is not None:
         warnings.warn(
-            "dim/unroll_dim is ignored since r14 (the unrolled element_at "
+            "dim is ignored since r14 (the unrolled element_at "
             "tier measured 5-7x slower than the HOF fold and was retired); "
             "note length-mismatched vectors now yield 0.0 similarity instead "
             "of an ANSI error — validate vector lengths upstream if you "
@@ -133,7 +133,6 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    unroll_dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors of each query vector.
 
@@ -142,12 +141,11 @@ def cosine_topk(
     id — deterministic.  Returns (query_id, neighbor_id, sim, rank).
 
     Vector math is the zip_with/aggregate fold (see ``_dot`` — the
-    only tier since r14; ``unroll_dim`` is retained for API stability
-    but ignored, because the unrolled form measured slower at every
+    only tier since r14; the unrolled form measured slower at every
     stake: 9.3s cold / 2.5s warm vs 0.8s warm folded on 5k pairs, and
     5–7× slower on quadratic pair stages, PERF.md round-13/-14).
     """
-    scored = _cosine_scored_pairs(corpus, queries, id_col, vec_col, unroll_dim)
+    scored = _cosine_scored_pairs(corpus, queries, id_col, vec_col)
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
     return scored.select("*", F.row_number().over(w).alias("rank")).where(F.col("rank") <= k)
 
@@ -157,7 +155,6 @@ def _cosine_scored_pairs(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    dim: "int | None",
 ) -> DataFrame:
     """The shared broadcast-queries x streamed-corpus cosine scoring
     plan of ``cosine_topk`` and ``hard_negative_pairs`` (one definition
@@ -175,20 +172,20 @@ def _cosine_scored_pairs(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col), dim).alias("_nq"),
+        _norm(F.col(vec_col)).alias("_nq"),
     )
     c = fan_out(
         corpus.select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("_cv"),
-            _norm(F.col(vec_col), dim).alias("_nc"),
+            _norm(F.col(vec_col)).alias("_nc"),
         ),
         "neighbor_id",
     )
     sim = F.coalesce(
         F.nanvl(
             F.try_divide(
-                _dot(F.col("_qv"), F.col("_cv"), dim),
+                _dot(F.col("_qv"), F.col("_cv")),
                 F.col("_nq") * F.col("_nc"),
             ),
             F.lit(0.0),
@@ -441,7 +438,6 @@ def hard_negative_pairs(
     k: int = 5,
     lo: float = 0.15,
     hi: float = 0.35,
-    unroll_dim: "int | None" = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive/embedding training: per
     query, the top-``k`` corpus vectors whose cosine lands in
@@ -463,7 +459,6 @@ def hard_negative_pairs(
         queries.where(F.col(vec_col).isNotNull()),
         id_col,
         vec_col,
-        unroll_dim,
     ).where((F.col("sim") >= lo) & (F.col("sim") < hi))
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
     return scored.select("*", F.row_number().over(w).alias("rnk")).where(
@@ -742,7 +737,6 @@ def cosine_topk_lsh(
     n_planes: int = 12,
     max_hamming: int = 2,
     seed: int = 42,
-    unroll_dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: candidates limited to corpus vectors whose
     hyperplane signature is within ``max_hamming`` bits of the query's,
@@ -768,7 +762,7 @@ def cosine_topk_lsh(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("_qv"), F.col("_cv"), unroll_dim), 4).alias("sim"),
+            F.round(cosine(F.col("_qv"), F.col("_cv")), 4).alias("sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
@@ -1686,7 +1680,6 @@ def cosine_topk_lsh_bucketed(
     bands: int = 3,
     probe_flips: bool = True,
     seed: int = 42,
-    unroll_dim: int | None = None,
 ) -> DataFrame:
     """Bucketed multi-probe LSH top-k — the EQUI-JOIN form of
     ``cosine_topk_lsh`` for query sets too large to broadcast (that
@@ -1754,7 +1747,7 @@ def cosine_topk_lsh_bucketed(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("_qv"), F.col("_cv"), unroll_dim), 4).alias("sim"),
+            F.round(cosine(F.col("_qv"), F.col("_cv")), 4).alias("sim"),
         )
     )
     wnd = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")

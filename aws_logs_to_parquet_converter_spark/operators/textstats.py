@@ -5,6 +5,10 @@ All native column expressions — split/filter/size/length run inside
 wholestage codegen, so these scale to corpus-wide sweeps without a
 Python worker.  The column builders are reused by plans/extensions.py
 where each gets a DuckDB-oracle query.
+
+Tokenization has one spelling per form: ``tokens()`` for the token
+array, ``token_rows()`` for one row per token.  Both lowercase, split
+on ``WS_PLUS`` and drop empty tokens.
 """
 
 from __future__ import annotations
@@ -32,7 +36,8 @@ def tokens(text: Column) -> Column:
     array column.
 
     The one spelling of the per-document token array; operators that
-    need the tokens as an array call this rather than re-spell it.
+    need the tokens as an array call this rather than re-spell it
+    (``token_rows`` is the one spelling of the same tokens as rows).
 
     NOTE: the filter is an interpreted higher-order function
     (CodegenFallback), evaluated once per row over ~100 short tokens —
@@ -41,6 +46,21 @@ def tokens(text: Column) -> Column:
     paths (``token_count``/``mean_token_len``) use the codegen regexp
     forms below instead."""
     return F.filter(F.split(F.lower(text), WS_PLUS), lambda tok: tok != "")
+
+
+def token_rows(
+    df: DataFrame, text: Column | str, *keep, name: str = "_tok", pos: str | None = None
+) -> DataFrame:
+    """The same tokens as ``tokens()``, one row each: ``keep`` columns
+    plus the token as ``name`` (and its split position as ``pos``).
+
+    The one row-form spelling; operators that aggregate per token call
+    this rather than re-spell explode/split/lower.  Positions are
+    ``posexplode``'s 0-based split indexes taken BEFORE the empty
+    tokens drop, so a leading-whitespace text has no token at 0."""
+    split = F.split(F.lower(text), WS_PLUS)
+    tok = F.posexplode(split).alias(pos, name) if pos else F.explode(split).alias(name)
+    return df.select(*keep, tok).where(F.col(name) != "")
 
 
 def token_count(text: Column) -> Column:
@@ -199,10 +219,7 @@ def top_ngram_fraction(df: DataFrame, id_col: str, text_col: str, n: int = 2) ->
     """
     from pyspark.sql import Window
 
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.split(F.lower(text_col), WS_PLUS)).alias("_pos", "_tok"),
-    ).where(F.col("_tok") != "")
+    toks = token_rows(df, text_col, F.col(id_col).alias("_id"), pos="_pos")
     w = Window.partitionBy("_id").orderBy("_pos")
     parts = [F.col("_tok")] + [F.lead("_tok", i).over(w) for i in range(1, n)]
     grams = toks.select("_id", F.concat_ws(" ", *parts).alias("_gram"), parts[-1].alias("_last"))
@@ -238,21 +255,6 @@ def top_ngram_fraction(df: DataFrame, id_col: str, text_col: str, n: int = 2) ->
     )
 
 
-def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full stat block to a documents DataFrame."""
-    c = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(c).alias("n_tokens"),
-        F.round(mean_token_len(c), 4).alias("mean_token_len"),
-        F.round(stopword_ratio(c), 4).alias("stopword_ratio"),
-        F.round(punct_ratio(c), 4).alias("punct_ratio"),
-        quality_score(c).alias("quality"),
-        predict_lang(c).alias("lang_pred"),
-        fingerprint(c).alias("fingerprint"),
-    )
-
-
 def tfidf_top_terms(
     df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
@@ -271,10 +273,7 @@ def tfidf_top_terms(
     """
     from pyspark.sql import Window
 
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(F.lower(text_col), WS_PLUS)).alias("_tok"),
-    ).where(F.col("_tok") != "")
+    toks = token_rows(df, text_col, F.col(id_col).alias("_id"))
     tf = toks.groupBy("_id", "_tok").agg(F.count("*").alias("tf"))
     # document frequency as a window over the SAME (doc, term) relation:
     # one exchange on term, no separate aggregate + re-join (the join
@@ -571,14 +570,7 @@ def bm25_topk(
         .select("_id", "_dl", F.explode("_arr").alias("_tok"))
     )
     dl_expr = F.size(arr_expr)
-    qterms = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.explode(F.split(F.lower(query_text_col), WS_PLUS)).alias("_tok"),
-        )
-        .where(F.col("_tok") != "")
-        .distinct()
-    )
+    qterms = token_rows(queries, query_text_col, F.col(query_id_col).alias("query_id")).distinct()
     qtoks = qterms.select("_tok").distinct()
     tf = (
         toks.join(F.broadcast(qtoks), "_tok")
@@ -738,9 +730,7 @@ def _unigram_counts(corpus: DataFrame, text_col: str, max_vocab: int):
     ``Window.orderBy`` would funnel all of them through one task (the
     round-6 scale finding).  Tiebreak (count desc, token asc) is
     unchanged and deterministic."""
-    toks = corpus.select(
-        F.explode(F.split(F.lower(F.col(text_col)), WS_PLUS)).alias("token")
-    ).where(F.col("token") != "")
+    toks = token_rows(corpus, text_col, name="token")
     counts = toks.groupBy("token").agg(F.count("*").alias("c")).persist()
     try:
         n = counts.agg(F.sum("c")).first()[0] or 0
@@ -1333,11 +1323,9 @@ def dsir_importance_weights(
         raise ValueError(f"dsir_importance_weights: buckets must be >= 2, got {buckets}")
     from pyspark.sql import Window
 
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        target.alias("_tgt"),
-        F.posexplode(F.split(F.lower(F.col(text_col)), WS_PLUS)).alias("_pos", "_tok"),
-    ).where(F.col("_tok") != "")
+    toks = token_rows(
+        df, text_col, F.col(id_col).alias("_id"), target.alias("_tgt"), pos="_pos"
+    )
     w_next = Window.partitionBy("_id").orderBy("_pos")
     with_next = toks.select(
         "_id", "_tgt", "_tok", F.lead("_tok").over(w_next).alias("_nxt")
@@ -1458,10 +1446,7 @@ def pmi_top_bigrams(
     """
     from pyspark.sql import Window
 
-    toks = df.select(
-        F.col(id_col).alias("_row"),
-        F.posexplode(F.split(F.lower(F.col(text_col)), WS_PLUS)).alias("_pos", "_tok"),
-    ).where(F.col("_tok") != "")
+    toks = token_rows(df, text_col, F.col(id_col).alias("_row"), pos="_pos")
     w = Window.partitionBy("_row").orderBy("_pos")
     big = toks.select(
         "_tok", F.lead("_tok").over(w).alias("_nxt")
@@ -1531,10 +1516,7 @@ def unigram_entropy(
 
     Returns ``group_cols + (n_tokens, vocab, entropy_bits, ttr_ppm)``.
     """
-    toks = df.select(
-        *group_cols,
-        F.explode(F.split(F.lower(F.col(text_col)), WS_PLUS)).alias("_tok"),
-    ).where(F.col("_tok") != "")
+    toks = token_rows(df, text_col, *group_cols)
     counts = toks.groupBy(*group_cols, "_tok").agg(F.count("*").alias("_c"))
     grouped = counts.groupBy(*group_cols).agg(
         F.sum("_c").alias("n_tokens"),
@@ -1591,10 +1573,7 @@ def source_kl_divergence(
 
     Returns ``(group_col, n_tokens, kl_bits)``.
     """
-    toks = df.select(
-        F.col(group_col),
-        F.explode(F.split(F.lower(F.col(text_col)), WS_PLUS)).alias("_tok"),
-    ).where(F.col("_tok") != "")
+    toks = token_rows(df, text_col, group_col)
     # Persist the slim (group, token, count) relation and derive
     # EVERYTHING from it: the r15 plan audit found the old "AQE
     # ReusedExchange serves the second read" claim never held — the

@@ -30,7 +30,7 @@ _DUCK_SW_RATIO = (
 # The BPE-ish pretokenizer pattern as a DuckDB SQL string literal
 # (embedded quote doubled).  Must stay byte-identical to
 # textstats.BPE_TOKEN_PATTERN — asserted in test_pipeline_ops.
-from aws_logs_to_parquet_converter_spark.operators.textstats import BPE_TOKEN_PATTERN, WS_PLUS
+from aws_logs_to_parquet_converter_spark.operators.textstats import BPE_TOKEN_PATTERN
 
 _BPE_SQL_LIT = "'" + BPE_TOKEN_PATTERN.replace("'", "''") + "'"
 
@@ -1174,9 +1174,8 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     unroll on the joined-pair stage, identical results — so the pair
     scorers now use the HOF fold; see PERF.md round-13."""
     emb = t(spark, sf_dir, "embeddings")
-    dim = emb.select(F.size("embedding")).first()[0]
     pairs = similarity.cosine_neardup_pairs(
-        emb, id_col="vec_id", vec_col="embedding", threshold=0.4, dim=dim
+        emb, id_col="vec_id", vec_col="embedding", threshold=0.4
     )
     return pairs.select("id_a", "id_b", F.round("sim", 4).alias("sim"))
 
@@ -1450,10 +1449,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same policy as ANSI SQL (NOT IN over the exact pair space); the
     clustered Θ(Σ|cell|²) form is q_semantic_dedup_clustered."""
     emb = t(spark, sf_dir, "embeddings")
-    dim = emb.select(F.size("embedding")).first()[0]
     kept = similarity.semantic_dedup(
-        emb, id_col="vec_id", vec_col="embedding", threshold=0.4,
-        n_cells=1, dim=dim,
+        emb, id_col="vec_id", vec_col="embedding", threshold=0.4, n_cells=1
     )
     return kept.select("vec_id", "label")
 
@@ -1475,10 +1472,9 @@ def q_semantic_dedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant and total work linear as sf grows (the scale contract
     PERF.md measures)."""
     emb = t(spark, sf_dir, "embeddings")
-    dim = emb.select(F.size("embedding")).first()[0]
     kept = similarity.semantic_dedup(
         emb, id_col="vec_id", vec_col="embedding", threshold=0.4,
-        n_cells="auto", target_cell_size=1000, dim=dim,
+        n_cells="auto", target_cell_size=1000,
     )
     return kept.select("vec_id", "label")
 
@@ -1547,11 +1543,9 @@ def q_semantic_dedup_cells_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a row dropped/kept across a cell boundary on either side breaks
     the match."""
     emb = t(spark, sf_dir, "embeddings")
-    dim = emb.select(F.size("embedding")).first()[0]
     kept = similarity.semantic_dedup(
         emb, id_col="vec_id", vec_col="embedding", threshold=0.4,
-        n_cells=16, sample_n=16, dim=dim,
-        kmeans_iters=0, hash_fn="md5",
+        n_cells=16, sample_n=16, kmeans_iters=0, hash_fn="md5",
     )
     return kept.select("vec_id", "label")
 
@@ -1911,9 +1905,7 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the partial aggregation collapses each partition to its
     distinct tokens before the single shuffle)."""
     d = t(spark, sf_dir, "documents")
-    toks = d.select(F.explode(F.split(F.lower("text"), WS_PLUS)).alias("tok")).where(
-        F.col("tok") != ""
-    )
+    toks = textstats.token_rows(d, "text", name="tok")
     return (
         toks.groupBy("tok")
         .agg(F.count("*").alias("freq"))
@@ -3437,9 +3429,7 @@ def q_cms_vocab_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aws_logs_to_parquet_converter_spark.operators import sketch as sk
 
     d = t(spark, sf_dir, "documents")
-    toks = d.select(F.explode(F.split(F.lower("text"), WS_PLUS)).alias("tok")).where(
-        F.col("tok") != ""
-    )
+    toks = textstats.token_rows(d, "text", name="tok")
     cms = sk.count_min_build(toks, "tok", depth=4, width=4096)
     return sk.count_min_estimate(cms, toks, "tok", depth=4, width=4096)
 
@@ -3464,9 +3454,7 @@ def q_approx_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-broken prefix); the heavy-hitter sketch regime
     (maxItemsTracked << distinct) is pytest-checked instead."""
     d = t(spark, sf_dir, "documents")
-    toks = d.select(
-        F.explode(F.split(F.lower("text"), WS_PLUS)).alias("tok")
-    ).where(F.col("tok") != "")
+    toks = textstats.token_rows(d, "text", name="tok")
     top = toks.agg(F.expr("approx_top_k(tok, 10000, 100000)").alias("_t"))
     return top.select(F.explode("_t").alias("e")).select(
         F.col("e.item").alias("token"),
@@ -3483,9 +3471,7 @@ def q_hll_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffle raw keys every rollup but sketches merge in bytes.
     Differential bounds vs exact counts in test_pipeline_ops."""
     d = t(spark, sf_dir, "documents")
-    toks = d.select(
-        "source", F.explode(F.split(F.lower("text"), WS_PLUS)).alias("tok")
-    ).where(F.col("tok") != "")
+    toks = textstats.token_rows(d, "text", "source", name="tok")
     per_source = toks.groupBy("source").agg(F.hll_sketch_agg("tok").alias("sk"))
     return per_source.agg(
         F.count("*").alias("n_sources"),
@@ -4702,10 +4688,7 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = t(spark, sf_dir, "documents")
     counts = (
-        d.select(F.explode(F.split(F.lower("text"), WS_PLUS)).alias("tok"))
-        .where(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(F.count("*").alias("c"))
+        textstats.token_rows(d, "text", name="tok").groupBy("tok").agg(F.count("*").alias("c"))
     )
     ranked = global_row_number(
         counts, [F.desc("c"), F.col("tok")], rank_col="r", count_col="_n"
@@ -6845,10 +6828,7 @@ def q_cms_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aws_logs_to_parquet_converter_spark.operators import sketch as sk
 
     d = t(spark, sf_dir, "documents")
-    toks = d.select(
-        "source",
-        F.explode(F.split(F.lower("text"), WS_PLUS)).alias("tok"),
-    ).where(F.col("tok") != "")
+    toks = textstats.token_rows(d, "text", "source", name="tok")
     segs = sk.count_min_build_sliced(
         toks, ["source"], "tok", depth=4, width=4096
     )
@@ -6896,11 +6876,7 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = t(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        "source",
-        F.explode(F.split(F.lower("text"), WS_PLUS)).alias("tok"),
-    ).where(F.col("tok") != "")
+    toks = textstats.token_rows(d, "text", "doc_id", "source", name="tok")
 
     root = os.path.join(
         tempfile.gettempdir(),

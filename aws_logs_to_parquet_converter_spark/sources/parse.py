@@ -85,9 +85,9 @@ def _parser_columns(text_col: str, gateway) -> tuple:
     call, each ``cast`` of a Python DataType); applying prebuilt ones
     costs ~50.  Columns are unresolved expressions, so one set serves
     every DataFrame of the JVM; ``gateway`` is in the key so a relaunched
-    JVM gets fresh ones.  Built as Column API calls, never SQL text: the
-    Presto shims toggle ``spark.sql.parser.escapedStringLiterals``,
-    under which SQL string literals parse differently.
+    JVM gets fresh ones.  Built as Column API calls, never SQL text: a
+    session may set ``spark.sql.parser.escapedStringLiterals``, under
+    which SQL string literals parse differently.
     """
     line = F.col(text_col)
     keep = F.trim(line) != ""

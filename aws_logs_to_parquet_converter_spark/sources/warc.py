@@ -200,8 +200,8 @@ def read_warc_records(
     if not stitch:
         rec = rec.where(F.length("_rec") > 0)
     # header block = up to the first blank line; payload = the rest.
-    # Pure Column API (no F.expr): string escapes here must not depend
-    # on the parser's escapedStringLiterals setting.
+    # Pure Column API (no F.expr): Python string literals reach the JVM
+    # as values, with no SQL string parsing in between.
     blank = F.instr(F.col("_rec"), "\r\n\r\n")
     header = F.substring_index(F.col("_rec"), "\r\n\r\n", 1)
     cols = [header.alias("warc_headers")]

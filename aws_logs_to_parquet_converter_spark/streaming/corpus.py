@@ -22,7 +22,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from aws_logs_to_parquet_converter_spark.operators.scrub import pii_counts, scrub_pii
-from aws_logs_to_parquet_converter_spark.operators.textstats import WS_PLUS
+from aws_logs_to_parquet_converter_spark.operators.textstats import token_rows
 from aws_logs_to_parquet_converter_spark.sources.jsonl import DOCUMENT_SCHEMA
 
 
@@ -431,11 +431,9 @@ def stream_trending_terms(
     ``rank_trending`` below does it per closed batch instead, a plain
     window function over a tiny per-trigger result).
     """
-    toks = (
-        docs.withWatermark(ts_col, watermark)
-        .select(ts_col, F.explode(F.split(F.lower(F.col(text_col)), WS_PLUS)).alias("token"))
-        .where(F.length("token") >= min_token_len)
-    )
+    toks = token_rows(
+        docs.withWatermark(ts_col, watermark), text_col, ts_col, name="token"
+    ).where(F.length("token") >= min_token_len)
     return toks.groupBy(F.window(ts_col, window_duration), "token").agg(
         F.count("*").alias("n")
     )

@@ -3,6 +3,10 @@
 
 Usage: python scripts/dump_plans.py --out plans/r15 --suffix _before [query ...]
 Default query set: the headline bench entries.
+
+Expression ids (``#123``), lambda-variable suffixes (``x_12``), exchange
+plan ids (``plan_id=45``) and RDD ids (``MapPartitionsRDD[67]``) are
+replaced with fixed tokens, so two dumps compare with ``diff -r``.
 """
 
 from __future__ import annotations
@@ -10,6 +14,7 @@ from __future__ import annotations
 import argparse
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -18,6 +23,17 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from aws_logs_to_parquet_converter_spark.plans import REGISTRY  # noqa: E402
 from aws_logs_to_parquet_converter_spark.session import get_spark  # noqa: E402
+
+_LAMBDA_VAR = re.compile(r"(lambda \w+?)_\d+#")
+_EXPR_ID = re.compile(r"#\d+")
+_PLAN_ID = re.compile(r"plan_id=\d+")
+_RDD_ID = re.compile(r"RDD\[\d+\]")
+
+
+def normalise_plan(text: str) -> str:
+    """Replace the per-session counters in a plan string with fixed tokens."""
+    text = _EXPR_ID.sub("#N", _LAMBDA_VAR.sub(r"\1_N#", text))
+    return _RDD_ID.sub("RDD[N]", _PLAN_ID.sub("plan_id=N", text))
 
 
 def main() -> None:
@@ -45,7 +61,7 @@ def main() -> None:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            (out / f"{name}{args.suffix}.txt").write_text(buf.getvalue())
+            (out / f"{name}{args.suffix}.txt").write_text(normalise_plan(buf.getvalue()))
             print(f"wrote {name}{args.suffix}.txt")
         except Exception as e:
             print(f"SKIP {name}: {type(e).__name__}: {e}")

@@ -123,8 +123,8 @@ def test_repeat_parse_is_cheap_and_plan_ignores_escaped_literals(spark):
     """The parser's expressions are built once per JVM: a repeat call
     may make at most 100 py4j commands (a fresh build makes ~1,500).
     Its optimized plan does not depend on
-    ``spark.sql.parser.escapedStringLiterals``, which the Presto shims
-    toggle."""
+    ``spark.sql.parser.escapedStringLiterals``, which a session may
+    set."""
     df = spark.createDataFrame([(l,) for l in generate_log_lines(20)], "value string")
     parse_lines(df)
     client = spark.sparkContext._gateway._gateway_client

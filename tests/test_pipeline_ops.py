@@ -743,6 +743,7 @@ def test_vertical_tab_tokenization_agrees_cross_engine(spark):
         WS_PLUS,
         bpe_token_count,
         token_count,
+        token_rows,
     )
 
     texts = [
@@ -775,6 +776,24 @@ def test_vertical_tab_tokenization_agrees_cross_engine(spark):
             "SELECT string_split_regex(lower(?), '[ \\t\\r\\n\\f\\x0b]+')", [t]
         ).fetchone()
         assert sp[i] == duck, (i, sp[i], duck)
+    # and the row form, taken in position order, is the oracle's token list
+    rows = {}
+    for r in token_rows(df, "text", "i", pos="p").collect():
+        rows.setdefault(r.i, []).append((r.p, r._tok))
+    for i, t in enumerate(texts):
+        (duck,) = con.execute(
+            "SELECT list_filter(string_split_regex(lower(?), '[ \\t\\r\\n\\f\\x0b]+'),"
+            " x -> x != '')",
+            [t],
+        ).fetchone()
+        assert [tok for _, tok in sorted(rows[i])] == duck, (i, rows[i], duck)
+    # NULL, empty and whitespace-only text give no rows; positions count
+    # the dropped leading empty token
+    edge = spark.createDataFrame(
+        [(0, None), (1, ""), (2, " \t\x0b "), (3, "  a b"), (4, "a b  ")], "i long, text string"
+    )
+    got = sorted((r.i, r.p, r._tok) for r in token_rows(edge, "text", "i", pos="p").collect())
+    assert got == [(3, 1, "a"), (3, 2, "b"), (4, 0, "a"), (4, 1, "b")]
 
 
 def test_c4_rules_battery(spark):

@@ -4,9 +4,15 @@ F1-F7) plus extended shims, executed through run_presto_sql."""
 import pytest
 
 from aws_logs_to_parquet_converter_spark.functions.presto_compat import (
+    register_presto_compat,
     run_presto_sql,
     translate_presto_sql,
 )
+
+
+def _spark_lit(value):
+    """``value`` as a Spark default-parser string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def test_two_arg_regexp_replace(spark):
@@ -77,12 +83,41 @@ def test_quoted_identifiers(spark):
 
 
 def test_escaped_string_literals_scoped(spark):
-    # inside run_presto_sql: '\d' stays a regex class; after: conf restored
+    # '\d' stays a regex class, '' is one quote, and the conf is untouched
     row = run_presto_sql(
-        spark, r"SELECT regexp_extract('a1b22c', '(\d+)', 1) AS first_num"
+        spark,
+        r"""SELECT regexp_extract('a1b22c', '(\d+)', 1) AS first_num,
+                  length('it''s') AS n, 'it''s' AS v,
+                  regexp_extract('ab12', '\d+') AS whole,
+                  regexp_extract_all('a1b22', '\d+') AS all_whole""",
     ).collect()[0]
     assert row.first_num == "1"
+    assert (row.n, row.v) == (4, "it's")
+    assert row.whole == "12"  # Presto's 2-arg form is the whole match
+    assert row.all_whole == ["1", "22"]
+    # a doubled quote in a filter matches the stored single quote
+    spark.createDataFrame([("O'Reilly",), ("Reilly",)], "name string").createOrReplaceTempView(
+        "authors"
+    )
+    try:
+        liked = run_presto_sql(spark, "SELECT name FROM authors WHERE name LIKE '%O''Reilly%'")
+        assert [r.name for r in liked.collect()] == ["O'Reilly"]
+    finally:
+        spark.catalog.dropTempView("authors")
     assert spark.conf.get("spark.sql.parser.escapedStringLiterals") == "false"
+    # the legacy parser mode would mis-read the escaped literals: refuse
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    try:
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            run_presto_sql(spark, "SELECT 'a' AS a")
+        # registration still writes the shim bodies under the default mode
+        spark.conf.unset("spark.spark_graft.prestoCompatVersion")
+        register_presto_compat(spark)
+        assert spark.conf.get("spark.sql.parser.escapedStringLiterals") == "true"
+    finally:
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
+    q = run_presto_sql(spark, """SELECT json_extract('{"q": "say \\"x\\""}', '$.q') AS q""")
+    assert q.collect()[0].q == '"say \\"x\\""'
 
 
 def test_extended_date_format_tokens(spark):
@@ -109,21 +144,18 @@ def test_date_format_jdk_patterns_pass_through_untranslated(spark):
     MySQL translation (incl. T/Z literal-quoting) must fire ONLY when
     the format carries '%' tokens (r7 advisor: a quoted literal 'T'
     became ''T'' — an escaped quote plus a bare pattern letter — and
-    the zone-offset letter Z silently emitted as the literal Z).
-
-    JDK patterns with EMBEDDED quoted literals ('yyyy-MM-dd''T''...)
-    remain out of scope: the legacy escapedStringLiterals parser mode
-    the Presto shim runs under does not apply quote-doubling, a
-    string-literal divergence upstream of the format shim."""
+    the zone-offset letter Z silently emitted as the literal Z)."""
     row = run_presto_sql(
         spark,
         """
         SELECT date_format(TIMESTAMP '2019-02-06 15:04:05', 'yyyy-MM-dd') AS plain,
                date_format(TIMESTAMP '2019-02-06 15:04:05', 'HH:mm Z') AS zoned,
-               date_format(TIMESTAMP '2019-02-06 15:04:05', '%Y-%m-%dT%H:%i:%s') AS mysql_iso
+               date_format(TIMESTAMP '2019-02-06 15:04:05', '%Y-%m-%dT%H:%i:%s') AS mysql_iso,
+               date_format(TIMESTAMP '2019-02-06 15:04:05', 'yyyy-MM-dd''T''HH') AS quoted
         """,
     ).collect()[0]
     assert row.plain == "2019-02-06"
+    assert row.quoted == "2019-02-06T15"  # embedded JDK quoted literal
     assert row.zoned == "15:04 +0000"  # JDK zone-offset letter, session pinned UTC
     assert row.mysql_iso == "2019-02-06T15:04:05"
 
@@ -242,48 +274,63 @@ def test_date_add_head_rewrite(spark):
     assert row.nested == 9
 
 
-def test_translator_never_rewrites_inside_string_literals():
-    from aws_logs_to_parquet_converter_spark.functions.presto_compat import translate_presto_sql
-
+def test_translator_never_rewrites_inside_string_literals(spark):
     # double-quoted JSON keys inside a literal stay untouched; the
     # double-quoted IDENTIFIER outside still becomes backticks
-    out = translate_presto_sql(
-        """SELECT json_extract_scalar('{"k": 7}', '$.k') FROM "my_table" WHERE x = 'it''s "fine"'"""
-    )
-    assert '\'{"k": 7}\'' in out
+    sql = """SELECT json_extract_scalar('{"k": 7}', '$.k') AS k FROM "my_table" WHERE x = 'it''s "fine"'"""
+    out = translate_presto_sql(sql)
+    assert _spark_lit('{"k": 7}') in out
     assert "`my_table`" in out
-    assert "'it''s \"fine\"'" in out  # escaped-quote literal intact
+    assert _spark_lit('it\'s "fine"') in out  # escaped-quote literal's value intact
+    spark.createDataFrame([('it\'s "fine"',), ("other",)], "x string").createOrReplaceTempView(
+        "my_table"
+    )
+    try:
+        assert [r.k for r in run_presto_sql(spark, sql).collect()] == ["7"]
+    finally:
+        spark.catalog.dropTempView("my_table")
 
 
-def test_head_rewrites_never_fire_inside_string_literals():
+def test_head_rewrites_never_fire_inside_string_literals(spark):
     """A literal that happens to CONTAIN date_diff(/date_add(/2-arg
-    regexp_replace( text must survive translation verbatim, while the
-    real call outside the literal still rewrites (r4 advisor: the head
-    rewrites ran before literal protection)."""
-    from aws_logs_to_parquet_converter_spark.functions.presto_compat import translate_presto_sql
-
-    out = translate_presto_sql(
+    regexp_replace( text must keep its value through translation, while
+    the real call outside the literal still rewrites (r4 advisor: the
+    head rewrites ran before literal protection)."""
+    sql = (
         "SELECT date_diff('day', a, b) AS d, "
         "'usage: date_diff(''day'', x, y)' AS msg1, "
         "'try date_add(''hour'', 1, t)' AS msg2, "
         "'regexp_replace(col, ''p'')' AS msg3 FROM t"
     )
+    out = translate_presto_sql(sql)
     assert out.startswith("SELECT timestampdiff(DAY,")
     assert "a, b) AS d" in out
-    assert "'usage: date_diff(''day'', x, y)'" in out
-    assert "'try date_add(''hour'', 1, t)'" in out
-    assert "'regexp_replace(col, ''p'')' AS msg3" in out
+    msgs = [
+        "usage: date_diff('day', x, y)",
+        "try date_add('hour', 1, t)",
+        "regexp_replace(col, 'p')",
+    ]
+    for msg in msgs:
+        assert _spark_lit(msg) in out
+    assert _spark_lit(msgs[2]) + " AS msg3" in out
+    spark.sql(
+        "SELECT TIMESTAMP '2019-01-01' AS a, TIMESTAMP '2019-01-04' AS b"
+    ).createOrReplaceTempView("t")
+    try:
+        row = run_presto_sql(spark, sql).collect()[0]
+    finally:
+        spark.catalog.dropTempView("t")
+    assert (row.d, [row.msg1, row.msg2, row.msg3]) == (3, msgs)
 
 
 def test_literal_protection_property():
     """Fuzz: ANY single-quoted literal content — including text that
     looks exactly like the constructs the translator rewrites — must
-    survive translation verbatim, while a real date_diff outside the
-    literal still rewrites."""
+    keep its value through translation (re-encoded for Spark's
+    parser), while a real date_diff outside the literal still
+    rewrites."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
-
-    from aws_logs_to_parquet_converter_spark.functions.presto_compat import translate_presto_sql
 
     plain = st.text(
         alphabet=st.characters(min_codepoint=32, max_codepoint=126, blacklist_characters="'"),
@@ -306,7 +353,7 @@ def test_literal_protection_property():
         lit = body.replace("'", "''")
         sql = f"SELECT a FROM t WHERE x = '{lit}' AND date_diff('day', a, b) > 0"
         out = translate_presto_sql(sql)
-        assert f"'{lit}'" in out, f"literal corrupted:\n in: {sql}\nout: {out}"
+        assert _spark_lit(body) in out, f"literal corrupted:\n in: {sql}\nout: {out}"
         assert "timestampdiff(DAY," in out
 
     check()

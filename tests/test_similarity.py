@@ -860,7 +860,7 @@ def test_lsh_bucketed_multiprobe_recall_and_plan(spark, sf_dir):
 
 
 def test_retired_dim_param_warns(spark):
-    """r15 advisory: dim/unroll_dim is retained-but-ignored since r14;
+    """r15 advisory: dim is retained-but-ignored since r14;
     a caller passing it must get a DeprecationWarning (and the values
     must be identical with and without it)."""
     import warnings as _w
