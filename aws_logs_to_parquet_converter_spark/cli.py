@@ -203,10 +203,12 @@ def run_maintenance(args: argparse.Namespace) -> int:
         # non-index path gets the same one-line-and-exit-2 treatment as
         # unrecognized params, not a raw Java traceback (a typo'd cron
         # path should read as a diagnostic)
+        from aws_logs_to_parquet_converter_spark.operators import versioned
+
         try:
-            cols = set(spark.read.parquet(f"{args.validate_index}/params").columns)
+            cols = set(versioned.read_params(spark, args.validate_index))
         except Exception as e:
-            print(f"no readable index params at {args.validate_index}/params: "
+            print(f"no readable index params at {args.validate_index}: "
                   f"{getattr(e, 'desc', e)}".splitlines()[0], file=sys.stderr)
             return 2
         if "num_hashes" in cols:
@@ -550,9 +552,9 @@ def build_dimension_parser() -> argparse.ArgumentParser:
 
 
 def run_dimension(args: argparse.Namespace) -> int:
+    from aws_logs_to_parquet_converter_spark.operators import versioned
     from aws_logs_to_parquet_converter_spark.streaming.dimension import (
         apply_cdc_batch,
-        read_dimension,
     )
 
     spark = get_spark(app_name="dimension_cdc_apply")
@@ -567,7 +569,7 @@ def run_dimension(args: argparse.Namespace) -> int:
               file=sys.stderr)
         return 2
     apply_cdc_batch(changes, args.dim, keys, tracked, args.ts_col)
-    dim = read_dimension(spark, args.dim)
+    dim = versioned.read(spark, args.dim)
     n_open = dim.where(F.col("valid_to").isNull()).count()
     print(f"dimension: {dim.count()} history row(s), {n_open} open, at {args.dim}")
     return 0

@@ -23,6 +23,13 @@ analysis SQL runs verbatim on this engine:
     written.  ``run_presto_sql`` refuses a session that set the legacy
     ``spark.sql.parser.escapedStringLiterals`` mode, under which that
     encoding would mis-parse.
+  * Presto's ``LIKE`` has no escape character unless an ``ESCAPE``
+    clause names one; Spark's defaults to ``\\``.  A literal pattern
+    directly after ``LIKE`` (or ``NOT LIKE``) with no ``ESCAPE`` clause
+    has each ``\\`` doubled, so Spark matches it as a plain
+    character.  A pattern with an ``ESCAPE`` clause passes as written.
+    Divergence left standing: a NON-literal pattern (a column or
+    expression) still gets Spark's ``\\`` escape.
 """
 
 from __future__ import annotations
@@ -308,6 +315,12 @@ _NAME_REWRITES = [
 _STRING_LITERAL = re.compile(r"'(?:[^']|'')*'")
 
 
+# A literal LIKE pattern: the text before it ends in LIKE, and no
+# ESCAPE clause follows it.
+_LIKE_BEFORE = re.compile(r"\bLIKE\s*$", re.IGNORECASE)
+_ESCAPE_AFTER = re.compile(r"\s*ESCAPE\b", re.IGNORECASE)
+
+
 def _spark_literal(presto_literal: str) -> str:
     """A Presto literal re-encoded for Spark's default parser, which
     reads ``\\`` escapes and does not collapse a doubled quote."""
@@ -320,8 +333,13 @@ def _outside_literals(sql: str, fn) -> str:
     literal for Spark."""
     out, last = [], 0
     for m in _STRING_LITERAL.finditer(sql):
-        out.append(fn(sql[last : m.start()]))
-        out.append(_spark_literal(m.group(0)))
+        before, lit = sql[last : m.start()], m.group(0)
+        out.append(fn(before))
+        if _LIKE_BEFORE.search(before) and not _ESCAPE_AFTER.match(sql, m.end()):
+            # Presto's LIKE has no default escape: make each backslash
+            # a plain character for Spark's LIKE
+            lit = lit.replace("\\", "\\\\")
+        out.append(_spark_literal(lit))
         last = m.end()
     out.append(fn(sql[last:]))
     return "".join(out)

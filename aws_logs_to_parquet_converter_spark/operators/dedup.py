@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from aws_logs_to_parquet_converter_spark.operators import versioned
 from aws_logs_to_parquet_converter_spark.operators.textstats import (
     NONWS_CLASS,
     normalized_text,
@@ -715,6 +716,14 @@ def minhash_near_duplicates(
     return pairs.select("id_a", "id_b", est).where(F.col("est_jaccard") >= threshold)
 
 
+# the params row after ``version``, and the data dirs a pre-versioning
+# index kept at its root (a migrating refresh prunes them)
+_MINHASH_PARAMS_DDL = (
+    "num_hashes int, bands int, shingle_n int, seed long, hash_fn string"
+)
+_MINHASH_FLAT_DIRS = ("signatures", "bands")
+
+
 def save_minhash_index(
     corpus: DataFrame,
     id_col: str,
@@ -735,28 +744,22 @@ def save_minhash_index(
     corpus+batch per day would re-shingle and re-shuffle 100 TB to
     admit a few GB; this index makes the daily probe O(batch).
 
-    Layout (versioned-commit, the ``save_pq_index`` pattern):
-      ``{path}/v-<ver>/bands``       (band, bucket, id) rows — the LSH
-                             buckets the probe equi-joins against
-                             (~bands rows x ~16 B/doc);
-      ``{path}/v-<ver>/signatures``  (id, signature) — what the
-                             est-Jaccard verification reads
-                             (~8*num_hashes B/doc); corpus TEXT is
-                             never stored or re-read;
-      ``{path}/params``      one row pinning (num_hashes, bands,
-                             shingle_n, seed, hash_fn) AND the live
-                             version — the probe reads its parameters
-                             FROM the index, so build and probe cannot
-                             disagree (the ``digest_bloom``
-                             self-describing rule), and the params row
-                             is written LAST so a crash mid-refresh
-                             leaves readers on the previous complete
-                             version (an in-place overwrite could pair
-                             NEW signatures with OLD band rows — an
-                             undetectable corruption, since ids,
-                             counts, and lengths all still match).
-    Pre-versioning flat-layout indexes remain readable/appendable; a
-    refresh migrates them.
+    Layout: a versioned store (``operators/versioned.py``) with two
+    data dirs per version — ``bands`` (band, bucket, id), the LSH
+    buckets the probe equi-joins against (~bands rows x ~16 B/doc),
+    and ``signatures`` (id, signature), what the est-Jaccard
+    verification reads (~8*num_hashes B/doc); corpus TEXT is never
+    stored or re-read.  The params row pins (num_hashes, bands,
+    shingle_n, seed, hash_fn) beside the live version: the probe reads
+    its parameters FROM the index, so build and probe cannot disagree
+    (the ``digest_bloom`` self-describing rule).  The versioned commit
+    matters here because an in-place overwrite could pair NEW
+    signatures with OLD band rows — an undetectable corruption, since
+    ids, counts, and lengths all still match.  Indexes written before
+    versioning (``signatures``/``bands`` at the root) stay readable and
+    appendable; a refresh migrates them and prunes the flat dirs.  An
+    empty params relation (an interrupted build) is rebuilt by an
+    overwrite; every other read of it raises.
 
     ``mode='append'`` admits a cleaned batch into the index; the
     caller's build parameters are CHECKED against the stored params
@@ -765,9 +768,7 @@ def save_minhash_index(
     later candidate set (``append_to_minhash_index`` reads the stored
     params for you).
 
-    ``prune=False`` skips the post-commit stale-version prune (a
-    refresh committing while a long-running probe still reads the old
-    version dir would otherwise delete files under it — the
+    ``prune=False`` skips the post-commit stale-version prune (the
     ``operators/versioned.py`` concurrency contract); call
     ``versioned.prune_stale_versions`` in a later maintenance window."""
     spark = corpus.sparkSession
@@ -778,10 +779,15 @@ def save_minhash_index(
         "seed": seed,
         "hash_fn": hash_fn,
     }
-    try:
-        stored = _minhash_index_params(spark, path)
-    except Exception:
-        stored = None  # no existing index at this path
+    stored = None
+    if versioned.exists(spark, path):
+        try:
+            stored = versioned.read_params(spark, path)
+        except ValueError:
+            # an empty params relation (an interrupted build): an
+            # overwrite rebuilds the whole index, an append cannot
+            if mode == "append":
+                raise
     if stored is not None and {k: stored[k] for k in given} != given:
         # BOTH modes: appending under foreign params corrupts future
         # probes outright, and an in-place param-CHANGING rebuild has
@@ -808,90 +814,31 @@ def save_minhash_index(
     # double aggregation here (unlike the self-join case — writes are
     # sequential jobs, never scheduled concurrently).
     sig = sig.persist()
+
+    def write(vdir: str, how: str) -> None:
+        # signatures BEFORE bands: a crash between the two appends
+        # then leaves an unbanded signature (merely unprobed until
+        # rebuild) instead of a band row whose verification join
+        # silently drops every future candidate pair for that document
+        sig.select(F.col(id_col).alias("id"), "signature").write.mode(
+            how
+        ).parquet(f"{vdir}/signatures")
+        _band_rows(sig, id_col, num_hashes, bands, hash_fn).select(
+            "band", "bucket", F.col("_id").alias("id")
+        ).write.mode(how).parquet(f"{vdir}/bands")
+
     try:
         if mode == "append":
-            vdir = _minhash_vdir(path, stored)
-            # signatures BEFORE bands: a crash between the two appends
-            # then leaves an unbanded signature (merely unprobed until
-            # rebuild) instead of a band row whose verification join
-            # silently drops every future candidate pair for that
-            # document — both appends are ADDITIVE within the live
-            # version, so this is the worst case
-            sig.select(F.col(id_col).alias("id"), "signature").write.mode(
-                "append"
-            ).parquet(f"{vdir}/signatures")
-            _band_rows(sig, id_col, num_hashes, bands, hash_fn).select(
-                "band", "bucket", F.col("_id").alias("id")
-            ).write.mode("append").parquet(f"{vdir}/bands")
+            write(versioned.live_dir(path, stored), "append")
         else:
-            # versioned commit (the save_pq_index pattern — r9 advisor):
-            # a fresh build or same-params REFRESH writes into a new
-            # v-<ver> dir and flips the params pointer LAST, so a crash
-            # anywhere mid-refresh leaves readers on the previous
-            # complete version.  In-place overwrite had an undetectable
-            # crash window: NEW signatures paired with OLD band rows —
-            # ids, counts, and lengths all match, so probes band on
-            # stale buckets and validate cannot see it.
-            import uuid
-
-            ver = uuid.uuid4().hex[:12]
-            vdir = f"{path}/v-{ver}"
-            sig.select(F.col(id_col).alias("id"), "signature").write.mode(
-                "overwrite"
-            ).parquet(f"{vdir}/signatures")
-            _band_rows(sig, id_col, num_hashes, bands, hash_fn).select(
-                "band", "bucket", F.col("_id").alias("id")
-            ).write.mode("overwrite").parquet(f"{vdir}/bands")
-            # the COMMIT: params last flips readers onto the new version
-            from aws_logs_to_parquet_converter_spark.operators.versioned import (
-                write_params,
+            versioned.commit(
+                spark, path, lambda vdir: write(vdir, "overwrite"),
+                values=(num_hashes, bands, shingle_n, seed, hash_fn),
+                ddl=_MINHASH_PARAMS_DDL, prune=prune,
+                extra_stale=_MINHASH_FLAT_DIRS,
             )
-
-            write_params(
-                spark, f"{path}/params",
-                (num_hashes, bands, shingle_n, seed, hash_fn, ver),
-                "num_hashes int, bands int, shingle_n int, seed long, "
-                "hash_fn string, version string",
-            )
-            if prune:
-                _prune_stale_versions(spark, path, ver)
     finally:
         sig.unpersist()
-
-
-def _minhash_vdir(path: str, params: dict) -> str:
-    """Live data dir of a MinHash index: ``{path}/v-<version>`` under
-    the versioned-commit layout; ``path`` itself for indexes persisted
-    before versioning (params row without a ``version`` field) — those
-    stay readable and appendable, and their next overwrite-refresh
-    migrates them."""
-    ver = params.get("version")
-    return f"{path}/v-{ver}" if ver else path
-
-
-def _prune_stale_versions(spark: SparkSession, path: str, live_ver: str) -> None:
-    """Drop superseded ``v-*`` dirs (and flat-layout leftovers from a
-    legacy index's migrating refresh) after a committed refresh — see
-    ``operators/versioned.py`` for the shared implementation and the
-    single-writer / concurrent-reader contract."""
-    from aws_logs_to_parquet_converter_spark.operators.versioned import (
-        prune_stale_versions,
-    )
-
-    prune_stale_versions(
-        spark, path, live_ver, extra_stale=("signatures", "bands")
-    )
-
-
-def _minhash_index_params(spark: SparkSession, path: str) -> dict:
-    row = spark.read.parquet(f"{path}/params").first()
-    if row is None:
-        raise ValueError(
-            f"no MinHash index params at {path}/params — run save_minhash_index "
-            "(mode='overwrite') first; an empty params relation means an "
-            "interrupted build"
-        )
-    return row.asDict()
 
 
 def minhash_corpus_candidates(
@@ -917,7 +864,7 @@ def minhash_corpus_candidates(
     the corpus-side reads stream the persisted index, never the
     corpus."""
     spark = batch.sparkSession
-    p = _minhash_index_params(spark, index_path)
+    p = versioned.read_params(spark, index_path)
     sig = minhash_signatures(
         batch,
         id_col,
@@ -927,7 +874,7 @@ def minhash_corpus_candidates(
         p["seed"],
         hash_fn=p["hash_fn"],
     )
-    vdir = _minhash_vdir(index_path, p)
+    vdir = versioned.live_dir(index_path, p)
     banded = _band_rows(sig, id_col, p["num_hashes"], p["bands"], p["hash_fn"]).select(
         F.col("_id").alias("_bid"), "band", "bucket"
     )
@@ -983,8 +930,8 @@ def validate_minhash_index(spark: SparkSession, path: str) -> dict:
     One scan of each relation: both inputs persist for the report's
     aggregations and unpersist before returning.
     """
-    p = _minhash_index_params(spark, path)
-    vdir = _minhash_vdir(path, p)
+    p = versioned.read_params(spark, path)
+    vdir = versioned.live_dir(path, p)
     sig = spark.read.parquet(f"{vdir}/signatures").persist()
     bands = spark.read.parquet(f"{vdir}/bands").persist()
     try:
@@ -1041,8 +988,9 @@ def rebuild_minhash_index(
         os.path.abspath(dest_path)
     ):
         raise ValueError("rebuild_minhash_index writes a NEW index; dest == src")
-    p = _minhash_index_params(spark, src_path)
-    sig = spark.read.parquet(f"{_minhash_vdir(src_path, p)}/signatures").dropDuplicates()
+    p = versioned.read_params(spark, src_path)
+    src = versioned.live_dir(src_path, p)
+    sig = spark.read.parquet(f"{src}/signatures").dropDuplicates()
     sig = sig.persist()
     try:
         bad = sig.agg(
@@ -1062,35 +1010,26 @@ def rebuild_minhash_index(
                 "re-banding them would produce degenerate buckets; rebuild "
                 "from text with save_minhash_index"
             )
-        # same versioned commit as save_minhash_index: data dirs first,
-        # the params pointer last (a crash mid-rebuild leaves dest_path
-        # paramless => unreadable, never half-built-but-live)
-        import uuid
+        # same versioned commit as save_minhash_index (a crash
+        # mid-rebuild leaves dest_path paramless => unreadable, never
+        # half-built-but-live); the prune keeps a re-run rebuild's dest
+        # from accumulating orphan v-* dirs
 
-        ver = uuid.uuid4().hex[:12]
-        vdir = f"{dest_path}/v-{ver}"
-        sig.write.mode("overwrite").parquet(f"{vdir}/signatures")
-        _band_rows(
-            sig, "id", p["num_hashes"], p["bands"], p["hash_fn"]
-        ).select("band", "bucket", F.col("_id").alias("id")).write.mode(
-            "overwrite"
-        ).parquet(f"{vdir}/bands")
-        from aws_logs_to_parquet_converter_spark.operators.versioned import (
-            write_params,
-        )
+        def write(vdir: str) -> None:
+            sig.write.parquet(f"{vdir}/signatures")
+            _band_rows(
+                sig, "id", p["num_hashes"], p["bands"], p["hash_fn"]
+            ).select("band", "bucket", F.col("_id").alias("id")).write.parquet(
+                f"{vdir}/bands"
+            )
 
-        write_params(
-            spark, f"{dest_path}/params",
-            (p["num_hashes"], p["bands"], p["shingle_n"], p["seed"], p["hash_fn"], ver),
-            "num_hashes int, bands int, shingle_n int, seed long, "
-            "hash_fn string, version string",
+        versioned.commit(
+            spark, dest_path, write,
+            values=(p["num_hashes"], p["bands"], p["shingle_n"], p["seed"],
+                    p["hash_fn"]),
+            ddl=_MINHASH_PARAMS_DDL, prune=prune,
+            extra_stale=_MINHASH_FLAT_DIRS,
         )
-        # a dest that previously held an index (a re-run rebuild)
-        # would otherwise accumulate orphan v-* dirs forever (r10
-        # review) — same post-commit prune (and same prune=False
-        # escape for concurrent readers) as save_minhash_index
-        if prune:
-            _prune_stale_versions(spark, dest_path, ver)
     finally:
         sig.unpersist()
 
@@ -1105,7 +1044,7 @@ def append_to_minhash_index(
     through here so signatures can never be written under different
     build parameters than the probe reads back)."""
     spark = batch.sparkSession
-    p = _minhash_index_params(spark, index_path)
+    p = versioned.read_params(spark, index_path)
     save_minhash_index(
         batch,
         id_col,

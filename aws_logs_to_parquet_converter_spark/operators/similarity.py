@@ -25,6 +25,7 @@ import warnings
 
 from pyspark.sql import Column, DataFrame, Window
 
+from aws_logs_to_parquet_converter_spark.operators import versioned
 from aws_logs_to_parquet_converter_spark.operators.partitioning import fan_out
 from pyspark.sql import functions as F
 
@@ -1158,44 +1159,31 @@ def save_pq_index(
     index that fits where the float corpus cannot: ~m bytes/vector
     (32x at dim=64/m=8), and queries never read a raw vector again.
 
-    Layout (versioned-commit: the params row is the atomic pointer):
-      ``{path}/v-<ver>/codebook``  m*ks rows (j, c, cent) — tiny;
-      ``{path}/v-<ver>/codes``     (id, pq_codes) — the corpus as m
-                                   one-byte codes, ONE zero-shuffle
-                                   Arrow encode pass;
-      ``{path}/params``            one row pinning the build
-                                   parameters AND the live version —
-                                   written LAST, so a crash anywhere
-                                   mid-rebuild leaves readers on the
-                                   previous complete version instead
-                                   of mixing a new codebook with old
-                                   codes (or vice versa — code arrays
-                                   have the same length either way,
-                                   so no validator could ever catch
-                                   the mismatch after the fact).
-    Stale version dirs are pruned after the commit (single-writer
-    assumption, same as every persisted index here); ``prune=False``
-    defers that to a maintenance window so concurrent long-running
-    probes of the old version keep their files
-    (``versioned.prune_stale_versions`` is the deferred call).
+    Layout: a versioned store (``operators/versioned.py``) with two
+    data dirs per version — ``codebook``, m*ks rows (j, c, cent), tiny;
+    and ``codes`` (id, pq_codes), the corpus as m one-byte codes from
+    ONE zero-shuffle Arrow encode pass.  The params row pins the build
+    parameters beside the live version.  The versioned commit matters
+    here because a crash mid-rebuild must never mix a new codebook with
+    old codes (or vice versa): code arrays have the same length either
+    way, so no validator could catch the mismatch after the fact.
+    ``prune=False`` defers the stale-version prune to a maintenance
+    window (``versioned.prune_stale_versions``) so concurrent
+    long-running probes of the old version keep their files.
 
     ``mode='append'`` admits new vectors ENCODED WITH THE EXISTING
     CODEBOOK (read back from the live version — append can never
     retrain and silently shift every stored code's meaning); the
     codebook, params, and version only change on a full rebuild."""
-    import uuid
-
     spark = corpus.sparkSession
     if mode == "append":
-        ver = _pq_index_version(spark, path)
-        book = _load_pq_codebook(spark, path)
+        live = versioned.live_dir(path, versioned.read_params(spark, path))
+        book = _load_pq_codebook(spark, live)
     else:
-        ver = uuid.uuid4().hex[:12]
         book = pq_train(
             corpus, id_col, vec_col, m, ks, sample_n, iters, seed, hash_fn
         )
     mm, kk, dsub = book.shape
-    vdir = f"{path}/v-{ver}"
     rows = corpus.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("_v")
     )
@@ -1217,57 +1205,38 @@ def save_pq_index(
             )
     coded = pq_encode(rows, "_v", book, out_col="pq_codes").select("id", "pq_codes")
     if mode == "append":
-        coded.write.mode("append").parquet(f"{vdir}/codes")
+        coded.write.mode("append").parquet(f"{live}/codes")
         return
     book_rows = [
         (j, c, [float(x) for x in book[j][c]])
         for j in range(mm)
         for c in range(kk)
     ]
-    spark.createDataFrame(
-        book_rows, "j int, c int, cent array<double>"
-    ).write.mode("overwrite").parquet(f"{vdir}/codebook")
-    coded.write.mode("overwrite").parquet(f"{vdir}/codes")
-    # the COMMIT: params last flips readers onto the complete version
-    from aws_logs_to_parquet_converter_spark.operators.versioned import (
-        write_params,
+
+    def write(vdir: str) -> None:
+        spark.createDataFrame(
+            book_rows, "j int, c int, cent array<double>"
+        ).write.parquet(f"{vdir}/codebook")
+        coded.write.parquet(f"{vdir}/codes")
+
+    versioned.commit(
+        spark, path, write,
+        values=(mm, kk, dsub, sample_n, iters, seed, hash_fn),
+        ddl="m int, ks int, dsub int, sample_n int, iters int, seed long, "
+        "hash_fn string",
+        prune=prune,
     )
 
-    write_params(
-        spark, f"{path}/params",
-        (ver, mm, kk, dsub, sample_n, iters, seed, hash_fn),
-        "version string, m int, ks int, dsub int, sample_n int, iters int, "
-        "seed long, hash_fn string",
-    )
-    # prune superseded versions (post-commit, best effort; see
-    # operators/versioned.py for the single-writer/reader contract)
-    if prune:
-        from aws_logs_to_parquet_converter_spark.operators.versioned import (
-            prune_stale_versions,
-        )
 
-        prune_stale_versions(spark, path, ver)
-
-
-def _pq_index_version(spark, path: str) -> str:
-    row = spark.read.parquet(f"{path}/params").first()
-    if row is None:
-        raise ValueError(f"no PQ index params at {path} — run save_pq_index first")
-    return row.version
-
-
-def _load_pq_codebook(spark, path: str):
-    """Reconstruct the numpy (m, ks, dsub) codebook of the LIVE index
-    version (resolved through the params pointer) — bounded
-    driver-side collect (m*ks*dsub doubles, a build-time constant)."""
+def _load_pq_codebook(spark, live: str):
+    """Reconstruct the numpy (m, ks, dsub) codebook stored in the live
+    version dir ``live`` — bounded driver-side collect (m*ks*dsub
+    doubles, a build-time constant)."""
     import numpy as np
 
-    ver = _pq_index_version(spark, path)
-    rows = (
-        spark.read.parquet(f"{path}/v-{ver}/codebook").orderBy("j", "c").collect()
-    )
+    rows = spark.read.parquet(f"{live}/codebook").orderBy("j", "c").collect()
     if not rows:
-        raise ValueError(f"no PQ codebook at {path}/v-{ver} — run save_pq_index first")
+        raise ValueError(f"no PQ codebook at {live} — run save_pq_index first")
     m = max(r.j for r in rows) + 1
     ks = max(r.c for r in rows) + 1
     dsub = len(rows[0].cent)
@@ -1292,11 +1261,11 @@ def query_pq_index(
     is one parquet scan of ~m bytes/vector, no re-encode, no raw
     vectors.  Identity with in-memory ``pq_topk`` over the same
     codebook is pinned in test_similarity."""
-    ver = _pq_index_version(spark, path)
-    book = _load_pq_codebook(spark, path)
+    live = versioned.live_dir(path, versioned.read_params(spark, path))
+    book = _load_pq_codebook(spark, live)
     m, ks, _ = book.shape
     coded = (
-        spark.read.parquet(f"{path}/v-{ver}/codes")
+        spark.read.parquet(f"{live}/codes")
         .select(F.col("id").alias("neighbor_id"), F.col("pq_codes").alias("_pq"))
         # tolerate duplicate code rows (an at-least-once caller
         # retrying an append): a duplicated neighbor must not occupy
@@ -1324,9 +1293,11 @@ def validate_pq_index(spark, path: str) -> dict:
         the codebook's ``m`` — a foreign-codebook append.
 
     One scan of the codes relation (persisted for the aggregations)."""
-    ver = _pq_index_version(spark, path)
-    m = int(spark.read.parquet(f"{path}/params").first().m)
-    codes = spark.read.parquet(f"{path}/v-{ver}/codes").persist()
+    params = versioned.read_params(spark, path)
+    m = int(params["m"])
+    codes = spark.read.parquet(
+        f"{versioned.live_dir(path, params)}/codes"
+    ).persist()
     try:
         stats = codes.agg(
             F.count("*").alias("rows"),
@@ -1341,7 +1312,7 @@ def validate_pq_index(spark, path: str) -> dict:
             .count()
         )
         return {
-            "version": ver,
+            "version": params["version"],
             "m": m,
             "n_codes": int(stats.rows),
             "n_ids": int(stats.ids),

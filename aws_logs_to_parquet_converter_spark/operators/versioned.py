@@ -1,25 +1,110 @@
-"""Shared versioned-commit plumbing for the persisted indexes.
+"""The versioned store: the one on-disk layout for crash-atomic state.
 
-Both on-disk indexes (MinHash: ``dedup.save_minhash_index``; PQ:
-``similarity.save_pq_index``) use the same crash-atomic layout — data
-under ``{path}/v-<ver>/...``, a params row carrying the live version
-written LAST — so the stale-version prune lives here once instead of
-being hand-rolled per index (r10 review).
+The query engine only reads Parquet that Spark has finished writing.
+Five stores beside the log table keep that rule with one layout:
 
-Concurrency contract (applies to every caller): SINGLE WRITER, and the
-prune runs immediately after the commit, so a probe whose plan already
-resolved the old version dir (vdir resolution is eager at plan build,
-the parquet scan lazy at execution) can hit deleted files if a refresh
-commits mid-job.  Crash-recovery readers are always safe — they
-re-resolve through the params pointer; concurrent long-running probes
-must be scheduled apart from refreshes, or the caller passes
-``prune=False`` to the save function and prunes in a later maintenance
-window (``prune_stale_versions`` is public for exactly that).
+  * the exact-distinct bitmap MV (``streaming/bitmap_mv.py``);
+  * the count-min segment MV (``streaming/cms_mv.py``);
+  * the SCD2 dimension (``streaming/dimension.py``);
+  * the MinHash index (``dedup.save_minhash_index``);
+  * the PQ index (``similarity.save_pq_index``).
+
+Layout: data under ``{path}/v-<ver>/`` (one ``data`` relation, or the
+store's named relations); a one-row ``{path}/params`` pointer
+``(version, *store values)`` names the live version.
+
+Commit order (``commit``): name a fresh version, write every data dir
+under it, write the params row LAST (``write_params``), then prune the
+superseded ``v-*`` dirs.  A crash before the params write leaves
+readers on the previous complete version; a crash after it leaves
+only stale dirs, which the next commit prunes.  A store's append mode
+writes into ``live_dir`` and does not create a version.
+
+Bootstrap rule: ``exists`` (the params pointer is on disk) is the only
+signal that a store is new.  Once it holds, every read failure
+propagates, so a transient IO error can never be taken for first use
+and reset the store.
+
+Readers resolve the pointer once per call (``read_params`` +
+``live_dir``; ``read`` does both).  ``live_dir`` answers ``path``
+itself for a store written before versioning (a params row without
+``version``); such stores stay readable and appendable, and their
+next commit migrates them (pass the flat dir names as ``extra_stale``).
+
+Concurrency contract: SINGLE WRITER, any number of readers.  The
+prune runs right after the commit, so a reader whose plan already
+resolved the old version dir (dir resolution is eager at plan build,
+the parquet scan lazy at execution) can hit deleted files if a commit
+lands mid-job.  Readers that re-resolve through the pointer are always
+safe; long-running readers must be scheduled apart from commits, or
+the writer passes ``prune=False`` and calls ``prune_stale_versions``
+in a later maintenance window.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import uuid
+from collections.abc import Callable, Sequence
+
+from pyspark.sql import DataFrame, SparkSession
+
+
+def exists(spark: SparkSession, path: str) -> bool:
+    """True iff a committed store lives at ``path`` (its params pointer
+    is on disk) -- the bootstrap signal; no Spark job."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(f"{path}/params")
+    return bool(p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p))
+
+
+def read_params(spark: SparkSession, path: str) -> dict:
+    """The store's params row as a dict; raises ``ValueError`` on an
+    empty params relation (a build interrupted before versioned
+    commits existed); the message says the data dirs are intact, since
+    a streaming store's history cannot be rebuilt from its inputs."""
+    row = spark.read.parquet(f"{path}/params").first()
+    if row is None:
+        raise ValueError(
+            f"no params row at {path}/params (an interrupted build); the "
+            f"data dirs under {path} still hold the store's contents"
+        )
+    return row.asDict()
+
+
+def live_dir(path: str, params: dict) -> str:
+    """Data dir of the live version: ``{path}/v-<ver>``, or ``path``
+    itself for a store written before versioning."""
+    ver = params.get("version")
+    return f"{path}/v-{ver}" if ver else path
+
+
+def read(spark: SparkSession, path: str) -> DataFrame:
+    """The live version's ``data`` relation, pointer-resolved."""
+    return spark.read.parquet(f"{live_dir(path, read_params(spark, path))}/data")
+
+
+def commit(
+    spark: SparkSession,
+    path: str,
+    write: Callable[[str], None],
+    values: Sequence = (),
+    ddl: str = "",
+    prune: bool = True,
+    extra_stale: "tuple[str, ...]" = (),
+) -> str:
+    """Commit a new version of the store at ``path``: ``write(vdir)``
+    writes every data dir under the fresh version dir, then the params
+    row ``(ver, *values)`` (schema ``version string`` plus ``ddl``)
+    flips readers onto it, then the prune (unless ``prune=False``)
+    drops superseded versions and ``extra_stale`` names.  Returns the
+    new version."""
+    ver = uuid.uuid4().hex[:12]
+    write(f"{path}/v-{ver}")
+    schema = "version string" + (f", {ddl}" if ddl else "")
+    write_params(spark, f"{path}/params", (ver, *values), schema)
+    if prune:
+        prune_stale_versions(spark, path, ver, extra_stale)
+    return ver
 
 
 def write_params(
@@ -50,7 +135,6 @@ def write_params(
     ``createDataFrame([row], ddl)`` at the call sites.
     """
     import io
-    import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq

@@ -15,7 +15,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_logs_to_parquet_converter_spark.operators import anomaly, fuzzy, scd
-from aws_logs_to_parquet_converter_spark.plans.registry import query, t
+from aws_logs_to_parquet_converter_spark.plans.registry import (
+    query,
+    scratch_dir,
+    stage_micro_batches,
+    t,
+)
 
 # ---------------------------------------------------------------------------
 # Dimension maintenance (SCD) — history/updates derived from customer
@@ -414,16 +419,11 @@ def q_stream_cdc_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     both merges as SQL CTEs and never sees the files — the grade proves
     the foreachBatch loop, the bootstrap, the commit protocol, and the
     batch ordering all compose to the batch-sequential merge semantics.
-    Fixture dirs are stable per sf_dir and wiped per invocation (the
-    q_warc_extract discipline: repeated grading must not accumulate
-    under /tmp)."""
-    import hashlib
+    Fixture files live in a private ``scratch_dir`` per build."""
     import os
-    import shutil
-    import tempfile
 
+    from aws_logs_to_parquet_converter_spark.operators import versioned
     from aws_logs_to_parquet_converter_spark.streaming.dimension import (
-        read_dimension,
         stream_dimension_scd2,
     )
 
@@ -436,26 +436,8 @@ def q_stream_cdc_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("2025-01-01").alias("ts"),
     )
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "q_stream_cdc_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    changes = os.path.join(root, "changes")
-    os.makedirs(changes)
-
-    # one file per batch, mtimes ordered so the file source (oldest
-    # first) replays them as micro-batch 1 then 2
-    for i, batch in enumerate((upd1, upd2), start=1):
-        stage = os.path.join(root, f"stage{i}")
-        batch.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            f for f in os.listdir(stage)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dest = os.path.join(changes, f"b{i}.parquet")
-        os.rename(os.path.join(stage, part), dest)
-        os.utime(dest, (1_000_000 * i, 1_000_000 * i))
+    root = scratch_dir("q_stream_cdc")
+    changes = stage_micro_batches(root, (upd1, upd2))
 
     src = (
         spark.readStream.schema("k long, seg string, ts string")
@@ -472,7 +454,7 @@ def q_stream_cdc_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     q.stop()
-    return read_dimension(spark, os.path.join(root, "dim")).select(
+    return versioned.read(spark, os.path.join(root, "dim")).select(
         "k", "seg", "valid_from", "valid_to"
     )
 

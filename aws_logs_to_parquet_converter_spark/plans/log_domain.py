@@ -20,7 +20,13 @@ from pyspark.sql import functions as F
 
 from aws_logs_to_parquet_converter_spark.functions.presto_compat import run_presto_sql
 from aws_logs_to_parquet_converter_spark.operators.asof import asof_join
-from aws_logs_to_parquet_converter_spark.plans.registry import query, register_views, t
+from aws_logs_to_parquet_converter_spark.plans.registry import (
+    query,
+    register_views,
+    scratch_dir,
+    stage_micro_batches,
+    t,
+)
 
 # Deterministic events -> access-log mapping.  Same semantics in both
 # dialects; key embeds a written-date 0..899 days before the read so
@@ -1633,19 +1639,15 @@ def q_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     must union, not double-count — bit_or idempotency), the commit
     protocol, and the batch ordering compose to the exact answer.  The
     batch sibling q_bitmap_distinct grades the same representation
-    without the streaming machinery.  Fixture dirs stable per sf_dir,
-    wiped per invocation (the q_stream_cdc discipline).  Round-13
-    birth."""
-    import hashlib
+    without the streaming machinery.  Fixture files live in a private
+    ``scratch_dir`` per build.  Round-13 birth."""
     import os
-    import shutil
-    import tempfile
 
+    from aws_logs_to_parquet_converter_spark.operators import versioned
     from aws_logs_to_parquet_converter_spark.operators.bitmap import (
         bitmap_cardinality,
     )
     from aws_logs_to_parquet_converter_spark.streaming.bitmap_mv import (
-        read_bitmap_mv,
         stream_bitmap_distinct,
     )
 
@@ -1659,28 +1661,12 @@ def q_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
     )
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "q_stream_bitmap_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    changes = os.path.join(root, "changes")
-    os.makedirs(changes)
-
-    # one file per batch (split by event id parity so the two batches
-    # OVERLAP in users — the merge must union, never double-count),
-    # mtimes ordered so the file source replays batch 1 then 2
-    for i in (1, 2):
-        batch = e.where(F.col("event_id") % 2 == i - 1).drop("event_id")
-        stage = os.path.join(root, f"stage{i}")
-        batch.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            f for f in os.listdir(stage)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dest = os.path.join(changes, f"b{i}.parquet")
-        os.rename(os.path.join(stage, part), dest)
-        os.utime(dest, (1_000_000 * i, 1_000_000 * i))
+    # one file per batch, split by event id parity so the two batches
+    # OVERLAP in users (the merge must union, never double-count)
+    root = scratch_dir("q_stream_bitmap")
+    changes = stage_micro_batches(root, [
+        e.where(F.col("event_id") % 2 == i).drop("event_id") for i in (0, 1)
+    ])
 
     src = (
         spark.readStream.schema("event_type string, week long, user_id long")
@@ -1696,7 +1682,7 @@ def q_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     q.stop()
-    segs = read_bitmap_mv(spark, os.path.join(root, "mv"))
+    segs = versioned.read(spark, os.path.join(root, "mv"))
     return bitmap_cardinality(segs, ["event_type", "week"]).select(
         "event_type", "week", F.col("distinct_ids").alias("distinct_users")
     )

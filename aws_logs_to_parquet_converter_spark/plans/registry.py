@@ -2,6 +2,13 @@
 
 from __future__ import annotations
 
+import atexit
+import os
+import re
+import secrets
+import shutil
+import tempfile
+from collections.abc import Sequence
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -83,6 +90,58 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return _norm_ntz(df)
     return _norm_ntz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+
+
+_SCRATCH_NAME = re.compile(r"(?P<tag>.+)_(?P<pid>\d+)_[0-9a-f]{12}")
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass  # another user's live process
+    return True
+
+
+def scratch_dir(tag: str) -> str:
+    """A new private directory for one build's on-disk fixture, removed
+    when the interpreter exits.  Every build gets its own, so a second
+    build (in this process or another) never deletes files an earlier
+    build's DataFrame still reads.  The name is ``<tag>_<pid>_<12 hex>``
+    under the temp dir (``scripts/dump_plans.py`` normalises it); the
+    same-tag dirs of processes that died without their exit hook are
+    removed here, so a killed run leaks until the next build only."""
+    tmp = tempfile.gettempdir()
+    for name in os.listdir(tmp):
+        m = _SCRATCH_NAME.fullmatch(name)
+        if m and m["tag"] == tag and not _pid_alive(int(m["pid"])):
+            shutil.rmtree(os.path.join(tmp, name), True)
+    path = os.path.join(tmp, f"{tag}_{os.getpid()}_{secrets.token_hex(6)}")
+    os.mkdir(path, 0o700)  # fails rather than share an existing dir
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
+def stage_micro_batches(root: str, batches: Sequence[DataFrame]) -> str:
+    """Write each frame as ONE parquet file ``b<i>.parquet`` under
+    ``{root}/changes`` with increasing mtimes, so a file source with
+    ``maxFilesPerTrigger=1`` (oldest first) replays them as micro-batch
+    1, 2, ...  Returns the changes dir."""
+    changes = os.path.join(root, "changes")
+    os.makedirs(changes)
+    for i, batch in enumerate(batches, start=1):
+        stage = os.path.join(root, f"stage{i}")
+        batch.coalesce(1).write.parquet(stage)
+        part = next(
+            f for f in os.listdir(stage)
+            if f.endswith(".parquet") and not f.startswith("_")
+        )
+        dest = os.path.join(changes, f"b{i}.parquet")
+        os.rename(os.path.join(stage, part), dest)
+        os.utime(dest, (1_000_000 * i, 1_000_000 * i))
+    return changes
 
 
 def _norm_ntz(df: DataFrame) -> DataFrame:

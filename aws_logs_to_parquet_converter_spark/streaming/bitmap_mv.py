@@ -6,12 +6,12 @@ re-scanning history.  The streaming sibling of ``q_bitmap_distinct``
 exactly as ``streaming/dimension.py`` is the streaming sibling of the
 SCD2 merge.
 
-Crash-safety reuses the versioned-commit protocol
-(``streaming/dimension.py``): every merge writes a NEW ``v-<ver>`` dir
-and flips the single-row params pointer LAST.  Idempotent re-apply is
-STRUCTURAL here — ``bit_or`` of bits already present is a no-op — so a
-crash-replayed micro-batch converges with no per-key compare logic at
-all (stronger than the SCD2 case, which needs the equal-row argument).
+Storage and crash-safety: a versioned store (``operators/versioned.py``
+holds the layout, commit order and bootstrap rule); every merge commits
+a new version.  Idempotent re-apply is STRUCTURAL here — ``bit_or`` of
+bits already present is a no-op — so a crash-replayed micro-batch
+converges with no per-key compare logic at all (stronger than the SCD2
+case, which needs the equal-row argument).
 
 Scale: each micro-batch shuffles only its OWN segments (batch-sized,
 map-side combined on (group, word)) plus the state read; state is
@@ -23,39 +23,16 @@ group hash and rewrite only touched partitions (SCALE.md).
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from aws_logs_to_parquet_converter_spark.operators import versioned
 from aws_logs_to_parquet_converter_spark.operators.bitmap import (
     bitmap_build,
     bitmap_merge,
 )
-from aws_logs_to_parquet_converter_spark.operators.versioned import (
-    write_params,
-    prune_stale_versions,
-)
-
-
-def bitmap_mv_exists(spark: SparkSession, mv_path: str) -> bool:
-    """True iff a committed MV lives at ``mv_path`` — the only
-    bootstrap signal ``apply_bitmap_batch`` accepts (transient read
-    failures against an existing MV must abort, never reset — the
-    streaming/dimension.py contract)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{mv_path}/params")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def read_bitmap_mv(spark: SparkSession, mv_path: str) -> DataFrame:
-    """Live segment table (group..., word, mask), pointer-resolved.
-    Feed to ``bitmap.bitmap_cardinality`` (or further ``bitmap_merge``
-    rollups) for distinct counts."""
-    ver = spark.read.parquet(f"{mv_path}/params").first()["version"]
-    return spark.read.parquet(f"{mv_path}/v-{ver}/data")
 
 
 def apply_bitmap_batch(
@@ -73,17 +50,14 @@ def apply_bitmap_batch(
         return
     spark = batch_df.sparkSession
     segs = bitmap_build(batch_df, group_cols, id_col)
-    if bitmap_mv_exists(spark, mv_path):
+    if versioned.exists(spark, mv_path):
         segs = bitmap_merge(
-            read_bitmap_mv(spark, mv_path).unionByName(segs), group_cols
+            versioned.read(spark, mv_path).unionByName(segs), group_cols
         )
-    ver = uuid.uuid4().hex[:12]
-    segs.write.mode("overwrite").parquet(f"{mv_path}/v-{ver}/data")
-    # the COMMIT: pointer last (a crash before this line leaves readers
-    # on the previous complete version)
-    write_params(spark, f"{mv_path}/params", (ver,), "version string")
-    if prune:
-        prune_stale_versions(spark, mv_path, ver)
+    versioned.commit(
+        spark, mv_path, lambda vdir: segs.write.parquet(f"{vdir}/data"),
+        prune=prune,
+    )
 
 
 def stream_bitmap_distinct(
@@ -97,7 +71,7 @@ def stream_bitmap_distinct(
 ) -> StreamingQuery:
     """Maintain the exact-distinct segment MV at ``mv_path`` from a
     streaming frame of raw (group..., id) rows.  Query the result with
-    ``read_bitmap_mv`` + ``bitmap_cardinality``."""
+    ``versioned.read`` + ``bitmap_cardinality``."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_bitmap_batch(batch_df, mv_path, group_cols, id_col, prune=prune)

@@ -3,12 +3,12 @@
 stream (``foreachBatch`` merge per micro-batch) — the FREQUENCY member
 of the streaming-MV family beside ``bitmap_mv`` (exact distinct).
 
-Crash-safety reuses the versioned-commit protocol
-(``streaming/dimension.py``): every merge writes a NEW ``v-<ver>`` dir
-and flips the single-row params pointer LAST.  One contract is
-STRONGER here than in the bitmap case: CMS counters are ADDITIVE, not
-idempotent — ``bit_or`` of replayed bits is a no-op, but SUMMING a
-replayed batch double-counts silently.  The params row therefore
+Storage and crash-safety: a versioned store (``operators/versioned.py``
+holds the layout, commit order and bootstrap rule); every merge commits
+a new version.  One contract is STRONGER here than in the bitmap
+case: CMS counters are ADDITIVE, not idempotent — ``bit_or`` of
+replayed bits is a no-op, but SUMMING a replayed batch double-counts
+silently.  The params row therefore
 carries ``last_batch_id``, and ``apply_cms_batch`` SKIPS any batch id
 at or below it: Structured Streaming's foreachBatch is at-least-once
 with deterministic, monotonically increasing batch ids, so the guard
@@ -24,44 +24,16 @@ touched slices when |slices| is large (SCALE.md).
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from aws_logs_to_parquet_converter_spark.operators import versioned
 from aws_logs_to_parquet_converter_spark.operators.sketch import (
     count_min_build_sliced,
 )
-from aws_logs_to_parquet_converter_spark.operators.versioned import (
-    write_params,
-    prune_stale_versions,
-)
-
-
-def cms_mv_exists(spark: SparkSession, mv_path: str) -> bool:
-    """True iff a committed MV lives at ``mv_path`` (the bitmap_mv
-    bootstrap contract: transient read failures against an existing MV
-    must abort, never reset)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{mv_path}/params")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def read_cms_mv(spark: SparkSession, mv_path: str) -> DataFrame:
-    """Live segment table (slice…, d, bucket, cnt), pointer-resolved.
-    Filter to a slice range and feed ``sketch.count_min_merge`` +
-    ``count_min_estimate`` for frequency answers."""
-    ver = spark.read.parquet(f"{mv_path}/params").first()["version"]
-    return spark.read.parquet(f"{mv_path}/v-{ver}/data")
-
-
-def _last_batch_id(spark: SparkSession, mv_path: str) -> int:
-    return int(
-        spark.read.parquet(f"{mv_path}/params").first()["last_batch_id"]
-    )
 
 
 def apply_cms_batch(
@@ -85,30 +57,30 @@ def apply_cms_batch(
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
-    exists = cms_mv_exists(spark, mv_path)
-    if exists and batch_id <= _last_batch_id(spark, mv_path):
+    params = (
+        versioned.read_params(spark, mv_path)
+        if versioned.exists(spark, mv_path) else None
+    )
+    if params is not None and batch_id <= params["last_batch_id"]:
         return
     segs = count_min_build_sliced(
         batch_df, slice_cols, key_col, depth=depth, width=width, seed=seed
     )
-    if exists:
+    if params is not None:
+        live = versioned.live_dir(mv_path, params)
         segs = (
-            read_cms_mv(spark, mv_path)
+            spark.read.parquet(f"{live}/data")
             .unionByName(segs)
             .groupBy(*slice_cols, "d", "bucket")
             .agg(F.sum("cnt").alias("cnt"))
         )
-    ver = uuid.uuid4().hex[:12]
-    segs.write.mode("overwrite").parquet(f"{mv_path}/v-{ver}/data")
-    # the COMMIT: pointer + replay watermark last (a crash before this
-    # line leaves readers on the previous complete version, and the
-    # replayed batch re-applies against that same previous state)
-    write_params(
-        spark, f"{mv_path}/params", (ver, int(batch_id)),
-        "version string, last_batch_id long",
+    # the replay watermark rides in the params row, so it commits
+    # atomically with the version it describes: a crash before the
+    # pointer write replays the batch against the same previous state
+    versioned.commit(
+        spark, mv_path, lambda vdir: segs.write.parquet(f"{vdir}/data"),
+        values=(int(batch_id),), ddl="last_batch_id long", prune=prune,
     )
-    if prune:
-        prune_stale_versions(spark, mv_path, ver)
 
 
 def stream_cms_segments(
@@ -125,7 +97,7 @@ def stream_cms_segments(
 ) -> StreamingQuery:
     """Maintain the sliced CMS segment MV at ``mv_path`` from a
     streaming frame of raw (slice…, key) rows.  Query the result with
-    ``read_cms_mv`` + ``count_min_merge`` + ``count_min_estimate``."""
+    ``versioned.read`` + ``count_min_merge`` + ``count_min_estimate``."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_cms_batch(

@@ -5,11 +5,10 @@ family, the classic "CDC apply" pipeline.
 
 Crash-safety has two layers:
 
-* **Versioned commit** (the persisted-index pattern,
-  ``operators/versioned.py``): every merge writes a NEW ``v-<ver>``
-  dir and flips the single-row params pointer LAST, so a reader (or a
-  crash-replayed batch) always sees a complete previous version,
-  never a half-written merge.
+* **Versioned commit**: the dimension is a versioned store
+  (``operators/versioned.py`` holds the layout, commit order and
+  bootstrap rule), so a reader (or a crash-replayed batch) always
+  sees a complete previous version, never a half-written merge.
 * **Idempotent re-apply**: replaying a committed micro-batch after a
   crash-between-commit-and-checkpoint re-merges the same changes into
   a dimension that already reflects them — every key then compares
@@ -34,49 +33,14 @@ noted in SCALE.md.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from aws_logs_to_parquet_converter_spark.operators import versioned
 from aws_logs_to_parquet_converter_spark.operators.scd import scd2_merge
-from aws_logs_to_parquet_converter_spark.operators.versioned import (
-    prune_stale_versions,
-    write_params,
-)
-
-
-def read_dimension(spark: SparkSession, dim_path: str) -> DataFrame:
-    """Live version of an SCD2 dimension maintained by
-    ``stream_dimension_scd2`` (pointer-resolved)."""
-    ver = spark.read.parquet(f"{dim_path}/params").first()["version"]
-    return spark.read.parquet(f"{dim_path}/v-{ver}/data")
-
-
-def dimension_exists(spark: SparkSession, dim_path: str) -> bool:
-    """True iff a committed dimension lives at ``dim_path`` (the params
-    pointer exists).  This is the ONLY bootstrap signal
-    ``apply_cdc_batch`` accepts: a transient read failure against an
-    existing dimension must abort the batch, never silently reset the
-    history (r11 advisor, high)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{dim_path}/params")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def _commit_dimension(merged: DataFrame, dim_path: str, prune: bool) -> None:
-    spark = merged.sparkSession
-    ver = uuid.uuid4().hex[:12]
-    merged.write.mode("overwrite").parquet(f"{dim_path}/v-{ver}/data")
-    # the COMMIT: pointer last (crash before this line leaves readers
-    # on the previous complete version); driver-side parquet write —
-    # no Spark job for the one-row pointer (operators/versioned.py)
-    write_params(spark, f"{dim_path}/params", (ver,), "version string")
-    if prune:
-        prune_stale_versions(spark, dim_path, ver)
 
 
 def apply_cdc_batch(
@@ -93,19 +57,18 @@ def apply_cdc_batch(
     (``dimension`` subcommand).  Idempotent re-apply per the module
     contract.
 
-    Bootstrap is detected EXPLICITLY (``dimension_exists``: fs.exists
-    on the params pointer) — if the dimension exists, any read failure
-    propagates and aborts the batch, so a transient IO error can never
-    be mistaken for first use and wipe the history via a
-    merge-into-empty + prune (r11 advisor, high).  Pass
+    Bootstrap is detected EXPLICITLY (``versioned.exists``) — if the
+    dimension exists, any read failure propagates and aborts the
+    batch, so a transient IO error can never be mistaken for first use
+    and wipe the history via a merge-into-empty + prune.  Pass
     ``prune=False`` to keep stale version dirs for a later maintenance
-    window (``operators/versioned.prune_stale_versions``)."""
+    window (``versioned.prune_stale_versions``)."""
     key_cols, tracked_cols = list(key_cols), list(tracked_cols)
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
-    if dimension_exists(spark, dim_path):
-        hist = read_dimension(spark, dim_path)
+    if versioned.exists(spark, dim_path):
+        hist = versioned.read(spark, dim_path)
     else:
         # bootstrap: empty history, valid_from/valid_to typed to ts
         hist = spark.createDataFrame([], batch_df.select(
@@ -121,7 +84,10 @@ def apply_cdc_batch(
         tracked_cols,
         ts_col=ts_col,
     )
-    _commit_dimension(merged, dim_path, prune=prune)
+    versioned.commit(
+        spark, dim_path, lambda vdir: merged.write.parquet(f"{vdir}/data"),
+        prune=prune,
+    )
 
 
 def stream_dimension_scd2(
@@ -138,7 +104,7 @@ def stream_dimension_scd2(
     frame of change rows (keys + tracked attrs + ts).  Bootstraps an
     empty dimension on first batch; see the module docstring for the
     crash and ordering contracts.  Query the result with
-    ``read_dimension`` (full history) or filter ``valid_to IS NULL``
+    ``versioned.read`` (full history) or filter ``valid_to IS NULL``
     for the current snapshot."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -5,8 +5,11 @@ Usage: python scripts/dump_plans.py --out plans/r15 --suffix _before [query ...]
 Default query set: the headline bench entries.
 
 Expression ids (``#123``), lambda-variable suffixes (``x_12``), exchange
-plan ids (``plan_id=45``) and RDD ids (``MapPartitionsRDD[67]``) are
-replaced with fixed tokens, so two dumps compare with ``diff -r``.
+plan ids (``plan_id=45``), RDD ids (``MapPartitionsRDD[67]``), versioned
+store dirs (``/v-<12 hex>``) and registry scratch dirs
+(``/q_<tag>_<pid>_<12 hex>`` from ``plans/registry.scratch_dir``, and
+the older ``/q_<tag>_<12 hex>``) are replaced with fixed tokens, so
+two dumps compare with ``diff -r``.
 """
 
 from __future__ import annotations
@@ -28,12 +31,16 @@ _LAMBDA_VAR = re.compile(r"(lambda \w+?)_\d+#")
 _EXPR_ID = re.compile(r"#\d+")
 _PLAN_ID = re.compile(r"plan_id=\d+")
 _RDD_ID = re.compile(r"RDD\[\d+\]")
+_VERSION_DIR = re.compile(r"/v-[0-9a-f]{12}\b")
+_SCRATCH_DIR = re.compile(r"(/q_[a-z_]+?)(?:_\d+)?_[0-9a-f]{12}\b")
 
 
 def normalise_plan(text: str) -> str:
-    """Replace the per-session counters in a plan string with fixed tokens."""
+    """Replace the per-session counters and per-build directory names in a
+    plan string with fixed tokens."""
     text = _EXPR_ID.sub("#N", _LAMBDA_VAR.sub(r"\1_N#", text))
-    return _RDD_ID.sub("RDD[N]", _PLAN_ID.sub("plan_id=N", text))
+    text = _RDD_ID.sub("RDD[N]", _PLAN_ID.sub("plan_id=N", text))
+    return _SCRATCH_DIR.sub(r"\1_N", _VERSION_DIR.sub("/v-N", text))
 
 
 def main() -> None:

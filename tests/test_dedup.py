@@ -976,12 +976,9 @@ def test_minhash_index_detects_and_refuses_wrong_length_signatures(spark, tmp_pa
     save_minhash_index(docs, "doc_id", "text", idx, num_hashes=32, bands=8)
     # simulate a pre-guard foreign-params append: a NEW id whose
     # signature has the wrong length lands directly in the parquet
-    from aws_logs_to_parquet_converter_spark.operators.dedup import (
-        _minhash_index_params,
-        _minhash_vdir,
-    )
+    from aws_logs_to_parquet_converter_spark.operators import versioned
 
-    vdir = _minhash_vdir(idx, _minhash_index_params(spark, idx))
+    vdir = versioned.live_dir(idx, versioned.read_params(spark, idx))
     good = spark.read.parquet(f"{vdir}/signatures").first()
     spark.createDataFrame(
         [(999, list(good.signature)[:16])], "id long, signature array<bigint>"
@@ -1041,9 +1038,8 @@ def test_minhash_index_refresh_is_versioned_commit(spark, tmp_path):
     and prunes the superseded version dir."""
     import os
 
+    from aws_logs_to_parquet_converter_spark.operators import versioned
     from aws_logs_to_parquet_converter_spark.operators.dedup import (
-        _minhash_index_params,
-        _minhash_vdir,
         minhash_corpus_candidates,
         save_minhash_index,
         validate_minhash_index,
@@ -1053,8 +1049,8 @@ def test_minhash_index_refresh_is_versioned_commit(spark, tmp_path):
     b = "completely different content about distributed query engines and columnar io paths"
     idx = str(tmp_path / "mhidx")
     save_minhash_index(_mk_docs(spark, [(1, a)]), "doc_id", "text", idx, num_hashes=32, bands=8)
-    p1 = _minhash_index_params(spark, idx)
-    v1 = _minhash_vdir(idx, p1)
+    p1 = versioned.read_params(spark, idx)
+    v1 = versioned.live_dir(idx, p1)
     assert "/v-" in v1  # versioned layout from birth
 
     # (a) simulate a refresh that crashed BEFORE the params flip: a
@@ -1063,7 +1059,7 @@ def test_minhash_index_refresh_is_versioned_commit(spark, tmp_path):
     stray = f"{idx}/v-deadbeef0000"
     spark.read.parquet(f"{v1}/signatures").write.parquet(f"{stray}/signatures")
     spark.read.parquet(f"{v1}/bands").write.parquet(f"{stray}/bands")
-    assert _minhash_vdir(idx, _minhash_index_params(spark, idx)) == v1
+    assert versioned.live_dir(idx, versioned.read_params(spark, idx)) == v1
     probe = _mk_docs(spark, [(9, a)])
     assert minhash_corpus_candidates(probe, "doc_id", "text", idx, 0.5).count() == 1
     assert validate_minhash_index(spark, idx)["n_ids"] == 1
@@ -1072,8 +1068,8 @@ def test_minhash_index_refresh_is_versioned_commit(spark, tmp_path):
     # signatures must both come from the new version (the in-place
     # overwrite hazard was new signatures probing old buckets)
     save_minhash_index(_mk_docs(spark, [(1, b)]), "doc_id", "text", idx, num_hashes=32, bands=8)
-    p2 = _minhash_index_params(spark, idx)
-    v2 = _minhash_vdir(idx, p2)
+    p2 = versioned.read_params(spark, idx)
+    v2 = versioned.live_dir(idx, p2)
     assert v2 != v1
     assert minhash_corpus_candidates(probe, "doc_id", "text", idx, 0.5).count() == 0
     probe_b = _mk_docs(spark, [(9, b)])
@@ -1082,6 +1078,90 @@ def test_minhash_index_refresh_is_versioned_commit(spark, tmp_path):
     # superseded dirs (old version AND the crash debris) pruned
     left = {d for d in os.listdir(idx) if d.startswith("v-")}
     assert left == {os.path.basename(v2)}
+
+
+@pytest.mark.parametrize("layout", ["pre_versioning", "version_last"])
+def test_minhash_index_reads_and_migrates_older_layouts(spark, tmp_path, layout):
+    """Two older on-disk layouts stay readable and appendable, and a
+    refresh migrates them: the pre-versioning one (params row without
+    ``version``, ``signatures``/``bands`` at the root) and the one with
+    ``version`` as the LAST params column."""
+    import os
+
+    from aws_logs_to_parquet_converter_spark.operators import versioned
+    from aws_logs_to_parquet_converter_spark.operators.dedup import (
+        append_to_minhash_index,
+        minhash_corpus_candidates,
+        save_minhash_index,
+    )
+    from aws_logs_to_parquet_converter_spark.operators.versioned import write_params
+
+    a = "the quick brown fox jumps over the lazy dog and naps in the warm afternoon sun"
+    b = ("completely different content about distributed query engines "
+         "and columnar io paths")
+    c = ("a third unrelated passage describing coastal weather patterns "
+         "across long winters")
+    src = str(tmp_path / "src")
+    save_minhash_index(
+        _mk_docs(spark, [(1, a)]), "doc_id", "text", src, num_hashes=32, bands=8
+    )
+    src_dir = versioned.live_dir(src, versioned.read_params(spark, src))
+
+    idx, ver = str(tmp_path / "idx"), "0123456789ab"
+    data = idx if layout == "pre_versioning" else f"{idx}/v-{ver}"
+    for name in ("signatures", "bands"):
+        spark.read.parquet(f"{src_dir}/{name}").write.parquet(f"{data}/{name}")
+    row = (32, 8, 5, 42, "xxhash64")
+    ddl = "num_hashes int, bands int, shingle_n int, seed long, hash_fn string"
+    if layout == "pre_versioning":
+        write_params(spark, f"{idx}/params", row, ddl)
+    else:
+        write_params(spark, f"{idx}/params", (*row, ver), ddl + ", version string")
+
+    def probe(text):
+        got = minhash_corpus_candidates(
+            _mk_docs(spark, [(99, text)]), "doc_id", "text", idx, threshold=0.5
+        )
+        return sorted(r.corpus_id for r in got.collect())
+
+    assert probe(a) == [1]
+    append_to_minhash_index(_mk_docs(spark, [(2, b)]), "doc_id", "text", idx)
+    assert probe(b) == [2]
+
+    save_minhash_index(
+        _mk_docs(spark, [(1, c)]), "doc_id", "text", idx, num_hashes=32, bands=8
+    )
+    names = os.listdir(idx)
+    assert len([n for n in names if n.startswith("v-")]) == 1
+    assert "signatures" not in names and "bands" not in names
+    assert (probe(a), probe(b), probe(c)) == ([], [], [1])
+
+
+def test_minhash_overwrite_rebuilds_over_empty_params(spark, tmp_path):
+    """An empty params relation (a build interrupted before versioned
+    commits) fails every read and append loudly, and an overwrite
+    rebuilds the index over it."""
+    from aws_logs_to_parquet_converter_spark.operators.dedup import (
+        append_to_minhash_index,
+        minhash_corpus_candidates,
+        save_minhash_index,
+    )
+
+    a = "the quick brown fox jumps over the lazy dog and naps in the warm afternoon sun"
+    idx = str(tmp_path / "idx")
+    spark.createDataFrame(
+        [], "num_hashes int, bands int, shingle_n int, seed long, hash_fn string"
+    ).write.parquet(f"{idx}/params")
+    docs = _mk_docs(spark, [(1, a)])
+    with pytest.raises(ValueError, match="interrupted build"):
+        minhash_corpus_candidates(docs, "doc_id", "text", idx, 0.5)
+    with pytest.raises(ValueError, match="interrupted build"):
+        append_to_minhash_index(docs, "doc_id", "text", idx)
+    save_minhash_index(docs, "doc_id", "text", idx, num_hashes=32, bands=8)
+    got = minhash_corpus_candidates(
+        _mk_docs(spark, [(9, a)]), "doc_id", "text", idx, 0.5
+    )
+    assert [(r.doc_id, r.corpus_id) for r in got.collect()] == [(9, 1)]
 
 
 def test_soft_dedup_weights_exact_ppm(spark):

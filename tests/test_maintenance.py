@@ -468,9 +468,8 @@ def test_cli_maintain_validate_index_both_kinds(spark, tmp_path, capsys):
     kind (sniffed from the self-describing params row), exits 0 on a
     healthy index and nonzero once real corruption appears."""
     from aws_logs_to_parquet_converter_spark import cli
+    from aws_logs_to_parquet_converter_spark.operators import versioned
     from aws_logs_to_parquet_converter_spark.operators.dedup import (
-        _minhash_index_params,
-        _minhash_vdir,
         save_minhash_index,
     )
     from aws_logs_to_parquet_converter_spark.operators.similarity import save_pq_index
@@ -493,7 +492,7 @@ def test_cli_maintain_validate_index_both_kinds(spark, tmp_path, capsys):
         assert kind_key in capsys.readouterr().out
 
     # inject minhash corruption (a wrong-length signature) -> exit 1
-    vdir = _minhash_vdir(mh, _minhash_index_params(spark, mh))
+    vdir = versioned.live_dir(mh, versioned.read_params(spark, mh))
     good = spark.read.parquet(f"{vdir}/signatures").first()
     spark.createDataFrame(
         [(999, list(good.signature)[:5])], "id long, signature array<bigint>"

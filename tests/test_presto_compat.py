@@ -118,6 +118,21 @@ def test_escaped_string_literals_scoped(spark):
         spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
     q = run_presto_sql(spark, """SELECT json_extract('{"q": "say \\"x\\""}', '$.q') AS q""")
     assert q.collect()[0].q == '"say \\"x\\""'
+    # Presto's LIKE has no default escape character: a backslash in a
+    # literal pattern is a plain character unless ESCAPE names one
+    like = run_presto_sql(
+        spark,
+        r"""SELECT 'C:\dir' LIKE 'C:\%' AS backslash_then_any,
+                  'a_b' LIKE 'a\_b' AS backslash_is_literal,
+                  'a\b' LIKE 'a\b' AS backslash_mid_pattern,
+                  'a_b' NOT LIKE 'a\_b' AS not_like,
+                  'a%b' LIKE 'a!%b' ESCAPE '!' AS explicit_escape""",
+    ).collect()[0]
+    assert like.backslash_then_any is True
+    assert like.backslash_is_literal is False
+    assert like.backslash_mid_pattern is True
+    assert like.not_like is True
+    assert like.explicit_escape is True
 
 
 def test_extended_date_format_tokens(spark):

@@ -5,14 +5,13 @@ the crash contract); bootstrap + versioned-commit read path."""
 
 from pyspark.sql import functions as F
 
+from aws_logs_to_parquet_converter_spark.operators import versioned
 from aws_logs_to_parquet_converter_spark.operators.bitmap import (
     bitmap_build,
     bitmap_cardinality,
 )
 from aws_logs_to_parquet_converter_spark.streaming.bitmap_mv import (
     apply_bitmap_batch,
-    bitmap_mv_exists,
-    read_bitmap_mv,
     stream_bitmap_distinct,
 )
 
@@ -22,7 +21,7 @@ def _df(spark, rows):
 
 
 def _counts(spark, mv):
-    segs = read_bitmap_mv(spark, str(mv))
+    segs = versioned.read(spark, str(mv))
     return {
         r["g"]: r["distinct_ids"]
         for r in bitmap_cardinality(segs, ["g"]).collect()
@@ -40,7 +39,7 @@ def test_multi_batch_equals_oneshot(spark, tmp_path):
     oneshot = bitmap_build(_df(spark, b1 + b2), ["g"], "id")
     got = {
         (r["g"], r["word"]): r["mask"]
-        for r in read_bitmap_mv(spark, str(mv)).collect()
+        for r in versioned.read(spark, str(mv)).collect()
     }
     want = {(r["g"], r["word"]): r["mask"] for r in oneshot.collect()}
     assert got == want
@@ -58,11 +57,11 @@ def test_replay_of_committed_batch_is_noop(spark, tmp_path):
 
 def test_bootstrap_and_empty_batch(spark, tmp_path):
     mv = tmp_path / "mv"
-    assert not bitmap_mv_exists(spark, str(mv))
+    assert not versioned.exists(spark, str(mv))
     apply_bitmap_batch(_df(spark, []), str(mv), ["g"], "id")
-    assert not bitmap_mv_exists(spark, str(mv))  # empty batch: no commit
+    assert not versioned.exists(spark, str(mv))  # empty batch: no commit
     apply_bitmap_batch(_df(spark, [("a", 5)]), str(mv), ["g"], "id")
-    assert bitmap_mv_exists(spark, str(mv))
+    assert versioned.exists(spark, str(mv))
     assert _counts(spark, mv) == {"a": 1}
 
 
@@ -106,3 +105,38 @@ def test_apply_read_failure_aborts_not_resets(spark, tmp_path):
     # version and no new v-dir appeared
     vdirs = [p.name for p in mv.iterdir() if p.name.startswith("v-")]
     assert vdirs == [vdir.name]
+
+
+def test_registry_builds_do_not_share_fixture_files(spark, sf_dir):
+    # A second build of a file-staging registry entry must leave the
+    # first build's files alone: its DataFrame still reads them lazily.
+    from aws_logs_to_parquet_converter_spark.plans import REGISTRY
+
+    build = REGISTRY["q_stream_bitmap_distinct"].builder
+    first = build(spark, sf_dir)
+    second = build(spark, sf_dir)
+    assert first.count() == second.count() > 0
+
+
+def test_scratch_dir_removes_dead_process_dirs(tmp_path, monkeypatch):
+    # A killed build skips its exit hook; the next same-tag build
+    # removes that process's dir and leaves live processes' dirs alone.
+    import os
+    import subprocess
+    import sys
+    import tempfile
+
+    from aws_logs_to_parquet_converter_spark.plans.registry import scratch_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    proc = subprocess.Popen([sys.executable, "-c", "pass"])
+    proc.wait()
+    dead = tmp_path / f"q_tag_{proc.pid}_0123456789ab"
+    live = tmp_path / f"q_tag_{os.getpid()}_0123456789ab"
+    other = tmp_path / f"q_other_{proc.pid}_0123456789ab"
+    for d in (dead, live, other):
+        (d / "data").mkdir(parents=True)
+    new = scratch_dir("q_tag")
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        [live.name, other.name, os.path.basename(new)]
+    )

@@ -7,17 +7,16 @@ import os
 from pyspark.sql import functions as F
 
 from aws_logs_to_parquet_converter_spark.operators import sketch as sk
+from aws_logs_to_parquet_converter_spark.operators import versioned
 from aws_logs_to_parquet_converter_spark.streaming.cms_mv import (
     apply_cms_batch,
-    cms_mv_exists,
-    read_cms_mv,
 )
 
 
 def _segs(spark, mv):
     return {
         (r["day"], r["d"], r["bucket"]): r["cnt"]
-        for r in read_cms_mv(spark, mv).collect()
+        for r in versioned.read(spark, mv).collect()
     }
 
 
@@ -29,7 +28,7 @@ def test_incremental_matches_one_shot_and_replay_is_noop(spark, tmp_path):
     b2 = spark.createDataFrame(
         [("d1", k) for k in ["a", "c"]] + [("d2", "a")], "day string, k string"
     )
-    assert not cms_mv_exists(spark, mv)
+    assert not versioned.exists(spark, mv)
     apply_cms_batch(b1, 0, mv, ["day"], "k", depth=3, width=32)
     apply_cms_batch(b2, 1, mv, ["day"], "k", depth=3, width=32)
     got = _segs(spark, mv)
@@ -67,7 +66,7 @@ def test_empty_batch_skipped_and_estimates_exact_in_clear_regime(spark, tmp_path
     # re-sent with rows still applies
     b2 = spark.createDataFrame([("d1", "x")], "day string, k string")
     apply_cms_batch(b2, 1, mv, ["day"], "k", depth=3, width=64)
-    merged = sk.count_min_merge(read_cms_mv(spark, mv))
+    merged = sk.count_min_merge(versioned.read(spark, mv))
     probes = spark.createDataFrame([("x",), ("y",)], "k string")
     est = {
         r["key"]: r["est_count"]

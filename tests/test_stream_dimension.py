@@ -2,8 +2,8 @@
 evolution equals sequential batch merges; committed-batch replay is a
 no-op (the idempotence the crash contract relies on)."""
 
+from aws_logs_to_parquet_converter_spark.operators import versioned
 from aws_logs_to_parquet_converter_spark.streaming.dimension import (
-    read_dimension,
     stream_dimension_scd2,
 )
 
@@ -37,7 +37,7 @@ def test_cdc_apply_multi_batch(spark, tmp_path):
 
     out = {
         (r.k, r.seg): (r.valid_from, r.valid_to)
-        for r in read_dimension(spark, str(dim)).collect()
+        for r in versioned.read(spark, str(dim)).collect()
     }
     assert out == {
         (1, "A"): ("2024-01-01", "2024-02-01"),  # closed by batch 2
@@ -58,7 +58,7 @@ def test_cdc_apply_restart_continues(spark, tmp_path):
     # only them
     _write_change_file(spark, src, [(1, "A2", "2024-03-01")])
     _run(spark, src, dim, ckpt)
-    out = {(r.k, r.seg): r.valid_to for r in read_dimension(spark, str(dim)).collect()}
+    out = {(r.k, r.seg): r.valid_to for r in versioned.read(spark, str(dim)).collect()}
     assert out == {(1, "A"): "2024-03-01", (1, "A2"): None}
 
 
@@ -73,13 +73,13 @@ def test_cdc_replay_of_committed_batch_is_noop(spark, tmp_path):
     )
     _write_change_file(spark, src, [(1, "A2", "2024-02-01")])
     _run(spark, src, dim, ckpt)
-    before = sorted(map(tuple, read_dimension(spark, str(dim)).collect()))
+    before = sorted(map(tuple, versioned.read(spark, str(dim)).collect()))
     # simulate the replay: merge batch 2 again against the committed state
     batch2 = spark.createDataFrame(
         [(1, "A2", "2024-02-01")], "k long, seg string, ts string"
     )
     replayed = scd2_merge(
-        read_dimension(spark, str(dim)), batch2, ["k"], ["seg"], ts_col="ts"
+        versioned.read(spark, str(dim)), batch2, ["k"], ["seg"], ts_col="ts"
     )
     assert sorted(map(tuple, replayed.collect())) == before
 
@@ -108,7 +108,7 @@ def test_cli_dimension_subcommand(spark, tmp_path, capsys):
         assert cli.run_dimension(args) == 0
     out = {
         (r.k, r.seg): r.valid_to
-        for r in read_dimension(spark, dim).collect()
+        for r in versioned.read(spark, dim).collect()
     }
     assert out == {(1, "A"): "2024-02-01", (1, "A2"): None, (2, "B"): None}
     assert "3 history row(s), 2 open" in capsys.readouterr().out
@@ -234,7 +234,7 @@ def test_cdc_apply_prune_false_keeps_prior_version(spark, tmp_path):
     vdirs = [p.name for p in dim.iterdir() if p.name.startswith("v-")]
     assert len(vdirs) == 2  # prior version survives for the maintenance window
     # the live read still resolves through the pointer to the new merge
-    out = {(r.k, r.seg) for r in read_dimension(spark, str(dim)).collect()}
+    out = {(r.k, r.seg) for r in versioned.read(spark, str(dim)).collect()}
     assert out == {(1, "A"), (1, "A2")}
 
 

@@ -506,12 +506,9 @@ def test_minhash_update_replay_self_converges(spark, tmp_path):
     # dropped: ONE signature row, ONE sink copy — converged, not
     # duplicated (plain append mode duplicates here, see the
     # crash_after_write test above)
-    from aws_logs_to_parquet_converter_spark.operators.dedup import (
-        _minhash_index_params,
-        _minhash_vdir,
-    )
+    from aws_logs_to_parquet_converter_spark.operators import versioned
 
-    vdir = _minhash_vdir(idx, _minhash_index_params(spark, idx))
+    vdir = versioned.live_dir(idx, versioned.read_params(spark, idx))
     sig_rows = spark.read.parquet(f"{vdir}/signatures").where("id = 10").count()
     assert sig_rows == 1, f"replay should self-converge, got {sig_rows} sig rows"
     ids = sorted(r.doc_id for r in spark.read.parquet(out).collect())
