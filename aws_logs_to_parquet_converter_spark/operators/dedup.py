@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_logs_to_parquet_converter_spark.operators import versioned
+from aws_logs_to_parquet_converter_spark.operators.cache import owned, persist
 from aws_logs_to_parquet_converter_spark.operators.textstats import (
     NONWS_CLASS,
     normalized_text,
@@ -270,14 +271,6 @@ class BloomFilter:
         self.k = k
         self.seed = seed
 
-    def unpersist(self) -> None:
-        """Release the cached bitmap.  ``digest_bloom`` persists it
-        (the k probe joins would otherwise rebuild it k times); a
-        long-lived driver cycling many daily blooms should call this
-        when a filter is retired, or the cache entries accumulate for
-        the session's lifetime."""
-        self.bitmap.unpersist()
-
 
 def digest_bloom(
     corpus_digests: DataFrame,
@@ -285,6 +278,7 @@ def digest_bloom(
     m_bits: int = 1 << 22,
     k: int = 4,
     seed: int = 42,
+    handles: "list[DataFrame] | None" = None,
 ) -> BloomFilter:
     """Pure-Catalyst Bloom filter (Bloom 1970) over a digest set, as a
     SPARSE (word, mask) bitmap: at most ``m_bits/64`` rows of
@@ -299,7 +293,8 @@ def digest_bloom(
     m_bits/8 bytes dense, so it broadcasts comfortably up to a few
     billion documents — beyond that the plain digest anti join is
     already the right plan and the filter is just skipped.  Returns a
-    ``BloomFilter`` carrying its own parameters."""
+    ``BloomFilter`` carrying its own parameters; its bitmap is
+    persisted and released through ``handles`` (``operators/cache.py``)."""
     pos = _bloom_positions(F.col(digest_col), m_bits, k, seed)
     bitmap = (
         corpus_digests.select(F.explode(F.array(*pos)).alias("_pos"))
@@ -309,16 +304,15 @@ def digest_bloom(
         )
         .groupBy("word")
         .agg(F.bit_or("_m").alias("mask"))
-        # the probe broadcasts this bitmap k times (one join per bit
-        # position); unpersisted, Catalyst re-runs the corpus-digest
-        # scan + bit_or aggregation for EVERY broadcast — k full
-        # corpus passes for a table bounded at m_bits/64 rows by
-        # construction (round-7 measurement: 4x rebuild dominated
-        # q_incremental_dedup_bloom's sf1 wall).  Bounded cache, so
-        # persist unconditionally.
-        .persist()
     )
-    return BloomFilter(bitmap, m_bits, k, seed)
+    # the probe broadcasts this bitmap k times (one join per bit
+    # position); unpersisted, Catalyst re-runs the corpus-digest
+    # scan + bit_or aggregation for EVERY broadcast — k full
+    # corpus passes for a table bounded at m_bits/64 rows by
+    # construction (round-7 measurement: 4x rebuild dominated
+    # q_incremental_dedup_bloom's sf1 wall).  Bounded cache, so
+    # persist unconditionally.
+    return BloomFilter(persist(bitmap, handles), m_bits, k, seed)
 
 
 def bloom_maybe_present(
@@ -517,62 +511,6 @@ def minhash_signatures(
     )
 
 
-def minhash_signatures_oph(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 64, shingle_n: int = 5, seed: int = 42
-) -> DataFrame:
-    """One-permutation-hashing MinHash signatures (same output shape as
-    ``minhash_signatures``): ONE xxhash64 per shingle occurrence, with
-    the hash's bucket bits selecting which of the ``num_hashes`` slots
-    it competes for — versus the classic construction's num_hashes
-    affine transforms per occurrence.
-
-    MEASURED VERDICT (sf0.1, local[32], k=64): the affine form WINS —
-    5.3s warm vs 8.9s here.  OPH's "64x less per-shingle work" does
-    not materialize at k=64 because the per-(doc,bucket) hash-agg
-    probe it needs per occurrence costs about as much as 64 FUSED
-    mul/mod ALU ops inside wholestage codegen, and OPH adds a second
-    aggregation plus a wide densification projection.  Kept as an
-    option because the trade flips as k grows (at k=256+ the affine
-    transform count scales linearly while OPH stays one hash/probe)
-    and for memory-tight executors (OPH's aggregate state is one live
-    min per bucket, not k accumulators).
-
-    Empty slots (a doc with no shingle landing in bucket i) are filled
-    by rotation densification — borrow the value of the next non-empty
-    slot cyclically, the standard estimator-preserving fix (Shrivastava
-    & Li's densified OPH) — here with a bounded lookahead of 32 slots
-    expressed as a coalesce chain of ``element_at`` probes on a
-    bucket->min MAP column (map lookups are wholestage codegen; a
-    naive nested-transform rotation substituted the whole sparse-array
-    constructor into every lambda slot and ran 7x SLOWER than the
-    affine form it was meant to beat).  32 consecutive empty slots
-    (the only case the bound loses to full rotation) needs a doc so
-    sparse its signature is degenerate anyway; those slots fall back
-    to 0.
-
-    Aggregation is two-level: min per (doc, bucket) with map-side
-    partial combine — the explode keeps a doc's shingles co-located,
-    so the shuffle carries <= num_hashes rows per doc — then a per-doc
-    map assembly.
-    """
-    lookahead = 32
-    sh = exploded_shingles(df, id_col, text_col, shingle_n)
-    h = F.xxhash64("_sh", F.lit(seed))
-    rows = sh.select("_id", F.pmod(h, F.lit(num_hashes)).alias("_b"), h.alias("_v"))
-    lvl1 = rows.groupBy("_id", "_b").agg(F.min("_v").alias("_mv"))
-    agg = lvl1.groupBy("_id").agg(
-        F.map_from_entries(F.collect_list(F.struct("_b", "_mv"))).alias("_map")
-    )
-    slots = [
-        F.coalesce(
-            *[F.element_at("_map", F.lit((i + j) % num_hashes)) for j in range(lookahead)],
-            F.lit(0).cast("long"),
-        )
-        for i in range(num_hashes)
-    ]
-    return agg.select(F.col("_id").alias(id_col), F.array(*slots).alias("signature"))
-
-
 def _band_rows(
     sig: DataFrame, id_col: str, num_hashes: int, bands: int, hash_fn: str
 ) -> DataFrame:
@@ -613,7 +551,6 @@ def minhash_near_duplicates(
     shingle_n: int = 5,
     threshold: float = 0.5,
     seed: int = 42,
-    signature_method: str = "affine",
     hash_fn: str = "xxhash64",
     handles: "list[DataFrame] | None" = None,
 ) -> DataFrame:
@@ -624,17 +561,11 @@ def minhash_near_duplicates(
     Rows x bands fan-out replaces the O(n^2) pair space; docs meet only
     inside equal (band, band-signature) buckets.
 
-    ``signature_method``: 'affine' (default — the classic
-    k-permutation construction, measured fastest at k=64) or 'oph'
-    (one-permutation hashing; see minhash_signatures_oph for when the
-    trade flips).
-
     ``hash_fn='md5'`` selects the oracle-parity signatures (see
     minhash_signatures) AND exact band keys: the bucket becomes the
     band's concatenated hex values instead of an xxhash64 of the
     slice, so the candidate set — not just the surviving pairs — is
-    byte-reproducible by any SQL engine.  Requires
-    signature_method='affine'.
+    byte-reproducible by any SQL engine.
 
     Shuffle shape (r11 verdict item, A/B'd at sf1): the band self-join
     and the (id_a, id_b) dedup carry ONLY slim id/band/bucket rows —
@@ -647,22 +578,13 @@ def minhash_near_duplicates(
     sf0.1 unchanged (1.7s vs 1.8s).  The signature relation is
     persisted internally (it feeds the banding once and the re-attach
     twice — unpersisted it recomputes the shingle aggregation 3x,
-    measured 56-80s at sf1); pass ``handles`` to receive the persisted
-    DataFrame for deterministic unpersist, else it lives until
-    ``spark.catalog.clearCache()``/session end (~8k B/doc)."""
+    measured 56-80s at sf1); the returned plan reads it, so it is
+    released through ``handles`` (``operators/cache.py``; ~8k B/doc)."""
     assert num_hashes % bands == 0
-    if hash_fn == "md5":
-        if signature_method != "affine":
-            raise ValueError("hash_fn='md5' requires signature_method='affine'")
-        sig = minhash_signatures(
-            df, id_col, text_col, num_hashes, shingle_n, seed, hash_fn="md5"
-        )
-    else:
-        sig_fn = {"oph": minhash_signatures_oph, "affine": minhash_signatures}[
-            signature_method
-        ]
-        sig = sig_fn(df, id_col, text_col, num_hashes, shingle_n, seed)
-    sig = sig.persist()
+    sig = minhash_signatures(
+        df, id_col, text_col, num_hashes, shingle_n, seed, hash_fn=hash_fn
+    )
+    sig = persist(sig, handles)
     # Materialize the cache BEFORE the consumers launch: the plan scans
     # sig four times (both band-join sides + both signature re-attach
     # broadcasts), and under AQE all four kick off CONCURRENTLY — 4x32
@@ -673,8 +595,6 @@ def minhash_near_duplicates(
     # clean stage; the count itself reads nothing extra (the cache
     # materializes all columns regardless).
     sig.count()
-    if handles is not None:
-        handles.append(sig)
 
     banded = _band_rows(sig, id_col, num_hashes, bands, hash_fn).select(
         "_id", "band", "bucket"
@@ -810,10 +730,6 @@ def save_minhash_index(
     sig = minhash_signatures(
         corpus, id_col, text_col, num_hashes, shingle_n, seed, hash_fn=hash_fn
     )
-    # One signature computation feeds both writes: persist beats the
-    # double aggregation here (unlike the self-join case — writes are
-    # sequential jobs, never scheduled concurrently).
-    sig = sig.persist()
 
     def write(vdir: str, how: str) -> None:
         # signatures BEFORE bands: a crash between the two appends
@@ -827,7 +743,11 @@ def save_minhash_index(
             "band", "bucket", F.col("_id").alias("id")
         ).write.mode(how).parquet(f"{vdir}/bands")
 
-    try:
+    # One signature computation feeds both writes: persist beats the
+    # double aggregation here (unlike the self-join case — writes are
+    # sequential jobs, never scheduled concurrently).
+    with owned() as held:
+        persist(sig, held)
         if mode == "append":
             write(versioned.live_dir(path, stored), "append")
         else:
@@ -837,8 +757,6 @@ def save_minhash_index(
                 ddl=_MINHASH_PARAMS_DDL, prune=prune,
                 extra_stale=_MINHASH_FLAT_DIRS,
             )
-    finally:
-        sig.unpersist()
 
 
 def minhash_corpus_candidates(
@@ -927,43 +845,44 @@ def validate_minhash_index(spark: SparkSession, path: str) -> dict:
         their band slices degenerate, so probes involving them are
         wrong until the rows are purged and re-ingested.
 
-    One scan of each relation: both inputs persist for the report's
-    aggregations and unpersist before returning.
+    One aggregate pass: each relation is aggregated per id, the two
+    per-id aggregates are full-outer-joined on id, and one global
+    aggregate over the join answers every count in a single action.
     """
     p = versioned.read_params(spark, path)
     vdir = versioned.live_dir(path, p)
-    sig = spark.read.parquet(f"{vdir}/signatures").persist()
-    bands = spark.read.parquet(f"{vdir}/bands").persist()
-    try:
-        sig_stats = sig.agg(
-            F.count("*").alias("rows"),
-            F.countDistinct("id").alias("ids"),
-            F.count_if(F.size("signature") != p["num_hashes"]).alias("badlen"),
-        ).first()
-        conflicting = (
-            sig.dropDuplicates()
-            .groupBy("id")
-            .agg(F.count("*").alias("n"))
-            .where(F.col("n") > 1)
-            .count()
-        )
-        band_ids = bands.select("id").distinct()
-        sig_ids = sig.select("id").distinct()
-        orphans = band_ids.join(sig_ids, "id", "left_anti").count()
-        unbanded = sig_ids.join(band_ids, "id", "left_anti").count()
-        return {
-            "params": p,
-            "n_signatures": int(sig_stats.rows),
-            "n_ids": int(sig_stats.ids),
-            "n_conflicting_ids": int(conflicting),
-            "n_bad_length_ids": int(sig_stats.badlen),
-            "n_band_rows": int(bands.count()),
-            "n_orphan_band_ids": int(orphans),
-            "n_unbanded_ids": int(unbanded),
-        }
-    finally:
-        sig.unpersist()
-        bands.unpersist()
+    sig = spark.read.parquet(f"{vdir}/signatures").groupBy("id").agg(
+        F.count("*").alias("_rows"),
+        F.count_if(F.size("signature") != p["num_hashes"]).alias("_badlen"),
+        # more than one DISTINCT signature (a NULL one counts as one)
+        (
+            (F.min("signature") != F.max("signature"))
+            | F.count("signature").between(1, F.count("*") - 1)
+        ).alias("_conflict"),
+    )
+    bands = spark.read.parquet(f"{vdir}/bands").groupBy("id").agg(
+        F.count("*").alias("_brows")
+    )
+    in_sig, in_bands = F.col("_rows").isNotNull(), F.col("_brows").isNotNull()
+    r = sig.join(bands, "id", "full").agg(
+        F.sum("_rows").alias("rows"),
+        F.count_if(in_sig & F.col("id").isNotNull()).alias("ids"),
+        F.count_if("_conflict").alias("conflicting"),
+        F.sum("_badlen").alias("badlen"),
+        F.sum("_brows").alias("brows"),
+        F.count_if(in_bands & ~in_sig).alias("orphans"),
+        F.count_if(in_sig & ~in_bands).alias("unbanded"),
+    ).first()
+    return {
+        "params": p,
+        "n_signatures": int(r.rows or 0),
+        "n_ids": int(r.ids),
+        "n_conflicting_ids": int(r.conflicting),
+        "n_bad_length_ids": int(r.badlen or 0),
+        "n_band_rows": int(r.brows or 0),
+        "n_orphan_band_ids": int(r.orphans),
+        "n_unbanded_ids": int(r.unbanded),
+    }
 
 
 def rebuild_minhash_index(
@@ -991,8 +910,8 @@ def rebuild_minhash_index(
     p = versioned.read_params(spark, src_path)
     src = versioned.live_dir(src_path, p)
     sig = spark.read.parquet(f"{src}/signatures").dropDuplicates()
-    sig = sig.persist()
-    try:
+    with owned() as held:
+        persist(sig, held)
         bad = sig.agg(
             F.count_if(F.size("signature") != p["num_hashes"]).alias("badlen"),
             (F.count("*") - F.countDistinct("id")).alias("conflicts"),
@@ -1030,8 +949,6 @@ def rebuild_minhash_index(
             ddl=_MINHASH_PARAMS_DDL, prune=prune,
             extra_stale=_MINHASH_FLAT_DIRS,
         )
-    finally:
-        sig.unpersist()
 
 
 def append_to_minhash_index(
@@ -1300,14 +1217,16 @@ def connected_components(
     # entries: the full inverted-index self-join) re-executed once per
     # round plus once for the label init.  Separate actions are
     # exactly where the materialization rule pays (the
-    # session_attribution lesson in reverse).
+    # session_attribution lesson in reverse).  The returned labels are
+    # localCheckpoint'd, so dropping the edge cache on exit cannot
+    # trigger recomputation downstream.
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        .persist()
     )
-    try:
+    with owned() as held:
+        persist(edges, held)
         # Round 1 is computable as ONE aggregate over the cached edge
         # list: with init labels component=node, the min-label update
         # new(v) = min(v, min neighbor ids) needs no label relation at
@@ -1361,10 +1280,6 @@ def connected_components(
             "(graph diameter exceeds max_iter); the partial labels would be "
             "silently wrong — raise max_iter"
         )
-    finally:
-        # the returned labels are localCheckpoint'd, so dropping the
-        # edge cache cannot trigger recomputation downstream
-        edges.unpersist()
 
 
 def dedup_keep_list(
@@ -1503,13 +1418,13 @@ def simhash_near_duplicates(
     # ONCE and both band-join sides read the cache (the dedup_minhash
     # pattern; before this, the whole aggregate subtree executed twice,
     # one copy per self-join side).
+    # The returned plan reads the cache, so it is released through
+    # ``handles`` (``operators/cache.py``).
     sigs = _simhash_agg(scorable, id_col, text_col, hash_fn=hash_fn).select(
         "_id", F.col("simhash").alias("_sig")
     )
-    sigs = sigs.persist()
+    sigs = persist(sigs, handles)
     sigs.count()
-    if handles is not None:
-        handles.append(sigs)
     band_structs = F.array(
         *[
             F.struct(
@@ -1668,7 +1583,6 @@ def drop_repeated_spans(
     id_col: str,
     text_col: str,
     n: int = 5,
-    persist: bool = True,
     handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Corpus-level exact token-SPAN dedup (Lee et al. 2021,
@@ -1705,23 +1619,14 @@ def drop_repeated_spans(
     (id, pos) anti join, one per-document reassembly.  All keys
     bounded; no pair space anywhere.
 
-    ``persist``: Catalyst does not reuse the tokenize/explode/window
+    Caches: Catalyst does not reuse the tokenize/explode/window
     subplans across the three lineage branches (toks feeds both the
     gram pipeline and the anti-join probe; grams feeds both the
-    first-occurrence aggregate and the occurrence join), so the
-    explode and the per-doc window each evaluate up to three times
-    without it.  Unlike minhash_near_duplicates (where the cache write
-    serialized a cheap recompute and persist measured SLOWER), the
-    window + explode here dominate: persist=True measured 2.4s vs 3.8s
-    warm / 3.8s vs 9.7s cold at sf0.1, so it is the DEFAULT.
-
-    UNPERSIST CONTRACT: the cached toks/grams stay referenced by the
-    returned plan's lineage.  Pass ``handles`` (a list; the two
-    persisted DataFrames are appended to it) and call
-    ``h.unpersist()`` on each once the result is consumed — a
-    session-wide ``spark.catalog.clearCache()`` would also evict every
-    UNRELATED cache a composing pipeline holds (round-8 verdict), so
-    the targeted handles are the supported cleanup path.
+    first-occurrence aggregate and the occurrence join), so toks and
+    grams are persisted — uncached, the explode and the per-doc window
+    each evaluate up to three times (measured 2.4s vs 3.8s warm / 3.8s
+    vs 9.7s cold at sf0.1).  The returned plan reads both caches, so
+    they are released through ``handles`` (``operators/cache.py``).
     """
     if n < 2:
         raise ValueError(f"span length n must be >= 2, got {n}")
@@ -1729,10 +1634,7 @@ def drop_repeated_spans(
         F.col(id_col).alias("_id"),
         F.posexplode(tokens(F.col(text_col))).alias("_pos", "_tok"),
     )
-    if persist:
-        toks = toks.persist()
-        if handles is not None:
-            handles.append(toks)
+    toks = persist(toks, handles)
     w = Window.partitionBy("_id").orderBy("_pos")
     parts = [F.col("_tok")] + [F.lead("_tok", i).over(w) for i in range(1, n)]
     grams = (
@@ -1747,10 +1649,7 @@ def drop_repeated_spans(
         .where(F.col("_last").isNotNull())
         .select("_id", "_pos", F.md5(F.col("_g")).alias("_d"))
     )
-    if persist:
-        grams = grams.persist()
-        if handles is not None:
-            handles.append(grams)
+    grams = persist(grams, handles)
     first = grams.groupBy("_d").agg(
         F.min(F.struct(F.col("_id").alias("i"), F.col("_pos").alias("p"))).alias("_f")
     )

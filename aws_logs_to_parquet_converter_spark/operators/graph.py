@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_logs_to_parquet_converter_spark.operators.cache import owned, persist
+
 
 def pagerank(
     edges: DataFrame,
@@ -52,19 +54,19 @@ def pagerank(
     # run ~2x per iteration.  Both relations are slim (ids + a count);
     # persist them for the loop, drop them once the final ranks are
     # checkpointed (the connected_components idiom).
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()  # every iteration re-reads the node set
-    )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("_od")).persist()
-    try:
+    with owned() as held:
+        e = persist(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+            .distinct(),
+            held,
+        )
+        nodes = persist(  # every iteration re-reads the node set
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct(),
+            held,
+        )
+        outdeg = persist(e.groupBy("src").agg(F.count("*").alias("_od")), held)
         n = nodes.count()
         if n == 0:
             # (1-d)/n below would raise a bare ZeroDivisionError; match
@@ -99,11 +101,7 @@ def pagerank(
                 # a broadcast; unchecked, 50 iterations build a plan
                 # the analyzer chokes on (connected_components idiom)
                 ranks = ranks.localCheckpoint(eager=True)
-        # Materialize the final ranks before the finally drops the
-        # caches they depend on — the returned frame is then a cheap
+        # Materialize the final ranks before the block drops the caches
+        # they depend on — the returned frame is then a cheap
         # checkpointed scan, exactly like connected_components' labels.
         return ranks.localCheckpoint(eager=True)
-    finally:
-        nodes.unpersist()
-        e.unpersist()
-        outdeg.unpersist()

@@ -41,17 +41,17 @@ arithmetic (no further shuffle):
 
 100 TB posture: one range shuffle + one bounded collect + arithmetic —
 the same I/O shape as ``RDD.zipWithIndex``, kept entirely in the
-DataFrame/codegen world.  The persist (MEMORY_AND_DISK of the
-projected ordering columns) is the materialization every two-pass
-numbering pays.
+DataFrame/codegen world.  The persist of the projected ordering
+columns is the materialization every two-pass numbering pays.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from aws_logs_to_parquet_converter_spark.operators.cache import persist
 
 #: columns added by :func:`global_row_number`
 RANK_COL = "_global_rn"
@@ -81,16 +81,9 @@ def global_row_number(
     produces the same global numbering, so the recompute is benign.)
 
     Returns ``df`` plus two columns: ``rank_col`` (1..n, unique) and
-    ``count_col`` (n on every row).  The intermediate is persisted
-    (MEMORY_AND_DISK) to pin one boundary/id draw across the two jobs.
-    UNPERSIST CONTRACT: the cache stays referenced by the returned
-    plan's lineage; pass ``handles`` (a list the persisted DataFrame is
-    appended to) and call ``h.unpersist()`` on each entry once the
-    result is consumed — a long-lived session composing this operator
-    otherwise accumulates pinned executor memory per call.  (Harnesses
-    that run whole registry queries back-to-back instead clear between
-    queries; ``spark.catalog.clearCache()`` there is deliberate, not a
-    substitute for this per-call contract.)
+    ``count_col`` (n on every row).  The intermediate is persisted to
+    pin one boundary/id draw across the two jobs; the returned plan
+    reads it, so it is released through ``handles`` (``operators/cache.py``).
     Per-partition row counts must stay under 2^33 (the id counter's
     per-partition span) — at that size you want more partitions anyway.
     """
@@ -98,18 +91,16 @@ def global_row_number(
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
 
-    local = (
+    local = persist(
         df.repartitionByRange(num_partitions, *order_by)
         .sortWithinPartitions(*order_by)
         # both are ordinary projections over the sorted stream: pid tags
         # the physical partition, mid is its consecutive row counter —
         # no WindowExec, no second exchange
         .select("*", F.spark_partition_id().alias("_pid"),
-                F.monotonically_increasing_id().alias("_mid"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+                F.monotonically_increasing_id().alias("_mid")),
+        handles,
     )
-    if handles is not None:
-        handles.append(local)
 
     # Pass 2: per-partition (count, first id) -> driver prefix sum
     # (bounded by the partition count, a config constant) -> broadcast
@@ -149,9 +140,9 @@ def global_running_sum(
     """Attach the GLOBAL inclusive running sum of ``value_col`` under
     ``order_by`` — the prefix-sum sibling of :func:`global_row_number`,
     with the same contracts: ``order_by`` must be a TOTAL order, the
-    intermediate is persisted (pass ``handles`` for the unpersist
-    hook), and the driver-side collect is bounded by the partition
-    count (a config constant).
+    intermediate is persisted (released through ``handles``), and the
+    driver-side collect is bounded by the partition count (a config
+    constant).
 
     Unlike row numbering, a running sum needs each partition's LOCAL
     prefix sums, which only a window can produce — so after the range
@@ -181,13 +172,12 @@ def global_running_sum(
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
 
-    local = (
-        df.repartitionByRange(num_partitions, *order_by)
-        .select("*", F.spark_partition_id().alias("_pid"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    local = persist(
+        df.repartitionByRange(num_partitions, *order_by).select(
+            "*", F.spark_partition_id().alias("_pid")
+        ),
+        handles,
     )
-    if handles is not None:
-        handles.append(local)
 
     w = (
         Window.partitionBy("_pid")

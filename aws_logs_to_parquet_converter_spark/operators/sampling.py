@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from aws_logs_to_parquet_converter_spark.operators.cache import persist
+
 
 def _order_key(key: Column, seed: int) -> Column:
     return F.md5(F.concat(key.cast("string"), F.lit(f"#{seed}")))
@@ -651,23 +653,18 @@ def token_stream_blocks(
     its full child plan, so without the cache the token count — the
     expensive part, typically a regex tokenization of the whole corpus
     — is computed TWICE (once for boundary sampling, once for the real
-    exchange; plan-verified r15).  The cache is ~16 B/row; same
-    ``handles`` unpersist contract as the prefix-sum internals.
+    exchange; plan-verified r15).  The cache is ~16 B/row; the
+    returned plan reads it and the prefix-sum internals, so both are
+    released through ``handles`` (``operators/cache.py``).
     """
     if block_size < 1:
         raise ValueError(f"token_stream_blocks: block_size must be >= 1, got {block_size}")
-    from pyspark.storagelevel import StorageLevel
-
     from aws_logs_to_parquet_converter_spark.operators.ranking import (
         global_running_sum,
     )
 
     tok = F.col(token_count_col) if isinstance(token_count_col, str) else token_count_col
-    base = df.select("*", tok.cast("long").alias("n_tokens")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    if handles is not None:
-        handles.append(base)
+    base = persist(df.select("*", tok.cast("long").alias("n_tokens")), handles)
     summed = global_running_sum(
         base, [F.col(id_col)], "n_tokens", sum_col="_incl", handles=handles
     )

@@ -41,9 +41,10 @@ round-trip, so a DuckDB oracle matches bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from aws_logs_to_parquet_converter_spark.operators.cache import owned, persist
 
 #: whitespace class mirrored by every text-normalization oracle in the
 #: repo (dedup._normalized's convention): no \s shorthand, so the
@@ -98,14 +99,13 @@ def setsim_join_tokens(
     integer-exact (id_a, id_b, inter, uni).  Input rows MUST be
     distinct per (id, token) — both tokenizers above guarantee it.
 
-    The per-doc ordered-token index is PERSISTED (MEMORY_AND_DISK):
-    it feeds the prefix explode AND both verification sides, and Spark
-    re-evaluates a non-cached aggregate subtree at every reference —
-    measured 8 corpus FileScans without the persist, one with it.
-    This is the AllPairs index materialization every implementation
-    pays.  UNPERSIST CONTRACT (global_row_number's): pass ``handles``
-    and unpersist each entry once the result is consumed; harnesses
-    that clear between queries use ``spark.catalog.clearCache()``."""
+    The per-doc ordered-token index is PERSISTED: it feeds the prefix
+    explode AND both verification sides, and Spark re-evaluates a
+    non-cached aggregate subtree at every reference — measured 8
+    corpus FileScans without the persist, one with it.  This is the
+    AllPairs index materialization every implementation pays; the
+    returned plan reads it, so it is released through ``handles``
+    (``operators/cache.py``)."""
     if not isinstance(threshold_milli, int) or not (0 < threshold_milli <= 1000):
         raise ValueError(
             "setsim_join_tokens: threshold_milli must be an int in "
@@ -121,53 +121,49 @@ def setsim_join_tokens(
     # passes (the rank's range-boundary sampling job executes its full
     # child — the token_stream_blocks lesson — and the per-doc join);
     # without the cache the corpus tokenize+agg would run twice.
-    dfreq = t.groupBy("_tk").agg(F.count("*").alias("_df")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    dfreq.count()
-    # Dense integer token ids, ranked by the GLOBAL (df asc, token asc)
-    # total order via the two-pass range-partitioned rank (no
-    # single-task sort; vocab-sized input).  Ranks are injective and
-    # order-preserving, so every downstream step — prefix slicing,
-    # candidate equi-join, hash-set verification — runs on 8-byte
-    # PRIMITIVES instead of shingle strings: measured at sf0.1 the
-    # string form spent ~90% of its 252 s wall hashing ~200-element
-    # string arrays per candidate pair.  Intersection counts are
-    # unchanged (injectivity), so the output stays integer-exact.
-    rk_handles: list[DataFrame] = []
-    vocab = global_row_number(
-        dfreq,
-        [F.col("_df"), F.col("_tk")],
-        rank_col="_rk",
-        count_col="_rkcnt",
-        handles=rk_handles,
-    ).select("_tk", "_rk")
-    # per-doc ascending rank array == the global total order
-    per_doc = (
-        t.join(vocab, "_tk")
-        .groupBy("_id")
-        .agg(
-            F.array_sort(F.collect_list("_rk")).alias("_toks"),
-            F.count("*").alias("_n"),
+    with owned() as vocab_caches:
+        dfreq = persist(
+            t.groupBy("_tk").agg(F.count("*").alias("_df")), vocab_caches
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Materialize before the consumers launch: the plan reads per_doc
-    # from THREE subtrees (prefix explode + both verification sides)
-    # and AQE starts them concurrently — uncached-compute races on the
-    # per-partition cache locks hold task slots for the full
-    # index-build wall (the dedup_minhash lesson, measured there
-    # 4.55s -> 3.35s).  One eager count pays the build in a clean
-    # stage; consumers then read the cache.
-    per_doc.count()
-    # per_doc is materialized, so the upstream vocab caches can drop
-    # now; an executor-loss recompute re-derives identical ranks (the
-    # total order makes the two-pass rank draw-independent).
-    dfreq.unpersist()
-    for h in rk_handles:
-        h.unpersist()
-    if handles is not None:
-        handles.append(per_doc)
+        dfreq.count()
+        # Dense integer token ids, ranked by the GLOBAL (df asc, token
+        # asc) total order via the two-pass range-partitioned rank (no
+        # single-task sort; vocab-sized input).  Ranks are injective
+        # and order-preserving, so every downstream step — prefix
+        # slicing, candidate equi-join, hash-set verification — runs on
+        # 8-byte PRIMITIVES instead of shingle strings: measured at
+        # sf0.1 the string form spent ~90% of its 252 s wall hashing
+        # ~200-element string arrays per candidate pair.  Intersection
+        # counts are unchanged (injectivity), so the output stays
+        # integer-exact.
+        vocab = global_row_number(
+            dfreq,
+            [F.col("_df"), F.col("_tk")],
+            rank_col="_rk",
+            count_col="_rkcnt",
+            handles=vocab_caches,
+        ).select("_tk", "_rk")
+        # per-doc ascending rank array == the global total order
+        per_doc = persist(
+            t.join(vocab, "_tk")
+            .groupBy("_id")
+            .agg(
+                F.array_sort(F.collect_list("_rk")).alias("_toks"),
+                F.count("*").alias("_n"),
+            ),
+            handles,
+        )
+        # Materialize before the consumers launch: the plan reads
+        # per_doc from THREE subtrees (prefix explode + both
+        # verification sides) and AQE starts them concurrently —
+        # uncached-compute races on the per-partition cache locks hold
+        # task slots for the full index-build wall (the dedup_minhash
+        # lesson, measured there 4.55s -> 3.35s).  One eager count pays
+        # the build in a clean stage; consumers then read the cache.
+        # Once it is materialized the vocab caches drop; an
+        # executor-loss recompute re-derives identical ranks (the total
+        # order makes the two-pass rank draw-independent).
+        per_doc.count()
     # prefix length p = n - ceil(tau*n) + 1, all-integer
     p = (
         F.col("_n")
@@ -291,7 +287,7 @@ def setsim_join(
     ``shingle_n=None`` tokenizes to distinct word tokens;
     ``shingle_n=k`` to distinct character k-grams (the
     MinHash-comparable mode).  See :func:`setsim_join_tokens` (incl.
-    the persisted-index unpersist contract)."""
+    the persisted index released through ``handles``)."""
     tok = (
         word_token_sets(df, id_col, text_col)
         if shingle_n is None

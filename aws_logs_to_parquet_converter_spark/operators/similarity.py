@@ -26,6 +26,7 @@ import warnings
 from pyspark.sql import Column, DataFrame, Window
 
 from aws_logs_to_parquet_converter_spark.operators import versioned
+from aws_logs_to_parquet_converter_spark.operators.cache import owned, persist
 from aws_logs_to_parquet_converter_spark.operators.partitioning import fan_out
 from pyspark.sql import functions as F
 
@@ -604,7 +605,6 @@ def semantic_dedup(
     seed: int = 42,
     dim: int | None = None,
     target_cell_size: int = 5000,
-    persist_assignments: bool = True,
     kmeans_iters: int = 5,
     hash_fn: str = "xxhash64",
     handles: "list[DataFrame] | None" = None,
@@ -642,10 +642,9 @@ def semantic_dedup(
     block key composes with the cell key.  Returns the KEPT rows with
     the corpus's original columns.
 
-    With ``n_cells > 1`` and ``persist_assignments`` the cell
-    assignments are cached; pass ``handles`` (a list) to receive that
-    DataFrame for deterministic unpersist once the result has been
-    consumed, else it lives until ``spark.catalog.clearCache()``.
+    With ``n_cells > 1`` the cell assignments are cached; the returned
+    plan reads them, so they are released through ``handles``
+    (``operators/cache.py``).
     """
     # NULL embeddings can't score against anything: exclude them from
     # the pair space entirely (the anti join then keeps them, matching
@@ -685,7 +684,7 @@ def semantic_dedup(
         _norm(F.col(vec_col), dim).alias("_nrm"),
         cell.alias("_cell"),
     )
-    if persist_assignments and n_cells > 1:
+    if n_cells > 1:
         # The cell assignment is the one Arrow pass in the plan, and
         # the pair self-join evaluates `base` on BOTH branches —
         # without materialization the Python crossing runs twice and
@@ -693,12 +692,7 @@ def semantic_dedup(
         # exact-mode literal cell at sf0.1).  ~(id + vec + norm + cell)
         # per row cached — the corpus's own width, the same trade the
         # paper's pipeline makes by writing cluster ids to disk.
-        # Callers who must not cache (memory-tight executors) pass
-        # False and pay the second pass; long-lived sessions that cycle
-        # many corpora pass ``handles`` and unpersist each call's cache.
-        base = base.persist()
-        if handles is not None:
-            handles.append(base)
+        base = persist(base, handles)
         # Eager materialization: the pair self-join scans `base` on
         # both branches and AQE launches both CONCURRENTLY — two tasks
         # per cached partition racing the cache lock, the loser holding
@@ -1292,35 +1286,35 @@ def validate_pq_index(spark, path: str) -> dict:
       * ``n_bad_length_ids``: code arrays whose length differs from
         the codebook's ``m`` — a foreign-codebook append.
 
-    One scan of the codes relation (persisted for the aggregations)."""
+    One aggregate pass: the codes are aggregated per id, and one
+    global aggregate over that answers every count in a single action.
+    """
     params = versioned.read_params(spark, path)
     m = int(params["m"])
-    codes = spark.read.parquet(
-        f"{versioned.live_dir(path, params)}/codes"
-    ).persist()
-    try:
-        stats = codes.agg(
-            F.count("*").alias("rows"),
-            F.countDistinct("id").alias("ids"),
-            F.count_if(F.size("pq_codes") != m).alias("badlen"),
-        ).first()
-        conflicting = (
-            codes.dropDuplicates()
-            .groupBy("id")
-            .agg(F.count("*").alias("n"))
-            .where(F.col("n") > 1)
-            .count()
-        )
-        return {
-            "version": params["version"],
-            "m": m,
-            "n_codes": int(stats.rows),
-            "n_ids": int(stats.ids),
-            "n_conflicting_ids": int(conflicting),
-            "n_bad_length_ids": int(stats.badlen),
-        }
-    finally:
-        codes.unpersist()
+    codes = spark.read.parquet(f"{versioned.live_dir(path, params)}/codes")
+    per_id = codes.groupBy("id").agg(
+        F.count("*").alias("_rows"),
+        F.count_if(F.size("pq_codes") != m).alias("_badlen"),
+        # more than one DISTINCT code array (a NULL one counts as one)
+        (
+            (F.min("pq_codes") != F.max("pq_codes"))
+            | F.count("pq_codes").between(1, F.count("*") - 1)
+        ).alias("_conflict"),
+    )
+    r = per_id.agg(
+        F.sum("_rows").alias("rows"),
+        F.count("id").alias("ids"),
+        F.count_if("_conflict").alias("conflicting"),
+        F.sum("_badlen").alias("badlen"),
+    ).first()
+    return {
+        "version": params["version"],
+        "m": m,
+        "n_codes": int(r.rows or 0),
+        "n_ids": int(r.ids),
+        "n_conflicting_ids": int(r.conflicting),
+        "n_bad_length_ids": int(r.badlen or 0),
+    }
 
 
 def pq_semantic_gate(
@@ -1359,12 +1353,15 @@ def pq_semantic_gate(
     if n == 0:
         return batch
     n_chunks = max(1, -(-n // probe_chunk_rows))
-    if n_chunks > 1:
-        probe = probe.withColumn(
-            "_pc", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_chunks))
-        ).persist()
     dup_ids: list = []
-    try:
+    with owned() as held:
+        if n_chunks > 1:
+            probe = persist(
+                probe.withColumn(
+                    "_pc", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_chunks))
+                ),
+                held,
+            )
         for i in range(n_chunks):
             part = (
                 probe.where(F.col("_pc") == i).drop("_pc")
@@ -1382,9 +1379,6 @@ def pq_semantic_gate(
                 .distinct()
                 .collect()
             )
-    finally:
-        if n_chunks > 1:
-            probe.unpersist()
     if not dup_ids:
         return batch
     dup_df = spark.createDataFrame([(d,) for d in dup_ids], id_field)

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from aws_logs_to_parquet_converter_spark.operators.cache import owned, persist
+
 # Tiny high-frequency stopword set: enough signal for a heuristic
 # language gate; a production run would swap in per-language tables.
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "for", "on", "it"]
@@ -368,8 +370,8 @@ def train_hashed_linear(
     base = df.select(
         y.alias("_y"), toks.alias("_toks"), n_toks.cast("double").alias("_n")
     ).where(y.isNotNull())
-    base = base.persist()
-    try:
+    with owned() as held:
+        base = persist(base, held)
         n_docs = base.count()
         if n_docs == 0:
             raise ValueError("train_hashed_linear: no labeled rows")
@@ -417,8 +419,6 @@ def train_hashed_linear(
             b -= lr * float(obs.get["s"]) / n_docs
             for r in gw_rows:
                 w[int(r._j)] -= lr * float(r.g) / n_docs
-    finally:
-        base.unpersist()
     return w, b
 
 
@@ -731,12 +731,10 @@ def _unigram_counts(corpus: DataFrame, text_col: str, max_vocab: int):
     round-6 scale finding).  Tiebreak (count desc, token asc) is
     unchanged and deterministic."""
     toks = token_rows(corpus, text_col, name="token")
-    counts = toks.groupBy("token").agg(F.count("*").alias("c")).persist()
-    try:
+    with owned() as held:
+        counts = persist(toks.groupBy("token").agg(F.count("*").alias("c")), held)
         n = counts.agg(F.sum("c")).first()[0] or 0
         kept_rows = _ranked_vocab(counts, max_vocab).collect()
-    finally:
-        counts.unpersist()
     return kept_rows, n, sum(r.c for r in kept_rows), len(kept_rows)
 
 
@@ -1567,9 +1565,8 @@ def source_kl_divergence(
     derive (one-row broadcasts, the q11 single-row class).  r15: the
     un-persisted form re-ran the corpus explode+aggregate three times
     (its three consumers need different partitionings, so exchange
-    reuse never fired).  Pass ``handles`` (a list) to receive that
-    persisted relation for deterministic unpersist once the result has
-    been consumed, else it lives until ``spark.catalog.clearCache()``.
+    reuse never fired).  The returned plan reads that cache, so it is
+    released through ``handles`` (``operators/cache.py``).
 
     Returns ``(group_col, n_tokens, kl_bits)``.
     """
@@ -1582,15 +1579,12 @@ def source_kl_divergence(
     # three times (three Generate-over-scan subtrees in the executed
     # plan).  One explode+agg pass now feeds a vocab-x-groups-bounded
     # cache (the persisted-state trade the bloom/minhash operators
-    # already make); released through ``handles``.  The eager count
-    # keeps concurrent consumers off the cache lock (the minhash
-    # sig.count() finding).
-    per_group = (
-        toks.groupBy(group_col, "_tok").agg(F.count("*").alias("_cg")).persist()
+    # already make).  The eager count keeps concurrent consumers off
+    # the cache lock (the minhash sig.count() finding).
+    per_group = persist(
+        toks.groupBy(group_col, "_tok").agg(F.count("*").alias("_cg")), handles
     )
     per_group.count()
-    if handles is not None:
-        handles.append(per_group)
     corpus = per_group.groupBy("_tok").agg(F.sum("_cg").alias("_cw"))
     joined = per_group.join(corpus, "_tok")
     inner = joined.groupBy(group_col).agg(

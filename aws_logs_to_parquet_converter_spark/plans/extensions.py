@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_logs_to_parquet_converter_spark.operators import dedup, similarity, textstats
+from aws_logs_to_parquet_converter_spark.operators.cache import persist
 from aws_logs_to_parquet_converter_spark.plans.registry import (
     query,
     scratch_dir,
@@ -4043,7 +4044,7 @@ def q_incremental_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # digest set is persisted parquet state (the operator contract);
     # deriving it on the fly here, the persist+count mirrors that —
     # one digest pass, both consumers read the cache.
-    digests = dedup.content_digests(corpus, "doc_id", "text").persist()
+    digests = persist(dedup.content_digests(corpus, "doc_id", "text"), None)
     digests.count()
     fresh = dedup.dedup_against_corpus(
         batch, digests, "doc_id", "text",

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from aws_logs_to_parquet_converter_spark.operators.cache import owned, persist
 from aws_logs_to_parquet_converter_spark.operators.scrub import pii_counts, scrub_pii
 from aws_logs_to_parquet_converter_spark.operators.textstats import token_rows
 from aws_logs_to_parquet_converter_spark.sources.jsonl import DOCUMENT_SCHEMA
@@ -271,9 +272,9 @@ def stream_corpus_ingest(
         clean = dedup_stream(scrubbed, digest=_content_digest("text", id_col))
 
     if corpus_digests is not None:
-        corpus_digests = corpus_digests.persist()
+        corpus_digests = persist(corpus_digests, None)
         if corpus_bloom is not None:
-            corpus_bloom.bitmap.persist()
+            persist(corpus_bloom.bitmap, None)
 
     def against_corpus(batch_df: DataFrame) -> DataFrame:
         if corpus_digests is not None:
@@ -329,25 +330,19 @@ def stream_corpus_ingest(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_hook is not None:
             batch_hook(batch_df, batch_id)
-        if rules:
-            # one evaluation of the tagged frame feeds both sinks
-            tagged_batch = batch_df.persist()
-            try:
+        with owned() as held:
+            if rules:
+                # one evaluation of the tagged frame feeds both sinks
+                tagged_batch = persist(batch_df, held)
                 rejected = tagged_batch.where(F.size("_violations") > 0).withColumn(
                     "_violations", F.array_join("_violations", ",")
                 )
                 write_sink(rejected, reject_path, batch_id)
-                batch_df = against_corpus(
-                    tagged_batch.where(F.size("_violations") == 0).drop("_violations")
+                batch_df = tagged_batch.where(F.size("_violations") == 0).drop(
+                    "_violations"
                 )
-                batch_df = batch_df.persist()
-                write_sink(batch_df, dest, batch_id)
-            finally:
-                tagged_batch.unpersist()
-        else:
-            batch_df = against_corpus(batch_df).persist()
+            batch_df = persist(against_corpus(batch_df), held)
             write_sink(batch_df, dest, batch_id)
-        try:
             if minhash_index is not None and minhash_update and not batch_df.isEmpty():
                 # admitted rows enter the index so LATER batches (and
                 # restarted streams) near-dedup against them; reads the
@@ -374,8 +369,6 @@ def stream_corpus_ingest(
                 # hook runs BEFORE the final unpersist so inspecting
                 # batch_df re-reads cache, not the whole corpus plan
                 post_write_hook(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
 
     writer = clean.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint

@@ -71,12 +71,8 @@ def main():
         counts[status] += 1
         label = {"ok": "ok   ", "rows-only": "rows ", "fail": "FAIL "}[status]
         print(f"{label} {name}: {detail} [{time.time()-t0:.1f}s]")
-        # operators that persist internally (global_row_number pins its
-        # ranked projection to keep nondeterministic ids stable;
-        # span-dedup persists its token/gram subplans) have no way to
-        # know when their output has been consumed — the harness does:
-        # release per query so a 50-query session never accumulates
-        # stale cached tables (round-8 review)
+        # a finished query's caches are released here, the harness rule
+        # of operators/cache.py
         spark.catalog.clearCache()
 
     print(f"\n{counts['ok']} ok, {counts['rows-only']} rows-only, {counts['fail']} FAIL")

@@ -10,6 +10,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from aws_logs_to_parquet_converter_spark.operators import cache
 from aws_logs_to_parquet_converter_spark.operators.anomaly import (
     interarrival_regularity,
 )
@@ -72,14 +73,12 @@ def test_source_kl_analytic(spark):
     )
     jsc = spark.sparkContext._jsc
     cached_before = len(jsc.getPersistentRDDs())
-    handles = []
-    got = {
-        r["source"]: r
-        for r in source_kl_divergence(df, "source", "text", handles=handles).collect()
-    }
     # the cached (group, token) counts are released through the handles
-    for h in handles:
-        h.unpersist()
+    with cache.owned() as handles:
+        got = {
+            r["source"]: r
+            for r in source_kl_divergence(df, "source", "text", handles=handles).collect()
+        }
     assert len(jsc.getPersistentRDDs()) == cached_before
     # corpus: {a:2, b:2}, N=4.  s1: p=(2/3, 1/3), q=(1/2, 1/2)
     kl1 = (2 / 3 * math.log((2 / 3) / 0.5) + 1 / 3 * math.log((1 / 3) / 0.5)) / math.log(2)

@@ -21,13 +21,25 @@ def duck():
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_parity(spark, duck, registry_plans, name):
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
     sdf = REGISTRY[name].builder(spark, SF_DIR)
     # captured before the collect, so it is the plan a fresh build shows
     registry_plans[(SF_DIR, name)] = explain_str(sdf, "simple")
     status, detail = compare_frame(duck, name, sdf)
+    # the whole-query harness rule of operators/cache.py: a finished
+    # entry's caches go with clearCache; only local checkpoints, which
+    # no cache call can release, may outlive it
+    spark.catalog.clearCache()
+    left = jsc.getPersistentRDDs()
+    cached = [
+        k for k in left
+        if k not in before and not left[k].rdd().isLocallyCheckpointed()
+    ]
     assert status != "fail", detail
     if REGISTRY[name].oracle is not None:
         assert status == "ok"
+    assert not cached, f"{name} left cached RDDs {cached} after clearCache"
 
 
 def test_no_oracle_emits_wide_integer_types():

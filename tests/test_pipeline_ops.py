@@ -4,7 +4,7 @@ sampling.py, dedup.contamination_check)."""
 
 from pyspark.sql import functions as F
 
-from aws_logs_to_parquet_converter_spark.operators import sampling, scrub
+from aws_logs_to_parquet_converter_spark.operators import cache, sampling, scrub
 from aws_logs_to_parquet_converter_spark.operators.dedup import contamination_check
 
 SF = "/root/testdata/sf0.001"
@@ -1534,12 +1534,10 @@ def test_llm_operators_repeat_call_reuses_compiled_classes(spark):
 
     def one_round():
         dedup.exact_duplicates(docs, "doc_id", "text").collect()
-        handles = []
-        dedup.minhash_near_duplicates(
-            docs, "doc_id", "text", threshold=0.4, handles=handles
-        ).select("id_a", "id_b").collect()
-        for h in handles:
-            h.unpersist()
+        with cache.owned() as handles:
+            dedup.minhash_near_duplicates(
+                docs, "doc_id", "text", threshold=0.4, handles=handles
+            ).select("id_a", "id_b").collect()
         similarity.semantic_dedup(
             emb, threshold=0.4, n_cells="auto", target_cell_size=1000
         ).select("vec_id").collect()

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from aws_logs_to_parquet_converter_spark.operators import cache
 from aws_logs_to_parquet_converter_spark.operators.ranking import (
     COUNT_COL,
     RANK_COL,
@@ -121,14 +122,13 @@ def test_global_row_number_handles_targeted_unpersist(spark):
     persisted intermediate back through ``handles`` and release it
     without a session-wide clearCache."""
     df = spark.createDataFrame([(i, i % 5) for i in range(50)], "k long, v long")
-    handles: list = []
-    ranked = global_row_number(
-        df, [F.col("v"), F.col("k")], num_partitions=4, handles=handles
-    )
-    assert ranked.count() == 50
-    assert len(handles) == 1
-    assert handles[0].storageLevel.useMemory
-    handles[0].unpersist()
+    with cache.owned() as handles:
+        ranked = global_row_number(
+            df, [F.col("v"), F.col("k")], num_partitions=4, handles=handles
+        )
+        assert ranked.count() == 50
+        assert len(handles) == 1
+        assert handles[0].storageLevel.useMemory
     assert not handles[0].storageLevel.useMemory
 
 

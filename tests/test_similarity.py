@@ -6,7 +6,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from aws_logs_to_parquet_converter_spark.operators import similarity
+from aws_logs_to_parquet_converter_spark.operators import cache, similarity
 
 
 @pytest.fixture(scope="module")
@@ -238,15 +238,13 @@ def test_semantic_dedup_clustered_well_separated(spark):
         df, threshold=0.999, n_cells=1, dim=4).collect()}
     jsc = spark.sparkContext._jsc
     cached_before = len(jsc.getPersistentRDDs())
-    handles = []
-    clustered = {r.vec_id for r in similarity.semantic_dedup(
-        df, threshold=0.999, n_cells=3, sample_n=120, dim=4,
-        handles=handles).collect()}
+    # the cached cell assignments are released through the handles
+    with cache.owned() as handles:
+        clustered = {r.vec_id for r in similarity.semantic_dedup(
+            df, threshold=0.999, n_cells=3, sample_n=120, dim=4,
+            handles=handles).collect()}
     assert clustered == exact
     assert len(exact) < 120  # tight clusters => real drops happened
-    # the cached cell assignments are released through the handles
-    for h in handles:
-        h.unpersist()
     assert len(jsc.getPersistentRDDs()) == cached_before
 
 
