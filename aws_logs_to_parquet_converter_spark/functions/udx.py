@@ -1,42 +1,24 @@
-"""User-defined function surface (SURVEY §2.11): one example each of
-the three extension points, at the engine's sanctioned seams.
+"""User-defined function surface (SURVEY §2.11), at the engine's
+sanctioned seam.
 
 The engine's doctrine (PERF.md): hot paths are native expressions; a
-Python crossing must be Arrow-batched and earn its place.  These exist
-because the rebuild surface declares UDF/UDAF/UDTF support — each is
-the pattern a user would copy when native expressions genuinely cannot
-express their logic:
+Python crossing must be Arrow-batched and earn its place.
+``gini_udaf`` is the pattern a user would copy when native expressions
+genuinely cannot express their logic: a grouped-aggregate pandas UDF
+(whole-group Arrow batch in, one scalar out).  Gini needs a sort of the
+full group, which no algebraic/partial-aggregatable builtin covers.
 
-  * scalar: ``pandas_cosine`` (operators/similarity.py) is the
-    engine's real example — Arrow-batched, BLAS-backed.
-  * UDAF: ``gini_udaf`` — a grouped-aggregate pandas UDF (whole-group
-    Arrow batch in, one scalar out).  Gini needs a sort of the full
-    group, which no algebraic/partial-aggregatable builtin covers.
-  * UDTF: ``SplitDiff`` — a Python UDTF (Spark 4 table function) with
-    variable fan-out per input row and per-row state, the shape that
-    neither scalar UDFs (1->1) nor explode (needs a materialized
-    array) expresses when the expansion logic is imperative.
-
-Scale notes: a grouped-agg UDAF materializes each group in one
+Scale note: a grouped-agg UDAF materializes each group in one
 executor's memory (same contract as collect_list) — bound group sizes
-before reaching for it.  UDTFs stream row-by-row through Python; for
-bulk row expansion prefer native explode (measured 2-20x faster) and
-use a UDTF only for imperative per-row logic.
+before reaching for it.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F  # noqa: F401  (re-export convenience)
-from pyspark.sql.functions import pandas_udf, udtf
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType
 
 # DataType instances, not DDL strings: a DDL string ("double") is parsed
 # through the active SparkSession at decoration time, so importing this
@@ -57,32 +39,3 @@ def gini_udaf(values: pd.Series) -> float:
     cum = x.cumsum()
     # relative mean absolute difference, via the sorted cumulative form
     return float((n + 1 - 2 * (cum / cum[-1]).sum()) / n)
-
-
-@udtf(
-    returnType=StructType(
-        [
-            StructField("piece", StringType()),
-            StructField("idx", IntegerType()),
-            StructField("is_last", BooleanType()),
-        ]
-    )
-)
-class SplitDiff:
-    """Emit one row per '/'-separated path segment with its position
-    and a trailing-segment flag — variable fan-out plus per-row
-    derived state (the is_last computation), the minimal honest UDTF
-    shape.  eval() may yield any number of rows per input."""
-
-    def eval(self, path: str):  # noqa: D102
-        if path is None:
-            return
-        parts = [p for p in path.split("/") if p != ""]
-        for i, p in enumerate(parts):
-            yield p, i, i == len(parts) - 1
-
-
-def register_udx(spark) -> None:
-    """Register the UDTF for SQL use (``SELECT * FROM split_diff(...)``)
-    and return nothing; the UDAF is used via the DataFrame API."""
-    spark.udtf.register("split_diff", SplitDiff)

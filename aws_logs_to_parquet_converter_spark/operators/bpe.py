@@ -17,14 +17,11 @@ Scale shape (100 TB corpus):
   the head of the Zipf distribution; the tail contributes epsilon
   pair mass).  No per-merge cluster pass: merges mutate the in-memory
   word table exactly as the reference algorithm does.
-* **Encoding** has two paths.  ``encode_tokens_udf`` is the production
-  path: an Arrow-batched pandas UDF carrying the broadcast merge
-  ranks, with a per-batch word cache (word-soup corpora hit it almost
-  always).  ``segment_word_expr`` is a pure-Catalyst fold of literal
-  ``replace`` calls over a sentinel-delimited character string —
-  whole-stage codegen, zero Python — viable for bounded merge tables
-  and the form a SQL oracle reproduces verbatim (the graded
-  q_bpe_encode entry pins the UDF against exactly that fold).
+* **Encoding** is ``encode_tokens_udf``: an Arrow-batched pandas UDF
+  carrying the broadcast merge ranks, with a per-batch word cache
+  (word-soup corpora hit it almost always).  The graded q_bpe_encode
+  entry pins it against a DuckDB fold of literal ``replace`` calls
+  (``plans/extensions._bpe_oracle_segment``).
 
 Determinism: pair selection breaks frequency ties on the
 lexicographically smallest pair; the word-table cap orders by
@@ -33,7 +30,7 @@ lexicographically smallest pair; the word-table cap orders by
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # THE canonical whitespace class — imported, not copied, so BPE word
@@ -201,7 +198,7 @@ def encode_tokens_udf(merges: list[tuple[str, str]]):
 
     # hint-free signature: `from __future__ import annotations`
     # stringifies hints, which the decorator's inference can't resolve
-    # for nested functions (same as similarity.pandas_cosine)
+    # for nested functions
     def _enc(texts):
         cache: dict[str, tuple[str, ...]] = {}
         out = []
@@ -224,42 +221,6 @@ def encode_tokens_udf(merges: list[tuple[str, str]]):
     return pandas_udf(_enc, "array<string>")
 
 
-def segment_word_expr(word: Column, merges: list[tuple[str, str]]) -> Column:
-    """Pure-Catalyst BPE apply for ONE WORD column: the word becomes a
-    string of PAREN-WRAPPED symbols (``(t)(h)(e)(</w>)``), then each
-    merge in rank order is one literal ``replace("(a)(b)", "(ab)")`` —
-    whole-stage codegen, and the exact construction a SQL oracle
-    states verbatim.  Returns the space-joined symbol string; token
-    count = ``size(split(.., ' '))``.
-
-    The wrapping is what makes literal replace EXACTLY symbol-space
-    BPE: a pattern ``(a)(b)`` can only match at symbol boundaries
-    (symbols never contain parens), and consecutive occurrences share
-    no characters — unlike a space-delimited form `` a b a b ``, whose
-    occurrences overlap on the shared separator so ``str.replace``'s
-    non-overlapping scan silently skips every second merge of an
-    ``abab`` run (a real divergence caught by the differential test).
-    Constraint: words containing ``(`` or ``)`` corrupt the wrapping —
-    route such corpora through the UDF path (which has no separator at
-    all); the oracle fixtures are paren-free by construction.
-
-    Viable for BOUNDED merge tables (each merge is one expression
-    node); the Arrow UDF is the unbounded-vocab path.  Rank-order
-    all-occurrence replacement and the UDF's lowest-rank-first loop
-    agree on trained tables (a later rule's symbols only exist once
-    earlier rules produced them) — pinned by the differential test.
-    """
-    s = F.concat(
-        F.regexp_replace(word, "(.)", "($1)"),
-        F.lit("(" + EOW + ")"),
-    )
-    for a, b in merges:
-        s = F.replace(s, F.lit(f"({a})({b})"), F.lit(f"({a}{b})"))
-    # "(th)(e</w>)" -> "th e</w>": split the wrappers into one space
-    s = F.replace(s, F.lit(")("), F.lit(" "))
-    return F.regexp_replace(s, "^\\(|\\)$", "")
-
-
 def with_bpe_tokens(
     df: DataFrame,
     text_col: str,
@@ -270,72 +231,3 @@ def with_bpe_tokens(
     Arrow path) — feed ``F.size(out_col)`` to the token-budget
     operators for real-token accounting."""
     return df.withColumn(out_col, encode_tokens_udf(merges)(F.col(text_col)))
-
-
-#: id 0 is reserved for out-of-vocabulary symbols (chars never seen in
-#: training can appear at encode time; a shard must still be writable)
-UNK_ID = 0
-UNK = "<unk>"
-
-
-def bpe_vocab(merges: list[tuple[str, str]], alphabet: "set[str] | None" = None) -> dict[str, int]:
-    """The token-id table implied by a merge list: ``<unk>`` at 0, the
-    end-of-word marker, the (sorted) base alphabet, then one new symbol
-    per merge in rank order — a pure function of the merges plus the
-    training alphabet, so the same table reconstructs anywhere.
-
-    ``alphabet`` defaults to the characters appearing in the merge
-    rules themselves (sufficient when every trained character
-    participates in some merge; pass the corpus alphabet from training
-    for the exact table)."""
-    if alphabet is None:
-        alphabet = set()
-        for a, b in merges:
-            for part in (a, b):
-                if part != EOW:
-                    alphabet.update(part.replace(EOW, ""))
-    vocab: dict[str, int] = {UNK: UNK_ID, EOW: 1}
-    for ch in sorted(alphabet):
-        vocab.setdefault(ch, len(vocab))
-    for a, b in merges:
-        vocab.setdefault(a + b, len(vocab))
-    return vocab
-
-
-def with_bpe_ids(
-    df: DataFrame,
-    tokens_col: str,
-    vocab: dict[str, int],
-    out_col: str = "input_ids",
-) -> DataFrame:
-    """Map a BPE token array column to an ``array<int>`` id column —
-    the shape a training-shard export actually carries.  The vocab
-    ships as ONE map literal built from two array literals
-    (``map_from_arrays`` — 2 plan nodes total, where a ``create_map``
-    of per-entry literals is 2*|vocab| expression nodes and blows
-    analyzer/codegen limits at real vocabulary sizes); lookup stays
-    JVM-side, unknown symbols take ``UNK_ID``, no Python stage, no
-    shuffle."""
-    items = sorted(vocab.items())
-    m = F.map_from_arrays(
-        F.lit([k for k, _ in items]), F.lit([int(v) for _, v in items])
-    )
-    return df.withColumn(
-        out_col,
-        F.when(
-            F.col(tokens_col).isNull(), F.lit(None).cast("array<int>")
-        ).otherwise(
-            F.transform(F.col(tokens_col), lambda t: F.coalesce(m[t], F.lit(UNK_ID)))
-        ),
-    )
-
-
-def decode_tokens(tokens: "list[str] | None") -> "str | None":
-    """Inverse of the encoder for in-vocabulary text: concatenate
-    symbols, turn each end-of-word marker into a space, trim — so
-    ``decode(encode(t)) == normalized(t)`` (lowercased, single-spaced)
-    whenever no ``<unk>`` was produced.  Driver-side helper (decoding
-    is a test/debug affordance; shards ship ids)."""
-    if tokens is None:
-        return None
-    return "".join(tokens).replace(EOW, " ").rstrip()

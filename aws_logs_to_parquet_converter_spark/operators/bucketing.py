@@ -9,41 +9,15 @@ same key (orders x lineitem, access-logs x object-inventory), this
 converts the dominant per-query cost into a one-time ingest cost.
 
 Bucketed layout requires the session catalog (`saveAsTable`) — bucket
-metadata lives in the metastore, not the parquet files.
+metadata lives in the metastore, not the parquet files — so
+``write_bucketed_external`` writes through a throwaway catalog name and
+``attach_bucketed`` re-declares the bucket spec over the files.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_key: str | list[str],
-    num_buckets: int = 32,
-    sort_key: str | list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a bucketed (and optionally sort-bucketed)
-    catalog table.  ``sort_key`` additionally orders rows inside each
-    bucket file, letting SMJ skip its sort too."""
-    keys = [bucket_key] if isinstance(bucket_key, str) else list(bucket_key)
-    writer = df.write.mode(mode).bucketBy(num_buckets, *keys)
-    if sort_key:
-        sk = [sort_key] if isinstance(sort_key, str) else list(sort_key)
-        writer = writer.sortBy(*sk)
-    writer.format("parquet").saveAsTable(table)
-
-
-def analyze_table(spark: SparkSession, table: str, columns: list[str] | None = None) -> None:
-    """Collect table (and optionally column) statistics for Catalyst's
-    cost-based optimizer — join reordering and broadcast decisions get
-    real row counts/NDVs instead of file-size guesses."""
-    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
-    if columns:
-        spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS {', '.join(columns)}")
 
 
 def write_bucketed_external(

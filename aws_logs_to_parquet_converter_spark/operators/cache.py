@@ -23,9 +23,15 @@ The rule every operator follows:
     consumers launch stays at the call sites that need it: it is a
     per-site plan decision, not part of persisting.
 
-Every cache uses the DataFrame default storage level.  Local
-checkpoints (``localCheckpoint``) are lineage truncation, not caches:
-``clearCache`` does not release them and this module does not own them.
+Every cache uses the DataFrame default storage level.
+
+Local checkpoints (``localCheckpoint``) are lineage truncation, not
+caches: ``clearCache`` does not release them.  An operator releases
+each checkpoint it takes once nothing reads it any more
+(``release_checkpoint``): a superseded iteration round, or a staging
+copy after its write.  The checkpoint an operator returns stays: the
+caller's plan reads its blocks, and with the lineage cut nothing could
+recompute them.
 """
 
 from __future__ import annotations
@@ -43,6 +49,17 @@ def persist(df: DataFrame, handles: "list[DataFrame] | None") -> DataFrame:
     if handles is not None:
         handles.append(df)
     return df
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the locally checkpointed RDDs ``df`` reads.  Only for
+    a checkpoint no live plan reads any more: its lineage is cut, so a
+    later read of a released checkpoint fails instead of recomputing."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD" and leaf.rdd().isLocallyCheckpointed():
+            leaf.rdd().unpersist(False)
 
 
 @contextmanager

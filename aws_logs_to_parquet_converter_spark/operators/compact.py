@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_logs_to_parquet_converter_spark.operators.cache import release_checkpoint
+
 
 def compact(
     df: DataFrame,
@@ -61,7 +63,7 @@ def write_sorted(
     # level set would leak dynamic-overwrite semantics into every
     # later write in the session — an unrelated full-table overwrite
     # would then silently keep stale partitions (round-7 review
-    # finding; streaming/corpus.py uses the same scoped form).
+    # finding).
     # Sort by (partition cols, sort keys): the dynamic-partition writer
     # requires a task-local sort on the partition columns; providing it
     # ourselves (prefixed) keeps rows time-ordered within each file —
@@ -96,9 +98,12 @@ def recompact_partition(
     # source and the overwrite target (localCheckpoint breaks the
     # read-your-writes dependency without a driver collect)
     part = spark.read.parquet(dest).where(F.col("dt") == dt).localCheckpoint(eager=True)
-    n = part.count()
-    if n:
-        compact(part, dest, num_files=num_files, sort_keys=sort_keys, compression=compression)
+    try:
+        n = part.count()
+        if n:
+            compact(part, dest, num_files=num_files, sort_keys=sort_keys, compression=compression)
+    finally:
+        release_checkpoint(part)  # the day's copy is garbage once written
     return n
 
 
@@ -203,75 +208,3 @@ def expire_partitions(
             if not dry_run:
                 fs.delete(st.getPath(), True)
     return sorted(expired)
-
-
-def compact_to_size(
-    df: DataFrame,
-    dest: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_keys: tuple[str, ...] = ("request_time",),
-    partition_cols: tuple[str, ...] = ("dt",),
-    compression: str = "snappy",
-    mode: str = "overwrite",
-    compression_ratio: float = 4.0,
-    max_files: int = 10_000,
-) -> int:
-    """``compact`` with the knob operators actually reason in: target
-    output FILE SIZE, not file count.  A fixed ``num_files`` that is
-    right for today's volume is wrong after the next 10x — this derives
-    the count per run from the plan's own size estimate, so the layout
-    converges on ~``target_file_bytes`` files (the 128 MB default
-    matches ``spark.sql.files.maxPartitionBytes``: a later scan gets
-    one well-sized task per file).
-
-    Sizing uses Catalyst's logical-plan statistics when they are real
-    (file-backed sources: sum of file sizes after pruning, zero data
-    pass — the recompaction/maintenance case this lever is for).
-    Derived plans (e.g. fresh parse output) propagate garbage row-width
-    estimates through wide projections (measured: 1e20 for the log
-    parser), so estimates above the sanity bound fall back to ONE
-    measuring aggregate — rows x mean serialized row width — an extra
-    pass that is explicit in the plan, never silent.  The estimate
-    ``compression_ratio`` applies ONLY to that raw-byte fallback (raw
-    text overstates snappy parquet ~4x); file-backed plan stats are
-    already on-disk bytes and size the output directly.  Returns the
-    per-wave file count used.
-
-    Multi-partition inputs: ``compact``'s round-robin repartition puts
-    every partition value in every task, so a task wave of N writes up
-    to N files PER ``dt`` — sizing must therefore divide by the number
-    of distinct partition values or a 30-day input would emit 30x too
-    many files at 1/30 the target size.  The distinct count folds into
-    the measuring aggregate on the fallback path (no extra job); the
-    plan-stats path pays one column-pruned countDistinct job — cheap
-    next to the rewrite itself.  Per-day file sizes then track each
-    day's share of the bytes.
-    """
-    if target_file_bytes <= 0:
-        raise ValueError(f"target_file_bytes must be positive, got {target_file_bytes}")
-    # struct() wraps the partition key so NULL-valued combos still
-    # count as partitions (countDistinct alone drops them, but the
-    # writer emits a __HIVE_DEFAULT_PARTITION__ directory for them)
-    part_key = F.countDistinct(F.struct(*partition_cols)) if partition_cols else F.lit(1)
-    est_out = float(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if est_out > 1 << 50:  # Catalyst unknown/propagated-garbage stats
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.avg(F.length(F.to_json(F.struct(*df.columns)))).alias("w"),
-            part_key.alias("p"),
-        ).first()
-        est_out = (row["n"] or 0) * (row["w"] or 1.0) / compression_ratio
-        n_parts = max(1, row["p"] or 0)
-    else:
-        n_parts = max(1, df.agg(part_key).first()[0] or 0) if partition_cols else 1
-    num_files = max(1, min(max_files, round(est_out / target_file_bytes / n_parts)))
-    compact(
-        df,
-        dest,
-        num_files=num_files,
-        sort_keys=sort_keys,
-        partition_cols=partition_cols,
-        compression=compression,
-        mode=mode,
-    )
-    return num_files

@@ -4,7 +4,7 @@ No counterpart in the reference (its dedup notion is "re-run a day ->
 overwrite the partition"); these are the LLM-training-pipeline
 operators the north star calls for, built scale-first:
 
-  * exact_duplicates / fingerprint_duplicates — one hash-groupBy
+  * exact_duplicates / fingerprint_keep_first — one hash-groupBy
     shuffle on a 16-byte key; the canonical-id pattern keeps the
     smallest id deterministically.
   * minhash_near_duplicates — MinHash + LSH banding: shingle ->
@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_logs_to_parquet_converter_spark.operators import versioned
-from aws_logs_to_parquet_converter_spark.operators.cache import owned, persist
+from aws_logs_to_parquet_converter_spark.operators.cache import owned, persist, release_checkpoint
 from aws_logs_to_parquet_converter_spark.operators.textstats import (
     NONWS_CLASS,
     normalized_text,
@@ -81,19 +81,6 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         )
         .where(F.col("n_copies") > 1)
         .drop("_digest")
-    )
-
-
-def fingerprint_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Near-exact dedup on a normalized md5 fingerprint — catches
-    case/whitespace variants that byte-equality misses."""
-    fp = F.md5(_normalized(F.col(text_col)))
-    # same NULL rule as exact_duplicates: unknown content never groups
-    return (
-        df.where(F.col(text_col).isNotNull())
-        .groupBy(fp.alias("fingerprint"))
-        .agg(F.min(id_col).alias("canonical_id"), F.count("*").alias("n_copies"))
-        .where(F.col("n_copies") > 1)
     )
 
 
@@ -1269,12 +1256,14 @@ def connected_components(
                 )
                 .localCheckpoint(eager=True)  # truncate lineage per round
             )
+            release_checkpoint(labels)  # superseded by this round's checkpoint
             changed = (
                 updated.where(F.col("component") != F.col("_old")).limit(1).count()
             )
             labels = updated.select("node", "component")
             if changed == 0:
                 return labels
+        release_checkpoint(labels)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} iterations "
             "(graph diameter exceeds max_iter); the partial labels would be "

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from aws_logs_to_parquet_converter_spark.operators.cache import owned, persist
+from aws_logs_to_parquet_converter_spark.operators.cache import owned, persist, release_checkpoint
 
 
 def pagerank(
@@ -73,6 +73,7 @@ def pagerank(
             # the informative-ValueError convention for degenerate input
             raise ValueError("pagerank: empty edge list (no nodes)")
         ranks = nodes.select("node", (F.lit(1.0) / n).alias("rank"))
+        ckpt = None  # the last checkpoint the loop took
         for it in range(n_iters):
             contrib = (
                 e.join(ranks, e.src == ranks.node)
@@ -101,7 +102,13 @@ def pagerank(
                 # a broadcast; unchecked, 50 iterations build a plan
                 # the analyzer chokes on (connected_components idiom)
                 ranks = ranks.localCheckpoint(eager=True)
+                if ckpt is not None:
+                    release_checkpoint(ckpt)  # superseded by this one
+                ckpt = ranks
         # Materialize the final ranks before the block drops the caches
         # they depend on — the returned frame is then a cheap
         # checkpointed scan, exactly like connected_components' labels.
-        return ranks.localCheckpoint(eager=True)
+        ranks = ranks.localCheckpoint(eager=True)
+        if ckpt is not None:
+            release_checkpoint(ckpt)
+        return ranks

@@ -107,31 +107,6 @@ def batch_score(
     return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
 
 
-def quality_filter_by_model(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    model_loader: "Callable[[], Callable[[pd.Series], pd.Series]] | None" = None,
-) -> DataFrame:
-    """Keep rows scoring >= threshold: score -> equi-join back on id
-    (the join is key-partitioned; at 100 TB prefer writing scores once
-    and filtering many downstream consumers from that materialization).
-    NULL scores (quarantined rows) are dropped — unscorable is unkept.
-    """
-    scores = batch_score(df, id_col, text_col, model_loader)
-    kept = (
-        scores.where(scores["score"] >= threshold)
-        .select(id_col, "score")
-        # duplicate ids (a pre-dedup corpus is the NORMAL input — the
-        # CLI runs dedup as a separate stage) must not multiply: k
-        # copies of an id would otherwise join k score rows and emit
-        # k*k output rows (round-7 review finding)
-        .dropDuplicates([id_col])
-    )
-    return df.join(kept, on=id_col, how="inner")
-
-
 def calibration_bins(
     scored: DataFrame,
     score_col: str,

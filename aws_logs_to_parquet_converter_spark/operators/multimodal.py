@@ -1691,220 +1691,3 @@ def media_summary(features: DataFrame) -> DataFrame:
         F.sum("n_bytes").alias("total_bytes"),
         F.avg(F.element_at("feature", 1)).alias("mean_f0"),
     )
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("asset_id", StringType(), False),
-        StructField("width", LongType(), True),
-        StructField("height", LongType(), True),
-        StructField("payload", StringType(), True),
-    ]
-)
-
-
-def _resize_ppm_p3(payload: str, target_w: int, target_h: int) -> "str | None":
-    """Nearest-neighbor resample of a P3 payload, emitted back as P3.
-    None for undecodable payloads (quarantine semantics)."""
-    try:
-        w, h, maxval, vals = decode_ppm_p3(payload)
-    except (ValueError, UnicodeDecodeError):
-        return None
-    out: list[str] = []
-    for y in range(target_h):
-        sy = min(y * h // target_h, h - 1)
-        for x in range(target_w):
-            sx = min(x * w // target_w, w - 1)
-            base = 3 * (sy * w + sx)
-            out.append(f"{vals[base]} {vals[base + 1]} {vals[base + 2]}")
-    return f"P3\n{target_w} {target_h}\n{maxval}\n" + "\n".join(out)
-
-
-def resize_images(
-    df: DataFrame, target_w: int = 224, target_h: int = 224, decode_stub: bool = True
-) -> DataFrame:
-    """Image resize seam: metadata transform is real (aspect-aware
-    target dims).  ``decode_stub=True`` re-emits the payload with a
-    deterministic marker (pipeline-shape testing without a codec);
-    ``decode_stub=False`` runs the real pure-Python P3 nearest-neighbor
-    resample — a production deploy swaps in Pillow at this seam."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if decode_stub:
-                payloads = [
-                    f"resized[{target_w}x{target_h}]:" + (p or "") for p in pdf["payload"]
-                ]
-            else:
-                payloads = [_resize_ppm_p3(p or "", target_w, target_h) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": target_w,
-                    "height": target_h,
-                    "payload": payloads,
-                }
-            )
-
-    return df.where(F.col("media_type") == "image").mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("asset_id", StringType(), False),
-        StructField("frame_idx", LongType(), False),
-        StructField("ts_ms", LongType(), True),
-        StructField("payload", StringType(), True),
-    ]
-)
-
-
-def _y4m_frame_to_ppm(payload: "bytes | str", ts_ms: int) -> "str | None":
-    """Extract the luma frame nearest ``ts_ms`` from a Y4M payload and
-    re-emit it as a grayscale P3 PPM — the sampled frame lands in the
-    same format the image operators consume, so frame-sample output
-    chains straight into resize/feature stages.  None when the payload
-    is not an uncompressed Y4M stream (the remaining codec gate)."""
-    try:
-        w, h, fps, frames = decode_y4m(payload)
-    except (ValueError, IndexError):
-        return None
-    if not frames:
-        return None
-    idx = min(int(ts_ms / 1000.0 * fps), len(frames) - 1)
-    y = frames[idx]
-    body = "\n".join(f"{v} {v} {v}" for v in y)
-    return f"P3\n{w} {h}\n255\n{body}\n"
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000, decode_stub: bool = True) -> DataFrame:
-    """Video frame sampling: one output row per sampled timestamp.
-
-    The fan-out (rows-per-asset = duration/every_ms) is computed with
-    native explode(sequence) BEFORE the Python stage, so partition
-    sizing sees the real output cardinality.  ``decode_stub=False``
-    runs the real YUV4MPEG2 path: the frame nearest each timestamp is
-    sliced out of the uncompressed stream and re-emitted as a grayscale
-    P3 image payload; compressed containers (not Y4M) quarantine as
-    NULL payloads — that is the remaining honest gate, closed by
-    swapping in ffmpeg at this seam."""
-    frames = df.where(F.col("media_type") == "video").select(
-        "asset_id",
-        "payload",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest((F.coalesce("duration_ms", F.lit(0)) / every_ms).cast("long") - 1, F.lit(0)),
-            )
-        ).alias("frame_idx"),
-    ).withColumn("ts_ms", F.col("frame_idx") * every_ms)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if decode_stub:
-                payloads = [
-                    f"frame@{t}:" + (p or "")[:16]
-                    for t, p in zip(pdf["ts_ms"], pdf["payload"])
-                ]
-            else:
-                payloads = [
-                    _y4m_frame_to_ppm(p or "", t)
-                    for t, p in zip(pdf["ts_ms"], pdf["payload"])
-                ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "frame_idx": pdf["frame_idx"],
-                    "ts_ms": pdf["ts_ms"],
-                    "payload": payloads,
-                }
-            )
-
-    return frames.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-RESAMPLED_SCHEMA = StructType(
-    [
-        StructField("asset_id", StringType(), False),
-        StructField("sample_rate", LongType(), True),
-        StructField("n_samples", LongType(), True),
-        StructField("payload", StringType(), True),  # binary in prod; see MEDIA_SCHEMA
-    ]
-)
-
-
-def _resample_wav(payload: bytes, target_sr: int) -> "bytes | None":
-    """Linear-interpolation resample of a PCM WAV payload, re-emitted
-    as 16-bit mono WAV at ``target_sr``.  None for undecodable payloads
-    (quarantine semantics, same as the image path)."""
-    import io
-    import struct
-    import wave
-
-    try:
-        sr, _nch, s = decode_wav_pcm(payload)
-    except (wave.Error, ValueError, EOFError, struct.error):
-        return None
-    if not s:
-        out_samples: list[float] = []
-    else:
-        n_out = max(1, int(round(len(s) * target_sr / sr)))
-        out_samples = []
-        for i in range(n_out):
-            pos = i * (len(s) - 1) / max(1, n_out - 1) if n_out > 1 else 0.0
-            lo = int(pos)
-            hi = min(lo + 1, len(s) - 1)
-            frac = pos - lo
-            out_samples.append(s[lo] * (1 - frac) + s[hi] * frac)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(target_sr)
-        w.writeframes(
-            b"".join(
-                struct.pack("<h", max(-32768, min(32767, int(round(x * 32767)))))
-                for x in out_samples
-            )
-        )
-    return buf.getvalue()
-
-
-def resample_audio(df: DataFrame, target_sr: int = 16000, decode_stub: bool = True) -> DataFrame:
-    """Audio resample seam — the audio sibling of ``resize_images``:
-    ``decode_stub=True`` re-emits the payload with a deterministic
-    marker (pipeline-shape testing without a codec);
-    ``decode_stub=False`` runs the real stdlib PCM resampler (decode,
-    mono-mix, linear-interp, 16-bit re-encode).  A production deploy
-    swaps in torchaudio/ffmpeg at this seam."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if decode_stub:
-                payloads = [
-                    f"resampled[{target_sr}]:" + (p if isinstance(p, str) else "<bin>")
-                    for p in pdf["payload"]
-                ]
-                n_samps = [0] * len(pdf)
-            else:
-                raw = [
-                    p.encode() if isinstance(p, str) else (bytes(p) if p is not None else b"")
-                    for p in pdf["payload"]
-                ]
-                outs = [_resample_wav(p, target_sr) for p in raw]
-                payloads = [
-                    o.decode("latin-1") if o is not None else None for o in outs
-                ]
-                n_samps = [
-                    (len(o) - 44) // 2 if o is not None else 0 for o in outs
-                ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "sample_rate": target_sr,
-                    "n_samples": n_samps,
-                    "payload": payloads,
-                }
-            )
-
-    return df.where(F.col("media_type") == "audio").mapInPandas(run, schema=RESAMPLED_SCHEMA)

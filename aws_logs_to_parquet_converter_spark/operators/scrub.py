@@ -32,23 +32,6 @@ def scrub_pii(text: Column, replacement: str = "[PII]") -> Column:
     return out
 
 
-def pii_counts(text: Column) -> list[Column]:
-    """Per-class match-count columns (regexp_count, codegen) — the
-    audit side of scrubbing: measure before you redact."""
-    return [F.regexp_count(text, F.lit(pat)).alias(f"n_{name}") for name, pat in PII_PATTERNS]
-
-
-def scrub_corpus(df: DataFrame, text_col: str = "text", replacement: str = "[PII]") -> DataFrame:
-    """Replace ``text_col`` with its scrubbed form and attach per-class
-    redaction counts."""
-    c = F.col(text_col)
-    return df.select(
-        *[col for col in df.columns if col != text_col],
-        scrub_pii(c, replacement).alias(text_col),
-        *pii_counts(c),
-    )
-
-
 def k_anonymize(
     df: DataFrame,
     quasi_cols: "list[str]",

@@ -294,52 +294,3 @@ def setsim_join(
         else shingle_token_sets(df, id_col, text_col, shingle_n)
     )
     return setsim_join_tokens(tok, threshold_milli, handles=handles)
-
-
-def setsim_prefix_index_size(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold_milli: int = 800,
-    shingle_n: int | None = None,
-) -> DataFrame:
-    """Diagnostic: per-token candidate-generation load of the prefix
-    index — (token, doc_freq, n_prefix_entries) for every token that
-    enters at least one prefix.  ``n_prefix_entries`` squared bounds
-    that token's candidate pairs; the frequency-ascending order keeps
-    this small for hot tokens (they enter a prefix only when a doc has
-    almost nothing rarer)."""
-    tok = (
-        word_token_sets(df, id_col, text_col)
-        if shingle_n is None
-        else shingle_token_sets(df, id_col, text_col, shingle_n)
-    )
-    dfreq = tok.groupBy("_tk").agg(F.count("*").alias("_df"))
-    per_doc = (
-        tok.join(dfreq, "_tk")
-        .groupBy("_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("_df"), F.col("_tk")))
-            ).alias("_ordered"),
-            F.count("*").alias("_n"),
-        )
-    )
-    p = (
-        F.col("_n")
-        - F.expr(f"({threshold_milli} * _n + 999) div 1000")
-        + F.lit(1)
-    ).cast("int")
-    prefix = per_doc.select(
-        F.explode(F.slice(F.col("_ordered._tk"), 1, p)).alias("_tk")
-    )
-    return (
-        prefix.groupBy("_tk")
-        .agg(F.count("*").alias("n_prefix_entries"))
-        .join(dfreq, "_tk")
-        .select(
-            F.col("_tk").alias("token"),
-            F.col("_df").alias("doc_freq"),
-            "n_prefix_entries",
-        )
-    )

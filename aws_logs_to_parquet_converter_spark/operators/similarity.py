@@ -14,8 +14,6 @@ Vector math has two measured tiers (PERF.md):
     fold 5–7× faster on joined-pair stages and ~1.6× on per-row norm
     builds, bit-identical results (both accumulate strictly
     left-to-right).
-  * ``pandas_cosine``: Arrow/numpy einsum — wins on very high dims
-    where BLAS batch amortizes Arrow transfer.
 """
 
 from __future__ import annotations
@@ -86,8 +84,7 @@ def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
     a corpus-wide job; with ANSI off it yields NaN, which Spark orders
     ABOVE every number, silently making the zero vector everyone's
     rank-1 neighbor.  try_divide + coalesce pins both failure modes to
-    0.0 — matching pandas_cosine's explicit guard, so the two paths
-    really do agree."""
+    0.0."""
     return F.coalesce(
         F.nanvl(
             F.try_divide(_dot(a, b, dim), _norm(a, dim) * _norm(b, dim)),
@@ -97,36 +94,8 @@ def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
-# public aliases (callers precomputing per-side norms use these)
-dot = _dot
+# public alias (callers precomputing per-side norms use it)
 norm = _norm
-
-
-def pandas_cosine(a: Column, b: Column) -> Column:
-    """Arrow-batched numpy cosine — the high-dim alternative to the
-    unrolled JVM expression (unrolling a 1024-dim dot would bloat
-    codegen; numpy does the whole batch as one BLAS-backed matmul).
-
-    Trade-off vs the JVM path: pays Arrow serialization of both vector
-    columns, wins when dim is large enough that per-element expression
-    overhead dominates.  Results match the JVM path to float64
-    round-off (same accumulate order within each dot).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _cos(va, vb):
-        ma = np.asarray([np.asarray(x, dtype=np.float64) for x in va])
-        mb = np.asarray([np.asarray(x, dtype=np.float64) for x in vb])
-        dots = np.einsum("ij,ij->i", ma, mb)
-        norms = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        return pd.Series(np.where(norms > 0, dots / norms, 0.0))
-
-    # functional form: `from __future__ import annotations` stringifies
-    # hints, which the decorator's hint-based signature inference can't
-    # resolve for nested functions
-    return pandas_udf(_cos, "double")(a, b)
 
 
 def cosine_topk(
@@ -805,92 +774,6 @@ def normalize_vectors(
     return df.select(F.col(id_col), norm.alias("norm"), unit.alias("unit"))
 
 
-def save_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    sample_n: int = 2048,
-    seed: int = 42,
-) -> None:
-    """Persist an IVF index: build once, query many — the amortized
-    form of ``cosine_topk_ivf`` (whose in-query training re-runs per
-    call).  Layout:
-
-      ``{path}/centroids``  n_cells rows (cell, centroid) — tiny;
-      ``{path}/vectors``    the corpus partitioned BY CELL, so a probe
-                            of ``nprobe`` cells is a partition-pruned
-                            scan reading ~nprobe/n_cells of the bytes
-                            (the disk-level analogue of the in-memory
-                            candidate join).
-
-    At 100 TB the index write is one assignment pass (zero-shuffle
-    Arrow matmul) plus the partitioned write's exchange; every query
-    batch after that touches only its probed cells."""
-    spark = corpus.sparkSession
-    # NULL embeddings have no cell: exclude them from the index (the
-    # same rule the in-memory IVF and semantic_dedup apply)
-    corpus = corpus.where(F.col(vec_col).isNotNull())
-    cents = kmeans_cell_centroids(corpus, id_col, vec_col, n_cells, sample_n, seed=seed)
-    cent_rows = [(i, [float(v) for v in cents[i]]) for i in range(len(cents))]
-    (
-        spark.createDataFrame(cent_rows, "cell int, centroid array<double>")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/centroids")
-    )
-    assigned = fan_out(corpus, id_col).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.element_at(_cell_udf(cents, 1)(F.col(vec_col)), 1).alias("cell"),
-    )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/vectors")
-
-
-def query_ivf_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 4,
-) -> DataFrame:
-    """Top-k against a ``save_ivf_index`` layout: probe each query's
-    ``nprobe`` nearest cells, scan ONLY those cell partitions
-    (PartitionFilters — verified in test_similarity), exact re-rank
-    inside them.  The probed-cell set is collected driver-side but is
-    bounded by |queries| * nprobe (queries are the small side by
-    contract, same as ``cosine_topk``'s broadcast)."""
-    import numpy as np
-
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    cents = np.asarray([list(r.centroid) for r in cent_rows], dtype=np.float64)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.explode(_cell_udf(cents, nprobe)(F.col(vec_col))).alias("cell"),
-    )
-    probed = sorted({r.cell for r in q.select("cell").distinct().collect()})
-    vec = (
-        spark.read.parquet(f"{path}/vectors")
-        .where(F.col("cell").isin(probed))
-        .select("cell", F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    )
-    scored = (
-        vec.join(F.broadcast(q), ["cell"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("_qv"), F.col("_cv"), None), 4).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return scored.select("*", F.row_number().over(w).alias("rank")).where(F.col("rank") <= k)
-
-
 # ----------------------------------------------------------------------
 # Product quantization (Jegou, Douze, Schmid 2011, "Product Quantization
 # for Nearest Neighbor Search", IEEE TPAMI) — the memory-compression ANN
@@ -1148,10 +1031,10 @@ def save_pq_index(
     prune: bool = True,
 ) -> None:
     """Persist a PQ index: build once, query many — the amortized form
-    of ``pq_topk`` (whose in-query encode re-runs per call), and the
-    memory-bound sibling of ``save_ivf_index``.  At 100 TB this is the
-    index that fits where the float corpus cannot: ~m bytes/vector
-    (32x at dim=64/m=8), and queries never read a raw vector again.
+    of ``pq_topk`` (whose in-query encode re-runs per call).  At 100 TB
+    this is the index that fits where the float corpus cannot: ~m
+    bytes/vector (32x at dim=64/m=8), and queries never read a raw
+    vector again.
 
     Layout: a versioned store (``operators/versioned.py``) with two
     data dirs per version — ``codebook``, m*ks rows (j, c, cent), tiny;
@@ -1738,10 +1621,8 @@ def gram_matrix(
     EXACT int64 and emit a BIGINT ``g`` — the oracle-parity path and
     the reason PCA on quantized embeddings grades bit-for-bit where a
     float gram would drift with summation order.  Float vectors
-    accumulate float64 and emit DOUBLE ``g`` (the :func:`pca_components`
-    path — order-drift there is absorbed by the eigensolver, not a
-    graded boundary).  Upper triangle only (i <= j, 0-based); mirror
-    for the full matrix.
+    accumulate float64 and emit DOUBLE ``g``.  Upper triangle only
+    (i <= j, 0-based); mirror for the full matrix.
 
     Returns (i, j, g).
     """
@@ -1779,68 +1660,6 @@ def gram_matrix(
 
     partials = vecs.mapInPandas(_partials, f"i int, j int, g {sql_type}")
     return partials.groupBy("i", "j").agg(F.sum("g").alias("g"))
-
-
-def pca_components(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    k: int = 8,
-    whiten: bool = False,
-) -> "tuple[list[list[float]], list[float], int]":
-    """Top-k PCA of an embedding column in the 100 TB shape: the only
-    data-sized passes are the :func:`gram_matrix` partials and one
-    per-dimension sum (both map-side, both emitting O(dim²) rows
-    total); the eigendecomposition runs driver-side on the dim x dim
-    covariance — the bounded-driver-math class (BPE merge loop, PQ
-    codebooks).  Covariance C = (XᵀX − n·m·mᵀ)/(n−1) from the exact
-    gram and the mean vector m.
-
-    Returns (components, eigenvalues, n): ``components`` is a k x dim
-    row-major list (descending eigenvalue order), ready for
-    :func:`project_vectors`.  With ``whiten=True`` each component is
-    additionally scaled by 1/sqrt(eigenvalue) so the projected
-    coordinates have unit variance (the pre-clustering normalization;
-    a zero-variance component raises — whitening it is undefined).
-    """
-    import numpy as np
-
-    dim = len(df.select(vec_col).first()[0])
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    sums = df.select(
-        F.posexplode(v).alias("_i", "_x")
-    ).groupBy("_i").agg(F.sum("_x").alias("_s"), F.count("*").alias("_n"))
-    rows = sums.collect()
-    n = rows[0]["_n"]
-    if n < 2:
-        raise ValueError(f"pca_components: need >= 2 vectors, got {n}")
-    mean = np.zeros(dim)
-    for r in rows:
-        mean[r["_i"]] = r["_s"] / n
-
-    gram_rows = gram_matrix(df.select(v.alias("_v")), "_v").collect()
-    g = np.zeros((dim, dim))
-    for r in gram_rows:
-        g[r["i"], r["j"]] = r["g"]
-        g[r["j"], r["i"]] = r["g"]
-    cov = (g - n * np.outer(mean, mean)) / (n - 1)
-    w, vecs = np.linalg.eigh(cov)
-    order = np.argsort(w)[::-1][:k]
-    comps = vecs[:, order].T  # k x dim
-    # deterministic sign: make each component's largest-|.| entry positive
-    for row in comps:
-        j = int(np.argmax(np.abs(row)))
-        if row[j] < 0:
-            row *= -1.0
-    eigs = w[order]
-    if whiten:
-        if np.any(eigs <= 0):
-            raise ValueError(
-                "pca_components: whiten=True with a non-positive "
-                f"eigenvalue {float(eigs.min())!r} — reduce k below the "
-                "data's effective rank"
-            )
-        comps = comps / np.sqrt(eigs)[:, None]
-    return comps.tolist(), eigs.tolist(), int(n)
 
 
 def project_vectors(

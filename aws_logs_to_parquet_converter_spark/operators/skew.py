@@ -2,19 +2,15 @@
 
 At 100 TB, hot keys (the reference's skewed ``requester`` ARNs and
 ``operation`` values — slides p.30 "carefully break cardinality") turn
-a single shuffle partition into the job's critical path.  Two tools:
+a single shuffle partition into the job's critical path.
 
-  * ``salted_aggregate`` — decomposable aggregates (sum/count/min/max)
-    in two phases: groupBy(key, salt) with a deterministic row-hash
-    salt spreads each hot key over N partitions; the small second agg
-    merges partials.  AQE's skew handling covers joins; this covers the
-    aggregation path AQE doesn't split.
-  * ``replicated_broadcast_join`` — fact x skewed-dim join where even a
-    broadcast threshold miss would force a skewed shuffle: salt the
-    fact side, explode the dim side N ways, join on (key, salt).
-
-Both are pure DataFrame transformations — identical results to their
-naive forms (q_salted_agg is oracle-checked against a plain GROUP BY).
+``salted_aggregate`` runs decomposable aggregates (sum/count/min/max)
+in two phases: groupBy(key, salt) with a deterministic row-hash salt
+spreads each hot key over N partitions; the small second agg merges
+partials.  AQE's skew handling covers joins; this covers the
+aggregation path AQE doesn't split.  It is a pure DataFrame
+transformation with the same result as the naive form (q_salted_agg is
+oracle-checked against a plain GROUP BY).
 """
 
 from __future__ import annotations
@@ -59,37 +55,3 @@ def salted_aggregate(
 
     partial = df.withColumn("_salt", salt).groupBy(F.col(key).alias("k"), "_salt").agg(*partial_exprs)
     return partial.groupBy("k").agg(*final_exprs)
-
-
-def replicated_broadcast_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Salted fact-dim equi-join: fact rows get a deterministic salt,
-    dim rows replicate across all salt values, join on (key, salt) —
-    each hot key spreads over ``salt_buckets`` shuffle partitions.
-
-    Only fact-preserving join types are legal: under right/full outer
-    an UNMATCHED dim row would surface once per salt replica
-    (``salt_buckets`` duplicate null-padded rows), silently diverging
-    from the plain join the docstring promises to match — rejected
-    loudly (round-7 review finding)."""
-    if how.replace("_", "").lower() not in (
-        "inner", "left", "leftouter", "leftsemi", "semi", "leftanti", "anti", "cross",
-    ):
-        raise ValueError(
-            f"replicated_broadcast_join: join type {how!r} is not "
-            "fact-preserving — replicated dim rows would duplicate in the "
-            "outer result; use a plain join (AQE skew-join handles outer)"
-        )
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(salt_buckets))
-    f = fact.withColumn("_salt", salt)
-    d = dim.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    )
-    joined = f.join(d, (f[fact_key] == d[dim_key]) & (f["_salt"] == d["_salt"]), how)
-    return joined.drop("_salt")

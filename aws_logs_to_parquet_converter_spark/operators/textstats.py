@@ -1118,66 +1118,6 @@ def gopher_flag_exprs(text: Column) -> "dict[str, Column]":
     return flags
 
 
-def gopher_full_filter(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_dup_line_char_fraction: float = 0.2,
-    max_top_bigram_fraction: float = 0.20,
-) -> DataFrame:
-    """The seven row-local Gopher rules (``gopher_quality_flags``)
-    conjoined with the two LEADING repetition rules of the same
-    appendix: duplicate-line character share (``segment_repetition``)
-    and top-2-gram coverage (``top_ngram_fraction``).
-
-    Fidelity notes, stated plainly: the 0.20 bigram default is the
-    paper's top-2-gram threshold, applied here to the TOKEN-weighted
-    coverage ``top_ngram_fraction`` computes (the paper weights by
-    characters — short-word bigrams therefore trip this form slightly
-    earlier); and the appendix's remaining repetition variants
-    (duplicate-line/paragraph COUNT fractions, top 3-/4-gram,
-    duplicate 5-10-gram character shares) are not bundled — each
-    composes from the same two building blocks exactly as these two
-    do.
-
-    Shape: the row-local rules ride the scan; the repetition signals
-    add their own per-doc aggregations (one (id, segment) and one
-    (id, gram) shuffle); the three keep-verdicts meet in two id-keyed
-    joins.  Each component is independently oracle-graded
-    (q_gopher_rules / q_segment_repetition / q_top_bigram) — this
-    operator is their conjunction.  Returns (id, keep_rules,
-    keep_dup_lines, keep_top_ngram, keep)."""
-    flags = gopher_quality_flags(df, id_col, text_col).select(
-        id_col, F.col("keep").alias("keep_rules")
-    )
-    rep = segment_repetition(df, id_col, text_col, "\n").select(
-        id_col,
-        (F.col("dup_char_fraction") <= max_dup_line_char_fraction).alias(
-            "keep_dup_lines"
-        ),
-    )
-    ngram = top_ngram_fraction(df, id_col, text_col, 2).select(
-        id_col,
-        (F.col("top_ngram_fraction") <= max_top_bigram_fraction).alias(
-            "keep_top_ngram"
-        ),
-    )
-    out = (
-        flags.join(rep, id_col, "left")
-        .join(ngram, id_col, "left")
-        # a doc with no non-blank segments has nothing to repeat: a
-        # NULL dup-line signal passes its rule (the row-local
-        # word-count rule already rejects empty docs).  The ngram side
-        # never yields NULL — top_ngram_fraction emits 0.0 coverage
-        # for token-less docs.
-        .withColumn("keep_dup_lines", F.coalesce("keep_dup_lines", F.lit(True)))
-    )
-    return out.withColumn(
-        "keep",
-        F.col("keep_rules") & F.col("keep_dup_lines") & F.col("keep_top_ngram"),
-    )
-
-
 # The C4 cleanup's demonstration blocklist.  The published filter uses
 # the "List of Dirty, Naughty, Obscene or Otherwise Bad Words"; a
 # production run swaps the real list in — entries are REGEX-ESCAPED at

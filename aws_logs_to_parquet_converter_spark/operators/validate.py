@@ -3,19 +3,13 @@
 The generalization of the parser's dead-letter discipline (every row
 is either clean or quarantined WITH its reason) to arbitrary tables:
 a rule set is named boolean Column expressions ("TRUE = row passes"),
-and the two operators answer the two operational questions —
+and ``validation_report`` answers how healthy the table is: one
+aggregate pass, one output row per rule.
 
-  * ``validation_report``: how healthy is the table? One aggregate
-    pass, one output row per rule.
-  * ``quarantine_violations``: which rows fail, and why? Each failing
-    row carries the list of rule names it violated, ready for a
-    dead-letter sink; the clean complement keeps flowing.
-
-Scale shape: both are single-pass column expressions over the scan —
-the report is a global aggregate (map-side partials, zero data
-shuffle); the quarantine split is a codegen filter.  No rule engine,
-no Python: a rule IS a Catalyst expression, so predicate pushdown and
-codegen apply to validation exactly as to any query.
+Scale shape: a global aggregate over the scan (map-side partials, zero
+data shuffle).  No rule engine, no Python: a rule IS a Catalyst
+expression, so predicate pushdown and codegen apply to validation
+exactly as to any query.
 """
 
 from __future__ import annotations
@@ -62,32 +56,3 @@ def validation_report(df: DataFrame, rules: "dict[str, Column]") -> DataFrame:
         .select("_r.rule", "_r.n_rows", "_r.n_violations", "_r.violation_rate")
         .orderBy("rule")
     )
-
-
-def violations_array(rules: "dict[str, Column]") -> Column:
-    """Column expression listing the failed rule names for each row
-    (sorted array — deterministic dead-letter payload).  Shared by the
-    batch quarantine split and the streaming ingest, which must tag
-    violations UPSTREAM of its stateful dedup."""
-    if not rules:
-        raise ValueError("rules must be non-empty")
-    return F.array_compact(
-        F.array(
-            *[
-                F.when(~F.coalesce(cond, F.lit(False)), F.lit(name))
-                for name, cond in sorted(rules.items())
-            ]
-        )
-    )
-
-
-def quarantine_violations(
-    df: DataFrame, rules: "dict[str, Column]", violations_col: str = "_violations"
-) -> "tuple[DataFrame, DataFrame]":
-    """Split ``df`` into (clean, quarantined): a row is quarantined iff
-    it fails ANY rule, and carries the failed rule names in
-    ``violations_col``.  One codegen pass, no shuffle."""
-    tagged = df.withColumn(violations_col, violations_array(rules))
-    clean = tagged.where(F.size(violations_col) == 0).drop(violations_col)
-    quarantined = tagged.where(F.size(violations_col) > 0)
-    return clean, quarantined

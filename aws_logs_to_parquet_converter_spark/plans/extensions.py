@@ -2891,11 +2891,17 @@ _BPE_MERGES = [
 
 
 def _bpe_oracle_segment(word_expr: str) -> str:
-    """DuckDB restatement of ``bpe.segment_word_expr``: paren-wrapped
-    symbols (occurrences of a merge pattern can never overlap, so
-    literal replace is EXACTLY symbol-space BPE — see the operator
-    docstring for why a space-delimited form is wrong), one literal
-    replace per merge in rank order, then unwrap to space-joined.
+    """DuckDB restatement of the BPE encoder as a replace fold: the
+    word becomes PAREN-WRAPPED symbols (``(t)(h)(e)(</w>)``), each merge
+    in rank order is one literal ``replace("(a)(b)", "(ab)")``, then
+    the wrappers unwrap to a space-joined string.  The wrapping is what
+    makes literal replace EXACTLY symbol-space BPE: occurrences of a
+    pattern can only match at symbol boundaries and never overlap,
+    unlike a space-delimited `` a b a b `` whose occurrences share the
+    separator, so a non-overlapping scan skips every second merge of an
+    ``abab`` run.  Rank-order all-occurrence replacement and the UDF's
+    lowest-rank-first loop agree on trained tables (a later rule's
+    symbols only exist once earlier rules produced them).
 
     Words CONTAINING '(' or ')' would corrupt the wrap itself (the
     production encoder handles them natively, so the grade used to

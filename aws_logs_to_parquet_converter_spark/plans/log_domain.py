@@ -298,9 +298,8 @@ def _replay_to_memory_sink(
 def q_stream_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming under the driver's oracle gate: the events
     table replayed as a BOUNDED stream (file source, availableNow
-    trigger) through a watermarked tumbling-day aggregation — the
-    exact operator shape streaming/ingest.stream_hourly_stats runs on
-    live data — then graded against the batch SQL computing the same
+    trigger) through a watermarked tumbling-day aggregation, then
+    graded against the batch SQL computing the same
     windows.  Output mode is ``complete`` (the bounded-replay form
     whose final table equals the batch aggregate exactly; in
     ``append`` mode the still-open last window would never emit at
@@ -747,8 +746,7 @@ def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicitly (bucket + previous bucket via UNNEST), proving window
     semantics rather than assuming them.  In batch this plans as
     explode(2 windows)+hash agg: one shuffle, fan-out factor
-    size/slide; the streaming twin is stream_hourly_stats with a slide
-    argument."""
+    size/slide."""
     e = t(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")

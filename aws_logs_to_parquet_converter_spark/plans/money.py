@@ -61,16 +61,6 @@ def rev_e4(price: str = "l_extendedprice", disc: str = "l_discount") -> Column:
     return cents(price) * (F.lit(100) - cents(disc))
 
 
-def dollars(c: Column, scale: int) -> Column:
-    """Exact integer money units -> double dollars: ONE IEEE division,
-    bit-identical in every engine while |c| < 2^53 (verified: worst sum
-    at sf1 is ~6e15 e4-units, and graded scales are 100-1000x smaller).
-    Returns an UNNAMED column — callers alias (a baked-in alias made
-    the helper unusable and left it dead while call sites hand-spelled
-    the division; round-7 review finding)."""
-    return c.cast("double") / F.lit(float(scale))
-
-
 def exact_avg(sum_units: Column, n: Column, scale: int) -> Column:
     """Average as one division of two exact integers (sum in 1/scale
     units, count) — replaces ROUND(AVG(double), k), whose accumulation

@@ -4,7 +4,8 @@ Mirrors the reference's Athena-side setup (SURVEY §2.1 S8/S9):
 ``example_queries/create_table.sql`` (external Parquet table with a
 ``dt`` string partition), ``load_all_partitions.sql`` (MSCK REPAIR) and
 ``load_partition.sql`` (ALTER TABLE ADD PARTITION).  All three
-statements are native Spark SQL; the helper's one improvement is
+statements are native Spark SQL (the last runs verbatim, see
+tests/test_cli_catalog.py); the helper's one improvement is
 auto-repair — a location-based partitioned table silently reads zero
 rows until its partitions are registered, which the reference handles
 with a separate manual step.
@@ -49,9 +50,3 @@ def repair_table(spark: SparkSession, name: str) -> None:
     """MSCK REPAIR TABLE — discover and register every dt= directory
     (load_all_partitions.sql:6)."""
     spark.sql(f"MSCK REPAIR TABLE `{name}`")
-
-
-def add_partition(spark: SparkSession, name: str, dt: str, location: str | None = None) -> None:
-    """Incrementally register one day (load_partition.sql:8-10)."""
-    loc = f" LOCATION '{location}'" if location else ""
-    spark.sql(f"ALTER TABLE `{name}` ADD IF NOT EXISTS PARTITION (dt='{dt}'){loc}")

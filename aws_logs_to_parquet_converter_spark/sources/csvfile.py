@@ -71,12 +71,3 @@ def read_csv_deadletter(
             (F.col("value") != header_line) | F.col("_s._corrupt").isNull()
         )
     return parsed.select("_s.*")
-
-
-def write_csv(
-    df: DataFrame, path: str, num_files: int = 1, sep: str = ",", header: bool = True
-) -> None:
-    """CSV sink with the compactor's explicit file-count contract."""
-    df.repartition(num_files).write.mode("overwrite").option("header", header).option(
-        "sep", sep
-    ).csv(path)

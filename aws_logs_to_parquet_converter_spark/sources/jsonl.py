@@ -1,4 +1,4 @@
-"""JSONL (newline-delimited JSON) document source/sink.
+"""JSONL (newline-delimited JSON) document source.
 
 The lingua-franca interchange format for LLM training corpora.  Same
 dead-letter discipline as the access-log parser (sources/parse.py):
@@ -9,8 +9,7 @@ quarantine sink, mirroring the parser's ``error_line``.
 Scale notes: ``spark.read.json`` with an EXPLICIT schema is a single
 streamed pass (no inference job over 100 TB); Spark splits multi-GB
 JSONL files on line boundaries, so parallelism follows
-``maxPartitionBytes`` exactly like the text scan.  Writes go through
-the same repartition-to-n contract as the parquet compactor.
+``maxPartitionBytes`` exactly like the text scan.
 """
 
 from __future__ import annotations
@@ -77,9 +76,3 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     clean = df.where(F.col("_corrupt").isNull()).drop("_corrupt")
     dead = df.where(F.col("_corrupt").isNotNull()).withColumnRenamed("_corrupt", "raw_line")
     return clean, dead
-
-
-def write_jsonl(df: DataFrame, path: str, num_files: int = 1) -> None:
-    """Write a corpus back out as JSONL (the interchange sink), with
-    the explicit small-file contract of the parquet compactor."""
-    df.repartition(num_files).write.mode("overwrite").json(path)

@@ -12,13 +12,9 @@ best-effort).  The streaming shape subsumes both:
     code as compact(), APPENDING each micro-batch to its dt= partitions
     (late data adds files to its own day; the checkpoint processes
     each source file once, and ``cli maintain`` recompacts the day).
-  * ``stream_hourly_stats``: watermarked tumbling-window aggregation —
-    the continuously-maintained version of the q_hourly_traffic plan;
-    late lines beyond the watermark are dropped instead of corrupting
-    history.
 
-State at scale: only the window aggregation keeps state, bounded by
-(watermark horizon x groups); the parse/compact path is stateless.
+State at scale: the parse/compact path is stateless; the watermarked
+operators below keep state bounded by their watermark horizon.
 """
 
 from __future__ import annotations
@@ -88,31 +84,6 @@ def stream_compact(
     writer = parsed.writeStream.foreachBatch(write_batch).option("checkpointLocation", checkpoint)
     writer = writer.trigger(**(trigger or {"availableNow": True}))
     return writer.start()
-
-
-def stream_hourly_stats(
-    parsed: DataFrame,
-    watermark: str = "1 day",
-    window: str = "1 hour",
-) -> DataFrame:
-    """Watermarked tumbling-window operation counts/bytes — late log
-    delivery (the reason the reference re-runs whole days) handled by
-    the watermark instead."""
-    return (
-        parsed.where(F.col("request_time").isNotNull())
-        .withWatermark("request_time", watermark)
-        .groupBy(F.window("request_time", window).alias("w"), "operation")
-        .agg(
-            F.count("*").alias("n_requests"),
-            F.sum("bytes_sent").alias("bytes_sent"),
-        )
-        .select(
-            F.col("w.start").alias("hour_start"),
-            "operation",
-            "n_requests",
-            "bytes_sent",
-        )
-    )
 
 
 def stream_read_after_write(

@@ -5,17 +5,31 @@ unbucketed join."""
 import pytest
 from pyspark.sql import functions as F
 
-from aws_logs_to_parquet_converter_spark.operators.bucketing import analyze_table, write_bucketed
+from aws_logs_to_parquet_converter_spark.operators.bucketing import (
+    attach_bucketed,
+    write_bucketed_external,
+)
 
 SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def bucketed(spark):
-    o = spark.read.parquet(f"{SF}/orders.parquet")
-    li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    write_bucketed(o, "orders_b", "o_orderkey", num_buckets=8, sort_key="o_orderkey")
-    write_bucketed(li, "lineitem_b", "l_orderkey", num_buckets=8, sort_key="l_orderkey")
+def bucketed(spark, tmp_path_factory):
+    """orders_b / lineitem_b through the path q_bucket_join uses:
+    bucketed files at an explicit location, then attached by DDL."""
+    wh = tmp_path_factory.mktemp("bucketed")
+    o = spark.read.parquet(f"{SF}/orders.parquet").select("o_orderkey", "o_orderstatus")
+    li = spark.read.parquet(f"{SF}/lineitem.parquet").select("l_orderkey", "l_quantity")
+    write_bucketed_external(o, str(wh / "o"), "o_orderkey", 8, "o_orderkey")
+    write_bucketed_external(li, str(wh / "l"), "l_orderkey", 8, "l_orderkey")
+    attach_bucketed(
+        spark, "orders_b", "o_orderkey BIGINT, o_orderstatus STRING",
+        str(wh / "o"), "o_orderkey", 8, "o_orderkey",
+    )
+    attach_bucketed(
+        spark, "lineitem_b", "l_orderkey BIGINT, l_quantity DOUBLE",
+        str(wh / "l"), "l_orderkey", 8, "l_orderkey",
+    )
     yield
     spark.sql("DROP TABLE IF EXISTS orders_b")
     spark.sql("DROP TABLE IF EXISTS lineitem_b")
@@ -68,13 +82,6 @@ def test_bucketed_join_matches_unbucketed(spark, bucketed):
         .agg(F.count("*").alias("n"), F.round(F.sum("l_quantity"), 2).alias("qty"))
     )
     assert sorted(map(tuple, b.collect())) == sorted(map(tuple, u.collect()))
-
-
-def test_analyze_table_populates_stats(spark, bucketed):
-    analyze_table(spark, "orders_b", ["o_orderkey", "o_orderstatus"])
-    desc = spark.sql("DESCRIBE EXTENDED orders_b").collect()
-    stats = [r for r in desc if r.col_name == "Statistics"]
-    assert stats and "rows" in stats[0].data_type
 
 
 def test_external_write_attach_roundtrip_no_shuffle(spark, tmp_path):

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from aws_logs_to_parquet_converter_spark.operators import (
     cache,
     dedup,
+    graph,
     ranking,
     sampling,
     setsim,
@@ -91,6 +92,48 @@ def test_handles_release_every_cache(spark, name):
     with cache.owned() as handles:
         CASES[name](spark, handles).collect()
         assert handles, "the operator persisted nothing through handles"
+    assert set(jsc.getPersistentRDDs()) == before
+
+
+def _checkpoint_ids(df):
+    """Ids of the RDDs behind ``df``'s LogicalRDD leaves (its checkpoints)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+    }
+
+
+CHECKPOINT_CASES = {
+    # a 7-node chain: six propagation rounds, each one checkpointed
+    "connected_components": lambda spark: dedup.connected_components(
+        spark.createDataFrame([(i, i + 1) for i in range(6)], "id_a long, id_b long")
+    ),
+    # checkpoints after iterations 2, 4 and 6, then the result's own
+    "pagerank": lambda spark: graph.pagerank(
+        spark.createDataFrame(
+            [(i, (i + 1) % 5) for i in range(5)] + [(0, 2)], "src long, dst long"
+        ),
+        n_iters=7,
+        checkpoint_every=2,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(CHECKPOINT_CASES))
+def test_checkpointing_operators_keep_only_their_result(spark, name):
+    """A superseded round's local checkpoint is released once the next
+    one has materialised: after the call, the only storage left is the
+    checkpoint the result reads, and releasing it leaves none."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    out = CHECKPOINT_CASES[name](spark)
+    out.collect()
+    kept = _checkpoint_ids(out)
+    assert len(kept) == 1
+    assert set(jsc.getPersistentRDDs()) - before == kept
+    cache.release_checkpoint(out)
     assert set(jsc.getPersistentRDDs()) == before
 
 

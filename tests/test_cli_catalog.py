@@ -93,33 +93,6 @@ def test_cli_single_job_and_catalog(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS access_logs_t")
 
 
-def test_add_partition(spark, tmp_path):
-    days = ["2019-05-01", "2019-05-02"]
-    root, per_day = _write_raw_days(tmp_path, days, files_per_day=1, lines_per_file=20)
-    dest_bucket = str(tmp_path / "wh3")
-    args = cli.build_parser().parse_args(
-        [
-            "--source-access-log-bucket", str(root),
-            "--source-bucket", "monitored-bucket",
-            "--destination-log-bucket", dest_bucket,
-            "--destination-log-prefix", "logs",
-            "--min-date", "2019-05-01",
-            "--max-date", "2019-05-03",
-        ]
-    )
-    assert cli.run(args) == 0
-    out = f"{dest_bucket}/logs/monitored-bucket"
-    catalog.create_access_log_table(spark, "access_logs_p", out, repair=False)
-    try:
-        assert spark.table("access_logs_p").count() == 0  # nothing registered yet
-        catalog.add_partition(spark, "access_logs_p", "2019-05-01")
-        assert spark.table("access_logs_p").count() == per_day["2019-05-01"]
-        catalog.add_partition(spark, "access_logs_p", "2019-05-02")
-        assert spark.table("access_logs_p").count() == sum(per_day.values())
-    finally:
-        spark.sql("DROP TABLE IF EXISTS access_logs_p")
-
-
 def test_reference_partition_sql_runs_verbatim(spark, tmp_path):
     """The reference's partition-management statements run unchanged:
     load_all_partitions.sql:6 (MSCK REPAIR on the backtick-quoted

@@ -53,93 +53,3 @@ def test_compact_idempotent_overwrite(spark, tmp_path):
     n1 = spark.read.parquet(dest).count()
     compact(df, dest, num_files=2)  # re-run same days => same result
     assert spark.read.parquet(dest).count() == n1
-
-
-def test_compact_to_size_scales_file_count(spark, tmp_path):
-    """The byte-targeted writer derives its file count from the plan's
-    size estimate: a small target produces more files than a huge one,
-    a huge target degenerates to 1, and rows survive either way.
-    Single-day input so the per-partition divisor is 1 and the wave
-    count reflects the target alone (multi-day sizing has its own
-    test below)."""
-    from aws_logs_to_parquet_converter_spark.operators.compact import compact_to_size
-
-    df = with_dt(
-        parse_lines(
-            spark.createDataFrame(
-                [(l,) for l in generate_log_lines(2000, n_days=1)], "value string"
-            )
-        )
-    ).where("dt IS NOT NULL")
-    # confine to the dominant day (odd-format lines still scatter a few
-    # stray dates even at n_days=1)
-    from pyspark.sql import functions as _F
-
-    top_dt = df.groupBy("dt").count().orderBy(_F.desc("count")).first()["dt"]
-    df = df.where(_F.col("dt") == top_dt)
-    n_rows = df.count()
-
-    big = compact_to_size(df, str(tmp_path / "big"), target_file_bytes=1 << 40)
-    assert big == 1
-    assert spark.read.parquet(str(tmp_path / "big")).count() == n_rows
-
-    small = compact_to_size(df, str(tmp_path / "small"), target_file_bytes=64 * 1024)
-    assert small > big
-    assert spark.read.parquet(str(tmp_path / "small")).count() == n_rows
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        compact_to_size(df, str(tmp_path / "bad"), target_file_bytes=0)
-
-
-def test_compact_to_size_file_backed_stats_path(spark, tmp_path):
-    """File-backed sources size from plan statistics (on-disk bytes, no
-    measuring pass): a target near the input size yields few files, and
-    the written output lands near the target."""
-    from aws_logs_to_parquet_converter_spark.operators.compact import compact_to_size
-    from pyspark.sql import functions as F
-
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").withColumn(
-        "dt", F.lit("2019-02-01")
-    )
-    n = compact_to_size(li, str(tmp_path / "t"), target_file_bytes=64 * 1024,
-                        sort_keys=("l_orderkey",))
-    files = glob.glob(str(tmp_path / "t") + "/dt=*/*.parquet")
-    assert n == len(files) and n > 1
-    sizes = [os.path.getsize(f) for f in files]
-    # within 4x of target either way — plan stats are estimates
-    assert all(16 * 1024 < sz < 256 * 1024 for sz in sizes), sizes
-    assert spark.read.parquet(str(tmp_path / "t")).count() == li.count()
-
-
-def test_compact_to_size_multi_day_divides_by_partitions(spark, tmp_path):
-    """Round-robin repartition puts every dt in every task, so the
-    byte-targeted sizing must divide by the distinct-partition count:
-    doubling the days at constant per-day volume must keep the SAME
-    per-wave count (pre-fix it doubled, writing 2x the files at half
-    the target size)."""
-    import glob as _glob
-
-    from pyspark.sql import functions as _F
-
-    from aws_logs_to_parquet_converter_spark.operators.compact import compact_to_size
-
-    parsed = with_dt(
-        parse_lines(
-            spark.createDataFrame(
-                [(l,) for l in generate_log_lines(2000, n_days=1)], "value string"
-            )
-        )
-    ).where("dt IS NOT NULL")
-    top_dt = parsed.groupBy("dt").count().orderBy(_F.desc("count")).first()["dt"]
-    one = parsed.where(_F.col("dt") == top_dt)
-    both = one.unionByName(one.withColumn("dt", _F.date_add("dt", 1)))
-
-    wave1 = compact_to_size(one, str(tmp_path / "one"), target_file_bytes=48 * 1024)
-    wave2 = compact_to_size(both, str(tmp_path / "two"), target_file_bytes=48 * 1024)
-    assert wave2 == wave1, "per-day sizing must not scale with day count"
-    days = _glob.glob(str(tmp_path / "two") + "/dt=*")
-    assert len(days) == 2
-    for d in days:
-        assert len(_glob.glob(f"{d}/*.parquet")) <= wave2
-    assert spark.read.parquet(str(tmp_path / "two")).count() == both.count()

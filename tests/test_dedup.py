@@ -47,8 +47,8 @@ def test_fingerprint_catches_whitespace_and_case(spark):
         [(1, "Hello   World"), (2, "hello world"), (3, "HELLO\tWORLD"), (4, "bye")],
         "doc_id long, text string",
     )
-    groups = dedup.fingerprint_duplicates(df, "doc_id", "text").collect()
-    assert len(groups) == 1 and groups[0].n_copies == 3
+    kept = dedup.fingerprint_keep_first(df, "doc_id", "text").collect()
+    assert sorted(r.doc_id for r in kept) == [1, 4]  # 3 variants -> smallest id
 
 
 def test_minhash_finds_exact_high_jaccard_pairs(spark, corpus):
@@ -463,8 +463,8 @@ def test_contentless_docs_never_pair_in_sketches(spark):
     assert {tuple(g.member_ids) for g in groups} == {
         (10, 11, 12, 13, 14), (20, 21, 22), (30, 31)
     }
-    fgroups = dedup.fingerprint_duplicates(df, "doc_id", "text").collect()
-    assert all(g.canonical_id >= 10 for g in fgroups)  # no NULL-group
+    fkept = {r.doc_id for r in dedup.fingerprint_keep_first(df, "doc_id", "text").collect()}
+    assert set(range(5)) <= fkept  # no NULL-group: every NULL row survives
 
 
 def test_drop_repeated_lines_crlf_blanks_exempt(spark):
@@ -836,6 +836,7 @@ def test_minhash_index_probe_reads_params_from_index_and_append(spark, tmp_path)
     disagree), and mode='append' admits new docs to the index."""
     from aws_logs_to_parquet_converter_spark.operators.dedup import (
         minhash_corpus_candidates,
+        minhash_dedup_against_corpus,
         save_minhash_index,
     )
 
@@ -858,6 +859,11 @@ def test_minhash_index_probe_reads_params_from_index_and_append(spark, tmp_path)
     probe2 = _mk_docs(spark, [(302, extra)])
     got2 = minhash_corpus_candidates(probe2, "doc_id", "text", idx, threshold=0.9).collect()
     assert [(r.doc_id, r.corpus_id) for r in got2] == [(302, 2)]
+    # a replayed batch (same id, same text) matches its own appended
+    # signatures and is gated, so a replay converges instead of
+    # re-admitting the document
+    replay = _mk_docs(spark, [(2, extra)])
+    assert minhash_dedup_against_corpus(replay, "doc_id", "text", idx, 0.9).count() == 0
 
 
 def test_save_minhash_index_append_rejects_mismatched_params(spark, tmp_path):

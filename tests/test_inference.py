@@ -61,16 +61,6 @@ def test_raising_model_quarantines_not_crashes(spark, docs):
     assert all(r.score is None for r in rows)
 
 
-def test_quality_filter_by_model(spark, docs):
-    kept = inference.quality_filter_by_model(docs, threshold=0.4).collect()
-    scores = {r.doc_id: r.score for r in inference.batch_score(docs).collect()}
-    want_ids = {i for i, s in scores.items() if s is not None and s >= 0.4}
-    assert {r.doc_id for r in kept} == want_ids
-    assert want_ids and len(want_ids) < 6  # threshold actually separates
-    # original columns survive the join back
-    assert set(kept[0].asDict()) == {"doc_id", "text", "score"}
-
-
 def test_custom_model_loader_plugs_in(spark, docs):
     def loader():
         return lambda texts: texts.fillna("").str.len().astype("float64")
@@ -116,8 +106,7 @@ def test_batch_score_fresh_index_model_and_duplicate_ids(spark):
     """A real model returning a FRESH-indexed Series (0..n-1, the
     natural sklearn shape) must score positionally — the old dict
     constructor aligned on the pandas index union and corrupted every
-    chunk after the first; duplicate ids must pass the filter once per
-    input row, not k*k times."""
+    chunk after the first; duplicate ids score once per input row."""
     import pandas as pd
 
     from aws_logs_to_parquet_converter_spark.operators import inference
@@ -140,10 +129,11 @@ def test_batch_score_fresh_index_model_and_duplicate_ids(spark):
     dup = spark.createDataFrame(
         [(7, "a doc"), (7, "a doc"), (8, "bb")], "doc_id long, text string"
     )
-    kept = inference.quality_filter_by_model(
-        dup, threshold=0.0, model_loader=fresh_index_loader
+    got_dup = sorted(
+        (r.doc_id, r.score)
+        for r in inference.batch_score(dup, model_loader=fresh_index_loader).collect()
     )
-    assert kept.count() == 3  # k duplicates -> k rows, never k*k
+    assert got_dup == [(7, 5.0), (7, 5.0), (8, 2.0)]  # k duplicates -> k rows
 
 
 def test_calibration_bins_semantics(spark):

@@ -611,32 +611,6 @@ def test_gram_matrix_partition_invariant(spark):
     assert one == many
 
 
-def test_pca_components_match_numpy(spark):
-    """pca_components (distributed gram + driver eig) must agree with
-    numpy PCA on the same data — eigenvalues exactly-ish, components up
-    to the deterministic sign rule."""
-    import numpy as np
-    from aws_logs_to_parquet_converter_spark.operators.similarity import (
-        pca_components,
-    )
-
-    rng = np.random.RandomState(7)
-    base = rng.randn(200, 4) @ np.diag([5.0, 2.0, 0.5, 0.1])
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(base)],
-        "vec_id long, embedding array<double>",
-    ).repartition(8)
-    comps, eigs, n = pca_components(df, "embedding", k=2)
-    assert n == 200
-    cov = np.cov(base, rowvar=False)
-    w, v = np.linalg.eigh(cov)
-    order = np.argsort(w)[::-1][:2]
-    assert eigs == pytest.approx(list(w[order]), rel=1e-9)
-    for got, want in zip(np.array(comps), v[:, order].T):
-        # sign-free subspace check: |cos angle| == 1
-        assert abs(float(got @ want)) == pytest.approx(1.0, abs=1e-9)
-
-
 def test_project_vectors_is_matmul(spark):
     import numpy as np
     from aws_logs_to_parquet_converter_spark.operators.similarity import (
@@ -655,29 +629,6 @@ def test_project_vectors_is_matmul(spark):
         assert got[i] == pytest.approx(list(want[i]))
 
 
-def test_pca_projection_end_to_end_variance_order(spark):
-    """Projected variance must be descending across components (the
-    whole point of the transform)."""
-    import numpy as np
-    from aws_logs_to_parquet_converter_spark.operators.similarity import (
-        pca_components,
-        project_vectors,
-    )
-
-    rng = np.random.RandomState(3)
-    base = rng.randn(300, 6) * np.array([10, 4, 3, 2, 1, 0.2])
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(base)],
-        "vec_id long, embedding array<double>",
-    )
-    comps, _, _ = pca_components(df, "embedding", k=3)
-    proj = np.array(
-        [r["pca"] for r in project_vectors(df, comps).orderBy("vec_id").collect()]
-    )
-    variances = proj.var(axis=0)
-    assert variances[0] > variances[1] > variances[2]
-
-
 def test_ewma_all_null_frame_emits_null_not_error(spark):
     """A row whose value and all lags are NULL must emit NULL (zero
     present-weight), not an ANSI divide-by-zero."""
@@ -688,27 +639,6 @@ def test_ewma_all_null_frame_emits_null_not_error(spark):
     got = {r["d"]: r["ewma_milli"] for r in ewma_trailing(df, "k", "d", "n").collect()}
     assert got["d1"] is None
     assert got["d2"] == 3000  # the null lag contributes neither num nor den
-
-
-def test_pca_whiten_unit_variance(spark):
-    import numpy as np
-    from aws_logs_to_parquet_converter_spark.operators.similarity import (
-        pca_components,
-        project_vectors,
-    )
-
-    rng = np.random.RandomState(11)
-    base = rng.randn(400, 5) * np.array([8, 3, 2, 1, 0.5])
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(base)],
-        "vec_id long, embedding array<double>",
-    )
-    comps, _, _ = pca_components(df, "embedding", k=3, whiten=True)
-    proj = np.array(
-        [r["pca"] for r in project_vectors(df, comps).orderBy("vec_id").collect()]
-    )
-    # whitened coordinates: sample variance 1 per component
-    assert proj.var(axis=0, ddof=1) == pytest.approx([1.0, 1.0, 1.0], rel=1e-9)
 
 
 # ---------------------------------------------------------------------------

@@ -66,7 +66,7 @@ def test_write_read_roundtrip(spark, tmp_path):
     path = _write_corpus(tmp_path, n_good=12, n_bad=0)
     clean, _ = jsonl.split_corrupt(jsonl.read_jsonl(spark, path))
     out = str(tmp_path / "out")
-    jsonl.write_jsonl(clean, out, num_files=2)
+    clean.repartition(2).write.json(out)
     back, dead = jsonl.split_corrupt(jsonl.read_jsonl(spark, out + "/*.json"))
     assert dead.count() == 0
     assert sorted(r.doc_id for r in back.collect()) == list(range(12))

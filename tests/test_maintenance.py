@@ -1,4 +1,4 @@
-"""Maintenance + profiling operator tests."""
+"""Maintenance operator tests."""
 
 import glob
 import os
@@ -6,7 +6,6 @@ import os
 from pyspark.sql import functions as F
 
 from aws_logs_to_parquet_converter_spark.operators.compact import compact, recompact_partition
-from aws_logs_to_parquet_converter_spark.operators.profile import profile
 from aws_logs_to_parquet_converter_spark.sources.parse import parse_lines, with_dt
 from aws_logs_to_parquet_converter_spark.testing import generate_log_lines
 
@@ -28,27 +27,18 @@ def test_recompact_partition(spark, tmp_path):
     before_rows = spark.read.parquet(dest).where(F.col("dt") == dt).count()
     assert len(before_files) > 4
 
+    jsc = spark.sparkContext._jsc
+    held = set(jsc.getPersistentRDDs())
     n = recompact_partition(spark, dest, dt, num_files=2)
     assert n == before_rows
+    # the day's staging checkpoint is released once the rewrite is on
+    # disk: a maintenance pass over many days must not pin one per day
+    assert set(jsc.getPersistentRDDs()) == held
     after_files = glob.glob(f"{dest}/dt={dt}/*.parquet")
     assert len(after_files) <= 2
     assert spark.read.parquet(dest).where(F.col("dt") == dt).count() == before_rows
     # other partitions untouched
     assert spark.read.parquet(dest).count() >= before_rows
-
-
-def test_profile(spark):
-    df = spark.createDataFrame(
-        [(1, "aa", 2.0), (2, None, 4.0), (3, "cccc", None)],
-        "id long, s string, v double",
-    )
-    p = {(r.column, r.metric): r.value for r in profile(df).collect()}
-    assert p[("*", "row_count")] == "3"
-    assert p[("s", "null_count")] == "1"
-    assert abs(float(p[("v", "null_rate")]) - 1 / 3) < 1e-6
-    assert p[("v", "min")] == "2.0" and p[("v", "max")] == "4.0"
-    assert p[("s", "min_len")] == "2" and p[("s", "max_len")] == "4"
-    assert p[("id", "approx_distinct")] == "3"
 
 
 def test_find_fragmented_partitions(spark, tmp_path):

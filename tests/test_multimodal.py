@@ -111,24 +111,13 @@ def test_extract_features_no_shuffle_when_sized_right(spark, ppm_media):
     assert plan.count("Exchange") <= 1
 
 
-def test_real_resize_nearest_neighbor(spark, ppm_media):
-    """decode_stub=False resize really resamples: upscaling the 2x1
-    half-white image to 4x2 replicates each source pixel 2x2."""
-    out = {r.asset_id: r
-           for r in multimodal.resize_images(ppm_media, 4, 2, decode_stub=False).collect()}
-    w, h, maxval, vals = multimodal.decode_ppm_p3(out["half"].payload)
-    assert (w, h) == (4, 2)
-    px = [tuple(vals[i:i + 3]) for i in range(0, len(vals), 3)]
-    assert px == [(255, 255, 255)] * 2 + [(0, 0, 0)] * 2 + [(255, 255, 255)] * 2 + [(0, 0, 0)] * 2
-    assert out["junk"].payload is None
-
-
 def test_compressed_video_still_gated(spark, media):
     """Non-Y4M video payloads (i.e. compressed codecs) keep the honest
-    gate, now as quarantine: NULL frame payloads instead of a crash."""
-    out = multimodal.sample_frames(media, decode_stub=False).collect()
+    gate, as quarantine: NULL features instead of a crash."""
+    videos = media.where("media_type = 'video'")
+    out = multimodal.extract_features(videos, decode_stub=False).collect()
     assert len(out) > 0
-    assert all(r.payload is None for r in out)
+    assert all(r.feature is None for r in out)
 
 
 def _y4m_fixture():
@@ -189,46 +178,10 @@ def test_real_y4m_decode_features(spark):
     assert abs(f[6] - 1.5) < 1e-6                  # duration_s
 
 
-def test_real_y4m_frame_sampling_emits_ppm(spark):
-    """The real frame-sample path slices the frame nearest each
-    timestamp out of the Y4M stream and re-emits it as a P3 image the
-    image operators can consume directly."""
-    rows = [("vid", "video", _y4m_fixture().decode("latin-1"), 4, 2, 1500)]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = {r.ts_ms: r for r in
-           multimodal.sample_frames(df, every_ms=500, decode_stub=False).collect()}
-    assert set(out) == {0, 500, 1000}  # duration 1500ms @ every 500ms
-    # fps=2 -> frame at t=0 is luma 0, t=500 is luma 128, t=1000 is luma 255
-    for ts, luma in ((0, 0), (500, 128), (1000, 255)):
-        w, h, maxval, vals = multimodal.decode_ppm_p3(out[ts].payload)
-        assert (w, h) == (4, 2)
-        assert set(vals) == {luma}
-
-
 def test_media_summary(spark, media):
     summary = multimodal.media_summary(multimodal.extract_features(media)).collect()
     assert {r.media_type for r in summary} == {"image", "audio", "video"}
     assert all(r.n_assets == 10 for r in summary)
-
-
-def test_resize_images(spark, media):
-    out = multimodal.resize_images(media, 224, 224).collect()
-    assert len(out) == 10  # only the image rows
-    assert all(r.width == 224 and r.height == 224 for r in out)
-    assert all(r.payload.startswith("resized[224x224]:") for r in out)
-
-
-def test_sample_frames_fanout(spark, media):
-    out = multimodal.sample_frames(media, every_ms=1000).collect()
-    videos = {r.asset_id: r for r in media.where("media_type = 'video'").collect()}
-    by_asset = {}
-    for r in out:
-        by_asset.setdefault(r.asset_id, []).append(r)
-    assert set(by_asset) == set(videos)
-    for aid, rows in by_asset.items():
-        expect = max(videos[aid].duration_ms // 1000, 1)
-        assert len(rows) == expect, f"{aid}: {len(rows)} != {expect}"
-        assert sorted(r.ts_ms for r in rows) == [1000 * i for i in range(len(rows))]
 
 
 def _wav_bytes(freq_hz=440, sr=8000, seconds=0.5, amp=0.5, nch=1):
@@ -315,46 +268,6 @@ def test_typed_dispatch_image_and_audio_in_one_pass(spark):
     assert feats["img"][multimodal.FEATURE_DIM - 1] == 1.0
     assert feats["aud"] is not None and feats["aud"][0] > 0
     assert feats["vid"] is None
-
-
-def test_real_audio_resample(spark):
-    """decode_stub=False really resamples: halving the rate halves the
-    sample count while the sine keeps its zero-crossing rate (frequency
-    preserved relative to the new rate)."""
-    from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("asset_id", StringType(), False),
-            StructField("media_type", StringType(), True),
-            StructField("payload", BinaryType(), True),
-            StructField("width", LongType(), True),
-            StructField("height", LongType(), True),
-            StructField("duration_ms", LongType(), True),
-        ]
-    )
-    wav = _wav_bytes(freq_hz=200, sr=8000, seconds=0.5, amp=0.5)
-    rows = [("sine", "audio", bytearray(wav), 0, 0, 500),
-            ("junk", "audio", bytearray(b"xx"), 0, 0, 0)]
-    out = {r.asset_id: r for r in multimodal.resample_audio(
-        spark.createDataFrame(rows, schema), target_sr=4000, decode_stub=False).collect()}
-    assert out["junk"].payload is None
-    r = out["sine"]
-    assert r.sample_rate == 4000
-    assert abs(r.n_samples - 2000) <= 2  # 0.5s at 4kHz
-    sr2, nch2, s2 = multimodal.decode_wav_pcm(r.payload.encode("latin-1"))
-    assert sr2 == 4000 and nch2 == 1
-    import math
-    zcr = sum(1 for i in range(1, len(s2)) if (s2[i - 1] < 0) != (s2[i] < 0)) / len(s2)
-    assert abs(zcr - 2 * 200 / 4000) < 0.02  # 200 Hz tone at the new rate
-    rms = math.sqrt(sum(x * x for x in s2) / len(s2))
-    assert abs(rms - 0.5 / math.sqrt(2)) < 0.02
-
-
-def test_resample_audio_stub_mode(spark, media):
-    out = multimodal.resample_audio(media, target_sr=16000).collect()
-    assert len(out) == 10  # only audio rows
-    assert all(r.payload.startswith("resampled[16000]:") for r in out)
 
 
 def test_string_payloads_carry_binary_losslessly(spark):

@@ -10,6 +10,11 @@ from aws_logs_to_parquet_converter_spark.operators.dedup import contamination_ch
 SF = "/root/testdata/sf0.001"
 
 
+def _pii_count(name):
+    """Match count of one PII_PATTERNS class in ``text``."""
+    return F.regexp_count(F.col("text"), F.lit(dict(scrub.PII_PATTERNS)[name]))
+
+
 def test_scrub_redacts_every_pattern_class(spark):
     rows = [
         ("mail me at jane.doe+x@corp.example.org today",),
@@ -19,20 +24,22 @@ def test_scrub_redacts_every_pattern_class(spark):
         ("call +1 (415) 555-0199 now",),
     ]
     df = spark.createDataFrame(rows, "text string")
-    out = scrub.scrub_corpus(df, "text")
-    texts = [r.text for r in out.collect()]
+    texts = [r.text for r in df.select(scrub.scrub_pii(F.col("text")).alias("text")).collect()]
     for t in texts:
         assert "[PII]" in t
     assert not any("@" in t or "415" in t or "4111" in t for t in texts)
-    # audit counts: exactly one hit in its own class per row
-    agg = out.agg(*[F.sum(f"n_{name}").alias(name) for name, _ in scrub.PII_PATTERNS]).first()
+    # audit counts (the q_pii_scrub form): exactly one hit in its own class per row
+    agg = df.agg(*[F.sum(_pii_count(name)).alias(name) for name, _ in scrub.PII_PATTERNS]).first()
     assert agg["email"] == 1 and agg["ipv4"] == 1 and agg["ssn"] == 1
     assert agg["card"] >= 1 and agg["phone"] >= 1
 
 
 def test_scrub_leaves_clean_text_alone(spark):
     df = spark.createDataFrame([("perfectly ordinary sentence",)], "text string")
-    row = scrub.scrub_corpus(df, "text").first()
+    row = df.select(
+        scrub.scrub_pii(F.col("text")).alias("text"),
+        *[_pii_count(name).alias(f"n_{name}") for name, _ in scrub.PII_PATTERNS],
+    ).first()
     assert row.text == "perfectly ordinary sentence"
     assert all(row[f"n_{name}"] == 0 for name, _ in scrub.PII_PATTERNS)
 
@@ -704,28 +711,6 @@ def test_gopher_patterns_crlf_and_punctuation_cross_engine(spark):
     # sanity on intent: CRLF ellipsis lines ARE counted, punctuation
     # stopwords ARE hits
     assert eng[0][0] == 2 and eng[1][1] == 1 and eng[3][1] == 0
-
-
-def test_gopher_full_filter_composition(spark):
-    """Full battery = row-local rules AND dup-line rule AND top-bigram
-    rule; each rejection class trips its own verdict."""
-    from aws_logs_to_parquet_converter_spark.operators.textstats import (
-        gopher_full_filter,
-    )
-
-    good = ("the quick brown fox jumps over that lazy dog and it runs with "
-            "great joy to have a fine day in the sunny park where children "
-            "play games of chance and skill while parents watch from benches "
-            "under shady trees that line the wide gravel paths of the garden "
-            "and birds sing songs of summer in the warm evening air nearby")
-    repeated_lines = "\n".join(["the same long line of the report with that content"] * 12)
-    bigram_heavy = "the dog " * 40 + "and it runs to have with that of be nearby"
-    rows = [(1, good), (2, repeated_lines), (3, bigram_heavy)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in gopher_full_filter(df, "doc_id", "text").collect()}
-    assert got[1].keep, got[1]
-    assert not got[2].keep_dup_lines and not got[2].keep
-    assert not got[3].keep_top_ngram and not got[3].keep
 
 
 def test_vertical_tab_tokenization_agrees_cross_engine(spark):

@@ -1,10 +1,10 @@
-"""UDF/UDAF/UDTF extension points (functions/udx.py)."""
+"""UDAF extension point (functions/udx.py)."""
 
 import math
 
 from pyspark.sql import functions as F
 
-from aws_logs_to_parquet_converter_spark.functions.udx import SplitDiff, gini_udaf, register_udx
+from aws_logs_to_parquet_converter_spark.functions.udx import gini_udaf
 from aws_logs_to_parquet_converter_spark.plans.registry import t
 
 
@@ -23,28 +23,3 @@ def test_gini_udaf_on_log_domain_shape(spark):
     e = t(spark, "/root/testdata/sf0.001", "events")  # nanos-ts-safe reader
     out = e.groupBy("event_type").agg(gini_udaf("value").alias("gini")).collect()
     assert out and all(0.0 <= r.gini < 1.0 for r in out)
-
-
-def test_udtf_variable_fanout(spark):
-    register_udx(spark)
-    rows = spark.sql(
-        "SELECT * FROM split_diff('logs/service-3/2019/02/06/part-00001.tgz')"
-    ).collect()
-    assert [r.piece for r in rows] == [
-        "logs", "service-3", "2019", "02", "06", "part-00001.tgz"]
-    assert [r.idx for r in rows] == list(range(6))
-    assert [r.is_last for r in rows] == [False] * 5 + [True]
-
-
-def test_udtf_lateral_join_over_table(spark):
-    register_udx(spark)
-    spark.createDataFrame(
-        [("a/b",), ("c",), (None,)], "path string"
-    ).createOrReplaceTempView("paths")
-    rows = spark.sql(
-        "SELECT path, piece, idx FROM paths, LATERAL split_diff(path) ORDER BY path, idx"
-    ).collect()
-    assert [(r.path, r.piece, r.idx) for r in rows] == [
-        ("a/b", "a", 0), ("a/b", "b", 1), ("c", "c", 0)]
-    # NULL path emits no rows (and doesn't fail the query)
-    assert all(r.path is not None for r in rows)

@@ -38,19 +38,6 @@ def test_validation_report_counts(spark, table):
     assert rep["qty_positive"].violation_rate == 0.25
 
 
-def test_quarantine_split_with_reasons(spark, table):
-    clean, bad = validate.quarantine_violations(table, _rules())
-    assert sorted(r.id for r in clean.collect()) == [1]
-    got = {r.id: sorted(r._violations) for r in bad.collect()}
-    assert got == {
-        2: ["dates_ordered", "qty_positive"],
-        3: ["cat_present"],
-        4: ["qty_capped"],
-    }
-    # clean + quarantined partition the input
-    assert clean.count() + bad.count() == table.count()
-
-
 def test_null_rule_result_is_violation(spark):
     df = spark.createDataFrame([(1, None)], "id long, v long")
     rep = validate.validation_report(df, {"v_pos": F.col("v") > 0}).collect()[0]
@@ -58,8 +45,6 @@ def test_null_rule_result_is_violation(spark):
 
     with pytest.raises(ValueError):
         validate.validation_report(df, {})
-    with pytest.raises(ValueError):
-        validate.quarantine_violations(df, {})
 
 
 def test_rule_names_are_display_strings_not_identifiers(spark, table):
@@ -72,7 +57,3 @@ def test_rule_names_are_display_strings_not_identifiers(spark, table):
     }
     rep = {r.rule: r.n_violations for r in validate.validation_report(table, rules).collect()}
     assert rep == {"qty.positive": 1, "cat `present` ok": 1}
-    clean, bad = validate.quarantine_violations(table, rules)
-    assert sorted(r.id for r in clean.collect()) == [1, 4]
-    tags = {r.id: list(r._violations) for r in bad.collect()}
-    assert tags == {2: ["qty.positive"], 3: ["cat `present` ok"]}
