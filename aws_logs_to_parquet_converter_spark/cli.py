@@ -73,9 +73,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--source-root", default="",
                    help="filesystem root holding the source bucket dir "
                         "(empty => source-access-log-bucket is an absolute path/URI)")
-    p.add_argument("--single-job", action="store_true",
-                   help="ingest every day in ONE Spark job (partitionBy fans "
-                        "out to all dt= dirs) instead of the per-day loop")
     return p
 
 
@@ -114,22 +111,10 @@ def run(args: argparse.Namespace) -> int:
         apply_s3a_conf(spark, aws_config_to_s3a(args.aws_config))
     root = args.source_root or args.source_access_log_bucket
     dest = f"{args.destination_log_bucket}/{args.destination_log_prefix}/{args.source_bucket}"
-    days = date_range(args.min_date, args.max_date)
     failures = 0
-
-    def day_paths(dt: str) -> list[str]:
-        return list_day_paths(root, args.source_bucket, dt)
-
-    if args.single_job:
-        paths = [p for dt in days for p in day_paths(dt)]
-        if paths:
-            compact(_parse_with_delivery_dt(spark, paths), dest, num_files=args.num_output_files)
-        print(f"compacted {len(days)} day(s), {len(paths)} object(s) -> {dest}")
-        return 0
-
-    for dt in days:
+    for dt in date_range(args.min_date, args.max_date):
         try:
-            paths = day_paths(dt)
+            paths = list_day_paths(root, args.source_bucket, dt)
             if not paths:
                 print(f"{dt}: no input objects, skipping")
                 continue

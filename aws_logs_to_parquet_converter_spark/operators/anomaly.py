@@ -33,7 +33,6 @@ def mad_outliers(
     value_col: str,
     by: list[str] | None = None,
     k: float = 3.5,
-    exact: bool = True,
 ) -> DataFrame:
     """Rows whose modified z-score ``0.6745·(x−median)/MAD`` exceeds
     ``k`` (3.5 is Iglewicz & Hoaglin's recommendation), computed per
@@ -45,11 +44,10 @@ def mad_outliers(
     Returns the input columns plus (med, mad, mz).
     """
     by = list(by or [])
-    pct = (
-        (lambda c: F.expr(f"percentile({c}, 0.5)"))
-        if exact
-        else (lambda c: F.percentile_approx(c, 0.5, 10000))
-    )
+
+    def pct(c):
+        return F.expr(f"percentile({c}, 0.5)")
+
     if by:
         # Grouped path: BOTH percentile rounds as window aggregates over
         # ONE group-key partitioning.  Exact percentile has no partial
@@ -107,7 +105,6 @@ def interarrival_regularity(
     key_col: str,
     ts_col: str,
     tiebreak_col: str,
-    min_gaps: int = 5,
     segment_col=None,
 ) -> DataFrame:
     """Per-key inter-arrival regularity: the coefficient of variation
@@ -151,7 +148,8 @@ def interarrival_regularity(
     unchanged.  The graded entry runs segmented mode against the exact
     SQL oracle — the hash match is the losslessness proof.
 
-    Returns (key, n_gaps, mean_gap_us, cv_ppm).
+    Returns (key, n_gaps, mean_gap_us, cv_ppm) for keys with at least
+    5 gaps.
     """
     from pyspark.sql import Window
 
@@ -183,7 +181,7 @@ def interarrival_regularity(
         F.count("*").alias("n_gaps"),
         F.sum("_g").alias("_sg"),
         F.sum(F.col("_g").cast("decimal(38,0)") * F.col("_g")).alias("_sg2"),
-    ).where(F.col("n_gaps") >= min_gaps)
+    ).where(F.col("n_gaps") >= 5)
     two62 = 1 << 62
     agg = agg.withColumns(
         {

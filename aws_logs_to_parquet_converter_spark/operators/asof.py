@@ -36,12 +36,11 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_payload: list[str],
-    suffix: str = "_asof",
     direction: str = "backward",
     tolerance_seconds: float | None = None,
 ) -> DataFrame:
-    """Return ``left`` plus, per row, the ``right_payload`` values of
-    the nearest right row with equal key (NULLs where no such row).
+    """Return ``left`` plus, per row, the ``right_payload`` values (named
+    ``<column>_asof``) of the nearest right row with equal key (NULLs where no such row).
 
     ``direction='backward'`` (default): latest right row with
     ``right_ts <= left_ts``.  ``'forward'``: earliest right row with
@@ -79,7 +78,7 @@ def asof_join(
 
     match_type = StructType(
         [StructField("_rts", right.schema[right_ts].dataType)]
-        + [StructField(f"{c}{suffix}", right.schema[c].dataType) for c in right_payload]
+        + [StructField(f"{c}_asof", right.schema[c].dataType) for c in right_payload]
     )
     l_tag = left.select(
         lk.alias("_k"),
@@ -95,7 +94,7 @@ def asof_join(
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left.columns],
         F.struct(
             F.col(right_ts).alias("_rts"),
-            *[F.col(c).alias(f"{c}{suffix}") for c in right_payload],
+            *[F.col(c).alias(f"{c}_asof") for c in right_payload],
         ).alias("_match"),
     )
 
@@ -134,5 +133,5 @@ def asof_join(
         keep = F.when(near, F.col("_match"))
     return out.select(
         *[F.col(c) for c in left.columns],
-        *[keep.getField(f"{c}{suffix}").alias(f"{c}{suffix}") for c in right_payload],
+        *[keep.getField(f"{c}_asof").alias(f"{c}_asof") for c in right_payload],
     )

@@ -47,15 +47,14 @@ def bpe_train(
     df: DataFrame,
     text_col: str,
     num_merges: int = 100,
-    max_word_types: int = 20_000,
     min_pair_freq: int = 2,
 ) -> list[tuple[str, str]]:
     """Learn ``num_merges`` BPE merge rules from a corpus column.
 
     Phase 1 (distributed, one shuffle): lowercase whitespace
     tokenization -> word-type frequency table.  Phase 2 (driver-side,
-    bounded): the classic merge loop over the top ``max_word_types``
-    rows — each iteration counts adjacent symbol pairs weighted by
+    bounded): the classic merge loop over the 20,000 most frequent
+    word types — each iteration counts adjacent symbol pairs weighted by
     word frequency, merges the (max count, then lexicographically
     smallest) pair everywhere, and stops early when the best pair
     falls under ``min_pair_freq``.
@@ -83,7 +82,7 @@ def bpe_train(
         .groupBy("_w")
         .agg(F.count("*").alias("_c"))
         .orderBy(F.desc("_c"), F.asc("_w"))
-        .limit(max_word_types)
+        .limit(20_000)
         .collect()
     )
     # word as a tuple of symbols (chars + the end-of-word marker)
@@ -225,9 +224,8 @@ def with_bpe_tokens(
     df: DataFrame,
     text_col: str,
     merges: list[tuple[str, str]],
-    out_col: str = "bpe_tokens",
 ) -> DataFrame:
-    """``df`` plus the BPE token array of ``text_col`` (production
-    Arrow path) — feed ``F.size(out_col)`` to the token-budget
-    operators for real-token accounting."""
-    return df.withColumn(out_col, encode_tokens_udf(merges)(F.col(text_col)))
+    """``df`` plus ``bpe_tokens``, the BPE token array of ``text_col``
+    (production Arrow path) — feed ``F.size("bpe_tokens")`` to the
+    token-budget operators for real-token accounting."""
+    return df.withColumn("bpe_tokens", encode_tokens_udf(merges)(F.col(text_col)))

@@ -33,8 +33,6 @@ def compact(
     dest: str,
     num_files: int = 10,
     sort_keys: tuple[str, ...] = ("request_time",),
-    partition_cols: tuple[str, ...] = ("dt",),
-    compression: str = "snappy",
     mode: str = "overwrite",
 ) -> None:
     """Write ``df`` as ``dest/dt=YYYY-MM-DD/part-*.snappy.parquet``.
@@ -44,40 +42,36 @@ def compact(
     yields exactly N files (reference ``--num-output-files`` contract,
     compacter.py:337-342).
     """
-    write_sorted(df.repartition(num_files), dest, sort_keys, partition_cols, compression, mode)
+    write_sorted(df.repartition(num_files), dest, sort_keys, mode)
 
 
 def write_sorted(
     df: DataFrame,
     dest: str,
     sort_keys: tuple[str, ...] = ("request_time",),
-    partition_cols: tuple[str, ...] = ("dt",),
-    compression: str = "snappy",
     mode: str = "overwrite",
 ) -> None:
     """The write half of ``compact``, for callers that size the tasks
-    themselves: each task of ``df`` writes one file per partition value
-    it holds, rows sorted by (``partition_cols``, ``sort_keys``)."""
+    themselves: each task of ``df`` writes one snappy file per ``dt`` it
+    holds, rows sorted by (``dt``, ``sort_keys``)."""
     # Replace only the partitions present in df (idempotent day
     # re-run).  Writer-scoped option, NOT spark.conf.set: a session-
     # level set would leak dynamic-overwrite semantics into every
     # later write in the session — an unrelated full-table overwrite
     # would then silently keep stale partitions (round-7 review
     # finding).
-    # Sort by (partition cols, sort keys): the dynamic-partition writer
-    # requires a task-local sort on the partition columns; providing it
-    # ourselves (prefixed) keeps rows time-ordered within each file —
-    # otherwise the writer's own sort on dt alone would scramble them.
-    local_sort = [*partition_cols, *sort_keys]
-    writer = (
-        df.sortWithinPartitions(*local_sort)
-        .write.option("compression", compression)
+    # Sort by (dt, sort keys): the dynamic-partition writer requires a
+    # task-local sort on the partition column; providing it ourselves
+    # (prefixed) keeps rows time-ordered within each file — otherwise
+    # the writer's own sort on dt alone would scramble them.
+    (
+        df.sortWithinPartitions("dt", *sort_keys)
+        .write.option("compression", "snappy")
         .option("partitionOverwriteMode", "dynamic")
         .mode(mode)
+        .partitionBy("dt")
+        .parquet(dest)
     )
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(dest)
 
 
 def recompact_partition(
@@ -85,8 +79,6 @@ def recompact_partition(
     dest: str,
     dt: str,
     num_files: int = 10,
-    sort_keys: tuple[str, ...] = ("request_time",),
-    compression: str = "snappy",
 ) -> int:
     """Maintenance: rewrite ONE day partition into ``num_files`` sorted
     files (streaming appends and late-data re-runs accrete small files;
@@ -101,7 +93,7 @@ def recompact_partition(
     try:
         n = part.count()
         if n:
-            compact(part, dest, num_files=num_files, sort_keys=sort_keys, compression=compression)
+            compact(part, dest, num_files=num_files)
     finally:
         release_checkpoint(part)  # the day's copy is garbage once written
     return n

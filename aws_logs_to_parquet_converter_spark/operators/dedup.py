@@ -162,7 +162,6 @@ def dedup_against_corpus(
     corpus_digests: DataFrame,
     id_col: str,
     text_col: str,
-    digest_col: str = "digest",
     bloom: "BloomFilter | None" = None,
 ) -> DataFrame:
     """Incremental exact dedup: drop every new-batch row whose content
@@ -171,7 +170,7 @@ def dedup_against_corpus(
     where re-deduping the whole corpus per day would re-shuffle 100 TB
     to admit a few GB.
 
-    ``corpus_digests`` is the persisted (1 column) digest set of the
+    ``corpus_digests`` is the persisted ``digest`` column set of the
     existing corpus — produced by ``content_digests`` below at corpus
     build time and appended incrementally afterwards; at 100 TB it is
     ~32 bytes/doc, the only state this operator ever touches.  The
@@ -208,13 +207,13 @@ def dedup_against_corpus(
         # definitely-new row untouched (the condition is false for
         # all corpus rows) while maybe-rows verify exactly.
         flagged = bloom_maybe_present(staged, bloom, "_d")
-        cd = corpus_digests.select(F.col(digest_col).alias("_cd"))
+        cd = corpus_digests.select(F.col("digest").alias("_cd"))
         fresh = flagged.join(
             cd, (F.col("_d") == F.col("_cd")) & F.col("_maybe"), "left_anti"
         ).drop("_maybe")
     else:
         fresh = staged.join(
-            corpus_digests.select(F.col(digest_col).alias("_d")), "_d", "left_anti"
+            corpus_digests.select(F.col("digest").alias("_d")), "_d", "left_anti"
         )
     # keep-first in ONE pass: min-id per digest via a partitioned
     # window (no ordering, no single-partition risk).  The groupBy +
@@ -232,43 +231,44 @@ def dedup_against_corpus(
     )
 
 
-def _bloom_positions(digest: Column, m_bits: int, k: int, seed: int) -> "list[Column]":
-    """The k bit positions a digest sets/probes, via double hashing
-    (Kirsch & Mitzenmacher 2006: pos_i = (h1 + i*h2) mod m needs only
+# Bloom probes per digest and hash seed: fixed, so a build and a probe
+# cannot disagree on them
+_BLOOM_K = 4
+_BLOOM_SEED = 42
+
+
+def _bloom_positions(digest: Column, m_bits: int) -> "list[Column]":
+    """The ``_BLOOM_K`` bit positions a digest sets/probes, via double
+    hashing (Kirsch & Mitzenmacher 2006: pos_i = (h1 + i*h2) mod m needs only
     two base hashes for k independent-enough probes).  Both base hashes
     reduce mod m BEFORE combining, so i*h2 stays ~k*m << 2^63 and never
     trips ANSI bigint-overflow; h2 is forced odd so it cycles the full
     power-of-two modulus."""
-    h1 = F.pmod(F.xxhash64(digest, F.lit(seed)), F.lit(m_bits))
-    h2 = F.pmod(F.xxhash64(digest, F.lit(seed + 1)), F.lit(m_bits)).bitwiseOR(F.lit(1))
-    return [F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits)) for i in range(k)]
+    h1 = F.pmod(F.xxhash64(digest, F.lit(_BLOOM_SEED)), F.lit(m_bits))
+    h2 = F.pmod(F.xxhash64(digest, F.lit(_BLOOM_SEED + 1)), F.lit(m_bits)).bitwiseOR(F.lit(1))
+    return [F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits)) for i in range(_BLOOM_K)]
 
 
 class BloomFilter:
     """A ``digest_bloom`` result: the sparse (word, mask) bitmap PLUS
-    the (m_bits, k, seed) parameters it was built with.  Carrying the
-    parameters makes a build/probe mismatch impossible — probing with
-    different parameters than the build would silently produce false
-    negatives (the one failure mode a Bloom filter must never have),
-    so they travel with the bitmap instead of being re-specified."""
+    the ``m_bits`` it was built with.  Carrying the size makes a
+    build/probe mismatch impossible — probing with a different modulus
+    than the build would silently produce false negatives (the one
+    failure mode a Bloom filter must never have), so it travels with
+    the bitmap instead of being re-specified."""
 
-    def __init__(self, bitmap: DataFrame, m_bits: int, k: int, seed: int):
+    def __init__(self, bitmap: DataFrame, m_bits: int):
         self.bitmap = bitmap
         self.m_bits = m_bits
-        self.k = k
-        self.seed = seed
 
 
 def digest_bloom(
     corpus_digests: DataFrame,
-    digest_col: str = "digest",
     m_bits: int = 1 << 22,
-    k: int = 4,
-    seed: int = 42,
     handles: "list[DataFrame] | None" = None,
 ) -> BloomFilter:
-    """Pure-Catalyst Bloom filter (Bloom 1970) over a digest set, as a
-    SPARSE (word, mask) bitmap: at most ``m_bits/64`` rows of
+    """Pure-Catalyst Bloom filter (Bloom 1970) over a ``digest``
+    column, as a SPARSE (word, mask) bitmap: at most ``m_bits/64`` rows of
     (int, bigint), built by one explode -> ``bit_or`` aggregation —
     no Python, no driver-side bit array, mergeable across corpus
     increments by re-aggregating ``bit_or`` on word.
@@ -280,9 +280,9 @@ def digest_bloom(
     m_bits/8 bytes dense, so it broadcasts comfortably up to a few
     billion documents — beyond that the plain digest anti join is
     already the right plan and the filter is just skipped.  Returns a
-    ``BloomFilter`` carrying its own parameters; its bitmap is
+    ``BloomFilter`` carrying its own size; its bitmap is
     persisted and released through ``handles`` (``operators/cache.py``)."""
-    pos = _bloom_positions(F.col(digest_col), m_bits, k, seed)
+    pos = _bloom_positions(F.col("digest"), m_bits)
     bitmap = (
         corpus_digests.select(F.explode(F.array(*pos)).alias("_pos"))
         .select(
@@ -299,16 +299,15 @@ def digest_bloom(
     # construction (round-7 measurement: 4x rebuild dominated
     # q_incremental_dedup_bloom's sf1 wall).  Bounded cache, so
     # persist unconditionally.
-    return BloomFilter(persist(bitmap, handles), m_bits, k, seed)
+    return BloomFilter(persist(bitmap, handles), m_bits)
 
 
 def bloom_maybe_present(
     df: DataFrame,
     bloom: BloomFilter,
     digest_col: str,
-    flag_col: str = "_maybe",
 ) -> DataFrame:
-    """Annotate ``df`` with ``flag_col``: False means the digest is
+    """Annotate ``df`` with ``_maybe``: False means the digest is
     DEFINITELY absent from the set the bloom was built on; True means
     possibly present (verify exactly).
 
@@ -316,7 +315,7 @@ def bloom_maybe_present(
     inline word keys, AND-ed into one flag — ``df`` itself is NEVER
     exchanged (no distinct, no regroup, no join-back); the probe rides
     the scan map-side, which is the entire point of the pre-filter."""
-    pos = _bloom_positions(F.col(digest_col), bloom.m_bits, bloom.k, bloom.seed)
+    pos = _bloom_positions(F.col(digest_col), bloom.m_bits)
     out = df
     flag = F.lit(True)
     for i, p in enumerate(pos):
@@ -329,8 +328,8 @@ def bloom_maybe_present(
         side = bloom.bitmap.select(F.col("word").alias(w), F.col("mask").alias(bm))
         out = out.join(F.broadcast(side), w, "left")
         flag = flag & (F.coalesce(F.col(bm), F.lit(0)).bitwiseAND(F.col(m)) != 0)
-    drops = [c for i in range(bloom.k) for c in (f"_bp{i}", f"_bw{i}", f"_bm{i}", f"_bb{i}")]
-    return out.withColumn(flag_col, flag).drop(*drops)
+    drops = [c for i in range(_BLOOM_K) for c in (f"_bp{i}", f"_bw{i}", f"_bm{i}", f"_bb{i}")]
+    return out.withColumn("_maybe", flag).drop(*drops)
 
 
 def content_digests(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -642,7 +641,6 @@ def save_minhash_index(
     seed: int = 42,
     hash_fn: str = "xxhash64",
     mode: str = "overwrite",
-    prune: bool = True,
 ) -> None:
     """Persist the MinHash-LSH state of a corpus: build once, probe
     every future ingest batch — the NEAR-DUP analog of
@@ -673,11 +671,7 @@ def save_minhash_index(
     row and a mismatch raises — signatures written under different
     parameters than the probe reads back would silently corrupt every
     later candidate set (``append_to_minhash_index`` reads the stored
-    params for you).
-
-    ``prune=False`` skips the post-commit stale-version prune (the
-    ``operators/versioned.py`` concurrency contract); call
-    ``versioned.prune_stale_versions`` in a later maintenance window."""
+    params for you)."""
     spark = corpus.sparkSession
     given = {
         "num_hashes": num_hashes,
@@ -741,8 +735,7 @@ def save_minhash_index(
             versioned.commit(
                 spark, path, lambda vdir: write(vdir, "overwrite"),
                 values=(num_hashes, bands, shingle_n, seed, hash_fn),
-                ddl=_MINHASH_PARAMS_DDL, prune=prune,
-                extra_stale=_MINHASH_FLAT_DIRS,
+                ddl=_MINHASH_PARAMS_DDL, extra_stale=_MINHASH_FLAT_DIRS,
             )
 
 
@@ -873,7 +866,7 @@ def validate_minhash_index(spark: SparkSession, path: str) -> dict:
 
 
 def rebuild_minhash_index(
-    spark: SparkSession, src_path: str, dest_path: str, prune: bool = True
+    spark: SparkSession, src_path: str, dest_path: str
 ) -> None:
     """Compact a MinHash index into a fresh copy at ``dest_path`` FROM
     ITS STORED SIGNATURES — duplicate rows from crash-replayed appends
@@ -933,8 +926,7 @@ def rebuild_minhash_index(
             spark, dest_path, write,
             values=(p["num_hashes"], p["bands"], p["shingle_n"], p["seed"],
                     p["hash_fn"]),
-            ddl=_MINHASH_PARAMS_DDL, prune=prune,
-            extra_stale=_MINHASH_FLAT_DIRS,
+            ddl=_MINHASH_PARAMS_DDL, extra_stale=_MINHASH_FLAT_DIRS,
         )
 
 
@@ -1133,7 +1125,6 @@ def contamination_check(
     text_col: str,
     shingle_n: int = 5,
     min_common: int = 10,
-    max_shingle_df: int | None = 1000,
 ) -> DataFrame:
     """Train/eval contamination scan: for every train document, how
     many eval documents share at least ``min_common`` character
@@ -1145,25 +1136,24 @@ def contamination_check(
     ``ngram_jaccard_pairs``, so one hot boilerplate shingle cannot
     explode the pair space), count common shingles per (train, eval)
     pair, keep pairs over the threshold, then roll up per train doc.
-    Returns (train_id, n_eval_matches, max_common).  The df cap is
-    computed over the UNION of both sides — a shingle ubiquitous in
+    Returns (train_id, n_eval_matches, max_common).  The df cap (1000)
+    is computed over the UNION of both sides — a shingle ubiquitous in
     either corpus is non-discriminative for matching."""
     # per-doc distinct is in-row (no per-subplan occurrence-stream
     # dedup aggregate — the distinct_shingles note): each side feeds
     # the df-cap build and its join branch
     tr = distinct_shingles(train, id_col, text_col, shingle_n)
     ev = distinct_shingles(eval_set, id_col, text_col, shingle_n)
-    if max_shingle_df is not None:
-        df_all = (
-            tr.select("_sh")
-            .unionAll(ev.select("_sh"))
-            .groupBy("_sh")
-            .agg(F.count("*").alias("_df"))
-            .where(F.col("_df") <= max_shingle_df)
-            .select("_sh")
-        )
-        tr = tr.join(df_all, "_sh")
-        ev = ev.join(df_all, "_sh")
+    df_all = (
+        tr.select("_sh")
+        .unionAll(ev.select("_sh"))
+        .groupBy("_sh")
+        .agg(F.count("*").alias("_df"))
+        .where(F.col("_df") <= 1000)
+        .select("_sh")
+    )
+    tr = tr.join(df_all, "_sh")
+    ev = ev.join(df_all, "_sh")
     common = (
         tr.select(F.col("_id").alias("train_id"), "_sh")
         .join(ev.select(F.col("_id").alias("eval_id"), "_sh"), "_sh")
@@ -1177,11 +1167,10 @@ def contamination_check(
     )
 
 
-def connected_components(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b", max_iter: int = 20
-) -> DataFrame:
-    """Distributed connected components over a near-duplicate pair
-    graph: (node, component) with component = min node id reachable.
+def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+    """Distributed connected components over a near-duplicate
+    (id_a, id_b) pair graph: (node, component) with component = min
+    node id reachable.
 
     Iterative min-label propagation — each round joins every node's
     current label against its neighbors' and keeps the minimum;
@@ -1208,8 +1197,8 @@ def connected_components(
     # localCheckpoint'd, so dropping the edge cache on exit cannot
     # trigger recomputation downstream.
     edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
     )
     with owned() as held:
@@ -1275,14 +1264,12 @@ def dedup_keep_list(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
 ) -> DataFrame:
     """Final dedup decision: (id, keep, component) — keep the smallest
     id of each connected near-dup component, drop the rest.  Composes
-    any pair source (exact jaccard / MinHash / embedding cosine) with
-    connected_components."""
-    comps = connected_components(pairs, id_a, id_b)
+    any (id_a, id_b) pair source (exact jaccard / MinHash / embedding
+    cosine) with connected_components."""
+    comps = connected_components(pairs)
     return (
         df.select(F.col(id_col).alias("node"))
         .join(comps, "node", "left")
@@ -1299,8 +1286,6 @@ def dedup_keep_best(
     pairs: DataFrame,
     score_col: str,
     id_col: str = "doc_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
 ) -> DataFrame:
     """``dedup_keep_list`` with QUALITY-AWARE canonical selection:
     within each connected near-dup component keep the member with the
@@ -1327,7 +1312,7 @@ def dedup_keep_best(
     component and a component-keyed join back — no window, no extra
     shuffle beyond keep_list's.
     """
-    comps = connected_components(pairs, id_a, id_b)
+    comps = connected_components(pairs)
     labeled = (
         df.select(F.col(id_col).alias("node"), F.col(score_col).alias("score"))
         .join(comps, "node", "left")
@@ -1449,7 +1434,6 @@ def drop_repeated_lines(
     id_col: str,
     text_col: str,
     line_sep: str = "\n",
-    min_chars: int = 1,
 ) -> DataFrame:
     """Corpus-level repeated-line removal (the CCNet/RefinedWeb clean
     step): every line that occurs more than once across the corpus is
@@ -1464,7 +1448,7 @@ def drop_repeated_lines(
     back -> ordered reassembly per document, rejoined to the input so
     a document whose every line was boilerplate survives as an empty
     string (rows are never lost — downstream length filters decide its
-    fate).  Lines with fewer than ``min_chars`` after stripping ALL
+    fate).  Lines with no characters left after stripping ALL
     whitespace (blank/formatting lines — including CRLF remnants like
     a lone ``\r`` and tab-only lines, which ``trim()`` would NOT
     catch since it strips spaces only) are exempt: deduping them would
@@ -1490,7 +1474,7 @@ def drop_repeated_lines(
     )
     digest = F.md5(F.trim(F.col("_line")))
     exempt = (
-        F.length(F.regexp_replace("_line", r"[ \t\r\n\f\x0b]", "")) < min_chars
+        F.length(F.regexp_replace("_line", r"[ \t\r\n\f\x0b]", "")) < 1
     )
     keyed = lines.withColumn("_d", digest).withColumn("_ex", exempt)
     first = (
@@ -1708,7 +1692,6 @@ def ngram_containment_pairs(
     text_col: str,
     shingle_n: int = 5,
     min_containment_ppm: int = 800_000,
-    max_shingle_df: int | None = 1000,
 ) -> DataFrame:
     """EXACT Broder containment pairs via the same inverted-index
     self-join as :func:`ngram_jaccard_pairs` — the ASYMMETRIC near-dup
@@ -1721,7 +1704,8 @@ def ngram_containment_pairs(
 
     Both directions are reported per candidate pair (id_a < id_b) and
     the pair is kept when EITHER reaches ``min_containment_ppm``.
-    Shares the df-cap contract of ngram_jaccard_pairs (hot shingles
+    Shares the df-cap contract of ngram_jaccard_pairs at a cap of 1000
+    (hot shingles
     leave the intersection index, set sizes stay exact, scores become
     lower bounds above the cap).  Output is ALL-INTEGER
     (``c * 1_000_000 div n``), so an oracle matches bit-for-bit — no
@@ -1736,15 +1720,13 @@ def ngram_containment_pairs(
     sh = distinct_shingles(df, id_col, text_col, shingle_n)
     sizes = sh.groupBy("_id").agg(F.count("*").alias("_n"))
 
-    idx = sh
-    if max_shingle_df is not None:
-        cold = (
-            sh.groupBy("_sh")
-            .agg(F.count("*").alias("_df"))
-            .where(F.col("_df") <= max_shingle_df)
-            .select("_sh")
-        )
-        idx = sh.join(cold, "_sh")
+    cold = (
+        sh.groupBy("_sh")
+        .agg(F.count("*").alias("_df"))
+        .where(F.col("_df") <= 1000)
+        .select("_sh")
+    )
+    idx = sh.join(cold, "_sh")
 
     a = idx.alias("a")
     b = idx.alias("b")

@@ -22,14 +22,12 @@ from aws_logs_to_parquet_converter_spark.operators.cache import owned, persist, 
 
 def pagerank(
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
     n_iters: int = 10,
     damping: float = 0.85,
     checkpoint_every: int = 4,
 ) -> DataFrame:
     """PageRank (Page, Brin, Motwani & Winograd 1999) over a directed
-    edge list, dangling-aware:
+    (src, dst) edge list, dangling-aware:
 
         rank_{t+1}(v) = (1-d)/N
                       + d * (sum_{u->v} rank_t(u) / outdeg(u)
@@ -55,11 +53,7 @@ def pagerank(
     # persist them for the loop, drop them once the final ranks are
     # checkpointed (the connected_components idiom).
     with owned() as held:
-        e = persist(
-            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-            .distinct(),
-            held,
-        )
+        e = persist(edges.select("src", "dst").distinct(), held)
         nodes = persist(  # every iteration re-reads the node set
             e.select(F.col("src").alias("node"))
             .union(e.select(F.col("dst").alias("node")))

@@ -192,7 +192,6 @@ def hist_rolling_quantiles(
     slice_col: str,
     window_slices: int,
     q_milli: list[int],
-    precision_bits: int = 5,
 ) -> DataFrame:
     """TRAILING-window quantiles from segments: for every slice s
     PRESENT in the data, the quantiles of the merged window
@@ -208,7 +207,6 @@ def hist_rolling_quantiles(
     (group, slice) set, and the rank selection runs per (group,
     anchor) over the ≤ ~1,920-bucket bounded cumulative.
     ``slice_col`` must be integral (epoch weeks/days)."""
-    _check_precision(precision_bits)
     if window_slices < 1:
         raise ValueError(
             f"hist_rolling_quantiles: window_slices must be >= 1, "
@@ -234,6 +232,4 @@ def hist_rolling_quantiles(
     for c in group_cols:
         cond = cond & F.col(c).eqNullSafe(F.col(f"_a_{c}"))
     rolled = serve.join(anchors, cond, "left_semi")
-    return hist_quantiles(
-        rolled, [*group_cols, "_anchor"], q_milli, precision_bits
-    ).withColumnRenamed("_anchor", slice_col)
+    return hist_quantiles(rolled, [*group_cols, "_anchor"], q_milli).withColumnRenamed("_anchor", slice_col)

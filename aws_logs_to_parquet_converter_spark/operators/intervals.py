@@ -580,7 +580,6 @@ def interval_intersect(
     start_col: str,
     end_col: str,
     bucket_width: int = 3_600_000_000,
-    max_span_buckets: int = 4096,
 ) -> DataFrame:
     """Per-group INTERSECTION of two interval sets — the time covered
     by BOTH ``a`` and ``b`` (co-availability, overlap of uptime with
@@ -613,7 +612,6 @@ def interval_intersect(
         "_be",
         keys=["_g"],
         bucket_width=bucket_width,
-        max_span_buckets=max_span_buckets,
     )
     return pairs.select(
         *[F.col(f"_g.{c}").alias(c) for c in group_cols],

@@ -218,9 +218,9 @@ def ntile_from_rank(rank: Column, n: Column, k: int) -> Column:
     )
 
 
-def cume_dist_from_rank(value_cols: list[str], rank_col: str = RANK_COL,
-                        count_col: str = COUNT_COL, *, descending_rank: bool = False) -> Column:
-    """``CUME_DIST() OVER (ORDER BY value_cols ASC)`` from a global rank.
+def cume_dist_from_rank(value_cols: list[str], *, descending_rank: bool = False) -> Column:
+    """``CUME_DIST() OVER (ORDER BY value_cols ASC)`` from a global rank
+    (the ``RANK_COL``/``COUNT_COL`` columns ``global_row_number`` adds).
 
     Pure COLUMN FACTORY (like ``ntile_from_rank``): binds to whatever
     DataFrame it is selected against — the old leading DataFrame
@@ -234,20 +234,19 @@ def cume_dist_from_rank(value_cols: list[str], rank_col: str = RANK_COL,
     hash-partitioned window, never a single-task funnel."""
     peers = Window.partitionBy(*value_cols)
     if descending_rank:
-        return (F.col(count_col) - F.min(rank_col).over(peers) + 1) / F.col(count_col)
-    return F.max(rank_col).over(peers) / F.col(count_col)
+        return (F.col(COUNT_COL) - F.min(RANK_COL).over(peers) + 1) / F.col(COUNT_COL)
+    return F.max(RANK_COL).over(peers) / F.col(COUNT_COL)
 
 
-def percent_rank_from_rank(value_cols: list[str], rank_col: str = RANK_COL,
-                           count_col: str = COUNT_COL) -> Column:
+def percent_rank_from_rank(value_cols: list[str]) -> Column:
     """``PERCENT_RANK() OVER (ORDER BY value_cols ASC)`` from an
     ASCENDING global rank: (min peer rank - 1) / (n - 1); 0.0 for a
     single-row input (SQL convention).  Pure column factory — see
     cume_dist_from_rank."""
     peers = Window.partitionBy(*value_cols)
-    n1 = F.col(count_col) - 1
+    n1 = F.col(COUNT_COL) - 1
     return F.when(n1 <= 0, F.lit(0.0)).otherwise(
-        (F.min(rank_col).over(peers) - 1) / n1
+        (F.min(RANK_COL).over(peers) - 1) / n1
     )
 
 
@@ -479,8 +478,6 @@ def mann_whitney_u(
     group_cols: list[str],
     side_col: str,
     value_col: str,
-    bucket_width: int | None = None,
-    target_buckets: int = 1024,
 ) -> DataFrame:
     """Mann–Whitney U SUFFICIENT STATISTICS per group over an INTEGRAL
     value — the exact nonparametric two-sample "is distribution A
@@ -513,7 +510,7 @@ def mann_whitney_u(
     strictly-below-v cumulative of B runs SEGMENTED exactly like
     ``exact_quantiles_disc`` (per-(group, value-bucket) local prefix
     window + a buckets-sized offset stitch; adaptive bucket width from
-    the observed range by default) — no per-group total order over
+    the observed range) — no per-group total order over
     distinct values, so a hot group cannot single-task funnel.  U then
     falls out of ONE aggregate: ``Σ_v ca(v)·(2·cumB(<v) + cb(v))``.
     Pair semantics without pair enumeration — the O(n_a·n_b) pair
@@ -540,10 +537,6 @@ def mann_whitney_u(
             f"{vtype.simpleString()!r}) — rank tests are exact on discrete "
             "domains; scale to cents/micros upstream"
         )
-    if bucket_width is not None and bucket_width < 1:
-        raise ValueError(
-            f"mann_whitney_u: bucket_width must be >= 1, got {bucket_width}"
-        )
     v = F.col(value_col).cast("long")
     side = F.col(side_col)
     counts = (
@@ -556,9 +549,7 @@ def mann_whitney_u(
     )
     # strictly-below-v cumulative of B through the shared segmented
     # machinery (value-bucket local exclusive prefix + offset stitch)
-    cum = _segmented_cum_lt(
-        counts, group_cols, bucket_width, target_buckets, "_cb", "_cumb_lt"
-    )
+    cum = _segmented_cum_lt(counts, group_cols, "_cb", "_cumb_lt")
     t_ = F.col("_ca") + F.col("_cb")
     return cum.groupBy(*group_cols).agg(
         F.sum("_ca").cast("long").alias("n_a"),
@@ -573,48 +564,35 @@ def mann_whitney_u(
 def _segmented_cum_lt(
     counts: DataFrame,
     group_cols: list[str],
-    bucket_width: int | None,
-    target_buckets: int,
     cnt_col: str,
     out_col: str,
 ) -> DataFrame:
     """Strictly-below-value cumulative of ``cnt_col`` per group over a
     (group…, _v, …) counts table — the shared segmented machinery of
     the rank tests: value-bucket local EXCLUSIVE prefix window + a
-    buckets-sized offset stitch, adaptive bucket width from the
-    observed range by default, every join NULL-SAFE on group keys.
-    Adds ``out_col``; preserves all input columns."""
-    from aws_logs_to_parquet_converter_spark.operators.intervals import (
-        exact_floordiv,
+    buckets-sized offset stitch, adaptive bucket width (about 1,024
+    buckets over the group's observed range), every join NULL-SAFE on
+    group keys.  Adds ``out_col``; preserves all input columns."""
+    stats = counts.groupBy(*group_cols).agg(
+        F.min("_v").alias("_vmin"), F.max("_v").alias("_vmax")
     )
-
-    if bucket_width is None:
-        stats = counts.groupBy(*group_cols).agg(
-            F.min("_v").alias("_vmin"), F.max("_v").alias("_vmax")
+    st = stats.select(
+        *[F.col(c).alias(f"_s_{c}") for c in group_cols], "_vmin", "_vmax"
+    )
+    cond = F.lit(True)
+    for c in group_cols:
+        cond = cond & F.col(c).eqNullSafe(F.col(f"_s_{c}"))
+    width = (
+        F.call_function("div", F.col("_vmax") - F.col("_vmin"), F.lit(1024))
+        + F.lit(1)
+    )
+    counts = (
+        counts.join(st, cond)
+        .withColumn(
+            "_bkt", F.call_function("div", F.col("_v") - F.col("_vmin"), width)
         )
-        st = stats.select(
-            *[F.col(c).alias(f"_s_{c}") for c in group_cols], "_vmin", "_vmax"
-        )
-        cond = F.lit(True)
-        for c in group_cols:
-            cond = cond & F.col(c).eqNullSafe(F.col(f"_s_{c}"))
-        width = (
-            F.call_function(
-                "div", F.col("_vmax") - F.col("_vmin"), F.lit(int(target_buckets))
-            )
-            + F.lit(1)
-        )
-        counts = (
-            counts.join(st, cond)
-            .withColumn(
-                "_bkt", F.call_function("div", F.col("_v") - F.col("_vmin"), width)
-            )
-            .drop("_vmin", "_vmax", *[f"_s_{c}" for c in group_cols])
-        )
-    else:
-        counts = counts.withColumn(
-            "_bkt", exact_floordiv(F.col("_v"), bucket_width)
-        )
+        .drop("_vmin", "_vmax", *[f"_s_{c}" for c in group_cols])
+    )
     w_local = (
         Window.partitionBy(*group_cols, "_bkt")
         .orderBy("_v")
@@ -651,8 +629,6 @@ def kruskal_rank_sums(
     group_cols: list[str],
     sample_col: str,
     value_col: str,
-    bucket_width: int | None = None,
-    target_buckets: int = 1024,
 ) -> DataFrame:
     """Kruskal–Wallis SUFFICIENT STATISTICS per group over an INTEGRAL
     value — the k-sample generalization of :func:`mann_whitney_u`
@@ -702,9 +678,7 @@ def kruskal_rank_sums(
         .agg(F.count("*").alias("_c"))
     )
     totals = per_sample.groupBy(*group_cols, "_v").agg(F.sum("_c").alias("_t"))
-    cum = _segmented_cum_lt(
-        totals, group_cols, bucket_width, target_buckets, "_t", "_cum_lt"
-    )
+    cum = _segmented_cum_lt(totals, group_cols, "_t", "_cum_lt")
     tkey = cum.select(
         *[F.col(c).alias(f"_t_{c}") for c in group_cols],
         F.col("_v").alias("_t_v"),

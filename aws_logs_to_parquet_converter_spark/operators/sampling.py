@@ -485,9 +485,8 @@ def assign_splits(
     key_col: str,
     splits: "dict[str, float] | None" = None,
     seed: int = 42,
-    label_col: str = "split",
 ) -> DataFrame:
-    """Deterministic train/val/test assignment: every row gets a split
+    """Deterministic train/val/test assignment: every row gets a ``split``
     label from the same md5 unit-interval trick as ``mix_sources``, so
     the partition is (a) stable under reshuffling/re-runs, (b) disjoint
     and exhaustive by construction, and (c) exactly reproducible by any
@@ -519,7 +518,7 @@ def assign_splits(
         case = F.when(unit < F.lit(thr), F.lit(lbl))
         expr = case if expr is None else expr.when(unit < F.lit(thr), F.lit(lbl))
     final = F.lit(labels[-1]) if expr is None else expr.otherwise(F.lit(labels[-1]))
-    return df.withColumn(label_col, final)
+    return df.withColumn("split", final)
 
 
 def write_training_shards(
@@ -529,7 +528,6 @@ def write_training_shards(
     key_col: str = "doc_id",
     seed: int = 42,
     size_col: "str | None" = None,
-    format: str = "parquet",
 ) -> "list[dict]":
     """Export a corpus as training shards: deterministic pseudo-random
     GLOBAL order, fixed shard count, manifest returned (and written as
@@ -554,17 +552,9 @@ def write_training_shards(
     of the just-written columns, and stays correct even if the input
     lineage is non-deterministic).  A NULL key raises at write time
     (F.raise_error in-plan, zero extra pass): NULL has no hash, so it
-    has no shard.
-
-    ``format``: 'parquet' (default — full type fidelity) or 'jsonl'
-    (one JSON object per line, the layout most training loaders
-    consume directly; same shard membership, same sorted order, same
-    manifest.  String/numeric/boolean/array columns round-trip; binary
-    and timestamp columns should stay in parquet)."""
+    has no shard."""
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    if format not in ("parquet", "jsonl"):
-        raise ValueError(f"format must be 'parquet' or 'jsonl', got {format!r}")
     key = F.when(
         F.col(key_col).isNull(),
         F.raise_error(F.lit(f"write_training_shards: NULL {key_col} has no shard")),
@@ -577,22 +567,21 @@ def write_training_shards(
              / F.lit(float(0x1_0000_0000)) * n_shards).cast("int"),
         ),
     )
-    writer = (
+    (
         keyed.repartitionByRange(n_shards, "shard")
         .sortWithinPartitions("shard", "_ord")
         .drop("_ord")
         .write.mode("overwrite")
         .partitionBy("shard")
+        .parquet(dest)
     )
-    writer.json(dest) if format == "jsonl" else writer.parquet(dest)
     spark = df.sparkSession
     # explicit schema: an EMPTY corpus (every gate dropped every doc)
     # writes only _SUCCESS, and schema inference would raise — the
     # manifest must instead report all-zero shards (round-6 advisor
     # finding).  The written layout's schema is the input minus the
     # order key (shard is a real column in it, partition-pruned back).
-    reader = spark.read.schema(keyed.drop("_ord").schema)
-    written = reader.json(dest) if format == "jsonl" else reader.parquet(dest)
+    written = spark.read.schema(keyed.drop("_ord").schema).parquet(dest)
     aggs = [F.count("*").alias("n_rows")]
     if size_col is not None:
         aggs.append(F.sum(size_col).alias("size"))
@@ -689,7 +678,6 @@ def leakage_safe_split(
     text_col: str,
     splits: "dict[str, float] | None" = None,
     seed: int = 42,
-    label_col: str = "split",
 ) -> DataFrame:
     """``assign_splits`` keyed by each row's duplicate-group CANONICAL
     id (min id over the normalized-content group) instead of its own
@@ -711,5 +699,5 @@ def leakage_safe_split(
     w = Window.partitionBy(F.xxhash64(normalized_text(F.col(text_col))))
     canon = F.min(id_col).over(w)
     return assign_splits(
-        df.withColumn("_canon", canon), "_canon", splits, seed, label_col
+        df.withColumn("_canon", canon), "_canon", splits, seed
     ).drop("_canon")

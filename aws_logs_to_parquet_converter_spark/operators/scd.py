@@ -103,8 +103,6 @@ def scd2_merge(
     key_cols: Sequence[str],
     tracked_cols: Sequence[str],
     ts_col: str = "ts",
-    valid_from_col: str = "valid_from",
-    valid_to_col: str = "valid_to",
 ) -> DataFrame:
     """SCD2 merge: evolve a type-2 history table from a change batch.
 
@@ -130,8 +128,8 @@ def scd2_merge(
         # the <=> conjunction below would degenerate to 'never changed'
         # and every update would silently no-op
         raise ValueError("scd2_merge: tracked_cols must be non-empty")
-    open_rows = history.where(F.col(valid_to_col).isNull())
-    closed_rows = history.where(F.col(valid_to_col).isNotNull())
+    open_rows = history.where(F.col("valid_to").isNull())
+    closed_rows = history.where(F.col("valid_to").isNotNull())
 
     u = _latest_per_key(
         updates.select(*key_cols, *tracked_cols, ts_col), key_cols, ts_col
@@ -140,13 +138,13 @@ def scd2_merge(
     n = u.alias("n")
     j = o.join(n, key_cols, "full_outer")
 
-    has_old = F.col(f"o.{valid_from_col}").isNotNull()
+    has_old = F.col("o.valid_from").isNotNull()
     has_new = F.col(f"n.{ts_col}").isNotNull()
     # null-safe attr comparison: any tracked column differing (<=> is
     # null-safe equality, so NULL -> value counts as a change)
     changed = ~F.expr(" AND ".join(f"o.{c} <=> n.{c}" for c in tracked_cols))
 
-    null_to = F.lit(None).cast(history.schema[valid_to_col].dataType)
+    null_to = F.lit(None).cast(history.schema["valid_to"].dataType)
     hist_t = {c: history.schema[c].dataType for c in tracked_cols}
 
     # BOTH merge outputs come from ONE pass over the join: the old
@@ -166,21 +164,21 @@ def scd2_merge(
     surv_struct = F.struct(
         *[F.col(c).alias(c) for c in key_cols],
         *[F.col(f"o.{c}").alias(c) for c in tracked_cols],
-        F.col(f"o.{valid_from_col}").alias(valid_from_col),
+        F.col("o.valid_from").alias("valid_from"),
         F.when(
             has_new & changed,
-            F.col(f"n.{ts_col}").cast(history.schema[valid_to_col].dataType),
+            F.col(f"n.{ts_col}").cast(history.schema["valid_to"].dataType),
         )
         .otherwise(null_to)
-        .alias(valid_to_col),
+        .alias("valid_to"),
     )
     ins_struct = F.struct(
         *[F.col(c).alias(c) for c in key_cols],
         *[F.col(f"n.{c}").cast(hist_t[c]).alias(c) for c in tracked_cols],
         F.col(f"n.{ts_col}")
-        .cast(history.schema[valid_from_col].dataType)
-        .alias(valid_from_col),
-        null_to.alias(valid_to_col),
+        .cast(history.schema["valid_from"].dataType)
+        .alias("valid_from"),
+        null_to.alias("valid_to"),
     )
     merged = j.select(
         F.explode(
@@ -192,5 +190,5 @@ def scd2_merge(
             )
         ).alias("_r")
     ).select("_r.*")
-    out_cols = key_cols + tracked_cols + [valid_from_col, valid_to_col]
+    out_cols = key_cols + tracked_cols + ["valid_from", "valid_to"]
     return closed_rows.select(*out_cols).unionByName(merged.select(*out_cols))

@@ -23,12 +23,12 @@ PII_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def scrub_pii(text: Column, replacement: str = "[PII]") -> Column:
-    """Redact every PII pattern class from ``text`` (chained codegen
-    regexp_replace — one pass per class)."""
+def scrub_pii(text: Column) -> Column:
+    """Replace every PII pattern class in ``text`` with ``[PII]``
+    (chained codegen regexp_replace — one pass per class)."""
     out = text
     for _, pat in PII_PATTERNS:
-        out = F.regexp_replace(out, pat, replacement)
+        out = F.regexp_replace(out, pat, "[PII]")
     return out
 
 
@@ -36,13 +36,12 @@ def k_anonymize(
     df: DataFrame,
     quasi_cols: "list[str]",
     k: int,
-    redaction: str = "*",
     broadcast_probe: "bool | str" = "auto",
     auto_broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """Suppression-based k-anonymity over the quasi-identifier columns:
     any combination carried by fewer than ``k`` rows has ALL its quasi
-    values replaced with ``redaction``, so no released combination
+    values replaced with ``*``, so no released combination
     (other than the suppression bucket itself, which aggregates every
     suppressed row and is exempt by the standard convention) isolates
     fewer than k individuals.  Sweeney's baseline generalization
@@ -111,7 +110,7 @@ def k_anonymize(
     # quasi value
     matched = F.col("_pass_n").isNotNull()
     out_cols = [
-        F.when(matched, F.col(c)).otherwise(F.lit(redaction)).alias(c)
+        F.when(matched, F.col(c)).otherwise(F.lit("*")).alias(c)
         if c in quasi_cols
         else F.col(c)
         for c in df.columns

@@ -90,11 +90,9 @@ def shingle_token_sets(
 def setsim_join_tokens(
     tok: DataFrame,
     threshold_milli: int,
-    id_col: str = "_id",
-    token_col: str = "_tk",
     handles: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """Core prefix-filtered join over DISTINCT (id, token) rows: all
+    """Core prefix-filtered join over DISTINCT (``_id``, ``_tk``) rows: all
     pairs (id_a < id_b) with |A∩B|/|A∪B| ≥ threshold_milli/1000, as
     integer-exact (id_a, id_b, inter, uni).  Input rows MUST be
     distinct per (id, token) — both tokenizers above guarantee it.
@@ -115,7 +113,7 @@ def setsim_join_tokens(
         global_row_number,
     )
 
-    t = tok.select(F.col(id_col).alias("_id"), F.col(token_col).alias("_tk"))
+    t = tok.select("_id", "_tk")
     # global document frequency per token: one map-side-combinable agg.
     # Persisted+materialized because TWO consumers follow in separate
     # passes (the rank's range-boundary sampling job executes its full

@@ -30,10 +30,10 @@ from pyspark.sql import functions as F
 
 
 def _warn_retired_dim(dim: int | None) -> None:
-    """The unroll tier is retired (r14); a caller still passing ``dim``
-    must hear that it no longer does anything — and that ANSI
-    length-mismatch errors became silent 0.0 similarity (r15 advisory:
-    no silent parameter black-holes)."""
+    """The unroll tier is retired (r14); a ``semantic_dedup`` caller
+    still passing ``dim`` must hear that it no longer does anything —
+    and that ANSI length-mismatch errors became silent 0.0 similarity
+    (r15 advisory: no silent parameter black-holes)."""
     if dim is not None:
         warnings.warn(
             "dim is ignored since r14 (the unrolled element_at "
@@ -46,26 +46,24 @@ def _warn_retired_dim(dim: int | None) -> None:
         )
 
 
-def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
+def _dot(a: Column, b: Column) -> Column:
     """Sum of elementwise products, accumulated in double — ALWAYS the
     zip_with/aggregate HOF fold (one fused interpreted pass over the
     two arrays), accumulating strictly left-to-right, bit-identical to
     the DuckDB oracle's list fold.
 
-    ``dim`` is accepted for API stability but IGNORED since r14: the
-    old "unroll element_at for dim <= 256" fast path measured 5–7×
-    SLOWER on joined-pair stages and ~1.6× slower on per-row norm
-    builds (PERF.md round-13/-14 A/Bs — the 64+-term generated method
+    No dimension-unrolled form since r14: the old "unroll element_at
+    for dim <= 256" fast path measured 5–7× SLOWER on joined-pair
+    stages and ~1.6× slower on per-row norm builds (PERF.md round-13/-14 A/Bs — the 64+-term generated method
     exceeds codegen limits and evaluates per element, while the fold
     is one fused pass).  Behavior note from the retirement: under ANSI
-    the unrolled ``element_at(v, i)`` THREW on a shorter-than-``dim``
+    the unrolled ``element_at(v, i)`` THREW on a shorter-than-dim
     vector, whereas the fold yields NULL for mismatched lengths
     (``zip_with`` NULL-pads the shorter side and the NULL product
     propagates through the sum) — :func:`cosine` then pins that to
     0.0 via its coalesce guard.  Callers wanting strict length
     enforcement validate upstream.
     """
-    _warn_retired_dim(dim)
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -73,11 +71,11 @@ def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
-def _norm(a: Column, dim: int | None = None) -> Column:
-    return F.sqrt(_dot(a, a, dim))
+def _norm(a: Column) -> Column:
+    return F.sqrt(_dot(a, a))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity with the zero-norm guard: under ANSI mode
     (this engine's default) a zero divisor THROWS DIVIDE_BY_ZERO and
     kills the task — one failed/padded all-zero embedding would abort
@@ -87,7 +85,7 @@ def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
     0.0."""
     return F.coalesce(
         F.nanvl(
-            F.try_divide(_dot(a, b, dim), _norm(a, dim) * _norm(b, dim)),
+            F.try_divide(_dot(a, b), _norm(a) * _norm(b)),
             F.lit(0.0),
         ),
         F.lit(0.0),
@@ -171,7 +169,7 @@ def _cosine_scored_pairs(
 
 
 def hyperplane_signatures(
-    vec_col: str, dim: int, n_planes: int = 16, seed: int = 42
+    vec_col: str, dim: int, n_planes: int = 16
 ) -> Column:
     """Random-hyperplane (SRP) LSH bit signature as a bigint column
     EXPRESSION — a pure column factory (it binds to whatever DataFrame
@@ -183,13 +181,13 @@ def hyperplane_signatures(
     OR-collide with bit 0, corrupting every hamming distance."""
     if not 1 <= n_planes <= 63:
         raise ValueError(f"n_planes must be in [1, 63], got {n_planes}")
-    rng = random.Random(seed)
+    rng = random.Random(42)
     planes = [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
     bits = []
     for i, plane in enumerate(planes):
         # fold, not unroll: n_planes * dim unrolled terms would swamp the
         # analyzer/codegen (signatures run once per row, not per pair)
-        proj = _dot(F.col(vec_col), F.array(*[F.lit(x) for x in plane]), None)
+        proj = _dot(F.col(vec_col), F.array(*[F.lit(x) for x in plane]))
         bits.append(F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long")))
     sig = bits[0]
     for b in bits[1:]:
@@ -287,8 +285,6 @@ def cosine_topk_ivf(
     k: int = 5,
     n_cells: int = 16,
     nprobe: int = 4,
-    sample_n: int = 2048,
-    seed: int = 42,
     iters: int = 5,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
@@ -312,8 +308,7 @@ def cosine_topk_ivf(
     a subset of the exact result, recall grows with nprobe.
     """
     cents = kmeans_cell_centroids(
-        corpus, id_col, vec_col, n_cells, sample_n, iters=iters, seed=seed,
-        hash_fn=hash_fn,
+        corpus, id_col, vec_col, n_cells, iters=iters, hash_fn=hash_fn
     )
     # NULL embeddings can't be assigned or scored: exclude them from
     # the candidate path (semantic_dedup applies the same rule)
@@ -334,7 +329,7 @@ def cosine_topk_ivf(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("_qv"), F.col("_cv"), None), 4).alias("sim"),
+            F.round(cosine(F.col("_qv"), F.col("_cv")), 4).alias("sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
@@ -346,9 +341,7 @@ def prototypicality_scores(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_cells: int = 16,
-    sample_n: int = 2048,
     iters: int = 5,
-    seed: int = 42,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Cluster-distance data-pruning scores (Sorscher 2022, "Beyond
@@ -374,8 +367,7 @@ def prototypicality_scores(
     ``kmeans_cell_centroids``)."""
     spark = corpus.sparkSession
     cents = kmeans_cell_centroids(
-        corpus, id_col, vec_col, n_cells, sample_n, iters=iters, seed=seed,
-        hash_fn=hash_fn,
+        corpus, id_col, vec_col, n_cells, iters=iters, hash_fn=hash_fn
     )
     corpus = corpus.where(F.col(vec_col).isNotNull())
     assigned = fan_out(corpus, id_col).select(
@@ -390,7 +382,7 @@ def prototypicality_scores(
     scored = assigned.join(F.broadcast(cent_df), "cell").select(
         "_id",
         "cell",
-        F.round(cosine(F.col("_v"), F.col("_cent"), None), 4).alias("proto_sim"),
+        F.round(cosine(F.col("_v"), F.col("_cent")), 4).alias("proto_sim"),
     )
     w = Window.partitionBy("cell").orderBy(F.desc("proto_sim"), "_id")
     return scored.select(
@@ -519,9 +511,6 @@ def cosine_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.4,
-    dim: int | None = None,
-    n_blocks: int = 8,
-    seed: int = 42,
 ) -> DataFrame:
     """EXACT embedding-cosine near-duplicate pairs (sim >= threshold),
     candidate space generated by ``blocked_all_pairs`` so the plan is a
@@ -541,9 +530,9 @@ def cosine_neardup_pairs(
     base = corpus.select(
         F.col(id_col).alias("_nid"),
         F.col(vec_col).alias("_v"),
-        _norm(F.col(vec_col), dim).alias("_nrm"),
+        _norm(F.col(vec_col)).alias("_nrm"),
     )
-    pairs = blocked_all_pairs(base, "_nid", n_blocks, seed)
+    pairs = blocked_all_pairs(base, "_nid")
     # Per-pair dot uses the HOF fold, NOT the dim-unrolled form: the
     # r2-era measurement (unroll 16s vs fold 75s) has INVERTED on this
     # engine (Spark 4.1.2, single hoisted-norm fold per pair) — r13
@@ -553,7 +542,7 @@ def cosine_neardup_pairs(
     sim = F.coalesce(  # zero-norm guard (ANSI divide-by-zero): see cosine()
         F.nanvl(
             F.try_divide(
-                _dot(F.col("_v_l"), F.col("_v_r"), None),
+                _dot(F.col("_v_l"), F.col("_v_r")),
                 F.col("_nrm_l") * F.col("_nrm_r"),
             ),
             F.lit(0.0),
@@ -570,7 +559,6 @@ def semantic_dedup(
     threshold: float = 0.95,
     n_cells: "int | str" = 16,
     sample_n: int = 2048,
-    n_blocks: int = 4,
     seed: int = 42,
     dim: int | None = None,
     target_cell_size: int = 5000,
@@ -605,8 +593,8 @@ def semantic_dedup(
     one count() job to size the index.
 
     Shuffle story at 100 TB: one Arrow map-side assignment pass (no
-    shuffle), the block-pair exchange replicating each row ~n_blocks/2
-    times within its cell, and an 8-byte-id anti join.  Per-task
+    shuffle), the block-pair exchange (4 blocks) replicating each row
+    ~2 times within its cell, and an 8-byte-id anti join.  Per-task
     memory stays bounded even for a skewed giant cell because the
     block key composes with the cell key.  Returns the KEPT rows with
     the corpus's original columns.
@@ -615,6 +603,7 @@ def semantic_dedup(
     plan reads them, so they are released through ``handles``
     (``operators/cache.py``).
     """
+    _warn_retired_dim(dim)
     # NULL embeddings can't score against anything: exclude them from
     # the pair space entirely (the anti join then keeps them, matching
     # the exact mode) and from the k-means sample/assignment, where a
@@ -650,7 +639,7 @@ def semantic_dedup(
     base = fan_out(scorable, id_col).select(
         F.col(id_col).alias("_sid"),
         F.col(vec_col).alias("_v"),
-        _norm(F.col(vec_col), dim).alias("_nrm"),
+        _norm(F.col(vec_col)).alias("_nrm"),
         cell.alias("_cell"),
     )
     if n_cells > 1:
@@ -669,14 +658,14 @@ def semantic_dedup(
         # sig.count() finding, r15).  Pay the one Arrow pass in its own
         # clean stage; both join branches then read the cache.
         base.count()
-    pairs = blocked_all_pairs(base, "_sid", n_blocks, seed, key_cols=["_cell"])
+    pairs = blocked_all_pairs(base, "_sid", 4, seed, key_cols=["_cell"])
     # HOF fold, not the dim unroll — see cosine_neardup_pairs: the old
     # unroll-wins measurement inverted on this engine (r13 A/B: fold
     # 5-7x faster on the joined-pair stage, bit-identical results).
     sim = F.coalesce(  # zero-norm guard (ANSI divide-by-zero): see cosine()
         F.nanvl(
             F.try_divide(
-                _dot(F.col("_v_l"), F.col("_v_r"), None),
+                _dot(F.col("_v_l"), F.col("_v_r")),
                 F.col("_nrm_l") * F.col("_nrm_r"),
             ),
             F.lit(0.0),
@@ -700,7 +689,6 @@ def cosine_topk_lsh(
     k: int = 5,
     n_planes: int = 12,
     max_hamming: int = 2,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: candidates limited to corpus vectors whose
     hyperplane signature is within ``max_hamming`` bits of the query's,
@@ -713,12 +701,12 @@ def cosine_topk_lsh(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
-        hyperplane_signatures(vec_col, dim, n_planes, seed).alias("_qsig"),
+        hyperplane_signatures(vec_col, dim, n_planes).alias("_qsig"),
     )
     c = fan_out(corpus, id_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
-        hyperplane_signatures(vec_col, dim, n_planes, seed).alias("_csig"),
+        hyperplane_signatures(vec_col, dim, n_planes).alias("_csig"),
     )
     hamming = F.bit_count(F.col("_qsig").bitwiseXOR(F.col("_csig")))
     scored = (
@@ -1028,7 +1016,6 @@ def save_pq_index(
     seed: int = 42,
     hash_fn: str = "xxhash64",
     mode: str = "overwrite",
-    prune: bool = True,
 ) -> None:
     """Persist a PQ index: build once, query many — the amortized form
     of ``pq_topk`` (whose in-query encode re-runs per call).  At 100 TB
@@ -1044,9 +1031,6 @@ def save_pq_index(
     here because a crash mid-rebuild must never mix a new codebook with
     old codes (or vice versa): code arrays have the same length either
     way, so no validator could catch the mismatch after the fact.
-    ``prune=False`` defers the stale-version prune to a maintenance
-    window (``versioned.prune_stale_versions``) so concurrent
-    long-running probes of the old version keep their files.
 
     ``mode='append'`` admits new vectors ENCODED WITH THE EXISTING
     CODEBOOK (read back from the live version — append can never
@@ -1101,7 +1085,6 @@ def save_pq_index(
         values=(mm, kk, dsub, sample_n, iters, seed, hash_fn),
         ddl="m int, ks int, dsub int, sample_n int, iters int, seed long, "
         "hash_fn string",
-        prune=prune,
     )
 
 
@@ -1277,8 +1260,6 @@ def pq_topk_ivf(
     k: int = 5,
     n_cells: int = 16,
     nprobe: int = 4,
-    sample_n: int = 2048,
-    seed: int = 42,
 ) -> DataFrame:
     """IVFPQ (the standard composed ANN index, Jegou 2011 §V): IVF
     cells prune WHICH rows are scored, PQ codes shrink WHAT scoring
@@ -1296,7 +1277,7 @@ def pq_topk_ivf(
 
     spark = corpus.sparkSession
     m, ks, dsub = codebook.shape
-    cents = kmeans_cell_centroids(corpus, id_col, vec_col, n_cells, sample_n, seed=seed)
+    cents = kmeans_cell_centroids(corpus, id_col, vec_col, n_cells)
     corpus = corpus.where(F.col(vec_col).isNotNull())
     coded = pq_encode(
         fan_out(
@@ -1392,20 +1373,20 @@ def semantic_contamination(
         eval_set.where(F.col(vec_col).isNotNull()).select(
             F.col(id_col).alias("eval_id"),
             F.col(vec_col).alias("_ev"),
-            _norm(F.col(vec_col), None).alias("_ne"),
+            _norm(F.col(vec_col)).alias("_ne"),
         )
     )
     c = fan_out(
         corpus.where(F.col(vec_col).isNotNull()).select(
             F.col(id_col).alias("corpus_id"),
             F.col(vec_col).alias("_cv"),
-            _norm(F.col(vec_col), None).alias("_nc"),
+            _norm(F.col(vec_col)).alias("_nc"),
         ),
         "corpus_id",
     )
     sim = F.coalesce(
         F.nanvl(
-            F.try_divide(_dot(F.col("_cv"), F.col("_ev"), None), F.col("_nc") * F.col("_ne")),
+            F.try_divide(_dot(F.col("_cv"), F.col("_ev")), F.col("_nc") * F.col("_ne")),
             F.lit(0.0),
         ),
         F.lit(0.0),
@@ -1419,9 +1400,6 @@ def semantic_contamination(
 
 def rrf_fuse(
     rankings: list[DataFrame],
-    query_col: str = "query_id",
-    id_col: str = "doc_id",
-    rank_col: str = "rnk",
     k_const: int = 60,
     k: int = 10,
 ) -> DataFrame:
@@ -1432,7 +1410,7 @@ def rrf_fuse(
         rrf(q, d) = sum over systems s ranking d for q of
                     1 / (k_const + rank_s(q, d))
 
-    Each input frame must carry (query_col, id_col, rank_col); systems
+    Each input frame must carry (query_id, doc_id, rnk); systems
     that do not rank a document simply contribute nothing (union, not
     outer join).  Fusion depends only on RANK POSITIONS, never on the
     systems' incomparable raw scores — which is why it composes a
@@ -1444,36 +1422,34 @@ def rrf_fuse(
     <= 2 systems the double sum is a single commutative addition —
     summation-order-free, so the fused score is oracle-exact.
 
-    Returns (query_col, id_col, n_systems, rrf_score, rnk) for
+    Returns (query_id, doc_id, n_systems, rrf_score, rnk) for
     rnk <= k, ties broken by ascending document id.
     """
     if not rankings:
         raise ValueError("rrf_fuse needs at least one ranking")
     base = None
     for r in rankings:
-        sel = r.select(query_col, id_col, rank_col)
+        sel = r.select("query_id", "doc_id", "rnk")
         base = sel if base is None else base.unionByName(sel)
-    fused = base.groupBy(query_col, id_col).agg(
+    fused = base.groupBy("query_id", "doc_id").agg(
         F.count("*").alias("n_systems"),
-        F.sum(F.lit(1.0) / (F.lit(k_const) + F.col(rank_col))).alias("rrf_score"),
+        F.sum(F.lit(1.0) / (F.lit(k_const) + F.col("rnk"))).alias("rrf_score"),
     )
-    w = Window.partitionBy(query_col).orderBy(F.desc("rrf_score"), id_col)
-    return fused.select("*", F.row_number().over(w).alias(rank_col)).where(
-        F.col(rank_col) <= k
+    w = Window.partitionBy("query_id").orderBy(F.desc("rrf_score"), "doc_id")
+    return fused.select("*", F.row_number().over(w).alias("rnk")).where(
+        F.col("rnk") <= k
     )
 
 
 def retrieval_metrics(
     results: DataFrame,
     qrels: DataFrame,
-    query_col: str = "query_id",
-    id_col: str = "doc_id",
-    rank_col: str = "rnk",
     k: int = 10,
 ) -> DataFrame:
     """IR evaluation of per-query rankings against relevance judgments
     — the measurement half the retrieval family (bm25_topk,
-    cosine_topk, rrf_fuse) needs before anyone tunes it.  Per query in
+    cosine_topk, rrf_fuse) needs before anyone tunes it.  ``results``
+    carries (query_id, doc_id, rnk), ``qrels`` (query_id, doc_id).  Per query in
     ``qrels`` (binary relevance: a (query, doc) row means relevant):
 
       * ``recall_at_k`` — relevant docs retrieved in the top-k / n_rel;
@@ -1491,22 +1467,22 @@ def retrieval_metrics(
     touches the corpus.  Floats round to 4 (registry convention)."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    res = results.where(F.col(rank_col) <= k).select(query_col, id_col, rank_col)
-    rel = qrels.select(query_col, id_col).dropDuplicates()
-    nrel = rel.groupBy(query_col).agg(F.count("*").alias("n_rel"))
-    hits = res.join(rel, [query_col, id_col]).select(query_col, rank_col)
-    agg = hits.groupBy(query_col).agg(
+    res = results.where(F.col("rnk") <= k).select("query_id", "doc_id", "rnk")
+    rel = qrels.select("query_id", "doc_id").dropDuplicates()
+    nrel = rel.groupBy("query_id").agg(F.count("*").alias("n_rel"))
+    hits = res.join(rel, ["query_id", "doc_id"]).select("query_id", "rnk")
+    agg = hits.groupBy("query_id").agg(
         F.count("*").alias("_nh"),
-        F.min(rank_col).alias("_first"),
-        F.sum(F.lit(1.0) / F.log2(F.col(rank_col) + F.lit(1.0))).alias("_dcg"),
+        F.min("rnk").alias("_first"),
+        F.sum(F.lit(1.0) / F.log2(F.col("rnk") + F.lit(1.0))).alias("_dcg"),
     )
     idcg = F.aggregate(
         F.sequence(F.lit(1), F.least(F.col("n_rel"), F.lit(k))),
         F.lit(0.0),
         lambda a, i: a + F.lit(1.0) / F.log2(i.cast("double") + F.lit(1.0)),
     )
-    return nrel.join(agg, query_col, "left").select(
-        query_col,
+    return nrel.join(agg, "query_id", "left").select(
+        "query_id",
         "n_rel",
         F.coalesce(F.col("_nh"), F.lit(0)).cast("int").alias("n_hits"),
         F.round(
@@ -1527,7 +1503,6 @@ def cosine_topk_lsh_bucketed(
     n_planes: int = 12,
     bands: int = 3,
     probe_flips: bool = True,
-    seed: int = 42,
 ) -> DataFrame:
     """Bucketed multi-probe LSH top-k — the EQUI-JOIN form of
     ``cosine_topk_lsh`` for query sets too large to broadcast (that
@@ -1555,7 +1530,7 @@ def cosine_topk_lsh_bucketed(
         )
     w = n_planes // bands
     mask = (1 << w) - 1
-    sig = hyperplane_signatures(vec_col, dim, n_planes, seed)
+    sig = hyperplane_signatures(vec_col, dim, n_planes)
 
     def banded(df: DataFrame, out_id: str) -> DataFrame:
         b = df.select(F.col(id_col).alias(out_id), sig.alias("_sig"))
@@ -1620,20 +1595,21 @@ def gram_matrix(
     Integer vectors (e.g. :func:`quantize_int8` output) accumulate as
     EXACT int64 and emit a BIGINT ``g`` — the oracle-parity path and
     the reason PCA on quantized embeddings grades bit-for-bit where a
-    float gram would drift with summation order.  Float vectors
-    accumulate float64 and emit DOUBLE ``g``.  Upper triangle only
-    (i <= j, 0-based); mirror for the full matrix.
+    float gram would drift with summation order.  Any other element
+    type raises ``TypeError``.  Upper triangle only (i <= j, 0-based);
+    mirror for the full matrix.
 
     Returns (i, j, g).
     """
     from pyspark.sql import types as T
 
     elem = df.schema[vec_col].dataType.elementType
-    integral = isinstance(
-        elem, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    )
-    np_dtype = "int64" if integral else "float64"
-    sql_type = "long" if integral else "double"
+    if not isinstance(elem, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        raise TypeError(
+            f"gram_matrix: {vec_col!r} must be an array of integers (got "
+            f"array<{elem.simpleString()}>); quantize float vectors first "
+            "(quantize_int8)"
+        )
     vecs = df.select(F.col(vec_col).alias("qvec"))
 
     def _partials(batches):
@@ -1644,7 +1620,7 @@ def gram_matrix(
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.array(pdf["qvec"].tolist(), dtype=np_dtype)
+            x = np.array(pdf["qvec"].tolist(), dtype="int64")
             part = x.T @ x
             acc = part if acc is None else acc + part
         if acc is None:
@@ -1658,7 +1634,7 @@ def gram_matrix(
 
     import pandas as pd  # noqa: F401 (mapInPandas contract)
 
-    partials = vecs.mapInPandas(_partials, f"i int, j int, g {sql_type}")
+    partials = vecs.mapInPandas(_partials, "i int, j int, g long")
     return partials.groupBy("i", "j").agg(F.sum("g").alias("g"))
 
 

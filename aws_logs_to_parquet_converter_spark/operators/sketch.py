@@ -21,14 +21,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# xxhash64 seed of depth row 0 (row d hashes with _SEED + d): one value,
+# so every build, merge and probe agrees
+_SEED = 42
 
 
 def count_min_build(
-    df: DataFrame, key_col: str, depth: int = 4, width: int = 1024, seed: int = 42
+    df: DataFrame, key_col: str, depth: int = 4, width: int = 1024
 ) -> DataFrame:
     """Build the sketch over one key column: returns (d, bucket, cnt)
     with exactly one row per NON-EMPTY counter (absent = 0).  Merge two
-    sketches (same depth/width/seed) by unioning and summing cnt."""
+    sketches (same depth/width) by unioning and summing cnt."""
     rows = df.select(F.col(key_col).alias("_k"))
     # round-robin fan-out, NOT hash-partitioning on the key: the skewed
     # streams CMS targets have one value covering much of the input,
@@ -43,7 +46,7 @@ def count_min_build(
         rows = rows.repartition(spark_defpar)
     hashed = rows.select(
         *[
-            F.pmod(F.xxhash64("_k", F.lit(seed + d)), F.lit(width)).alias(f"_b{d}")
+            F.pmod(F.xxhash64("_k", F.lit(_SEED + d)), F.lit(width)).alias(f"_b{d}")
             for d in range(depth)
         ]
     )
@@ -64,7 +67,7 @@ def count_min_build(
 
 
 def count_min_estimate(
-    sketch: DataFrame, probes: DataFrame, key_col: str, depth: int = 4, width: int = 1024, seed: int = 42
+    sketch: DataFrame, probes: DataFrame, key_col: str, depth: int = 4, width: int = 1024
 ) -> DataFrame:
     """Estimated count per probe key: min over depth of the key's
     bucket counters (missing counter = 0).  The (tiny) probe set hashes
@@ -78,7 +81,7 @@ def count_min_estimate(
                 *[
                     F.struct(
                         F.lit(d).alias("d"),
-                        F.pmod(F.xxhash64("key", F.lit(seed + d)), F.lit(width)).alias("bucket"),
+                        F.pmod(F.xxhash64("key", F.lit(_SEED + d)), F.lit(width)).alias("bucket"),
                     )
                     for d in range(depth)
                 ]
@@ -97,7 +100,6 @@ def count_min_build_sliced(
     key_col: str,
     depth: int = 4,
     width: int = 1024,
-    seed: int = 42,
 ) -> DataFrame:
     """Per-slice CMS SEGMENTS: (slice…, d, bucket, cnt) — the
     frequency member of the repo's mergeable-MV family (bitmap =
@@ -127,7 +129,7 @@ def count_min_build_sliced(
                     F.struct(
                         F.lit(d).alias("d"),
                         F.pmod(
-                            F.xxhash64("_k", F.lit(seed + d)), F.lit(width)
+                            F.xxhash64("_k", F.lit(_SEED + d)), F.lit(width)
                         ).alias("bucket"),
                     )
                     for d in range(depth)
@@ -144,6 +146,6 @@ def count_min_merge(segments: DataFrame) -> DataFrame:
     """Merge CMS segments (drop the slice columns first, or filter to
     the slice range you want) into ONE sketch: (d, bucket, cnt) by
     summing counters — the additive property that makes the sketch a
-    sketch.  Segments must share depth/width/seed; estimates off the
+    sketch.  Segments must share depth/width; estimates off the
     merged sketch obey the summed-N error envelope."""
     return segments.groupBy("d", "bucket").agg(F.sum("cnt").alias("cnt"))

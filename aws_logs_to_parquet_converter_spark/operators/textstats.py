@@ -93,8 +93,8 @@ def bpe_token_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(BPE_TOKEN_PATTERN))
 
 
-def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
-    sw = F.array(*[F.lit(s) for s in (stopwords or EN_STOPWORDS)])
+def stopword_ratio(text: Column) -> Column:
+    sw = F.array(*[F.lit(s) for s in EN_STOPWORDS])
     toks = tokens(text)
     return F.when(F.size(toks) > 0, F.size(F.filter(toks, lambda tok: F.array_contains(sw, tok))) / F.size(toks)).otherwise(
         F.lit(0.0)
@@ -503,11 +503,7 @@ def bm25_topk(
     queries: DataFrame,
     id_col: str,
     text_col: str,
-    query_id_col: str = "query_id",
-    query_text_col: str = "query_text",
     k: int = 5,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 ranked retrieval (Robertson/Sparck Jones Okapi weighting,
     the Lucene-default positive idf variant): for each query return the
@@ -541,6 +537,7 @@ def bm25_topk(
     tradeoff as ``tfidf_top_terms``'s n_docs).  The final top-k is a
     window partitioned by query id.  Ties order by doc id.
 
+    ``queries`` carries (query_id, query_text); k1 = 1.2, b = 0.75.
     Returns (query_id, doc_id-named-as-id_col, matched_terms, score,
     rnk) for rnk <= k.  Queries whose terms never occur in the corpus
     produce no rows (no match = no score, the retrieval convention).
@@ -570,7 +567,7 @@ def bm25_topk(
         .select("_id", "_dl", F.explode("_arr").alias("_tok"))
     )
     dl_expr = F.size(arr_expr)
-    qterms = token_rows(queries, query_text_col, F.col(query_id_col).alias("query_id")).distinct()
+    qterms = token_rows(queries, "query_text", "query_id").distinct()
     qtoks = qterms.select("_tok").distinct()
     tf = (
         toks.join(F.broadcast(qtoks), "_tok")
@@ -590,6 +587,7 @@ def bm25_topk(
         F.lit(1.0)
         + (F.col("_n") - F.col("_df") + F.lit(0.5)) / (F.col("_df") + F.lit(0.5))
     )
+    k1, b = 1.2, 0.75  # the Lucene defaults
     tf_part = (
         F.col("_tf").cast("double")
         * F.lit(k1 + 1.0)

@@ -106,11 +106,9 @@ def canonicalize_url(url: Column) -> Column:
     ).otherwise(canon)
 
 
-def with_canonical_url(
-    df: DataFrame, url_col: str, out_col: str = "canon_url"
-) -> DataFrame:
-    """``df`` plus the canonical form of ``url_col``."""
-    return df.withColumn(out_col, canonicalize_url(F.col(url_col)))
+def with_canonical_url(df: DataFrame, url_col: str) -> DataFrame:
+    """``df`` plus ``canon_url``, the canonical form of ``url_col``."""
+    return df.withColumn("canon_url", canonicalize_url(F.col(url_col)))
 
 
 def url_keep_first(

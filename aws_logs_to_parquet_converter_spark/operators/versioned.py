@@ -36,9 +36,7 @@ prune runs right after the commit, so a reader whose plan already
 resolved the old version dir (dir resolution is eager at plan build,
 the parquet scan lazy at execution) can hit deleted files if a commit
 lands mid-job.  Readers that re-resolve through the pointer are always
-safe; long-running readers must be scheduled apart from commits, or
-the writer passes ``prune=False`` and calls ``prune_stale_versions``
-in a later maintenance window.
+safe; long-running readers must be scheduled apart from commits.
 """
 
 from __future__ import annotations
@@ -89,21 +87,18 @@ def commit(
     write: Callable[[str], None],
     values: Sequence = (),
     ddl: str = "",
-    prune: bool = True,
     extra_stale: "tuple[str, ...]" = (),
 ) -> str:
     """Commit a new version of the store at ``path``: ``write(vdir)``
     writes every data dir under the fresh version dir, then the params
     row ``(ver, *values)`` (schema ``version string`` plus ``ddl``)
-    flips readers onto it, then the prune (unless ``prune=False``)
-    drops superseded versions and ``extra_stale`` names.  Returns the
-    new version."""
+    flips readers onto it, then the prune drops superseded versions and
+    ``extra_stale`` names.  Returns the new version."""
     ver = uuid.uuid4().hex[:12]
     write(f"{path}/v-{ver}")
     schema = "version string" + (f", {ddl}" if ddl else "")
     write_params(spark, f"{path}/params", (ver, *values), schema)
-    if prune:
-        prune_stale_versions(spark, path, ver, extra_stale)
+    prune_stale_versions(spark, path, ver, extra_stale)
     return ver
 
 

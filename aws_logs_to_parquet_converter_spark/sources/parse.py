@@ -78,8 +78,9 @@ def _coerce(name: str, raw: Column) -> Column:
 
 
 @functools.lru_cache(maxsize=8)
-def _parser_columns(text_col: str, gateway) -> tuple:
-    """The parser's Column objects, built once per (input column, JVM).
+def _parser_columns(gateway) -> tuple:
+    """The parser's Column objects over the ``value`` column, built once
+    per JVM.
 
     Building them costs ~1,500-2,000 py4j round trips (each ``F.*``
     call, each ``cast`` of a Python DataType); applying prebuilt ones
@@ -89,7 +90,7 @@ def _parser_columns(text_col: str, gateway) -> tuple:
     session may set ``spark.sql.parser.escapedStringLiterals``, under
     which SQL string literals parse differently.
     """
-    line = F.col(text_col)
+    line = F.col("value")
     keep = F.trim(line) != ""
 
     # ONE regex execution: rewrite the line into SEP-delimited captured
@@ -115,28 +116,27 @@ def _parser_columns(text_col: str, gateway) -> tuple:
     return keep, fields, tuple(cols), tuple(casts)
 
 
-def parse_lines(df_text: DataFrame, text_col: str = "value") -> DataFrame:
+def parse_lines(df_text: DataFrame) -> DataFrame:
     """Parse raw log lines into the 19-column typed schema.
 
-    Input: a DataFrame with one string column of raw lines (shape of
-    ``spark.read.text``).  Output columns/types ==
+    Input: a DataFrame with one string column ``value`` of raw lines
+    (shape of ``spark.read.text``).  Output columns/types ==
     ``schema.S3_ACCESS_LOG_SCHEMA``; blank lines are skipped (the
     reference skips them at read time, compacter.py:164-167).
     """
-    keep, fields, cols, casts = _parser_columns(
-        text_col, df_text.sparkSession.sparkContext._gateway
-    )
+    keep, fields, cols, casts = _parser_columns(df_text.sparkSession.sparkContext._gateway)
     return df_text.where(keep).withColumn("_fields", fields).select(*cols).select(*casts)
 
 
-def with_dt(df: DataFrame, from_col: str = "request_time") -> DataFrame:
-    """Add the Hive-style string partition column ``dt`` (YYYY-MM-DD).
+def with_dt(df: DataFrame) -> DataFrame:
+    """Add the Hive-style string partition column ``dt`` (YYYY-MM-DD) of
+    ``request_time``.
 
     The reference encodes dt into the destination *path* per-day
     (compacter.py:246-251); deriving it as a real column lets one job
     ingest many days and still get partition pruning.
     """
-    return df.withColumn("dt", F.date_format(F.col(from_col), "yyyy-MM-dd"))
+    return df.withColumn("dt", F.date_format(F.col("request_time"), "yyyy-MM-dd"))
 
 
 def read_raw_logs(spark: SparkSession, paths: list[str] | str) -> DataFrame:

@@ -23,7 +23,7 @@ Honest caveats, stated up front:
     payloads essentially never do, and when one does the reader now
     RECOVERS it: ``Content-Length`` proves the repair (head + boundary
     + next row re-join when the byte count matches the declaration —
-    see ``read_warc_records(stitch=...)``).  Records the stitcher
+    see ``read_warc_records``).  Records the stitcher
     cannot prove (double-embedded boundary, corrupt declarations)
     still flag ``payload_length_ok = False`` for quarantine — the same
     dead-letter-not-silent-drop discipline as the log parser, never a
@@ -32,7 +32,7 @@ Honest caveats, stated up front:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 # Record boundary: blank line then the next record's version line.  The
@@ -56,8 +56,7 @@ def _detect_version(spark: SparkSession, path: str) -> str:
     transient read failure on a WARC/1.1 archive would pick the wrong
     lineSep, collapse each file into one mis-typed record, and the
     default record_types filter would then drop everything — data loss
-    with no flag).  Callers hitting a flaky filesystem can pin
-    ``version=`` explicitly.  Content-based fallbacks (no matching
+    with no flag).  Content-based fallbacks (no matching
     file; head that is not a WARC version line) return '1.0' with a
     loud warning instead, because there the scan itself will surface
     the real problem."""
@@ -121,7 +120,7 @@ def _detect_version(spark: SparkSession, path: str) -> str:
             # the corruption per record), do not abort the whole read
             warnings.warn(
                 f"warc version peek: {first} has an undecodable gzip "
-                "head; assuming WARC/1.0 (pin version= to override)"
+                "head; assuming WARC/1.0"
             )
             return "1.0"
     import re
@@ -130,7 +129,7 @@ def _detect_version(spark: SparkSession, path: str) -> str:
     if m is None:
         warnings.warn(
             f"warc version peek: {first} does not start with a WARC "
-            "version line; assuming WARC/1.0 (pin version= to override)"
+            "version line; assuming WARC/1.0"
         )
         return "1.0"
     return m.group(1).decode()
@@ -149,8 +148,6 @@ def read_warc_records(
     spark: SparkSession,
     path: str,
     record_types: "tuple[str, ...] | None" = ("response",),
-    version: "str | None" = None,
-    stitch: bool = True,
 ) -> DataFrame:
     """One row per WARC record: the typed header fields above, the raw
     header block, the payload, and ``payload_length_ok`` (whether the
@@ -165,12 +162,11 @@ def read_warc_records(
     and all projections are codegen expressions over the one text
     scan.
 
-    ``version`` pins the record-boundary version string; None (the
-    default) auto-detects it from the first matching file, so WARC/1.1
-    archives split correctly too.  Header field matching is
-    case-insensitive per the spec.
+    The record-boundary version string is auto-detected from the first
+    matching file, so WARC/1.1 archives split correctly too.  Header
+    field matching is case-insensitive per the spec.
 
-    ``stitch`` (default True) RECOVERS records whose payload embeds the
+    The reader RECOVERS records whose payload embeds the
     boundary string verbatim: such a payload mis-splits into a
     truncated head plus a headerless continuation row, and
     Content-Length proves the repair — when
@@ -180,12 +176,8 @@ def read_warc_records(
     flag-or-recover; only payloads embedding the boundary TWICE (or
     genuinely corrupt lengths) remain quarantined.  Cost: one
     per-file window (lead/lag over record order), i.e. a shuffle keyed
-    by file — for gzipped crawls each file is one task anyway.  Pass
-    ``stitch=False`` for the pure single-pass scan when payloads are
-    known boundary-free (e.g. already-validated archives)."""
-    if version is None:
-        version = _detect_version(spark, path)
-    sep = _record_sep(version)
+    by file — for gzipped crawls each file is one task anyway."""
+    sep = _record_sep(_detect_version(spark, path))
     raw = spark.read.option("lineSep", sep).text(path)
     # strip the file-leading version line the separator can't consume.
     # Keep file + in-file order: the stitcher must know physical
@@ -197,8 +189,6 @@ def read_warc_records(
         F.col("_metadata.file_path").alias("_file"),
         F.monotonically_increasing_id().alias("_mid"),
     )
-    if not stitch:
-        rec = rec.where(F.length("_rec") > 0)
     # header block = up to the first blank line; payload = the rest.
     # Pure Column API (no F.expr): Python string literals reach the JVM
     # as values, with no SQL string parsing in between.
@@ -237,67 +227,64 @@ def read_warc_records(
     cols.append(decl.alias("_decl"))
     cols.append(F.col("_rec").alias("_raw_rec"))
     parsed = rec.select("_file", "_mid", *cols)
-    if stitch:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("_file").orderBy("_mid")
-        sep_len = len(sep.encode())
-        # under-length head: the declaration says bytes are missing —
-        # the mis-split signature (payload embedded the separator, so
-        # its tail became the NEXT row).  Two reconstruction shapes:
-        #   * the head row HAS a header-blank (its raw payload is the
-        #     piece before the embedded separator): the payload is
-        #     head + separator + next row;
-        #   * the head row has NO header-blank at all — the payload
-        #     BEGAN with 'WARC/x.y\r\n', so the separator match ate
-        #     the true header-blank plus that prefix: the payload is
-        #     separator-minus-its-leading-CRLFCRLF + next row.
-        has_blank = F.instr("_raw_rec", "\r\n\r\n") > 0
-        under = F.col("_decl").isNotNull() & (
-            F.octet_length("_rp") < F.col("_decl")
+    w = Window.partitionBy("_file").orderBy("_mid")
+    sep_len = len(sep.encode())
+    # under-length head: the declaration says bytes are missing —
+    # the mis-split signature (payload embedded the separator, so
+    # its tail became the NEXT row).  Two reconstruction shapes:
+    #   * the head row HAS a header-blank (its raw payload is the
+    #     piece before the embedded separator): the payload is
+    #     head + separator + next row;
+    #   * the head row has NO header-blank at all — the payload
+    #     BEGAN with 'WARC/x.y\r\n', so the separator match ate
+    #     the true header-blank plus that prefix: the payload is
+    #     separator-minus-its-leading-CRLFCRLF + next row.
+    has_blank = F.instr("_raw_rec", "\r\n\r\n") > 0
+    under = F.col("_decl").isNotNull() & (
+        F.octet_length("_rp") < F.col("_decl")
+    )
+    nxt = F.coalesce(F.lead("_raw_rec").over(w), F.lit(""))
+    mend_prefix = F.when(
+        has_blank, F.concat("_rp", F.lit(sep))
+    ).otherwise(F.lit(sep[4:]))
+    # byte count the stitch contributes BEFORE the next row's bytes
+    # (needed again from the continuation row's perspective below)
+    base_len = F.when(
+        has_blank, F.octet_length("_rp") + F.lit(sep_len)
+    ).otherwise(F.lit(sep_len - 4))
+    mended = F.concat(mend_prefix, nxt)
+    mended_sp = F.regexp_replace(mended, r"(?s)\r\n\r\n\Z", "")
+    parsed = parsed.withColumn("_under", under).withColumn(
+        "_mend",
+        F.when(under & (F.octet_length(mended) == F.col("_decl")), mended).when(
+            under & (F.octet_length(mended_sp) == F.col("_decl")), mended_sp
+        ),
+    )
+    # a row is a CONSUMED continuation iff the previous row was
+    # under-length and the stitch using THIS row's bytes satisfied
+    # the previous row's declaration (mirror of the _mend success
+    # conditions, evaluated from the next row's perspective)
+    prev_under = F.lag("_under").over(w)
+    prev_decl = F.lag("_decl").over(w)
+    prev_base = F.lag(base_len).over(w)
+    own_len = F.octet_length("_raw_rec")
+    own_sp_len = F.octet_length(
+        F.regexp_replace("_raw_rec", r"(?s)\r\n\r\n\Z", "")
+    )
+    consumed = (
+        F.coalesce(prev_under, F.lit(False))
+        & (
+            (prev_base + own_len == prev_decl)
+            | (prev_base + own_sp_len == prev_decl)
         )
-        nxt = F.coalesce(F.lead("_raw_rec").over(w), F.lit(""))
-        mend_prefix = F.when(
-            has_blank, F.concat("_rp", F.lit(sep))
-        ).otherwise(F.lit(sep[4:]))
-        # byte count the stitch contributes BEFORE the next row's bytes
-        # (needed again from the continuation row's perspective below)
-        base_len = F.when(
-            has_blank, F.octet_length("_rp") + F.lit(sep_len)
-        ).otherwise(F.lit(sep_len - 4))
-        mended = F.concat(mend_prefix, nxt)
-        mended_sp = F.regexp_replace(mended, r"(?s)\r\n\r\n\Z", "")
-        parsed = parsed.withColumn("_under", under).withColumn(
-            "_mend",
-            F.when(under & (F.octet_length(mended) == F.col("_decl")), mended).when(
-                under & (F.octet_length(mended_sp) == F.col("_decl")), mended_sp
-            ),
-        )
-        # a row is a CONSUMED continuation iff the previous row was
-        # under-length and the stitch using THIS row's bytes satisfied
-        # the previous row's declaration (mirror of the _mend success
-        # conditions, evaluated from the next row's perspective)
-        prev_under = F.lag("_under").over(w)
-        prev_decl = F.lag("_decl").over(w)
-        prev_base = F.lag(base_len).over(w)
-        own_len = F.octet_length("_raw_rec")
-        own_sp_len = F.octet_length(
-            F.regexp_replace("_raw_rec", r"(?s)\r\n\r\n\Z", "")
-        )
-        consumed = (
-            F.coalesce(prev_under, F.lit(False))
-            & (
-                (prev_base + own_len == prev_decl)
-                | (prev_base + own_sp_len == prev_decl)
-            )
-        )
-        parsed = (
-            parsed.withColumn("_consumed", consumed)
-            .where(~F.col("_consumed"))
-            .withColumn("_rp", F.coalesce("_mend", "_rp"))
-            .withColumn("_sp", F.coalesce("_mend", "_sp"))
-            .drop("_under", "_mend", "_consumed")
-        )
+    )
+    parsed = (
+        parsed.withColumn("_consumed", consumed)
+        .where(~F.col("_consumed"))
+        .withColumn("_rp", F.coalesce("_mend", "_rp"))
+        .withColumn("_sp", F.coalesce("_mend", "_sp"))
+        .drop("_under", "_mend", "_consumed")
+    )
     parsed = parsed.where(F.length("_raw_rec") > 0)
     out = (
         parsed.withColumn(
@@ -327,25 +314,21 @@ def read_warc_records(
     return out
 
 
-def warc_to_documents(
-    records: DataFrame, id_col: str = "doc_id", strip_http: bool = True
-) -> DataFrame:
+def warc_to_documents(records: DataFrame) -> DataFrame:
     """Project WARC response records onto the documents-table shape
     (doc_id, text, lang, source, n_chars) so every downstream corpus
     operator (dedup, quality, perplexity, sampling) applies unchanged.
 
-    ``strip_http`` drops the HTTP response envelope (status line +
-    headers) that ``application/http`` payloads carry before the body.
+    The text drops the HTTP response envelope (status line + headers)
+    that ``application/http`` payloads carry before the body.
     doc_id is the xxhash64 of the record id — deterministic, collision
     odds the same 2^-64 class the digest operators already accept;
     lang is left NULL for the language-ID operator to fill."""
-    body = F.col("payload")
-    if strip_http:
-        blank = F.instr(F.col("payload"), "\r\n\r\n")
-        body = F.when(
-            F.col("content_type").startswith("application/http") & (blank > 0),
-            F.col("payload").substr(blank + 4, F.length("payload")),
-        ).otherwise(F.col("payload"))
+    blank = F.instr(F.col("payload"), "\r\n\r\n")
+    body = F.when(
+        F.col("content_type").startswith("application/http") & (blank > 0),
+        F.col("payload").substr(blank + 4, F.length("payload")),
+    ).otherwise(F.col("payload"))
     # a record MISSING WARC-Record-ID must not hash NULL: Spark's hash
     # functions return the constant seed for NULL, which would give
     # every id-less record the SAME doc_id and downstream min-id dedup
@@ -356,7 +339,7 @@ def warc_to_documents(
         F.concat(F.lit("<no-record-id>:"), F.md5(F.coalesce("payload", F.lit("")))),
     )
     return records.select(
-        F.xxhash64(rid).alias(id_col),
+        F.xxhash64(rid).alias("doc_id"),
         body.alias("text"),
         F.lit(None).cast("string").alias("lang"),
         F.col("target_uri").alias("source"),

@@ -40,7 +40,6 @@ def apply_bitmap_batch(
     mv_path: str,
     group_cols: Sequence[str],
     id_col: str,
-    prune: bool = True,
 ) -> None:
     """Fold ONE batch of raw (group..., id) rows into the segment MV:
     build the batch's own segments, ``bit_or`` them with the live
@@ -54,10 +53,7 @@ def apply_bitmap_batch(
         segs = bitmap_merge(
             versioned.read(spark, mv_path).unionByName(segs), group_cols
         )
-    versioned.commit(
-        spark, mv_path, lambda vdir: segs.write.parquet(f"{vdir}/data"),
-        prune=prune,
-    )
+    versioned.commit(spark, mv_path, lambda vdir: segs.write.parquet(f"{vdir}/data"))
 
 
 def stream_bitmap_distinct(
@@ -66,18 +62,15 @@ def stream_bitmap_distinct(
     group_cols: Sequence[str],
     id_col: str,
     checkpoint: str,
-    trigger: dict | None = None,
-    prune: bool = True,
 ) -> StreamingQuery:
     """Maintain the exact-distinct segment MV at ``mv_path`` from a
     streaming frame of raw (group..., id) rows.  Query the result with
     ``versioned.read`` + ``bitmap_cardinality``."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_bitmap_batch(batch_df, mv_path, group_cols, id_col, prune=prune)
+        apply_bitmap_batch(batch_df, mv_path, group_cols, id_col)
 
     writer = events.writeStream.foreachBatch(apply_batch).option(
         "checkpointLocation", checkpoint
     )
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -44,8 +44,6 @@ def apply_cms_batch(
     key_col: str,
     depth: int = 4,
     width: int = 1024,
-    seed: int = 42,
-    prune: bool = True,
 ) -> None:
     """Fold ONE batch of raw (slice…, key) rows into the segment MV:
     build the batch's own segments, SUM them with the live state,
@@ -64,7 +62,7 @@ def apply_cms_batch(
     if params is not None and batch_id <= params["last_batch_id"]:
         return
     segs = count_min_build_sliced(
-        batch_df, slice_cols, key_col, depth=depth, width=width, seed=seed
+        batch_df, slice_cols, key_col, depth=depth, width=width
     )
     if params is not None:
         live = versioned.live_dir(mv_path, params)
@@ -79,7 +77,7 @@ def apply_cms_batch(
     # pointer write replays the batch against the same previous state
     versioned.commit(
         spark, mv_path, lambda vdir: segs.write.parquet(f"{vdir}/data"),
-        values=(int(batch_id),), ddl="last_batch_id long", prune=prune,
+        values=(int(batch_id),), ddl="last_batch_id long",
     )
 
 
@@ -91,9 +89,6 @@ def stream_cms_segments(
     checkpoint: str,
     depth: int = 4,
     width: int = 1024,
-    seed: int = 42,
-    trigger: dict | None = None,
-    prune: bool = True,
 ) -> StreamingQuery:
     """Maintain the sliced CMS segment MV at ``mv_path`` from a
     streaming frame of raw (slice…, key) rows.  Query the result with
@@ -108,12 +103,9 @@ def stream_cms_segments(
             key_col,
             depth=depth,
             width=width,
-            seed=seed,
-            prune=prune,
         )
 
     writer = events.writeStream.foreachBatch(apply_batch).option(
         "checkpointLocation", checkpoint
     )
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

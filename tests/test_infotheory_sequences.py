@@ -611,6 +611,18 @@ def test_gram_matrix_partition_invariant(spark):
     assert one == many
 
 
+def test_gram_matrix_rejects_float_vectors(spark):
+    import pytest
+
+    from aws_logs_to_parquet_converter_spark.operators.similarity import (
+        gram_matrix,
+    )
+
+    df = spark.createDataFrame([([1.5, 2.0],)], "emb array<double>")
+    with pytest.raises(TypeError, match="'emb'"):
+        gram_matrix(df, "emb")
+
+
 def test_project_vectors_is_matmul(spark):
     import numpy as np
     from aws_logs_to_parquet_converter_spark.operators.similarity import (

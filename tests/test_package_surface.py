@@ -10,6 +10,10 @@ code then reads, or ``m.name`` on an imported module.  Docstrings and
 comments do not count.  ``testing.py`` is exempt as a module: it is test
 support that ``bench.py`` and perfbench also import.
 
+Options: every defaulted parameter of a top-level package function is
+passed by some call (in the package, the entry files or the tests), or
+has a stated reason to stay; a value no caller sets is a constant.
+
 Pure ``ast``; no Spark session.
 """
 
@@ -47,6 +51,8 @@ ALLOWED = {
 class _Module:
     def __init__(self, name: str, tree: ast.Module):
         self.name = name
+        self.tree = tree
+        self.calls: list[ast.Call] = []
         # top-level name -> the statements that define it
         self.defs: dict[str, list[ast.stmt]] = {}
         self.roots: list[ast.stmt] = []
@@ -82,6 +88,8 @@ class _Module:
             elif isinstance(node, ast.ImportFrom) and node.module:
                 for a in node.names:
                     self._bind(a.asname or a.name, ("from", node.module, a.name))
+            elif isinstance(node, ast.Call):
+                self.calls.append(node)
         return names, chains
 
     def _bind(self, local: str, target: tuple[str, ...]) -> None:
@@ -212,3 +220,92 @@ def test_allowlist_is_needed():
     unreached = set(unreached_names())
     stale = sorted(set(ALLOWED) - unreached)
     assert not stale, f"allowlisted names a program already reaches, or gone: {stale}"
+
+
+# Defaulted parameters no call sets, each with the reason it stays.
+_ORACLE = "reference implementation that restates its registry builder's parameters"
+ALLOWED_OPTIONS = {
+    f"{PKG}.session.get_spark.master": "deployment setting: the cluster URL",
+    f"{PKG}.plans.extensions._lsh_oracle": _ORACLE,
+    f"{PKG}.plans.extensions._lsh_multiprobe_oracle": _ORACLE,
+    f"{PKG}.plans.extensions._classifier_oracle": _ORACLE,
+    f"{PKG}.plans.extensions._calibration_oracle": _ORACLE,
+}
+
+
+@functools.cache
+def _passed() -> dict[str, set]:
+    """Callee final name -> what its calls pass: keywords, positional
+    counts, and "*" for a call with ``*args`` or ``**kwargs``.  Calls are
+    read in the package, the entry files and ``tests/*.py``."""
+    calls = [c for m in _load_modules().values() for c in m.calls]
+    for path in sorted(REPO.glob("tests/*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        calls += [node for node in ast.walk(tree) if isinstance(node, ast.Call)]
+    passed: dict[str, set] = {}
+    for node in calls:
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+        if name is None:
+            continue
+        got = passed.setdefault(name, set())
+        if any(isinstance(a, ast.Starred) for a in node.args) or any(
+            k.arg is None for k in node.keywords
+        ):
+            got.add("*")
+        got.add(len(node.args))
+        got.update(k.arg for k in node.keywords)
+    return passed
+
+
+def unset_options(allowed=frozenset()) -> list[str]:
+    """Defaulted parameters of top-level package functions that no call passes.
+
+    A parameter is passed when some call whose callee's final name is the
+    function's name gives it by keyword or by position (``_passed``); a call
+    with ``*args`` or ``**kwargs`` passes every parameter.  An allowlisted
+    function name covers all its parameters.
+    """
+    passed = _passed()
+    unset = []
+    for m in _load_modules().values():
+        if m.name.startswith("<"):
+            continue
+        for stmt in m.tree.body:
+            if not isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            qual = f"{m.name}.{stmt.name}"
+            got = passed.get(stmt.name, set())
+            if qual in allowed or "*" in got:
+                continue
+            a = stmt.args
+            positional = a.posonlyargs + a.args
+            n_pos = max((g for g in got if isinstance(g, int)), default=0)
+            first = max(len(positional) - len(a.defaults), n_pos)
+            options = positional[first:] + [
+                arg for arg, default in zip(a.kwonlyargs, a.kw_defaults) if default is not None
+            ]
+            unset += [
+                f"{qual}.{arg.arg}"
+                for arg in options
+                if arg.arg not in got and f"{qual}.{arg.arg}" not in allowed
+            ]
+    return sorted(unset)
+
+
+def test_every_option_is_passed():
+    unset = unset_options(frozenset(ALLOWED_OPTIONS))
+    assert not unset, (
+        f"{len(unset)} defaulted parameters no call sets; make each the constant "
+        "it defaults to, or add a reason to ALLOWED_OPTIONS:\n  " + "\n  ".join(unset)
+    )
+
+
+def test_option_allowlist_is_needed():
+    unset = unset_options()
+    stale = sorted(
+        qual
+        for qual in ALLOWED_OPTIONS
+        if qual not in unset and not any(u.startswith(qual + ".") for u in unset)
+    )
+    assert not stale, f"allowlisted options a call already sets, or gone: {stale}"

@@ -1221,37 +1221,6 @@ def test_train_hashed_linear_deterministic_and_guards(spark):
         train_hashed_linear(df, "text", "label", iters=0)
 
 
-def test_write_training_shards_jsonl_format(spark, tmp_path):
-    """format='jsonl': same shard membership and manifest as parquet,
-    but each shard holds JSON-object-per-line files a training loader
-    reads directly."""
-    import glob
-    import json
-
-    from aws_logs_to_parquet_converter_spark.operators.sampling import (
-        write_training_shards,
-    )
-
-    rows = [(i, f"document number {i}", i * 3) for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, n_tok long")
-    pdest, jdest = str(tmp_path / "pq"), str(tmp_path / "jl")
-    mp = write_training_shards(df, pdest, n_shards=4, size_col="n_tok")
-    mj = write_training_shards(df, jdest, n_shards=4, size_col="n_tok", format="jsonl")
-    assert mp == mj  # identical membership, counts, and sizes
-    # raw files are honest JSONL: parse every line with the stdlib
-    seen = []
-    for f in glob.glob(f"{jdest}/shard=*/part-*.json"):
-        with open(f) as fh:
-            for line in fh:
-                seen.append(json.loads(line))
-    assert sorted(r["doc_id"] for r in seen) == list(range(40))
-    assert all(set(r) == {"doc_id", "text", "n_tok"} for r in seen)
-    import pytest
-
-    with pytest.raises(ValueError):
-        write_training_shards(df, str(tmp_path / "x"), format="csv")
-
-
 def test_weighted_sample_n1_matches_theoretical_distribution(spark):
     """For n=1 the A-Res winner is item argmin -ln(u_i)/w_i, which is
     distributed EXACTLY w_i / sum(w) (the algorithm's defining

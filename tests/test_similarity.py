@@ -256,7 +256,7 @@ def test_zero_norm_embedding_never_wins(spark):
     assert got[(0, 1)][0] == 1                    # the real neighbor wins
     assert got[(0, 2)] == (2, 0.0)                # zero vector scores 0.0, never NaN
 
-    pairs = sim.cosine_neardup_pairs(emb, "vec_id", "embedding", threshold=0.5, dim=4)
+    pairs = sim.cosine_neardup_pairs(emb, "vec_id", "embedding", threshold=0.5)
     pair_ids = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert (0, 2) not in pair_ids and (1, 2) not in pair_ids
     assert (0, 1) in pair_ids
@@ -807,27 +807,24 @@ def test_lsh_bucketed_multiprobe_recall_and_plan(spark, sf_dir):
 
 
 def test_retired_dim_param_warns(spark):
-    """r15 advisory: dim is retained-but-ignored since r14;
-    a caller passing it must get a DeprecationWarning (and the values
-    must be identical with and without it)."""
+    """r15 advisory: ``semantic_dedup``'s dim is retained-but-ignored
+    since r14; a caller passing it must get a DeprecationWarning (and
+    the kept rows must be identical with and without it)."""
     import warnings as _w
 
-    from pyspark.sql import functions as F
-
-    from aws_logs_to_parquet_converter_spark.operators.similarity import cosine
+    from aws_logs_to_parquet_converter_spark.operators.similarity import semantic_dedup
 
     df = spark.createDataFrame(
-        [([1.0, 2.0, 3.0], [1.0, 2.0, 3.0])], "a array<double>, b array<double>"
+        [(0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0, 3.0]), (2, [3.0, 0.0, 1.0])],
+        "vec_id long, embedding array<double>",
     )
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        expr_with = cosine(F.col("a"), F.col("b"), 3)
+        kept_with = semantic_dedup(df, threshold=0.99, n_cells=1, dim=3)
     assert any(issubclass(w.category, DeprecationWarning) for w in rec)
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        expr_without = cosine(F.col("a"), F.col("b"))
-    assert not rec
-    got = df.select(
-        expr_with.alias("w"), expr_without.alias("wo")
-    ).collect()[0]
-    assert got["w"] == got["wo"] == 1.0
+        kept_without = semantic_dedup(df, threshold=0.99, n_cells=1)
+    assert not any(issubclass(w.category, DeprecationWarning) for w in rec)
+    ids = [sorted(r.vec_id for r in k.collect()) for k in (kept_with, kept_without)]
+    assert ids[0] == ids[1] == [0, 2]

@@ -217,27 +217,6 @@ def test_cdc_apply_read_failure_aborts_not_resets(spark, tmp_path):
     assert vdirs == [vdir.name]
 
 
-def test_cdc_apply_prune_false_keeps_prior_version(spark, tmp_path):
-    from aws_logs_to_parquet_converter_spark.streaming.dimension import (
-        apply_cdc_batch,
-    )
-
-    dim = tmp_path / "dim"
-    b1 = spark.createDataFrame(
-        [(1, "A", "2024-01-01")], "k long, seg string, ts string"
-    )
-    b2 = spark.createDataFrame(
-        [(1, "A2", "2024-02-01")], "k long, seg string, ts string"
-    )
-    apply_cdc_batch(b1, str(dim), ["k"], ["seg"], "ts", prune=False)
-    apply_cdc_batch(b2, str(dim), ["k"], ["seg"], "ts", prune=False)
-    vdirs = [p.name for p in dim.iterdir() if p.name.startswith("v-")]
-    assert len(vdirs) == 2  # prior version survives for the maintenance window
-    # the live read still resolves through the pointer to the new merge
-    out = {(r.k, r.seg) for r in versioned.read(spark, str(dim)).collect()}
-    assert out == {(1, "A"), (1, "A2")}
-
-
 def test_write_params_bit_compatible_with_spark_writer(spark, tmp_path):
     # The driver-side pointer write (operators/versioned.write_params)
     # must be indistinguishable to every existing reader from the old

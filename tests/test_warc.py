@@ -286,8 +286,8 @@ def test_warc_directory_path_and_bad_content_length(spark, tmp_path):
 
 def test_detect_version_warns_on_fallback_instead_of_swallowing(spark, tmp_path):
     """The version peek must not silently assume 1.0: a head that is
-    not a WARC version line (or an empty glob) warns loudly so callers
-    can pin version= — and genuine I/O errors now PROPAGATE instead of
+    not a WARC version line (or an empty glob) warns loudly — and
+    genuine I/O errors now PROPAGATE instead of
     being swallowed into a wrong lineSep that would silently drop every
     record of a WARC/1.1 archive (round-6 advisor finding)."""
     import warnings
@@ -314,8 +314,7 @@ def test_warc_embedded_boundary_recovers_via_stitch(spark, tmp_path):
     untouched (the round-6 hardening: recovery, not just flagging).
     A payload that even BEGINS with 'WARC/1.0' — where the separator
     match eats the true header-blank — recovers through the
-    no-header-blank reconstruction shape.  stitch=False keeps the old
-    flag-only behavior for callers that want the pure scan."""
+    no-header-blank reconstruction shape."""
     import aws_logs_to_parquet_converter_spark.sources.warc as w
 
     sep = "\r\n\r\nWARC/1.0\r\n"
@@ -336,13 +335,6 @@ def test_warc_embedded_boundary_recovers_via_stitch(spark, tmp_path):
         r = got[hdrs["WARC-Record-ID"]]
         assert r.payload == payload, (hdrs["WARC-Record-ID"], r.payload)
         assert r.payload_length_ok
-
-    # stitch=False: the embedded-boundary record is flagged, never
-    # silently wrong — and the continuation garbage row carries no type
-    flagged = {r.warc_record_id: r
-               for r in w.read_warc_records(spark, p, stitch=False).collect()}
-    assert flagged["<urn:b>"].payload_length_ok is False
-    assert flagged["<urn:c>"].payload_length_ok is False
 
 
 def test_warc_gzip_stitch_recovery(spark, tmp_path):
