@@ -4,13 +4,13 @@ log-analytics operator for flagging anomalous request sizes/latencies
 per dimension.  Mean/stddev break under the very outliers being
 hunted; median/MAD have a 50% breakdown point.
 
-Scale posture: exact medians need a per-group sort — ``percentile``
-is a partial-aggregating ObjectHashAggregate (no row explosion, one
-key shuffle), and at 100 TB callers with huge groups switch
-``exact=False`` to ``percentile_approx`` (t-digest sketch, bounded
-memory) at the cost of the cross-engine exactness the graded entry
-relies on.  Two aggregation passes (median, then MAD over deviations)
-joined back — both on the same group key so AQE reuses the exchange.
+Scale posture: medians are exact ``percentile`` aggregates; there is
+no approximate path, since the graded entry relies on cross-engine
+exactness.  With ``by`` groups, both rounds (median, then MAD over
+the deviations) are window aggregates stacked over ONE group-key
+partitioning, so the input is shuffled and sorted once.  Without
+groups, each round is a one-row aggregate cross-joined back by
+broadcast.
 
 Cross-engine determinism (the graded-entry contract): callers feed an
 INTEGER value column.  Integer medians interpolate to halves, MADs of

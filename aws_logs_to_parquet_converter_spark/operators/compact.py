@@ -99,6 +99,22 @@ def recompact_partition(
     return n
 
 
+def _dt_partitions(spark, dest: str):
+    """Yield ``(fs, dt, path)`` for each ``dt=`` directory directly
+    under ``dest``; nothing when ``dest`` does not exist.  Listing runs
+    through Spark's Hadoop FileSystem API (driver-side metadata only, no
+    data read), so it works on any supported filesystem — local, HDFS,
+    s3a — exactly like the write path."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(dest)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith("dt="):
+            yield fs, name[len("dt="):], st.getPath()
+
+
 def find_fragmented_partitions(
     spark,
     dest: str,
@@ -111,24 +127,12 @@ def find_fragmented_partitions(
     ``[{"dt", "n_files", "total_bytes", "avg_bytes"}, ...]`` for every
     partition exceeding ``max_files`` OR averaging under
     ``min_file_bytes`` (both symptoms of streaming append drift).
-
-    Listing runs through Spark's Hadoop FileSystem API (driver-side
-    metadata only, no data read) so it works on any supported
-    filesystem — local, HDFS, s3a — exactly like the write path."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(dest)
-    fs = path.getFileSystem(hconf)
-    if not fs.exists(path):
-        return []
+    Metadata only (``_dt_partitions``)."""
     out = []
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("dt=")):
-            continue
+    for fs, dt, part in _dt_partitions(spark, dest):
         files = [
             f
-            for f in fs.listStatus(st.getPath())
+            for f in fs.listStatus(part)
             if f.isFile() and f.getPath().getName().endswith(".parquet")
         ]
         if not files:
@@ -141,7 +145,7 @@ def find_fragmented_partitions(
         if n > max_files or (n > 1 and total / n < min_file_bytes):
             out.append(
                 {
-                    "dt": name[len("dt="):],
+                    "dt": dt,
                     "n_files": n,
                     "total_bytes": total,
                     "avg_bytes": total // n,
@@ -177,18 +181,8 @@ def expire_partitions(
         raise ValueError(
             f"expire_partitions: before_dt must be YYYY-MM-DD, got {before_dt!r}"
         )
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(dest)
-    fs = path.getFileSystem(hconf)
-    if not fs.exists(path):
-        return []
     expired = []
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("dt=")):
-            continue
-        dt = name[len("dt="):]
+    for fs, dt, part in _dt_partitions(spark, dest):
         # the same YYYY-MM-DD gate as the cutoff: a nonconforming dir
         # (dt=2024-1-5, dt=20240105) compares lexicographically wrong
         # and could be wrongly deleted — skip it, never delete it
@@ -198,5 +192,5 @@ def expire_partitions(
         if dt < before_dt:
             expired.append(dt)
             if not dry_run:
-                fs.delete(st.getPath(), True)
+                fs.delete(part, True)
     return sorted(expired)

@@ -858,7 +858,7 @@ def _pq_encode_udf(codebook):
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    m, ks, dsub = codebook.shape
+    m, _, dsub = codebook.shape
 
     def _codes(vs):
         x = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
@@ -915,7 +915,7 @@ def pq_topk(
     import numpy as np
 
     spark = corpus.sparkSession
-    m, ks, dsub = codebook.shape
+    m, ks, _ = codebook.shape
     coded = pq_encode(
         fan_out(
             corpus.where(F.col(vec_col).isNotNull()).select(

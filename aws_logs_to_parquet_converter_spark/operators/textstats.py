@@ -900,7 +900,7 @@ def bigram_scores(
     # LM, AND the c(w1) marginals (kept counts + the folded <unk>
     # remainder) — no cached token stream, nothing left persisted
     counts = _unigram_counts(lm_src, text_col, max_vocab)
-    kept_rows, n, kc, v = counts
+    kept_rows, n, kc, _ = counts
     spark = docs.sparkSession
     uni_lm, oov_logp = _lm_from_counts(spark, counts, alpha)
     # merge the OOV remainder into any LITERAL '<unk>' vocabulary entry

@@ -77,9 +77,8 @@ def write_zordered(
     min/max stats prune filters on ANY of ``cols``.
 
     ``cols`` as a list pays ONE min/max agg pass to learn the domains;
-    pass a dict of explicit ranges to skip it at scale (same contract
-    as ``extract_features.size_by_bytes``: the convenience pre-scan is
-    a full extra pass on 100 TB).
+    pass a dict of explicit ranges to skip it at scale (the convenience
+    pre-scan is a full extra pass on 100 TB).
 
     DATE / TIMESTAMP columns are quantized on their natural number
     line (epoch days / epoch micros) automatically — z-ordering

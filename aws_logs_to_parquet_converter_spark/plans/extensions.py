@@ -2060,7 +2060,7 @@ def q_media_features_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multimodal mapInPandas seam under the driver's oracle gate:
     the same media table as q_media_features through the PRODUCTION
     ``extract_features`` (byte-budget partitioning, Arrow batching,
-    latin-1 payload conversion, custom-decoder dispatch), but with a
+    latin-1 payload conversion, the ``decoder`` seam), but with a
     decoder that returns the UNNORMALIZED per-position-mod-8 byte sums
     (mod 997) — eight exact integers per asset, graded per-row against
     a DuckDB restatement of the fold.  Any row lost, reordered,
@@ -2069,7 +2069,7 @@ def q_media_features_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction."""
     from aws_logs_to_parquet_converter_spark.operators import multimodal
 
-    def _hist_decoder(payload: bytes) -> list[float]:
+    def _hist_decoder(payload: bytes, media_type: "str | None") -> list[float]:
         acc = [0] * multimodal.FEATURE_DIM
         for i, b in enumerate(payload):
             acc[i % multimodal.FEATURE_DIM] = (acc[i % multimodal.FEATURE_DIM] + b) % 997
@@ -2087,7 +2087,7 @@ def q_media_features_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("long").alias("height"),
         (F.col("n_chars") * 10).alias("duration_ms"),
     )
-    feats = multimodal.extract_features(media, decode_stub=False, decoder=_hist_decoder)
+    feats = multimodal.extract_features(media, decoder=_hist_decoder)
     cols = [
         F.element_at("feature", k + 1).cast("long").alias(f"f{k}")
         for k in range(multimodal.FEATURE_DIM)
@@ -2097,8 +2097,8 @@ def q_media_features_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # REAL-decoder dispatch under the oracle gate (round-9 verdict item
 # 8b): q_media_features_hist grades the Arrow crossing with a custom
-# byte-fold decoder; THIS entry grades the production media_type ->
-# magic-byte -> decode_ppm_p3 -> luma-histogram path on golden P3
+# byte-fold decoder; THIS entry grades the built-in media_type ->
+# decode_ppm_p3 -> luma-histogram path (``p3_feature``) on golden P3
 # images synthesized per document from doc_id alone.  Every graded
 # number is float-EXACT: pixel samples are small-integer modular
 # arithmetic both engines compute identically; the luminance
@@ -2141,13 +2141,13 @@ _MEDIA_P3_ORACLE = """
 
 @query("q_media_p3_decode", oracle=_MEDIA_P3_ORACLE)
 def q_media_p3_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION image-decode dispatch under the driver's oracle
-    gate (media_type='image' -> _typed_feature -> magic-byte dispatch
-    -> decode_ppm_p3 -> ITU-R 601 luminance histogram): one golden
-    4x2 ASCII-PPM image per document, pixel samples derived from
-    doc_id by modular arithmetic the oracle re-runs in SQL — the
-    payload string itself is built with JVM expressions, so the whole
-    difference between engines is the decoder under test.  See
+    """The built-in image decoder under the driver's oracle gate
+    (media_type='image' -> ``p3_feature`` -> decode_ppm_p3 -> ITU-R 601
+    luminance histogram): one golden 4x2 ASCII-PPM image per
+    document, pixel samples derived from doc_id by modular arithmetic
+    the oracle re-runs in SQL — the payload string itself is built
+    with JVM expressions, so the whole difference between engines is
+    the decoder under test.  See
     _MEDIA_P3_ORACLE for the float-exactness argument; any header
     mis-parse, comment/whitespace mishandling, sample mis-read, or
     histogram binning bug shifts a count and breaks the hash."""
@@ -2166,7 +2166,7 @@ def q_media_p3_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("long").alias("height"),
         F.lit(None).cast("long").alias("duration_ms"),
     )
-    feats = multimodal.extract_features(media, decode_stub=False)
+    feats = multimodal.extract_features(media, decoder=multimodal.p3_feature)
     cols = [
         F.element_at("feature", k + 1).alias(f"f{k}")
         for k in range(multimodal.FEATURE_DIM)

@@ -14,6 +14,9 @@ Options: every defaulted parameter of a top-level package function is
 passed by some call (in the package, the entry files or the tests), or
 has a stated reason to stay; a value no caller sets is a constant.
 
+Locals: every name a package function stores is read in that function
+or in a function nested in it.
+
 Pure ``ast``; no Spark session.
 """
 
@@ -32,13 +35,10 @@ ENTRY_MODULES = {f"{PKG}.cli", f"{PKG}.testing"}
 EXEMPT_MODULES = {f"{PKG}.testing"}
 
 # Roots no program reaches, each with the reason it stays.
-_FIXTURE = "fixture for decoders registry entries reach; no image library (PIL) is installed"
 ALLOWED = {
-    f"{PKG}.operators.multimodal.MEDIA_SCHEMA": f"media table schema: {_FIXTURE}",
-    f"{PKG}.operators.multimodal.encode_png": f"PNG {_FIXTURE}",
-    f"{PKG}.operators.multimodal.encode_jpeg": f"baseline JPEG {_FIXTURE}",
-    f"{PKG}.operators.multimodal.encode_jpeg_progressive": f"progressive JPEG {_FIXTURE}",
-    f"{PKG}.operators.multimodal.encode_y4m": f"Y4M video {_FIXTURE}",
+    f"{PKG}.operators.multimodal.MEDIA_SCHEMA": (
+        "the media table contract extract_features reads; tests build media frames with it"
+    ),
     f"{PKG}.operators.bpe.bpe_train": (
         "trains the frozen _BPE_MERGES table (plans/extensions.py) three registry entries read"
     ),
@@ -309,3 +309,52 @@ def test_option_allowlist_is_needed():
         if qual not in unset and not any(u.startswith(qual + ".") for u in unset)
     )
     assert not stale, f"allowlisted options a call already sets, or gone: {stale}"
+
+
+def dead_locals() -> list[str]:
+    """Function-local names in the package that are stored but never read.
+
+    A name counts as stored in a function when an assignment, loop,
+    ``with`` or walrus target in its own body (not a nested function's)
+    binds it, and as read when the function or any function nested in it
+    loads it.  Names with a ``_`` prefix and names declared ``global`` or
+    ``nonlocal`` are exempt.
+    """
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+    dead = []
+    for m in _load_modules().values():
+        if m.name.startswith("<"):
+            continue
+        for fn in ast.walk(m.tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            stored: dict[str, int] = {}
+            exempt: set[str] = set()
+            body = list(ast.iter_child_nodes(fn))
+            while body:
+                node = body.pop()
+                if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+                    stored.setdefault(node.id, node.lineno)
+                elif isinstance(node, (ast.Global, ast.Nonlocal)):
+                    exempt.update(node.names)
+                if not isinstance(node, funcs):
+                    body.extend(ast.iter_child_nodes(node))
+            read = {
+                n.id
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)
+            }
+            dead += [
+                f"{m.name}.{fn.name}:{line} {name}"
+                for name, line in stored.items()
+                if not name.startswith("_") and name not in exempt | read
+            ]
+    return sorted(dead)
+
+
+def test_no_dead_locals():
+    dead = dead_locals()
+    assert not dead, (
+        f"{len(dead)} locals are stored but never read; drop the store or "
+        "bind the value to _:\n  " + "\n  ".join(dead)
+    )

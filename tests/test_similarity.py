@@ -162,7 +162,7 @@ def test_semantic_dedup_exact_matches_reference_policy(spark, vecs):
     drop set (the policy of the public SemDeDup implementation)."""
     rows, df = vecs
     kept = {r.vec_id for r in similarity.semantic_dedup(
-        df, threshold=0.2, n_cells=1, dim=8).collect()}
+        df, threshold=0.2, n_cells=1).collect()}
     expect = {i for i, _ in rows} - _greedy_drops(rows, 0.2)
     assert kept == expect
     assert kept != {i for i, _ in rows}  # threshold low enough to drop something
@@ -182,13 +182,13 @@ def test_semantic_dedup_clustered_well_separated(spark):
         rows.append((i, [x + rng.gauss(0, 0.05) for x in c]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     exact = {r.vec_id for r in similarity.semantic_dedup(
-        df, threshold=0.999, n_cells=1, dim=4).collect()}
+        df, threshold=0.999, n_cells=1).collect()}
     jsc = spark.sparkContext._jsc
     cached_before = len(jsc.getPersistentRDDs())
     # the cached cell assignments are released through the handles
     with cache.owned() as handles:
         clustered = {r.vec_id for r in similarity.semantic_dedup(
-            df, threshold=0.999, n_cells=3, sample_n=120, dim=4,
+            df, threshold=0.999, n_cells=3, sample_n=120,
             handles=handles).collect()}
     assert clustered == exact
     assert len(exact) < 120  # tight clusters => real drops happened
@@ -200,16 +200,16 @@ def test_semantic_dedup_deterministic_and_null_safe(spark, vecs):
     (NULL embedding) are kept, never silently dropped."""
     rows, df = vecs
     a = {r.vec_id for r in similarity.semantic_dedup(
-        df, threshold=0.3, n_cells=4, sample_n=64, seed=5, dim=8).collect()}
+        df, threshold=0.3, n_cells=4, sample_n=64, seed=5).collect()}
     b = {r.vec_id for r in similarity.semantic_dedup(
-        df, threshold=0.3, n_cells=4, sample_n=64, seed=5, dim=8).collect()}
+        df, threshold=0.3, n_cells=4, sample_n=64, seed=5).collect()}
     assert a == b
 
     with_null = df.union(
         spark.createDataFrame([(999, None)], "vec_id long, embedding array<double>")
     )
     kept = {r.vec_id for r in similarity.semantic_dedup(
-        with_null, threshold=0.2, n_cells=1, dim=8).collect()}
+        with_null, threshold=0.2, n_cells=1).collect()}
     assert 999 in kept
 
 
@@ -232,9 +232,9 @@ def test_semantic_dedup_auto_cells(spark, vecs):
     rows, df = vecs  # 100 vectors
     auto = {r.vec_id for r in similarity.semantic_dedup(
         df, threshold=0.3, n_cells="auto", target_cell_size=25,
-        sample_n=100, dim=8).collect()}
+        sample_n=100).collect()}
     explicit = {r.vec_id for r in similarity.semantic_dedup(
-        df, threshold=0.3, n_cells=4, sample_n=100, dim=8).collect()}
+        df, threshold=0.3, n_cells=4, sample_n=100).collect()}
     assert auto == explicit  # ceil(100/25) == 4
 
 
@@ -261,7 +261,7 @@ def test_zero_norm_embedding_never_wins(spark):
     assert (0, 2) not in pair_ids and (1, 2) not in pair_ids
     assert (0, 1) in pair_ids
 
-    kept = sim.semantic_dedup(emb, threshold=0.5, n_cells=1, dim=4)
+    kept = sim.semantic_dedup(emb, threshold=0.5, n_cells=1)
     assert sorted(r.vec_id for r in kept.collect()) == [0, 2]  # 1 drops; 2 survives
 
 
